@@ -67,6 +67,7 @@ from iatlas_cbioportal_export_spark.plans.analytics import (
     waiting_orders_suppliers,
 )
 from iatlas_cbioportal_export_spark.plans.clinical_pipeline import preprocess_clinical
+from iatlas_cbioportal_export_spark.session import engine_sql_conf
 from iatlas_cbioportal_export_spark.streaming.events import (
     hourly_event_counts_batch,
     sessionize,
@@ -84,7 +85,8 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     """Engine-required, runtime-settable SQL confs, applied on every table
     access so the queries behave identically under ANY SparkSession — the
     driver's correctness harness builds its own plain session, where none of
-    ``session.py::get_spark``'s configuration applies.
+    ``session.py::get_spark``'s configuration applies. The confs and their
+    values come from ``session.py::engine_sql_conf``:
 
     - ``nanosAsLong``: guards against events.parquet stored with
       TIMESTAMP(NANOS), which a vanilla session rejects with
@@ -93,6 +95,9 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     - ``excludedRules``: InferFiltersFromGenerate re-inlines expensive
       shingle/token expressions into a pushed-down pre-explode filter —
       measured 3-5x on the dedup sketches (see session.py).
+    - ``session.timeZone`` = UTC: deterministic wall-clock semantics for
+      the events queries (ntz→ltz casts and date functions otherwise
+      depend on the harness JVM's default zone).
     - ``shuffle.partitions``: sized to cores; the 200-partition default
       multiplies tiny-task overhead on this box (AQE coalescing recovers
       some, but the iterative queries pay per-round scheduling regardless).
@@ -107,18 +112,7 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     """
     if spark in _CONFS_APPLIED:
         return
-    wanted = {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # Deterministic wall-clock semantics for the events queries under
-        # any session (ntz→ltz casts and date functions otherwise depend on
-        # the harness JVM's default zone).
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.optimizer.excludedRules": (
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-        ),
-        "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    }
-    for key, value in wanted.items():
+    for key, value in engine_sql_conf().items():
         # check-before-set: conf.set itself — even with an unchanged value —
         # invalidates session plan/codegen state and measurably ~2x'd every
         # query when applied per table access
@@ -6835,146 +6829,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     rest = [n for n in all_q if n not in set(window)]
     return {n: all_q[n] for n in [*window, *rest]}
-
-
-# Round-9 driver window (first 50 entries, asserted <=50): 2 new r9
-# queries, then re-check slots for every r9-touched code path
-# (aggregates/sampling running-sum rewrite; graph.py sssp repartition +
-# early-exit; multimodal id3/png guards; sinks %.12g + single-file writer
-# refactor; the maf error side-band), then freshness re-checks of entries
-# with no driver-window check since r4 or earlier.
-_R9_WINDOW = [
-    # new round-9 queries
-    "maf_error_report",
-    "s5_float_g_format",
-    # aggregates.py/sampling.py: driver-side bucket offsets in
-    # global_running_sum + numeric order-col validation (its consumers)
-    "s4_chunk_assignment",
-    "running_revenue",
-    "sample_pack_sequences",
-    "sequence_packing",
-    # graph.py: sssp edge repartition + convergence early-exit (same file:
-    # hits/pagerank share the layout/checkpoint helpers)
-    "graph_sssp",
-    "graph_hits",
-    "graph_pagerank",
-    # multimodal.py: id3v2 truncated-extended-header bail, PNG palette
-    # bounds check, ZIP64 interop pinning
-    "multimodal_png_roundtrip",
-    "multimodal_id3_tags",
-    "multimodal_mp3_frames",
-    "multimodal_zip_index",
-    "multimodal_zip64_index",
-    "multimodal_image_dhash",
-    # sinks.py/bundle.py: %.12g formatter, write_single_tsv, part-concat
-    # refactor, merged-artifact writer (their query-surface consumers)
-    "f8_case_list_render",
-    "f9_remove_pandas_float",
-    "v_validation_suite",
-    "bundle_cross_checks",
-    "meta_consistency",
-    "header_conformance",
-    "flagship_case_lists",
-    # maf.py query surface sharing the new error-report path
-    "maf_annotate_pipeline",
-    "maf_annotation_wide",
-    # freshness rotation: no driver-window slot since r4 or earlier
-    "tpch_q1_pricing_summary",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_supplier",
-    "maf_annotate_by_variant",
-    "sim_topk_bruteforce",
-    "sim_ann_lsh",
-    "sim_mips_topk",
-    "sim_ivf_topk",
-    "sim_semantic_dedup",
-    "text_tfidf",
-    "text_bm25",
-    "text_cooccurrence_pmi",
-    "text_vocab_growth",
-    "sketch_hll_distinct",
-    "sketch_bloom_prefilter",
-    "sketch_count_min",
-    "events_sessionize",
-    "stream_hourly_counts",
-    "events_session_window",
-    "fuzzy_join_names",
-    "dedup_components",
-    "dedup_cross_corpus",
-    "pii_redaction",
-    "decontamination",
-    "asof_join_last_purchase",
-    "window_topk_per_group",
-]
-
-
-# Round-10 driver window (first 50 entries, asserted <=50): re-check
-# slots for every r10-touched code path first (graph.py hits
-# normalization rewrite; maf.py oncoprint literal-rank; aggregates.py
-# running-sum persist + broadcast-offsets fallback; sinks.py empty-part
-# concat guard; plans/bundle.py Dataset drop + load-stage case lists +
-# cases_all wording), then PURE freshness: the registry's
-# longest-undriven cohort. CORRECTNESS_r01-r09 show the oldest
-# last-checked entries are the r1/r2 cohort (text_language_report r1;
-# the TPC-H tail, rollup/cube, window_moving_avg, attribution, ivf
-# r2) and then r3 — older than the r5-r6 cohort VERDICT r9 suggested,
-# so the window follows the data. Per-entry last-checked rounds are
-# listed in STATUS.md.
-_R10_WINDOW = [
-    # r10-touched code paths
-    "graph_hits",
-    "maf_oncoprint",
-    "running_revenue",
-    "sample_pack_sequences",
-    "sequence_packing",
-    "flagship_case_lists",
-    "a1_case_lists",
-    "j5_semi_join",
-    "f8_case_list_render",
-    "meta_consistency",
-    "bundle_cross_checks",
-    "v_validation_suite",
-    "s5_float_g_format",
-    "s4_chunk_assignment",
-    # freshness: last driver-checked r1/r2
-    "text_language_report",
-    "cube_revenue",
-    "embedding_near_dup",
-    "events_attribution",
-    "events_json_extract",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "percentiles_by_segment",
-    "range_join_qty_size",
-    "rollup_revenue",
-    "sim_ivf_trained",
-    "text_top_ngrams",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_parts",
-    "tpch_q12_late_priority",
-    "tpch_q13_order_distribution",
-    "tpch_q14_promo_share",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_counts",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q18_large_volume",
-    "tpch_q19_brand_bands",
-    "tpch_q20_excess_shipping",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_sales_opportunity",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "window_moving_avg",
-    # freshness: last driver-checked r3
-    "cdc_apply_changelog",
-    "data_splits",
-    "dedup_components_star",
-    "dedup_keep_best",
-    "emb_l2_normalize",
-]
 
 
 # Round-11 driver window (first 50 entries, asserted <=50): re-check

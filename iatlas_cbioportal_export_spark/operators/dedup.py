@@ -851,12 +851,13 @@ def _jaccard_deletion_candidates(toks, t: float):
         .select("id", "n", F.col("ds.dpt").alias("dpt"), F.col("ds.sig").alias("sig"))
         .persist()
     )
-    # exact integer ⌈2·t_num·n / (t_num+t_den)⌉ — one long expression, no
-    # float dust either way
-    kb = F.col("n") - (
-        (F.lit(2 * t_num) * F.col("n") + F.lit(t_num + t_den - 1))
-        .cast("long") / F.lit(t_num + t_den)
-    ).cast("long")
+    # exact integer ⌈2·t_num·n / (t_num+t_den)⌉: the product runs in BIGINT
+    # (2·t_num·n passes 2³¹ from n ≈ 1076 at t = 0.998) and `div` is
+    # integral, so no overflow and no float dust
+    kb = F.expr(
+        f"n - (CAST(n AS BIGINT) * {2 * t_num} + {t_num + t_den - 1})"
+        f" div {t_num + t_den}"
+    )
     a = posting.select(
         F.col("id").alias("id_a"), F.col("n").alias("na"), "sig"
     )

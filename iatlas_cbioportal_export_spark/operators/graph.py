@@ -1,17 +1,11 @@
-"""Near-duplicate clustering: pair list → connected components → canonical
-keeper (north star §7 ext — the step after every near-dup detector).
-
-A training-data dedup pipeline doesn't stop at PAIRS: transitive duplicates
-(a~b, b~c) must collapse into one component with one kept representative.
-This is min-label propagation over the candidate-pair graph, DataFrame-native:
-
-- state is one (id, label) table, label initialized to the node's own id;
-- each round joins the (undirected) edge list to the current labels and
-  takes ``min(label)`` over each node's neighborhood (including itself) —
-  one broadcast-or-shuffle join plus one map-side-combined groupBy, and only
-  (id, label) PAIRS ever shuffle, never document payloads;
-- convergence is a driver-side count of changed labels (a single long per
-  round, like the k-means loop in ``similarity.kmeans_centroids``).
+"""Graph operators over id-pair DataFrames, starting with near-duplicate
+clustering: pair list → connected components → canonical keeper (the step
+after every near-dup detector). Transitive duplicates (a~b, b~c) collapse
+into one component by min-label propagation: state is one (id, label)
+table, label initialized to the node's own id; each round takes
+``min(label)`` over each node's neighborhood (including itself), so only
+(id, label) PAIRS ever shuffle, never document payloads; convergence is a
+driver-side count of changed labels.
 
 Rounds needed = graph diameter. Near-dup components are overwhelmingly tiny
 cliques/chains (diameter ≤ 3), so the loop is 2-4 rounds in practice; the
@@ -20,16 +14,116 @@ cliques/chains (diameter ≤ 3), so the loop is 2-4 rounds in practice; the
 large-star/small-star algorithm (Kiveris et al., "Connected Components in
 MapReduce and Beyond", SoCC 2014) converges in O(log² n) rounds regardless
 of diameter, at the cost of one extra shuffle per round.
+
+Every round-by-round loop except PageRank's runs through :func:`_rounds`,
+which owns the round policy: lazily checkpointed round states and at most
+one aggregate job per round. No operator here changes session confs; AQE
+sizes each round's shuffles.
 """
 
 from __future__ import annotations
 
 import logging
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _LOG = logging.getLogger(__name__)
+
+# PageRank: ranks in integer micro-units of _PR_SCALE, damping 85/100.
+_PR_SCALE = 10**12
+_DAMPING_NUM, _DAMPING_DEN = 85, 100
+# PageRank rounds nest into one plan, truncated every this many rounds.
+_PR_CHECKPOINT_INTERVAL = 4
+# HITS scores are integer units of _HITS_SCALE (L1 norm = _HITS_SCALE).
+_HITS_SCALE = 10**6
+
+
+def _rounds(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    done: Callable[[DataFrame], bool] | None = None,
+) -> tuple[DataFrame, bool]:
+    """Run up to ``rounds`` rounds of ``state = step(state)``; return the
+    final state and whether ``done`` stopped the loop.
+
+    Each round's state is a LAZY ``localCheckpoint``: the LogicalRDD
+    wrapper cuts the logical plan at the round when it is built, so plan
+    growth stays bounded however many rounds run (rounds reference their
+    predecessor more than once, and an uncut state grows analysis
+    exponentially), yet it runs no job of its own. ``done(state)`` is the
+    round's single aggregate job: it materializes the round and reports
+    whether the loop has converged. Without ``done`` the caller's action
+    materializes every round.
+    """
+    for _ in range(rounds):
+        state = step(state).localCheckpoint(eager=False)
+        if done is not None and done(state):
+            return state, True
+    return state, False
+
+
+def _min_merge(state: DataFrame, contrib: DataFrame, key: str, value: str) -> DataFrame:
+    """One MIN of ``value`` per ``key`` over the state rows unioned with the
+    contributions — a single map-side-combined groupBy, so contributions
+    partial-aggregate before they shuffle. ``__improved`` marks keys that
+    are new (``__od``, the key's previous value, is NULL) or whose value
+    dropped; a contribution that does not improve leaves ``__nd < __od``
+    false or NULL."""
+    tagged = state.select(key, value, F.lit(True).alias("__own")).unionByName(
+        contrib.select(key, value, F.lit(False).alias("__own"))
+    )
+    improved = F.col("__od").isNull() | (F.col("__nd") < F.col("__od"))
+    return (
+        tagged.groupBy(key)
+        .agg(
+            F.min(value).alias(value),
+            F.min(F.when(F.col("__own"), F.col(value))).alias("__od"),
+            F.min(F.when(~F.col("__own"), F.col(value))).alias("__nd"),
+        )
+        .select(key, value, improved.alias("__improved"))
+    )
+
+
+def _settled(state: DataFrame) -> bool:
+    """The round job of a :func:`_min_merge` loop: True once nothing
+    improved, after which every further round is a no-op."""
+    return state.filter(F.col("__improved")).count() == 0
+
+
+def _canon_edges(pairs: DataFrame, left_col: str, right_col: str) -> DataFrame:
+    """Undirected edge list, one row per edge: (u, v) with u < v, self-loops
+    and duplicates dropped."""
+    return (
+        pairs.select(
+            F.least(F.col(left_col), F.col(right_col)).alias("u"),
+            F.greatest(F.col(left_col), F.col(right_col)).alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _directed_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Directed edge list as (src, dst) longs, duplicates dropped."""
+    return edges.select(
+        F.col(src_col).cast("long").alias("src"),
+        F.col(dst_col).cast("long").alias("dst"),
+    ).distinct()
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    """Every endpoint of a (src, dst) edge list once, hash-laid-out on
+    ``node`` and lazily checkpointed."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .union(e.select("dst"))
+        .distinct()
+        .repartition("node")
+        .localCheckpoint(eager=False)
+    )
 
 
 def connected_components(
@@ -46,72 +140,29 @@ def connected_components(
     result back with a left join + coalesce(component_id, id) to label a
     full corpus.
     """
-    # TRUNCATE the lineage at the edge list: ``persist()`` caches data but
-    # the logical plan still nests the whole upstream pair-producing DAG
-    # (e.g. the LSH near-dup pipeline), and every round's analysis/cache
-    # canonicalization re-walks it — measured to exhaust a 1 GiB driver heap
-    # after two rounds. ``localCheckpoint(eager)`` replaces the plan with a
-    # LogicalRDD over the materialized partitions; edge rows are two longs.
-    # (On a real cluster prefer reliable ``checkpoint()`` with a checkpoint
-    # dir — same plan-truncation effect, executor-loss-safe.)
+    # TRUNCATE the lineage at the edge list: ``persist()`` keeps the whole
+    # upstream pair-producing DAG (e.g. the LSH near-dup pipeline) in the
+    # plan, and every round's analysis re-walks it — measured to exhaust a
+    # 1 GiB driver heap after two rounds. (On a real cluster prefer reliable
+    # ``checkpoint()`` — same truncation, executor-loss-safe.)
     edges = (
-        pairs.select(
-            F.col(left_col).alias("src"), F.col(right_col).alias("dst")
-        )
-        .union(
-            pairs.select(F.col(right_col).alias("src"), F.col(left_col).alias("dst"))
-        )
+        pairs.select(F.col(left_col).alias("src"), F.col(right_col).alias("dst"))
+        .union(pairs.select(F.col(right_col), F.col(left_col)))
         .distinct()
         .localCheckpoint(eager=True)
     )
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )
-    for _ in range(max_iterations):
-        # r10 merge fusion (same rewrite as sssp_distances): the label
-        # update is a pure MIN per node, so the node's own state row and
-        # its neighbor contributions union into ONE map-side-combined
-        # groupBy — replaces the old groupBy-then-left-join shape (two
-        # exchanges + a join per round). __changed reproduces the old
-        # ``coalesce(nbr_label, label) < label`` exactly: __ol is the
-        # node's own (unique) previous label, __nl the neighborhood min
-        # (NULL for isolated nodes → null/false under the count filter).
-        contrib = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .select(
-                F.col("src").alias("id"),
-                "label",
-                F.lit(False).alias("__own"),
-            )
+
+    def propagate(state: DataFrame) -> DataFrame:
+        contrib = edges.join(state, edges["dst"] == state["id"]).select(
+            F.col("src").alias("id"), "label"
         )
-        state = labels.select("id", "label", F.lit(True).alias("__own"))
-        updated = (
-            state.unionByName(contrib)
-            .groupBy("id")
-            .agg(
-                F.min("label").alias("label"),
-                F.min(F.when(F.col("__own"), F.col("label"))).alias("__ol"),
-                F.min(F.when(~F.col("__own"), F.col("label"))).alias("__nl"),
-            )
-            .select(
-                "id",
-                "label",
-                (F.col("__nl") < F.col("__ol")).alias("__changed"),
-            )
-        )
-        # r10: LAZY localCheckpoint + count — the count is the single
-        # materializing job per round (the eager form ran a separate
-        # checkpoint job first, i.e. two jobs per round), and the
-        # LogicalRDD wrapper still truncates the per-round plan growth
-        # at construction time (each round references the previous state
-        # twice — own row + neighbor contributions — so an untruncated
-        # state grows analysis exponentially with rounds).
-        updated = updated.localCheckpoint(eager=False)
-        n_changed = updated.filter(F.col("__changed")).count()
-        labels = updated.drop("__changed")
-        if n_changed == 0:
-            break
-    else:
+        return _min_merge(state, contrib, "id", "label")
+
+    labels, converged = _rounds(labels, propagate, max_iterations, _settled)
+    if not converged:
         # Unconverged labels are silently WRONG (nodes farther than
         # max_iterations hops from their component's min keep a stale
         # label) — fail loudly rather than return them.
@@ -154,21 +205,12 @@ def connected_components_star(
     # Canonical directed form (big → small); lineage truncated as in
     # connected_components so rounds never re-derive the pair-producing DAG.
     edges = (
-        pairs.select(
-            F.greatest(F.col(left_col), F.col(right_col)).alias("u"),
-            F.least(F.col(left_col), F.col(right_col)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
+        _canon_edges(pairs, left_col, right_col)
+        .select(F.col("v").alias("u"), F.col("u").alias("v"))
         .localCheckpoint(eager=True)
     )
-    # all_ids is consumed exactly once (the final densifying join) and
-    # derives from the already-checkpointed edge list — r10 drops its
-    # eager checkpoint (one whole job) and lets the final action compute
-    # it where it overlaps with the join's other stages.
-    all_ids = edges.select(F.col("u").alias("id")).union(
-        edges.select("v")
-    ).distinct()
+    # consumed once, by the final densifying join
+    all_ids = edges.select(F.col("u").alias("id")).union(edges.select("v")).distinct()
 
     def _signature(e: DataFrame) -> tuple[int, int]:
         # decimal(38,0) accumulator: a long sum of 64-bit hashes overflows
@@ -179,27 +221,22 @@ def connected_components_star(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    sig = _signature(edges)
-    for _ in range(max_iterations):
+    def star(e: DataFrame) -> DataFrame:
         # large-star over the undirected neighbor list
-        nbrs = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        w = Window.partitionBy("u")
-        m = F.least(F.col("u"), F.min("v").over(w))
+        nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        m = F.least(F.col("u"), F.min("v").over(Window.partitionBy("u")))
         large = (
             nbrs.withColumn("m", m)
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .distinct()
         )
-        # small-star over the directed (big → small) list; emits (v, m) for
-        # every small neighbor plus (u, m) — skipping self-loops on m itself
-        small_nbrs = large  # large-star output is already big → small
-        sm = F.least(F.col("u"), F.min("v").over(Window.partitionBy("u")))
-        with_min = small_nbrs.withColumn("m", sm)
+        # small-star over large-star's output, which is already big → small;
         # both emits ((v, m) and (u, m)) in ONE pass over the window output —
         # a union of two selects would recompute the large-star subtree twice
-        small = (
-            with_min.select(
+        return (
+            large.withColumn("m", m)
+            .select(
                 F.explode(
                     F.array(
                         F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
@@ -211,26 +248,18 @@ def connected_components_star(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        # r10: LAZY localCheckpoint + signature-collect — the collect is
-        # the single materializing job per round (the eager form ran a
-        # separate checkpoint job first), and the LogicalRDD wrapper
-        # still truncates the plan at round granularity. Plan truncation
-        # is NOT optional here: each round references its predecessor
-        # several times (union + window reuse), so a persist-only round
-        # state was measured to blow analysis up exponentially
-        # (sim_grid_dbscan 3s → 47s before this was caught).
-        edges = small.localCheckpoint(eager=False)
-        new_sig = _signature(edges)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    return (
-        all_ids.join(edges.withColumnsRenamed({"u": "id", "v": "component_id"}),
-                     on="id", how="left")
-        .select(
-            "id",
-            F.coalesce(F.col("component_id"), F.col("id")).alias("component_id"),
-        )
+
+    sig = _signature(edges)
+
+    def unchanged(e: DataFrame) -> bool:
+        nonlocal sig
+        prev, sig = sig, _signature(e)
+        return sig == prev
+
+    edges, _ = _rounds(edges, star, max_iterations, unchanged)
+    comps = edges.withColumnsRenamed({"u": "id", "v": "component_id"})
+    return all_ids.join(comps, on="id", how="left").select(
+        "id", F.coalesce("component_id", "id").alias("component_id")
     )
 
 
@@ -240,7 +269,6 @@ def dedup_components(
     id_col: str = "id",
     left_col: str = "id_a",
     right_col: str = "id_b",
-    max_iterations: int = 10,
     algorithm: str = "minlabel",
 ) -> DataFrame:
     """Label EVERY corpus id with its dedup component (singletons keep their
@@ -248,31 +276,16 @@ def dedup_components(
     (id, component_id, is_keeper). ``algorithm``: "minlabel" (diameter
     rounds — right for tiny dup cliques) or "star" (O(log² n) rounds — right
     when components can be long chains)."""
-    if algorithm == "star":
-        comps = connected_components_star(
-            pairs, left_col=left_col, right_col=right_col
-        )
-    else:
-        comps = connected_components(
-            pairs,
-            left_col=left_col,
-            right_col=right_col,
-            max_iterations=max_iterations,
-        )
+    components = (
+        connected_components_star if algorithm == "star" else connected_components
+    )
+    comps = components(pairs, left_col=left_col, right_col=right_col)
     return (
         corpus_ids.select(F.col(id_col).alias("id"))
         .join(comps, on="id", how="left")
-        .select(
-            "id",
-            F.coalesce(F.col("component_id"), F.col("id")).alias("component_id"),
-        )
+        .select("id", F.coalesce("component_id", "id").alias("component_id"))
         .withColumn("is_keeper", F.col("id") == F.col("component_id"))
     )
-
-
-# ---------------------------------------------------------------------------
-# PageRank (fixed-iteration, exact integer arithmetic)
-# ---------------------------------------------------------------------------
 
 
 def pagerank(
@@ -280,10 +293,6 @@ def pagerank(
     iterations: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    checkpoint_interval: int = 4,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list, computed in EXACT
     integer micro-units so the result is bit-identical under any partitioning
@@ -292,90 +301,32 @@ def pagerank(
 
     Per node: ``rank₀ = scale``;
     ``rankᵢ₊₁ = teleport + Σ_incoming (rankᵢ·d_num) div (d_den·out_degree)``
-    with ``teleport = scale·(d_den−d_num) div d_den``. All quantities are
-    BIGINTs; `div` is integral division, so each iteration is a sum of
-    exactly-representable longs (truncation loss stays < out_degree
-    micro-units per node per round — ~1e-12 relative). Dangling nodes
-    (out-degree 0) simply leak their damped mass — the standard
-    "no dangling redistribution" PageRank variant; feed a symmetrized edge
-    list if every node must keep mass.
+    with ``teleport = scale·(d_den−d_num) div d_den``, ``scale = 10¹²`` and
+    damping ``d_num/d_den = 85/100``. All quantities are BIGINTs; `div` is
+    integral division, so each iteration is a sum of exactly-representable
+    longs (truncation loss stays < out_degree micro-units per node per
+    round — ~1e-12 relative). Dangling nodes (out-degree 0) simply leak
+    their damped mass — the standard "no dangling redistribution" PageRank
+    variant; feed a symmetrized edge list if every node must keep mass.
 
-    Scale shape: out-degrees join the edge list ONCE (one shuffle, reused
-    every round); each iteration is then one (src=node) join moving only
-    (node, rank) pairs + one map-side-combined groupBy(dst). State is a
-    single (node, rank) table — the iterative-algorithm pattern shared with
-    ``connected_components``. Rounds are NESTED into one logical plan and
-    lineage is truncated only every ``checkpoint_interval`` rounds: at K=4 a
-    fully-nested plan runs as ONE job (AQE coalesces every micro-shuffle)
-    and measured 2.6× faster than checkpoint-per-round at sf0.1 (1.5-3.1s vs
-    5.1-8.0s, bit-identical ranks). The interval matters in BOTH directions:
-    per-round truncation pays a jobs-and-materialization tax, while an
-    unboundedly deep plan (measured at 12 uncheckpointed rounds under a 1 GiB
-    driver heap) piles every round's concurrent hash-aggregate state into
-    one pipeline and OOMs — 4 rounds per checkpoint is the measured sweet
-    spot.
+    Scale shape: out-degrees join the edge list ONCE; each iteration is one
+    (src=node) join moving only (node, rank) pairs + one map-side-combined
+    groupBy(dst). Rounds are NESTED into one logical plan, truncated only
+    every ``_PR_CHECKPOINT_INTERVAL`` (4) rounds: a 4-round nested plan
+    runs as ONE job and measured 2.6× faster than checkpoint-per-round at
+    sf0.1 (bit-identical ranks), while 12 uncheckpointed rounds piled every
+    round's hash-aggregate state into one pipeline and OOMed a 1 GiB heap.
 
-    Partitioning reuse: ``edeg`` is hash-repartitioned on ``src`` and
-    ``nodes`` on ``node`` ONCE, before their checkpoints —
-    ``localCheckpoint`` preserves outputPartitioning, so with plain
-    (non-adaptive) planning every per-round join reuses the layout and the
-    only exchange left is the contribution ``groupBy(dst)`` (regrouping
-    src-keyed contributions by destination, which no static layout can
-    avoid) — verified: 0 ENSURE_REQUIREMENTS exchanges with AQE off.
-    Measured caveat: AQE does NOT trust LogicalRDD partitioning and
-    re-inserts both join exchanges, yet still wins at test scale because
-    partition coalescing collapses the 32-way tiny shuffles (4.0s vs 6.7s
-    AQE-off at sf0.1). On a big cluster, where the state tables are large
-    and per-round shuffles dominate, run the loop under
-    ``spark.sql.adaptive.enabled=false`` (or a cluster-side fixed
-    partitioner) to activate the reuse; the repartition hints are free
-    either way.
+    ``edeg`` and ``nodes`` are hash-laid-out on the join keys once. With
+    AQE off every per-round join reuses that layout, leaving only the
+    ``groupBy(dst)`` exchange; AQE does not trust LogicalRDD partitioning
+    and re-inserts the join exchanges, yet wins at test scale by
+    coalescing the tiny shuffles. On a big cluster run the loop with AQE
+    off to activate the reuse.
 
     Output: ``(node, rank_int)`` — rank in micro-units of ``scale``.
     """
-    e = (
-        edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    # (src, dst, od): built once, hash-laid-out on the per-round join key,
-    # reused by every iteration with no further exchange
-    edeg = e.join(deg, on="src").repartition("src").localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition("node")
-        .localCheckpoint(eager=False)
-    )
-    teleport = scale * (damping_den - damping_num) // damping_den
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank_int"))
-    for i in range(iterations):
-        contribs = (
-            edeg.join(ranks, edeg["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(rank_int * {damping_num}) div ({damping_den} * od)")
-                .alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("m"))
-        )
-        ranks = nodes.join(contribs, on="node", how="left").select(
-            "node",
-            (F.lit(teleport) + F.coalesce("m", F.lit(0)))
-            .cast("long")
-            .alias("rank_int"),
-        )
-        # Truncate lineage every checkpoint_interval rounds, never after the
-        # last (the caller's action is the materialization point).
-        if (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
+    return _pagerank(edges, iterations, src_col, dst_col)
 
 
 def personalized_pagerank(
@@ -384,10 +335,6 @@ def personalized_pagerank(
     iterations: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    checkpoint_interval: int = 4,
 ) -> DataFrame:
     """Personalized PageRank: identical exact-integer iteration to
     :func:`pagerank`, but ALL teleport mass returns to the ``seeds``
@@ -404,52 +351,47 @@ def personalized_pagerank(
     seed_list = sorted(int(s) for s in seeds)
     if not seed_list:
         raise ValueError("personalized_pagerank requires at least one seed")
-    e = (
-        edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    return _pagerank(edges, iterations, src_col, dst_col, seed_list)
+
+
+def _pagerank(
+    edges: DataFrame,
+    iterations: int,
+    src_col: str,
+    dst_col: str,
+    seeds: list[int] | None = None,
+) -> DataFrame:
+    """The body of :func:`pagerank` and, with ``seeds``, of
+    :func:`personalized_pagerank`: the initial rank and the teleport mass
+    land on every node, or only on the seeds."""
+    e = _directed_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
+    # (src, dst, od): built once, hash-laid-out on the per-round join key
     edeg = e.join(deg, on="src").repartition("src").localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition("node")
-        .localCheckpoint(eager=False)
-    )
-    teleport = scale * (damping_den - damping_num) // damping_den
-    is_seed = F.col("node").isin(seed_list)
-    ranks = nodes.select(
-        "node",
-        F.when(is_seed, F.lit(scale)).otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank_int"),
-    )
-    for i in range(iterations):
+    nodes = _nodes(e)
+
+    def on_seeds(mass: int):
+        if seeds is None:
+            return F.lit(mass)
+        return F.when(F.col("node").isin(seeds), F.lit(mass)).otherwise(F.lit(0))
+
+    teleport = _PR_SCALE * (_DAMPING_DEN - _DAMPING_NUM) // _DAMPING_DEN
+    share = F.expr(f"(rank_int * {_DAMPING_NUM}) div ({_DAMPING_DEN} * od)")
+    rank = on_seeds(teleport) + F.coalesce("m", F.lit(0))
+    ranks = nodes.select("node", on_seeds(_PR_SCALE).cast("long").alias("rank_int"))
+    for i in range(1, iterations + 1):
         contribs = (
             edeg.join(ranks, edeg["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(rank_int * {damping_num}) div ({damping_den} * od)")
-                .alias("c"),
-            )
+            .select(F.col("dst").alias("node"), share.alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("m"))
         )
         ranks = nodes.join(contribs, on="node", how="left").select(
-            "node",
-            (
-                F.when(is_seed, F.lit(teleport)).otherwise(F.lit(0))
-                + F.coalesce("m", F.lit(0))
-            )
-            .cast("long")
-            .alias("rank_int"),
+            "node", rank.cast("long").alias("rank_int")
         )
-        if (i + 1) % checkpoint_interval == 0 and (i + 1) < iterations:
+        # Truncate lineage every _PR_CHECKPOINT_INTERVAL rounds, never after
+        # the last (the caller's action is the materialization point).
+        if i % _PR_CHECKPOINT_INTERVAL == 0 and i < iterations:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
@@ -473,15 +415,7 @@ def count_triangles(
 
     Output: one row (n_vertices, n_edges, n_triangles).
     """
-    canon = (
-        pairs.select(
-            F.least(F.col(left_col), F.col(right_col)).alias("u"),
-            F.greatest(F.col(left_col), F.col(right_col)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    canon = _canon_edges(pairs, left_col, right_col).localCheckpoint(eager=False)
     deg = (
         canon.select(F.col("u").alias("x"))
         .union(canon.select("v"))
@@ -502,18 +436,12 @@ def count_triangles(
     e1 = oriented.select("a", F.col("b").alias("b1"), F.col("rb").alias("rb1"))
     e2 = oriented.select("a", F.col("b").alias("b2"), F.col("rb").alias("rb2"))
     wedges = e1.join(e2, on="a").filter(F.col("rb1") < F.col("rb2"))
-    closing = oriented.select(
-        F.col("a").alias("b1"), F.col("b").alias("b2")
-    )
+    closing = oriented.select(F.col("a").alias("b1"), F.col("b").alias("b2"))
     tri = wedges.join(closing, on=["b1", "b2"]).agg(
         F.count(F.lit(1)).alias("n_triangles")
     )
-    stats = canon.agg(
-        F.count(F.lit(1)).alias("n_edges"),
-    ).crossJoin(
-        F.broadcast(
-            deg.agg(F.count(F.lit(1)).alias("n_vertices"))
-        )
+    stats = canon.agg(F.count(F.lit(1)).alias("n_edges")).crossJoin(
+        F.broadcast(deg.agg(F.count(F.lit(1)).alias("n_vertices")))
     )
     return stats.crossJoin(F.broadcast(tri)).select(
         "n_vertices", "n_edges", "n_triangles"
@@ -529,49 +457,43 @@ def kcore_peel(
 ) -> DataFrame:
     """Fixed-round k-core peeling: repeatedly drop vertices of degree < k
     and the edges touching them — the dense-subgraph extractor (spam rings,
-    co-purchase cores, community nuclei). Full k-core = peel to fixpoint;
-    a FIXED round count keeps the computation deterministic-shaped for
-    oracle replay (rounds are a parameter, exactly like the PageRank/BPE
-    iteration counts) and each round's survivor counts are the useful
-    telemetry anyway (how fast the periphery evaporates).
+    co-purchase cores, community nuclei). A FIXED round count keeps the
+    shape oracle-replayable, and each round's survivor counts show how fast
+    the periphery evaporates.
 
-    Per round: one degree aggregate over the edge list + two semi-joins
-    (only (node) and (u,v) id pairs shuffle); state is the surviving edge
-    list, lineage-truncated per round.
+    Per round: one degree aggregate + two semi-joins (only id pairs
+    shuffle); state is the surviving edge list. One aggregate job per round
+    counts the survivors: nodes = rows of their degree table, edges = half
+    its degree sum.
 
     Output: (round, n_nodes, n_edges) for rounds 1..``rounds``.
     """
-    e = (
-        pairs.select(
-            F.least(F.col(left_col), F.col(right_col)).alias("u"),
-            F.greatest(F.col(left_col), F.col(right_col)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    stats: list[tuple[int, int, int]] = []
-    for r in range(1, rounds + 1):
-        deg = (
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return (
             e.select(F.col("u").alias("x"))
             .union(e.select("v"))
             .groupBy("x")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        alive = deg.filter(F.col("c") >= k).select("x")
-        e = (
-            e.join(alive.withColumnRenamed("x", "u"), on="u", how="left_semi")
-            .join(alive.withColumnRenamed("x", "v"), on="v", how="left_semi")
-            .localCheckpoint(eager=False)
+
+    def peel(e: DataFrame) -> DataFrame:
+        alive = degrees(e).filter(F.col("c") >= k).select("x")
+        return e.join(alive.withColumnRenamed("x", "u"), on="u", how="left_semi").join(
+            alive.withColumnRenamed("x", "v"), on="v", how="left_semi"
         )
-        row = e.agg(F.count(F.lit(1)).alias("ne")).collect()[0]
-        n_nodes = (
-            e.select(F.col("u").alias("x"))
-            .union(e.select("v"))
-            .distinct()
-            .count()
-        )
-        stats.append((r, int(n_nodes), int(row["ne"])))
+
+    stats: list[tuple[int, int, int]] = []
+
+    def record(e: DataFrame) -> bool:
+        row = degrees(e).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("c").alias("d")
+        ).collect()[0]
+        stats.append((len(stats) + 1, int(row["n"]), int(row["d"] or 0) // 2))
+        return False
+
+    canon = _canon_edges(pairs, left_col, right_col).localCheckpoint(eager=False)
+    _rounds(canon, peel, rounds, record)
     return pairs.sparkSession.createDataFrame(
         stats, "round int, n_nodes long, n_edges long"
     )
@@ -586,45 +508,21 @@ def bfs_distances(
 ) -> DataFrame:
     """Single-source BFS hop distances (≤ ``rounds`` hops) over the
     undirected graph — frontier expansion, the canonical iterative-join
-    primitive under "friends-of-friends" / blast-radius queries.
-
-    Per round: frontier ⋈ edges (ids only) → dedupe → anti-join against
-    the visited set → stamp the round number; state is the (node, dist)
-    table, lineage-truncated per round like the PageRank loop. A fixed
-    round count keeps the shape oracle-replayable (and in practice IS the
-    query: "within 3 hops").
+    primitive under "friends-of-friends" / blast-radius queries. Hop-count
+    BFS is min-plus shortest paths over unit weights, so this is
+    :func:`sssp_distances` with ``w = 1``. A fixed round count keeps the
+    shape oracle-replayable (and in practice IS the query: "within 3
+    hops").
 
     Output: (node, dist) for every node reached within ``rounds`` hops
-    (source included at dist 0).
+    (source included at dist 0), dist an int.
     """
-    spark = pairs.sparkSession
-    e = (
-        pairs.select(
-            F.col(left_col).cast("long").alias("s"),
-            F.col(right_col).cast("long").alias("t"),
-        )
-        .union(
-            pairs.select(
-                F.col(right_col).cast("long"), F.col(left_col).cast("long")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+    unit = pairs.select(
+        F.col(left_col).alias("s"), F.col(right_col).alias("t"), F.lit(1).alias("w")
     )
-    dist = spark.createDataFrame([(int(source), 0)], "node long, dist int")
-    frontier = dist.select("node")
-    for r in range(1, rounds + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["s"])
-            .select(F.col("t").alias("node"))
-            .distinct()
-            .join(dist.select("node"), on="node", how="left_anti")
-            .select("node", F.lit(r).cast("int").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        dist = dist.union(nxt).localCheckpoint(eager=False)
-        frontier = nxt.select("node")
-    return dist
+    return sssp_distances(unit, source, rounds, "s", "t", "w").select(
+        "node", F.col("dist").cast("int").alias("dist")
+    )
 
 
 def label_propagation(
@@ -642,52 +540,37 @@ def label_propagation(
 
     Per round: one labels⋈edges join + one (node, label) count aggregate +
     one deterministic argmax ``max(struct(count, -label))`` — only
-    (node, label, count) longs shuffle; state is the (node, label) table,
-    lineage-truncated per round. Fixed rounds keep the shape
-    oracle-replayable (the PageRank/k-core pattern).
+    (node, label, count) longs shuffle; state is the (node, label) table.
+    Fixed rounds keep the shape oracle-replayable (the PageRank/k-core
+    pattern).
 
     Output: (node, label) after ``rounds`` rounds.
     """
+    s, t = F.col(left_col).cast("long"), F.col(right_col).cast("long")
     e = (
-        pairs.select(
-            F.col(left_col).cast("long").alias("s"),
-            F.col(right_col).cast("long").alias("t"),
-        )
-        .union(
-            pairs.select(
-                F.col(right_col).cast("long"), F.col(left_col).cast("long")
-            )
-        )
+        pairs.select(s.alias("s"), t.alias("t"))
+        .union(pairs.select(t, s))
         .filter(F.col("s") != F.col("t"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    labels = (
-        e.select(F.col("s").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(rounds):
+
+    def vote(labels: DataFrame) -> DataFrame:
         votes = (
             e.join(labels, e["t"] == labels["node"])
             .select(F.col("s").alias("n"), "label")
             .groupBy("n", "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
-            votes.groupBy("n")
-            .agg(
-                F.max(
-                    F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-                ).alias("__b")
-            )
-            .select(
-                F.col("n").alias("node"),
-                (-F.col("__b.nl")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+        best = F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl")))
+        return votes.groupBy("n").agg(best.alias("__b")).select(
+            F.col("n").alias("node"), (-F.col("__b.nl")).alias("label")
         )
+
+    labels = e.select(F.col("s").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
+    )
+    labels, _ = _rounds(labels, vote, rounds)
     return labels
 
 
@@ -696,11 +579,6 @@ def hits(
     iterations: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    scale: int = 10**6,
-    checkpoint_interval: int = 2,  # kept for API stability; unused since
-    # r10 — every half-round materializes into a persisted frame, so
-    # execution always reads the latest cache and no interval
-    # checkpointing is needed
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over a directed edge list
     in EXACT integer units — the link-analysis dual of :func:`pagerank`
@@ -708,62 +586,48 @@ def hits(
     buyer→item graph it ranks "broad, well-sourced" versus
     "widely-pointed-at" nodes, which plain degree or PageRank conflate).
 
-    Per round (the standard mutual recursion, L1-normalized):
+    Per round (the standard mutual recursion, L1-normalized to
+    ``scale = 10⁶``):
     ``a_raw(v) = Σ_{u→v} h(u)``, then ``a = (a_raw·scale) div Σ a_raw``;
     ``h_raw(u) = Σ_{u→v} a(v)``, then ``h = (h_raw·scale) div Σ h_raw``.
-    The float formulation L2-normalizes — unusable for cross-engine
-    value-hash checks (sqrt + reduction-order drift); integer L1 keeps the
-    same fixed point ORDERING with every quantity an exactly-representable
-    integer. The ``a_raw·scale`` products run in DECIMAL(38,0): with 1e9+
-    edges ``Σ a_raw`` alone passes 1e15, and BIGINT·scale would overflow
-    (Spark ``div`` on decimals returns the BIGINT quotient, which here is
-    ≤ scale by construction). r10: each Σ-total is a DRIVER-COLLECTED
-    scalar stamped back as a literal (the ``global_running_sum``
-    decision-scalar pattern) — the r9 shape broadcast each total with a
-    crossJoin, and every broadcast subtree ran as its own job
-    re-executing the round lineage; now each half-round's raw frame is
-    persisted, the total collect materializes it ONCE, and the rescale is
-    a narrow projection over the cache (one job per half-round, zero
-    redundant lineage execution). Prior half-rounds' caches unpersist as
-    soon as the next half-round materializes; the final round's two raw
-    frames stay cached because the returned (lazy) output projects them.
+    Integer L1 (not the float L2) keeps the fixed point ORDERING with every
+    quantity exactly representable, so values hash-check across engines.
+    The ``a_raw·scale`` products run in DECIMAL(38,0): with 1e9+ edges
+    ``Σ a_raw`` alone passes 1e15, and BIGINT·scale would overflow (``div``
+    on decimals returns the BIGINT quotient, ≤ scale by construction).
 
-    Plan shape is :func:`pagerank`'s: the edge list is laid out once
-    (repartition + localCheckpoint), each half-round is one equi-join
-    moving (node, score) pairs + one map-side-combined groupBy. Output:
-    ``(node, hub_int, auth_int)`` — on bipartite graphs source nodes
-    carry auth 0 and sink nodes hub 0 after round 1, matching the
-    definition.
+    Plan shape is :func:`pagerank`'s: the edge list is laid out once, each
+    half-round is one equi-join moving (node, score) pairs + one
+    map-side-combined groupBy. Scores are SPARSE between rounds (an absent
+    node scores exactly 0 and adds nothing), so only the final output
+    densifies. Output: ``(node, hub_int, auth_int)`` — on bipartite graphs
+    source nodes carry auth 0 and sink nodes hub 0 after round 1.
     """
     e = (
-        edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        )
-        .distinct()
+        _directed_edges(edges, src_col, dst_col)
         .repartition("src")
         .localCheckpoint(eager=False)
     )
-    # r9 note: a second dst-partitioned edge layout was measured here and
-    # REJECTED — the auth/hub sides are node-count rows and AQE broadcasts
-    # them, so the dst-side join never re-exchanges the edge table anyway;
-    # the extra layout's one-time materialization cost more than it saved
-    # (median 4.6s → 5.9s at sf0.1).
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition("node")
-        .localCheckpoint(eager=False)
-    )
+    # No second dst-partitioned edge layout: the score sides are node-count
+    # rows and AQE broadcasts them, so the dst-side join never re-exchanges
+    # the edge table; the extra layout's one-time materialization cost more
+    # than it saved (median 4.6s → 5.9s at sf0.1).
+    nodes = _nodes(e)
     dec = "decimal(38,0)"
 
-    def _l1_rescale(raw: DataFrame, col: str) -> DataFrame:
-        """(node, raw) → (node, (raw·scale) div Σraw), 0-total-safe.
-
-        ``raw`` must be persisted by the caller: the total collect is the
-        job that materializes it, and the returned projection reads the
-        cache. The literal total replays exactly (integer decimal)."""
+    def half_round(score: DataFrame, on: str, to: str, col: str) -> DataFrame:
+        """(node, score) → (node, col): the score summed along the edges
+        from ``on`` to ``to``, L1-rescaled (0-total-safe). The Σ-total
+        collect is the half-round's one job (it materializes the lazily
+        checkpointed sums); the total replays exactly as a decimal
+        literal."""
+        raw = (
+            e.join(score, e[on] == score["node"])
+            .select(F.col(to).alias("node"), F.col(score.columns[1]).alias("__c"))
+            .groupBy("node")
+            .agg(F.sum("__c").alias(col))
+            .localCheckpoint(eager=False)
+        )
         total = raw.agg(
             F.sum(F.col(col).cast(dec)).alias("__total")
         ).collect()[0]["__total"]
@@ -772,50 +636,17 @@ def hits(
         return raw.select(
             "node",
             F.expr(
-                f"(CAST({col} AS {dec}) * CAST({scale} AS {dec}))"
+                f"(CAST({col} AS {dec}) * CAST({_HITS_SCALE} AS {dec}))"
                 f" div CAST('{int(total)}' AS {dec})"
             )
             .cast("long")
             .alias(col),
         )
 
-    hub = nodes.select("node", F.lit(scale).cast("long").alias("h"))
-    auth = None
-    a_raw = h_raw = None
-    # r9: scores are SPARSE between rounds — a node absent from a_raw/h_raw
-    # has score exactly 0, and 0-score nodes contribute nothing to either
-    # the Σ-total (L1 rescale divides by the same sum with or without
-    # zero rows) or the next half-round's edge-join sums (missing join
-    # partner ≡ +0). So the per-round nodes-table zero-fill left-joins
-    # (2 per round) are deleted; only the FINAL output densifies. Output
-    # values are bit-identical (oracle hash unchanged).
-    for i in range(iterations):
-        prev_h_raw = h_raw
-        a_raw = (
-            e.join(hub, e["src"] == hub["node"])
-            .select(F.col("dst").alias("node"), F.col("h").alias("__c"))
-            .groupBy("node")
-            .agg(F.sum("__c").alias("a"))
-            .persist()
-        )
-        auth = _l1_rescale(a_raw, "a")  # materializes a_raw
-        if prev_h_raw is not None:
-            # the previous round's hub backing — a_raw is cached now, so
-            # nothing downstream re-reads it
-            prev_h_raw.unpersist()
-        h_raw = (
-            e.join(auth, e["dst"] == auth["node"])
-            .select(F.col("src").alias("node"), F.col("a").alias("__c"))
-            .groupBy("node")
-            .agg(F.sum("__c").alias("h"))
-            .persist()
-        )
-        hub = _l1_rescale(h_raw, "h")  # materializes h_raw
-        if (i + 1) < iterations:
-            # auth is only an input to the (already materialized) h_raw
-            # on non-final rounds; the final round's a_raw backs the
-            # returned output and stays cached
-            a_raw.unpersist()
+    hub = nodes.select("node", F.lit(_HITS_SCALE).cast("long").alias("h"))
+    for _ in range(iterations):
+        auth = half_round(hub, "src", "dst", "a")
+        hub = half_round(auth, "dst", "src", "h")
     return (
         nodes.join(hub, "node", "left")
         .join(auth, "node", "left")
@@ -836,169 +667,53 @@ def sssp_distances(
     weight_col: str = "w",
 ) -> DataFrame:
     """Weighted single-source shortest paths, bounded-round Bellman-Ford —
-    the weighted upgrade of :func:`bfs_distances` (min-plus semiring
-    instead of hop counting). Integer weights keep every distance exact,
-    so rounds replay bit-identically in any engine.
+    the weighted form of :func:`bfs_distances` (min-plus semiring instead
+    of hop counting). Integer weights keep every distance exact, so rounds
+    replay bit-identically in any engine.
 
     Frontier-optimized relaxation: only nodes whose distance IMPROVED last
     round join the edge table next round (classic delta-relaxation — the
     result is identical to relaxing everything, rounds just get cheaper as
-    the frontier shrinks). Per round:
+    the frontier shrinks). Per round the frontier ⋈ edges emits the
+    relaxation candidates ``(t, dist + w)``, and candidates and the current
+    state merge in ONE map-side-combined ``min`` per node
+    (:func:`_min_merge`).
 
-    1. frontier ⋈ edges (keyed on node ids, AQE re-plannable) emits the
-       relaxation candidates ``(t, dist + w)``;
-    2. candidates and the current state table union into ONE
-       map-side-combined ``min`` per node (r10 — replaces the old
-       groupBy-then-full-outer-merge, which cost a second exchange plus
-       two sorts per round because FullOuter SMJ forgets partitioning);
-    3. the merged state is persisted (eager count) and the PREVIOUS
-       round's state unpersisted — r8 change from per-round lazy
-       localCheckpoints, which accumulated block-storage RDDs across
-       repeated runs in one session (measured: a periodic ~40 s GC spike
-       every few runs) and cost more to write than the columnar cache
-       (same finding as containment_join's postings table). dist and
-       frontier are PROJECTIONS of one cached frame, so each round
-       materializes once, plan growth stays bounded at one cached hop,
-       and only the final round's cache outlives the call (evictable
-       MEMORY_AND_DISK, the same class as every persist here).
-
-    Edges are symmetrized, parallel edges collapsed to their min weight,
-    and the result hash-partitioned on the join key ``s`` BEFORE caching
-    (r9): the cached layout satisfies every round's join distribution, so
-    relaxation rounds exchange only the frontier side — the edge table is
-    shuffled once at build instead of once per round (the bucketed-table
-    pattern from ``sources/bucketing.py``, applied in-session via a cached
-    repartition). The round bound is a CAP — the honest distributed
-    contract (it is the graph diameter bound); the per-round materializing
-    count doubles as a convergence probe and relaxation stops the first
-    round no distance improves (r9), so a generous cap costs nothing on a
-    small-diameter graph.
+    Edges are symmetrized, parallel edges collapsed to their min weight.
+    The round bound is a CAP — the honest distributed contract (it is the
+    graph diameter bound); the per-round materializing count doubles as a
+    convergence probe and relaxation stops the first round no distance
+    improves, so a generous cap costs nothing on a small-diameter graph.
 
     Output: (node, dist) for every node reachable within ``rounds``
     relaxation rounds, dist = exact min path weight.
     """
-    spark = pairs.sparkSession
-    half = pairs.select(
-        F.col(left_col).cast("long").alias("s"),
-        F.col(right_col).cast("long").alias("t"),
-        F.col(weight_col).cast("long").alias("w"),
-    )
-    # r10: ONE shuffle builds the laid-out edge table — repartition("s")
-    # FIRST, then collapse parallel edges: HashPartitioning(s) satisfies
-    # the groupBy(s, t) clustering requirement (s is a prefix of the
-    # grouping key), so the aggregate runs partition-local with no second
-    # exchange and the cached output keeps the s-layout every round's
-    # join needs (was: groupBy exchange on (s,t) + repartition exchange
-    # on s — two full passes of the symmetrized edge list).
+    s, t, w = (F.col(c).cast("long") for c in (left_col, right_col, weight_col))
+    # ONE shuffle builds the laid-out edge table: repartition("s") FIRST,
+    # then collapse parallel edges — HashPartitioning(s) satisfies the
+    # groupBy(s, t) clustering requirement (s is a prefix of the grouping
+    # key), so the aggregate runs partition-local with no second exchange.
     e = (
-        half.union(
-            pairs.select(
-                F.col(right_col).cast("long"),
-                F.col(left_col).cast("long"),
-                F.col(weight_col).cast("long"),
-            )
-        )
+        pairs.select(s.alias("s"), t.alias("t"), w.alias("w"))
+        .union(pairs.select(t, s, w))
         .repartition("s")
         .groupBy("s", "t")
         .agg(F.min("w").alias("w"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    dist = spark.createDataFrame([(int(source), 0)], "node long, dist long")
-    frontier = dist
-    live_caches: list[DataFrame] = []
-    # r11 (VERDICT r10 item 4 — iterative-tier tiny-task tax): the per-round
-    # merge shuffle runs at spark.sql.shuffle.partitions (= cores on the
-    # bench), but the state table is tiny at small scale (<= nodes rows),
-    # and persist() compiles its plan WITHOUT AQE (cached-plan partitioning
-    # is pinned by default), so every round paid `cores` near-empty shuffle
-    # tasks + `cores` tiny cache partitions. Size the round's reducer count
-    # to the MEASURED state instead — min(default, state_rows // 64k + 1) —
-    # via a scoped shuffle.partitions override (restored in `finally`; the
-    # only plans compiled inside the loop are the round plans). Scale-
-    # adaptive by construction: at 64k+ state rows per partition the count
-    # climbs back to the session default. Interleaved bench-shaped A/B at
-    # sf0.1: min walls 5.2-6.2s -> 4.1-4.5s (~20% faster), rows identical.
-    # (A suite-wide canChangeCachedPlanOutputPartitioning=true was measured
-    # FIRST and rejected — see session.py — because AQE-coalesced caches
-    # serialize compute-dense frames elsewhere; this override touches only
-    # the round-state shuffles of this loop.)
-    default_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    n_state = 1
-    try:
-        for i in range(rounds):
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(min(int(default_sp), n_state // 65536 + 1)),
-            )
-            # r10 merge fusion: the old shape was groupBy(t) over the
-            # relaxation candidates (exchange 1) then a full-outer
-            # SortMergeJoin against the state table (exchange 2 + two
-            # sorts — FullOuter SMJ output partitioning is Unknown, so
-            # every round re-exchanged the cached state). min-plus
-            # relaxation is a pure MIN per node, so state rows and
-            # candidate contributions union into ONE map-side-combined
-            # groupBy: half the exchanges, no sorts, and the candidate
-            # rows partial-aggregate before they ever shuffle (guide §2.3
-            # "aggregate before you shuffle"). __improved reproduces the
-            # full-outer semantics exactly: __od (the node's previous
-            # dist) is NULL only for newly reached nodes (improved), and
-            # a non-improving round leaves __nd < __od false-or-null —
-            # identical under the filter.
-            contrib = frontier.join(e, frontier["node"] == e["s"]).select(
-                F.col("t").alias("node"),
-                (F.col("dist") + F.col("w")).alias("d"),
-                F.lit(False).alias("__old"),
-            )
-            state = dist.select(
-                "node", F.col("dist").alias("d"), F.lit(True).alias("__old")
-            )
-            merged = (
-                state.unionByName(contrib)
-                .groupBy("node")
-                .agg(
-                    F.min("d").alias("dist"),
-                    F.min(F.when(F.col("__old"), F.col("d"))).alias("__od"),
-                    F.min(F.when(~F.col("__old"), F.col("d"))).alias("__nd"),
-                )
-                .select(
-                    "node",
-                    "dist",
-                    (
-                        F.col("__od").isNull()
-                        | (F.col("__nd") < F.col("__od"))
-                    ).alias("__improved"),
-                )
-            )
-            # (r9 measured: materializing every SECOND round instead —
-            # relying on ReusedExchange for the lazy round — was ~1.7x
-            # SLOWER at sf0.1; the per-round persist+count stays.)
-            merged = merged.persist()
-            # the materializing action doubles as the convergence probe:
-            # when NO distance improved this round the frontier is empty
-            # and every later round is a no-op — stop early (r9; `rounds`
-            # is a CAP — the honest diameter bound — not a quota, and the
-            # result is identical). r11: ONE aggregate returns both the
-            # convergence flag and the state row count that sizes the next
-            # round's shuffle (was a filtered count — same single
-            # materializing job, one more scalar out).
-            row = merged.agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.sum(
-                    F.when(F.col("__improved"), F.lit(1)).otherwise(F.lit(0))
-                ).alias("__imp"),
-            ).collect()[0]
-            n_state, n_improved = int(row["__n"]), int(row["__imp"] or 0)
-            for c in live_caches:
-                c.unpersist()
-            live_caches = [merged]
-            dist = merged.select("node", "dist")
-            frontier = merged.filter("__improved").select("node", "dist")
-            if n_improved == 0:
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default_sp)
-    e.unpersist()
-    return dist
+
+    def relax(state: DataFrame) -> DataFrame:
+        frontier = state.filter(F.col("__improved"))
+        contrib = frontier.join(e, frontier["node"] == e["s"]).select(
+            F.col("t").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
+        )
+        return _min_merge(state, contrib, "node", "dist")
+
+    start = pairs.sparkSession.createDataFrame(
+        [(int(source), 0, True)], "node long, dist long, __improved boolean"
+    )
+    dist, _ = _rounds(start, relax, rounds, _settled)
+    return dist.select("node", "dist")
 
 
 def dedup_cluster_report(labeled: DataFrame, id_col: str = "id") -> DataFrame:

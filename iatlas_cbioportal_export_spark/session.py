@@ -30,9 +30,10 @@ _DEFAULT_CONF: dict[str, str] = {
     # cooccurrence_pmi 1.42x, sssp itself 1.26x slower): coalescing sizes
     # cached partitions by SHUFFLE BYTES, and the compute-dense cached frames
     # (posting/signature tables whose per-byte downstream work is large)
-    # serialize onto 1-3 tasks. Default (false) kept; the iterative tier's
-    # tiny-state rounds are sized explicitly at the operator instead
-    # (operators/graph.py).
+    # serialize onto 1-3 tasks. Default (false) kept. The iterative graph
+    # loops checkpoint each round (operators/graph.py) instead of caching
+    # it, so AQE already sizes their tiny-state rounds; no operator
+    # overrides shuffle.partitions.
     # Dimension tables (oncotree / attribute maps / nation / region) are tiny;
     # let Spark broadcast aggressively, we still force broadcast() on known dims.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -70,6 +71,28 @@ _DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def default_cpus() -> str:
+    """Local cores and shuffle partitions: ``$SPARK_GRAFT_CPUS``, else 32."""
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+# The runtime-settable SQL confs the engine's results and speed depend on.
+_ENGINE_SQL_KEYS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.session.timeZone",
+    "spark.sql.optimizer.excludedRules",
+)
+
+
+def engine_sql_conf() -> dict[str, str]:
+    """The runtime-settable SQL confs ``get_spark`` sets that the engine
+    needs under any session, including one built elsewhere: the
+    ``_ENGINE_SQL_KEYS`` defaults plus shuffle partitions sized to cores."""
+    conf = {key: _DEFAULT_CONF[key] for key in _ENGINE_SQL_KEYS}
+    conf["spark.sql.shuffle.partitions"] = default_cpus()
+    return conf
+
+
 def get_spark(
     app_name: str = "iatlas-cbioportal-export-spark",
     master: str | None = None,
@@ -84,15 +107,14 @@ def get_spark(
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{default_cpus()}]"
     if master:
         builder = builder.master(master)
     conf = dict(_DEFAULT_CONF)
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions
         if shuffle_partitions is not None
-        else int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        else int(default_cpus())
     )
     if extra_conf:
         conf.update(extra_conf)

@@ -335,6 +335,46 @@ def test_jaccard_auto_avoids_deletion_on_huge_sets(spark):
     assert got == {(0, 1): round(1999 / 2000, 6)}
 
 
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_jaccard_deletion_build_depth_past_int32(spark, ansi):
+    """The deletion scheme's build-side depth bound multiplies
+    2·t_num·n, which passes 2³¹ from n ≈ 1076 at t = 0.998. It must run
+    in BIGINT with integral division: under ANSI a 32-bit product throws,
+    and the pair set must equal brute force either way."""
+    import itertools
+
+    from iatlas_cbioportal_export_spark.operators.dedup import (
+        jaccard_prefix_join,
+    )
+
+    base = [f"w{k:04d}" for k in range(1100)]
+    # J(0,1) = 1098/1100 and J(1,2) = 1097/1098 pass 0.998;
+    # J(0,2) = 1097/1100 does not
+    docs = [(0, base), (1, base[:-2]), (2, base[:-3])]
+    df = spark.createDataFrame(
+        [(i, " ".join(toks)) for i, toks in docs], "doc_id long, text string"
+    )
+    want = {}
+    for (a, sa), (b, sb) in itertools.combinations(docs, 2):
+        j = len(set(sa) & set(sb)) / len(set(sa) | set(sb))
+        if j >= 0.998:
+            want[(a, b)] = round(j, 6)
+    assert len(want) == 2
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in jaccard_prefix_join(
+                df, threshold=0.998, blocking="deletion"
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == want
+
+
 def test_containment_join_finds_planted_excerpt(spark):
     from iatlas_cbioportal_export_spark.operators.dedup import (
         containment_join,

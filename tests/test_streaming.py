@@ -72,19 +72,19 @@ def test_sessionize_stream_closes_sessions(spark, tmp_path):
     # The stateful query holds per-user processing-time timeouts, so with
     # availableNow it does NOT terminate after draining the input — a plain
     # awaitTermination(120) burned the full 120s (the single slowest test
-    # in the suite). Poll the sink for the batch-drain result instead: once
-    # rows appear, give one settle period for any same-drain stragglers,
-    # read, and stop the query.
+    # in the suite). Poll the sink for the batch-drain result instead: read
+    # once its row count is nonzero and the same on two consecutive polls
+    # (no same-drain stragglers still landing), then stop the query.
     import time as _time
 
     deadline = _time.time() + 120
-    while _time.time() < deadline:
-        if spark.sql("select * from sessions_test").count() > 0:
+    prev = -1
+    while _time.time() < deadline and q.isActive:
+        n = spark.sql("select * from sessions_test").count()
+        if n > 0 and n == prev:
             break
-        if not q.isActive:
-            break
+        prev = n
         _time.sleep(0.5)
-    _time.sleep(2.0)
     got = {
         (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
         for r in spark.sql("select * from sessions_test").collect()

@@ -209,7 +209,7 @@ EXPECTATIONS: dict[str, tuple[list[str], list[str]]] = {
         ["HashAggregate"],
         ["CartesianProduct", "BroadcastNestedLoopJoin"],
     ),
-    # K=4 rounds NESTED into one plan (checkpoint_interval=4, measured 2.6×
+    # K=4 rounds NESTED into one plan (_PR_CHECKPOINT_INTERVAL=4, measured 2.6×
     # vs per-round truncation): the visible tree carries the per-round
     # equi-joins over the checkpointed edge/node state (Scan ExistingRDD) —
     # equi-joins only, never a nested loop
