@@ -105,6 +105,7 @@ def cmd_maf(args: argparse.Namespace) -> int:
         http_annotator,
         split_annotation_errors,
     )
+    from iatlas_cbioportal_export_spark.plans.bundle import render_mutations_meta
     from iatlas_cbioportal_export_spark.sources.readers import read_maf_folder
     from iatlas_cbioportal_export_spark.sources.sinks import write_chunked_tsv
 
@@ -117,20 +118,8 @@ def cmd_maf(args: argparse.Namespace) -> int:
     ok, failed = split_annotation_errors(annotate(maf, annotator=annotator))
     write_chunked_tsv(drop_chrm(ok), os.path.join(args.out, "data_mutations_extended"),
                       max_rows=args.max_rows)
-    # meta descriptor — the reference's generate_meta_files step (maf.py:209-216)
-    from iatlas_cbioportal_export_spark.sources.sinks import render_meta_file
-
     with open(os.path.join(args.out, "meta_mutations_extended.txt"), "w") as fh:
-        fh.write(
-            render_meta_file(
-                {
-                    "cancer_study_identifier": f"iatlas_{args.dataset}",
-                    "genetic_alteration_type": "MUTATION_EXTENDED",
-                    "datatype": "MAF",
-                    "data_filename": "data_mutations_extended",
-                }
-            )
-        )
+        fh.write(render_mutations_meta(f"iatlas_{args.dataset}"))
     n_failed = failed.count()
     if n_failed:
         write_chunked_tsv(failed, os.path.join(args.out, "annotation_errors"))
@@ -138,15 +127,8 @@ def cmd_maf(args: argparse.Namespace) -> int:
     return 0
 
 
-# The reference's bundle surface (utils.py:11-22 REQUIRED_OUTPUT_FILES).
-# Our writer names the mutation artifact ``data_mutations_extended`` (a
-# chunked directory, S4) where the reference has a single
-# ``data_mutations.txt`` — validate accepts either spelling.
-_MAF_ARTIFACT_NAMES = (
-    "data_mutations_extended",
-    "data_mutations.txt",
-    "data_mutations_extended.txt",
-)
+# The reference's bundle surface (utils.py:11-22 REQUIRED_OUTPUT_FILES);
+# the mutation artifact spellings are plans.bundle.MAF_ARTIFACT_NAMES.
 _MAF_META_NAMES = ("meta_mutations_extended.txt", "meta_mutations.txt")
 _PASSTHROUGH_FILES = (
     "data_gene_signatures.txt",
@@ -172,15 +154,15 @@ def cmd_validate(args: argparse.Namespace) -> int:
     clinical-samples, V13 maf-vs-neoantigen keyset (``validate.py:135-157``,
     with ``--neoantigen``), and gene-signature / RNA-seq pass-through matrix
     checks (``validate.py:175-195``: present, non-empty, sample columns ⊆
-    clinical samples). The whole suite is ONE lazy findings union → one
-    Spark action; exit 1 on any ERROR row (ErrorFlagHandler semantics,
-    ``utils.py:52-58``)."""
+    clinical samples). The whole suite is ONE lazy findings union,
+    evaluated by one collect: each row prints as a tab-separated line and
+    any ERROR row exits 1 (ErrorFlagHandler semantics, ``utils.py:52-58``)."""
     from pyspark.sql import functions as F
 
     from iatlas_cbioportal_export_spark.operators.validation import (
+        FINDINGS_COLUMNS,
         file_presence_findings,
         findings_union,
-        has_errors,
         keyed_dup_and_distinct_checks,
         keyset_preserved,
         keyset_subset,
@@ -188,6 +170,7 @@ def cmd_validate(args: argparse.Namespace) -> int:
         required_columns_present,
         table_profile_checks,
     )
+    from iatlas_cbioportal_export_spark.plans.bundle import MAF_ARTIFACT_NAMES
     from iatlas_cbioportal_export_spark.sources.maf_schema import REQUIRED_MAF_COLS
     from iatlas_cbioportal_export_spark.sources.readers import (
         read_tsv,
@@ -199,7 +182,7 @@ def cmd_validate(args: argparse.Namespace) -> int:
     findings = []
 
     maf_name = next(
-        (n for n in _MAF_ARTIFACT_NAMES if os.path.exists(os.path.join(bundle, n))),
+        (n for n in MAF_ARTIFACT_NAMES if os.path.exists(os.path.join(bundle, n))),
         None,
     )
     maf_meta = next(
@@ -212,7 +195,7 @@ def cmd_validate(args: argparse.Namespace) -> int:
         "meta_clinical_patient.txt",
         "meta_clinical_sample.txt",
         "meta_study.txt",
-        maf_name or _MAF_ARTIFACT_NAMES[0],
+        maf_name or MAF_ARTIFACT_NAMES[0],
         maf_meta or _MAF_META_NAMES[0],
     ]
     optional = list(_PASSTHROUGH_FILES)
@@ -335,9 +318,11 @@ def cmd_validate(args: argparse.Namespace) -> int:
                 )
             )
 
-    suite = findings_union(findings)
-    suite.show(200, truncate=False)
-    return 1 if has_errors(suite) else 0
+    rows = findings_union(findings).collect()
+    print("\t".join(FINDINGS_COLUMNS))
+    for row in rows:
+        print("\t".join("NULL" if v is None else str(v) for v in row))
+    return 1 if any(row["status"] == "ERROR" for row in rows) else 0
 
 
 def cmd_load(args: argparse.Namespace) -> int:

@@ -10,6 +10,11 @@ job per check; at 15k rows that was 6.5s of pure job overhead, measured).
 
 No check collects fact-table data to the driver; each is an aggregate whose
 result is a single row (or one row per audited column).
+
+Every finding row is one :func:`_finding` struct exploded over its
+aggregate by :func:`_findings`. The two exceptions: :func:`file_presence_findings`
+builds its rows on the driver, and :func:`constraint_suite` keeps its own
+``(rule, kind, violations, total, status)`` schema.
 """
 
 from __future__ import annotations
@@ -23,16 +28,82 @@ from pyspark.sql import functions as F
 FINDINGS_COLUMNS = ["check", "status", "observed", "expected", "detail"]
 
 
-def _finding_row(
-    check: str, ok: Column, observed: Column, expected: Column, detail: Column
-) -> list[Column]:
-    return [
-        F.lit(check).alias("check"),
-        F.when(ok, F.lit("OK")).otherwise(F.lit("ERROR")).alias("status"),
-        observed.cast("long").alias("observed"),
-        expected.cast("long").alias("expected"),
-        detail.alias("detail"),
-    ]
+def _as_col(v) -> Column:
+    return v if isinstance(v, Column) else F.lit(v)
+
+
+def _finding(check, ok, observed, expected, detail, severity: str = "ERROR") -> Column:
+    """One finding row as a struct: status OK when ``ok`` holds (a NULL
+    ``ok`` does not), else ``severity``. Plain values become literals."""
+    return F.struct(
+        _as_col(check).alias("check"),
+        F.when(_as_col(ok), F.lit("OK")).otherwise(F.lit(severity)).alias("status"),
+        _as_col(observed).cast("long").alias("observed"),
+        _as_col(expected).cast("long").alias("expected"),
+        _as_col(detail).alias("detail"),
+    )
+
+
+def _violation(check: str, n, detail, severity: str = "ERROR") -> Column:
+    """A finding whose ``n`` counts violations: OK iff ``n`` is 0."""
+    return _finding(check, n == 0, n, 0, detail, severity)
+
+
+def _findings(agg: DataFrame, rows: Sequence[Column]) -> DataFrame:
+    """Explode :func:`_finding` structs over ``agg`` into findings rows."""
+    return agg.select(F.explode(F.array(*rows)).alias("f")).select("f.*")
+
+
+def _count_violation(
+    df: DataFrame, check: str, detail: str, severity: str = "ERROR"
+) -> DataFrame:
+    """One finding that counts every row of ``df`` as a violation."""
+    n = df.agg(F.count(F.lit(1)).alias("n"))
+    return _findings(n, [_violation(check, F.col("n"), detail, severity)])
+
+
+def _rule_findings(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
+    """One aggregate pass counting, per rule, the rows whose predicate
+    holds (a NULL predicate is no violation); one finding row per rule.
+    The count is a SUM, so a zero-row input reads NULL (ERROR)."""
+    agg = df.agg(
+        *[
+            F.sum(F.when(cond, 1).otherwise(0)).alias(f"__v{i}")
+            for i, cond in enumerate(rules.values())
+        ]
+    )
+    return _findings(
+        agg,
+        [
+            _violation(name, F.col(f"__v{i}"), "violating rows")
+            for i, name in enumerate(rules)
+        ],
+    )
+
+
+def _dup_groups(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """The ``keys`` groups of ``df`` holding more than one row."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .filter(F.col("__c") > 1)
+    )
+
+
+def _unchanged(check: str, n: Column) -> Column:
+    """A self-comparison (in == out by construction): always OK."""
+    return _finding(check, True, n, n, F.format_string("in=%d out=%d", n, n))
+
+
+def _in_out_equal(
+    df_in: DataFrame, df_out: DataFrame, measure: Column, check: str
+) -> DataFrame:
+    n_in, n_out = F.col("n_in"), F.col("n_out")
+    both = df_in.agg(measure.alias("n_in")).crossJoin(
+        df_out.agg(measure.alias("n_out"))
+    )
+    detail = F.format_string("in=%d out=%d", n_in, n_out)
+    return _findings(both, [_finding(check, n_in == n_out, n_out, n_in, detail)])
 
 
 def count_equality(
@@ -40,33 +111,15 @@ def count_equality(
 ) -> DataFrame:
     """V2/V8: row count in == out (reference ``clinical.py:814-817``,
     ``maf.py:234-237``)."""
-    a = df_in.agg(F.count(F.lit(1)).alias("n_in"))
-    b = df_out.agg(F.count(F.lit(1)).alias("n_out"))
-    return a.crossJoin(b).select(
-        *_finding_row(
-            check,
-            F.col("n_in") == F.col("n_out"),
-            F.col("n_out"),
-            F.col("n_in"),
-            F.format_string("in=%d out=%d", "n_in", "n_out"),
-        )
-    )
+    return _in_out_equal(df_in, df_out, F.count(F.lit(1)), check)
 
 
 def distinct_count_equality(
     df_in: DataFrame, df_out: DataFrame, col: str, check_prefix: str = "distinct"
 ) -> DataFrame:
     """V3/V4: distinct key counts in == out (reference ``clinical.py:809-825``)."""
-    a = df_in.agg(F.countDistinct(col).alias("n_in"))
-    b = df_out.agg(F.countDistinct(col).alias("n_out"))
-    return a.crossJoin(b).select(
-        *_finding_row(
-            f"{check_prefix}_{col.lower()}_preserved",
-            F.col("n_in") == F.col("n_out"),
-            F.col("n_out"),
-            F.col("n_in"),
-            F.format_string("in=%d out=%d", "n_in", "n_out"),
-        )
+    return _in_out_equal(
+        df_in, df_out, F.countDistinct(col), f"{check_prefix}_{col.lower()}_preserved"
     )
 
 
@@ -74,55 +127,12 @@ def no_null_keys(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """V5/V6/V11: key / required columns contain no nulls (reference
     ``clinical.py:826-830``; ``maf.py:250-269`` for t_ref/t_alt counts).
     ONE aggregate pass for all columns; one finding row per column."""
-    agg = df.agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[F.count(F.col(c)).alias(f"__c_{c}") for c in cols],
-    )
-    per_col = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("col"),
-                (F.col("__n") - F.col(f"__c_{c}")).alias("n_null"),
-            )
-            for c in cols
-        ]
-    )
-    exploded = agg.select(F.explode(per_col).alias("f"))
-    return exploded.select(
-        *_finding_row(
-            "",  # placeholder, replaced below with a computed name
-            F.col("f.n_null") == 0,
-            F.col("f.n_null"),
-            F.lit(0),
-            F.concat(F.lit("null rows in "), F.col("f.col")),
-        )[1:],
-        F.concat(F.lit("no_null_"), F.lower(F.col("f.col"))).alias("check"),
-    ).select(*FINDINGS_COLUMNS)
+    return table_profile_checks(df, no_null_cols=cols)
 
 
 def no_all_null_columns(df: DataFrame) -> DataFrame:
     """V7: no output column is 100% null (reference ``clinical.py:833-837``)."""
-    agg = df.agg(*[F.count(F.col(c)).alias(f"__c_{c}") for c in df.columns])
-    bad = F.array_compact(
-        F.array(
-            *[
-                F.when(F.col(f"__c_{c}") == 0, F.lit(c))
-                for c in df.columns
-            ]
-        )
-    )
-    return agg.select(
-        *_finding_row(
-            "no_all_null_columns",
-            F.size(bad) == 0,
-            F.size(bad),
-            F.lit(0),
-            F.when(
-                F.size(bad) > 0,
-                F.concat(F.lit("all-null: "), F.concat_ws(",", bad)),
-            ).otherwise(F.lit("")),
-        )
-    )
+    return table_profile_checks(df, all_null_cols=df.columns)
 
 
 def no_duplicate_rows(
@@ -130,22 +140,8 @@ def no_duplicate_rows(
 ) -> DataFrame:
     """V9/V14: duplicate detection (whole-row or keyed) — reference
     ``maf.py:239-240``, ``clinical.py:214-225``."""
-    keys = list(subset or df.columns)
-    dup_groups = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .agg(F.count(F.lit(1)).alias("n_dup"))
-    )
-    return dup_groups.select(
-        *_finding_row(
-            check,
-            F.col("n_dup") == 0,
-            F.col("n_dup"),
-            F.lit(0),
-            F.lit("duplicate key groups"),
-        )
-    )
+    dups = _dup_groups(df, list(subset or df.columns))
+    return _count_violation(dups, check, "duplicate key groups")
 
 
 def keyset_preserved(
@@ -157,17 +153,12 @@ def keyset_preserved(
     from iatlas_cbioportal_export_spark.operators.joins import keyset_equality
 
     lo, ro = keyset_equality(left, left_key, right, right_key)
-    a = lo.agg(F.count(F.lit(1)).alias("n_lo"))
-    b = ro.agg(F.count(F.lit(1)).alias("n_ro"))
-    return a.crossJoin(b).select(
-        *_finding_row(
-            check,
-            (F.col("n_lo") == 0) & (F.col("n_ro") == 0),
-            F.col("n_lo") + F.col("n_ro"),
-            F.lit(0),
-            F.format_string("left_only=%d right_only=%d", "n_lo", "n_ro"),
-        )
+    n_lo, n_ro = F.col("n_lo"), F.col("n_ro")
+    both = lo.agg(F.count(F.lit(1)).alias("n_lo")).crossJoin(
+        ro.agg(F.count(F.lit(1)).alias("n_ro"))
     )
+    detail = F.format_string("left_only=%d right_only=%d", n_lo, n_ro)
+    return _findings(both, [_violation(check, n_lo + n_ro, detail)])
 
 
 def keyset_subset(
@@ -189,17 +180,8 @@ def keyset_subset(
             "__k",
             "left_anti",
         )
-        .agg(F.count(F.lit(1)).alias("n_missing"))
     )
-    return missing.select(
-        *_finding_row(
-            check,
-            F.col("n_missing") == 0,
-            F.col("n_missing"),
-            F.lit(0),
-            F.lit(f"{left_key} values absent from {right_key}"),
-        )
-    )
+    return _count_violation(missing, check, f"{left_key} values absent from {right_key}")
 
 
 def file_presence_findings(
@@ -237,15 +219,8 @@ def required_columns_present(
     this subset form backs the "these columns must exist" contracts
     (v_validation_suite's lineitem_schema etc.)."""
     missing = [c for c in required if c not in df.columns]
-    return df.sparkSession.range(1).select(
-        *_finding_row(
-            check,
-            F.lit(not missing),
-            F.lit(len(missing)),
-            F.lit(0),
-            F.lit("missing: " + ",".join(missing) if missing else ""),
-        )
-    )
+    detail = "missing: " + ",".join(missing) if missing else ""
+    return _findings(df.sparkSession.range(1), [_violation(check, len(missing), detail)])
 
 
 def schema_matches_exactly(
@@ -265,14 +240,9 @@ def schema_matches_exactly(
         parts.append("missing: " + ",".join(missing))
     if extra:
         parts.append("extra: " + ",".join(extra))
-    return df.sparkSession.range(1).select(
-        *_finding_row(
-            check,
-            F.lit(not (missing or extra)),
-            F.lit(len(missing) + len(extra)),
-            F.lit(0),
-            F.lit("; ".join(parts)),
-        )
+    return _findings(
+        df.sparkSession.range(1),
+        [_violation(check, len(missing) + len(extra), "; ".join(parts))],
     )
 
 
@@ -385,9 +355,6 @@ def maf_value_conformance(
     t_ref = F.col(t_ref_col).cast("double")
     t_alt = F.col(t_alt_col).cast("double")
 
-    def _violations(cond: Column) -> Column:
-        return F.sum(F.when(F.coalesce(cond, F.lit(False)), 1).otherwise(0))
-
     def _present(c: Column) -> Column:
         # TSV-borne MAFs carry missing values as EMPTY STRINGS, not NULLs
         # (the 118-col fixture and real exports alike); a blank field is
@@ -493,28 +460,7 @@ def maf_value_conformance(
         rules["maf_hgvsp_prefix"] = (
             hp.isNotNull() & (hp != "") & ~hp.startswith("p.")
         )
-    agg = maf.agg(
-        *[_violations(cond).alias(f"__v_{name}") for name, cond in rules.items()]
-    )
-    per_rule = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("rule"),
-                F.col(f"__v_{name}").alias("n_bad"),
-            )
-            for name in rules
-        ]
-    )
-    exploded = agg.select(F.explode(per_rule).alias("f"))
-    return exploded.select(
-        F.col("f.rule").alias("check"),
-        F.when(F.col("f.n_bad") == 0, F.lit("OK"))
-        .otherwise(F.lit("ERROR"))
-        .alias("status"),
-        F.col("f.n_bad").cast("long").alias("observed"),
-        F.lit(0).cast("long").alias("expected"),
-        F.lit("violating rows").alias("detail"),
-    )
+    return _rule_findings(maf, rules)
 
 
 def table_profile_checks(
@@ -532,64 +478,36 @@ def table_profile_checks(
     validation pass re-reading the fact table per check is the difference
     between one pass and six; the two-sided operators remain for genuine
     in-vs-out comparisons."""
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
-    for c in distinct_cols:
-        aggs.append(F.countDistinct(c).alias(f"__d_{c}"))
-    for c in sorted({*no_null_cols, *all_null_cols}):
-        aggs.append(F.count(F.col(c)).alias(f"__c_{c}"))
-    agg = df.agg(*aggs)
-
-    def row(check: Column | str, ok, observed, expected, detail) -> Column:
-        return F.struct(
-            (F.lit(check) if isinstance(check, str) else check).alias("check"),
-            F.when(ok, F.lit("OK")).otherwise(F.lit("ERROR")).alias("status"),
-            observed.cast("long").alias("observed"),
-            expected.cast("long").alias("expected"),
-            detail.alias("detail"),
-        )
+    agg = df.agg(
+        F.count(F.lit(1)).alias("__n"),
+        *[F.countDistinct(c).alias(f"__d_{c}") for c in distinct_cols],
+        *[
+            F.count(F.col(c)).alias(f"__c_{c}")
+            for c in sorted({*no_null_cols, *all_null_cols})
+        ],
+    )
 
     n = F.col("__n")
-    findings: list[Column] = []
-    if count_check:
-        findings.append(
-            row(count_check, n == n, n, n, F.format_string("in=%d out=%d", "__n", "__n"))
-        )
-    for c in distinct_cols:
-        d = F.col(f"__d_{c}")
-        findings.append(
-            row(
-                f"distinct_{c.lower()}_preserved",
-                d == d,
-                d,
-                d,
-                F.format_string("in=%d out=%d", f"__d_{c}", f"__d_{c}"),
-            )
-        )
-    for c in no_null_cols:
-        nn = n - F.col(f"__c_{c}")
-        findings.append(
-            row(f"no_null_{c.lower()}", nn == 0, nn, F.lit(0),
-                F.lit(f"null rows in {c}"))
-        )
+    rows = [_unchanged(count_check, n)] if count_check else []
+    rows += [
+        _unchanged(f"distinct_{c.lower()}_preserved", F.col(f"__d_{c}"))
+        for c in distinct_cols
+    ]
+    rows += [
+        _violation(f"no_null_{c.lower()}", n - F.col(f"__c_{c}"), f"null rows in {c}")
+        for c in no_null_cols
+    ]
     if all_null_cols:
         bad = F.array_compact(
             F.array(
                 *[F.when(F.col(f"__c_{c}") == 0, F.lit(c)) for c in all_null_cols]
             )
         )
-        findings.append(
-            row(
-                "no_all_null_columns",
-                F.size(bad) == 0,
-                F.size(bad),
-                F.lit(0),
-                F.when(
-                    F.size(bad) > 0,
-                    F.concat(F.lit("all-null: "), F.concat_ws(",", bad)),
-                ).otherwise(F.lit("")),
-            )
-        )
-    return agg.select(F.explode(F.array(*findings)).alias("f")).select("f.*")
+        detail = F.when(
+            F.size(bad) > 0, F.concat(F.lit("all-null: "), F.concat_ws(",", bad))
+        ).otherwise(F.lit(""))
+        rows.append(_violation("no_all_null_columns", F.size(bad), detail))
+    return _findings(agg, rows)
 
 
 def keyed_dup_and_distinct_checks(
@@ -607,29 +525,9 @@ def keyed_dup_and_distinct_checks(
         F.count(F.lit(1)).alias("__nd"),
         F.sum(F.when(F.col("__k") > 1, 1).otherwise(0)).alias("__dup"),
     )
-    rows = []
-    if distinct_check:
-        rows.append(
-            F.struct(
-                F.lit(distinct_check).alias("check"),
-                F.lit("OK").alias("status"),
-                F.col("__nd").cast("long").alias("observed"),
-                F.col("__nd").cast("long").alias("expected"),
-                F.format_string("in=%d out=%d", "__nd", "__nd").alias("detail"),
-            )
-        )
-    rows.append(
-        F.struct(
-            F.lit(dup_check).alias("check"),
-            F.when(F.col("__dup") == 0, F.lit("OK"))
-            .otherwise(F.lit("ERROR"))
-            .alias("status"),
-            F.col("__dup").cast("long").alias("observed"),
-            F.lit(0).cast("long").alias("expected"),
-            F.lit("duplicate key groups").alias("detail"),
-        )
-    )
-    return agg.select(F.explode(F.array(*rows)).alias("f")).select("f.*")
+    rows = [_unchanged(distinct_check, F.col("__nd"))] if distinct_check else []
+    rows.append(_violation(dup_check, F.col("__dup"), "duplicate key groups"))
+    return _findings(agg, rows)
 
 
 def findings_union(findings: Sequence[DataFrame]) -> DataFrame:
@@ -861,10 +759,6 @@ def clinical_value_conformance(
     ONE aggregate pass, same findings schema as every validator here.
     """
     cols = set(clinical.columns)
-
-    def _violations(cond: Column) -> Column:
-        return F.sum(F.when(F.coalesce(cond, F.lit(False)), 1).otherwise(0))
-
     id_re = r"^[A-Za-z0-9._-]+$"
     num_re = r"^-?[0-9]+(\.[0-9]+)?([eE][+-]?[0-9]+)?$"
     rules: dict[str, Column] = {}
@@ -906,36 +800,15 @@ def clinical_value_conformance(
             & (F.col(pfs_status_col) != "")
             & ~pfv.isin(*_PFS_STATUSES)
         )
-
-    agg = clinical.agg(
-        *[_violations(cond).alias(f"__v_{name}") for name, cond in rules.items()]
-    )
-    per_rule = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("rule"),
-                F.col(f"__v_{name}").alias("n_bad"),
-            )
-            for name in rules
-        ]
-    )
-    exploded = agg.select(F.explode(per_rule).alias("f"))
-    return exploded.select(
-        F.col("f.rule").alias("check"),
-        F.when(F.col("f.n_bad") == 0, F.lit("OK"))
-        .otherwise(F.lit("ERROR"))
-        .alias("status"),
-        F.col("f.n_bad").cast("long").alias("observed"),
-        F.lit(0).cast("long").alias("expected"),
-        F.lit("violating rows").alias("detail"),
-    )
+    return _rule_findings(clinical, rules)
 
 
-def _subset_violation_count(
+def _absent_keys(
     left: DataFrame, left_col: str, right: DataFrame, right_col: str
 ) -> DataFrame:
-    """Distinct values of ``left_col`` absent from ``right_col`` as a
-    single-row count. Only distinct key values move — never the rows."""
+    """Distinct non-NULL values of ``left_col`` absent from ``right_col``
+    (unlike :func:`keyset_subset`, a NULL key is skipped, not missing).
+    Only distinct key values move — never the rows."""
     return (
         left.select(F.col(left_col).alias("__k"))
         .filter(F.col("__k").isNotNull())
@@ -947,7 +820,6 @@ def _subset_violation_count(
             "__k",
             "left_anti",
         )
-        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
@@ -987,86 +859,42 @@ def cross_file_referential_checks(
     the small side (ids are bounded by cohort size, not by variants), so
     these joins broadcast or at worst shuffle ids alone.
     """
-    findings: list[DataFrame] = []
-
-    orphan_sample_patients = _subset_violation_count(
-        sample_df, patient_col, patient_df, patient_col
-    )
-    findings.append(
-        orphan_sample_patients.select(
-            *_finding_row(
-                "xref_sample_patients_in_patient_file",
-                F.col("n") == 0,
-                F.col("n"),
-                F.lit(0),
-                F.lit("sample-file patient ids absent from patient file"),
-            )
-        )
-    )
-
-    childless = _subset_violation_count(
-        patient_df, patient_col, sample_df, patient_col
-    )
-    findings.append(
-        childless.select(
-            F.lit("xref_patients_have_samples").alias("check"),
-            F.when(F.col("n") == 0, F.lit("OK")).otherwise(F.lit("WARN")).alias(
-                "status"
-            ),
-            F.col("n").cast("long").alias("observed"),
-            F.lit(0).cast("long").alias("expected"),
-            F.lit("patients with no samples").alias("detail"),
-        )
-    )
-
+    findings = [
+        _count_violation(
+            _absent_keys(sample_df, patient_col, patient_df, patient_col),
+            "xref_sample_patients_in_patient_file",
+            "sample-file patient ids absent from patient file",
+        ),
+        _count_violation(
+            _absent_keys(patient_df, patient_col, sample_df, patient_col),
+            "xref_patients_have_samples",
+            "patients with no samples",
+            severity="WARN",
+        ),
+    ]
     for name, (df, df_sample_col) in (data_files or {}).items():
-        miss = _subset_violation_count(df, df_sample_col, sample_df, sample_col)
         findings.append(
-            miss.select(
-                *_finding_row(
-                    f"xref_{name}_samples_in_clinical",
-                    F.col("n") == 0,
-                    F.col("n"),
-                    F.lit(0),
-                    F.lit(f"{name} sample ids absent from clinical samples"),
-                )
+            _count_violation(
+                _absent_keys(df, df_sample_col, sample_df, sample_col),
+                f"xref_{name}_samples_in_clinical",
+                f"{name} sample ids absent from clinical samples",
             )
         )
-
     for name, members in (case_lists or {}).items():
         mcol = members.columns[0]
-        miss = _subset_violation_count(members, mcol, sample_df, sample_col)
-        findings.append(
-            miss.select(
-                *_finding_row(
-                    f"case_list_{name}_members_in_clinical",
-                    F.col("n") == 0,
-                    F.col("n"),
-                    F.lit(0),
-                    F.lit(f"case list {name} ids absent from clinical samples"),
-                )
-            )
-        )
-        dups = (
-            members.select(F.col(mcol).alias("__k"))
-            .filter(F.col("__k").isNotNull())
-            .groupBy("__k")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .filter(F.col("__c") > 1)
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        findings.append(
-            dups.select(
-                *_finding_row(
-                    f"case_list_{name}_duplicate_members",
-                    F.col("n") == 0,
-                    F.col("n"),
-                    F.lit(0),
-                    F.lit(f"case list {name} ids listed more than once"),
-                )
-            )
-        )
-
+        ids = members.select(F.col(mcol).alias("__k")).filter(F.col("__k").isNotNull())
+        findings += [
+            _count_violation(
+                _absent_keys(members, mcol, sample_df, sample_col),
+                f"case_list_{name}_members_in_clinical",
+                f"case list {name} ids absent from clinical samples",
+            ),
+            _count_violation(
+                _dup_groups(ids, ["__k"]),
+                f"case_list_{name}_duplicate_members",
+                f"case list {name} ids listed more than once",
+            ),
+        ]
     return findings_union(findings)
 
 
@@ -1153,7 +981,6 @@ def meta_consistency_checks(
     join here broadcasts; nothing from the data files themselves is read,
     so the check costs nothing at 100 TB.
     """
-    findings: list[DataFrame] = []
     spark = metas.sparkSession
 
     # enforce the documented one-row-per-file contract: a listing with
@@ -1181,109 +1008,71 @@ def meta_consistency_checks(
             )
         ).alias("n")
     )
-    findings.append(
-        deviants.select(
-            *_finding_row(
-                "meta_study_id_uniform",
-                F.col("n") == 0,
-                F.col("n"),
-                F.lit(0),
-                F.lit("metas declaring a different cancer_study_identifier"),
-            )
-        )
-    )
 
     pair = F.concat_ws("/", "genetic_alteration_type", "datatype")
     allowed = [f"{g}/{d}" for g, d in sorted(ALLOWED_META_DATATYPES)]
     bad_pairs = metas.filter(
         F.col("genetic_alteration_type").isNotNull() & ~pair.isin(allowed)
     )
-    findings.append(
-        bad_pairs.agg(F.count(F.lit(1)).alias("n")).select(
-            *_finding_row(
-                "meta_datatype_combination",
-                F.col("n") == 0,
-                F.col("n"),
-                F.lit(0),
-                F.lit("(genetic_alteration_type, datatype) not defined by "
-                      "cBioPortal"),
-            )
-        )
-    )
-
     referenced = metas.filter(F.col("data_filename").isNotNull()).select(
         F.col("data_filename").alias("filename")
     )
     missing_data = referenced.join(
         F.broadcast(bundle_files), "filename", "left_anti"
     )
-    findings.append(
-        missing_data.agg(F.count(F.lit(1)).alias("n")).select(
-            *_finding_row(
-                "meta_data_file_exists",
-                F.col("n") == 0,
-                F.col("n"),
-                F.lit(0),
-                F.lit("metas referencing a data file absent from the bundle"),
-            )
-        )
-    )
-
     orphans = (
         bundle_files.filter(F.col("filename").startswith("data_"))
         .join(F.broadcast(referenced.distinct()), "filename", "left_anti")
     )
-    findings.append(
-        orphans.agg(F.count(F.lit(1)).alias("n")).select(
-            F.lit("meta_orphan_data_files").alias("check"),
-            F.when(F.col("n") == 0, F.lit("OK"))
-            .otherwise(F.lit("WARN"))
-            .alias("status"),
-            F.col("n").cast("long").alias("observed"),
-            F.lit(0).cast("long").alias("expected"),
-            F.lit("data_* files no meta references").alias("detail"),
-        )
+    dup_stable = _dup_groups(
+        metas.filter(F.col("stable_id").isNotNull()), ["stable_id"]
     )
-
-    dup_stable = (
-        metas.filter(F.col("stable_id").isNotNull())
-        .groupBy("stable_id")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .filter(F.col("__c") > 1)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    findings.append(
-        dup_stable.select(
-            *_finding_row(
-                "meta_duplicate_stable_id",
-                F.col("n") == 0,
-                F.col("n"),
-                F.lit(0),
-                F.lit("stable_id values shared by more than one meta"),
-            )
-        )
-    )
-
     required = spark.createDataFrame(
         [(f,) for f in REQUIRED_BUNDLE_FILES], "filename string"
     )
     missing_required = required.join(
         F.broadcast(bundle_files), "filename", "left_anti"
     )
-    findings.append(
-        missing_required.agg(F.count(F.lit(1)).alias("n")).select(
-            *_finding_row(
+    return findings_union(
+        [
+            _findings(
+                deviants,
+                [
+                    _violation(
+                        "meta_study_id_uniform",
+                        F.col("n"),
+                        "metas declaring a different cancer_study_identifier",
+                    )
+                ],
+            ),
+            _count_violation(
+                bad_pairs,
+                "meta_datatype_combination",
+                "(genetic_alteration_type, datatype) not defined by cBioPortal",
+            ),
+            _count_violation(
+                missing_data,
+                "meta_data_file_exists",
+                "metas referencing a data file absent from the bundle",
+            ),
+            _count_violation(
+                orphans,
+                "meta_orphan_data_files",
+                "data_* files no meta references",
+                severity="WARN",
+            ),
+            _count_violation(
+                dup_stable,
+                "meta_duplicate_stable_id",
+                "stable_id values shared by more than one meta",
+            ),
+            _count_violation(
+                missing_required,
                 "meta_required_files",
-                F.col("n") == 0,
-                F.col("n"),
-                F.lit(0),
-                F.lit("required bundle files absent "
-                      "(reference clinical.py:66-73)"),
-            )
-        )
+                "required bundle files absent (reference clinical.py:66-73)",
+            ),
+        ]
     )
-
-    return findings_union(findings)
 
 
 #: cBioPortal clinical attribute datatypes (validateData's DATATYPE line
@@ -1415,26 +1204,7 @@ def clinical_header_conformance(
             for i, rc in enumerate(required_cols)
         ],
     ]
-    per_rule = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("rule"),
-                n_bad.cast("long").alias("n_bad"),
-                F.lit(sev).alias("sev"),
-                F.lit(detail).alias("detail"),
-            )
-            for name, n_bad, sev, detail in rules
-        ]
-    )
-    return (
-        agg.select(F.explode(per_rule).alias("f"))
-        .select(
-            F.col("f.rule").alias("check"),
-            F.when(F.col("f.n_bad") == 0, F.lit("OK"))
-            .otherwise(F.col("f.sev"))
-            .alias("status"),
-            F.col("f.n_bad").alias("observed"),
-            F.lit(0).cast("long").alias("expected"),
-            F.col("f.detail").alias("detail"),
-        )
+    return _findings(
+        agg,
+        [_violation(name, n, detail, sev) for name, n, sev, detail in rules],
     )

@@ -55,6 +55,29 @@ def _meta_clinical(study_id: str, datatype: str, filename: str) -> Mapping[str, 
     }
 
 
+# The bundle's mutation artifact spellings, in lookup order. The writer
+# emits the chunked ``data_mutations_extended`` directory (S4); the
+# reference writes a single ``data_mutations.txt``. Readers accept any.
+MAF_ARTIFACT_NAMES = (
+    "data_mutations_extended",
+    "data_mutations.txt",
+    "data_mutations_extended.txt",
+)
+
+
+def render_mutations_meta(study_id: str) -> str:
+    """``meta_mutations_extended.txt`` for the chunked MAF directory (the
+    reference's generate_meta_files step, ``maf.py:209-216``)."""
+    return render_meta_file(
+        {
+            "cancer_study_identifier": study_id,
+            "genetic_alteration_type": "MUTATION_EXTENDED",
+            "datatype": "MAF",
+            "data_filename": "data_mutations_extended",
+        }
+    )
+
+
 def write_study_bundle(
     out_dir: str,
     dataset: str,
@@ -174,16 +197,7 @@ def write_study_bundle(
         artifacts["data_mutations_extended"] = maf_dir
         meta_path = os.path.join(out_dir, "meta_mutations_extended.txt")
         with open(meta_path, "w") as fh:
-            fh.write(
-                render_meta_file(
-                    {
-                        "cancer_study_identifier": study_id,
-                        "genetic_alteration_type": "MUTATION_EXTENDED",
-                        "datatype": "MAF",
-                        "data_filename": "data_mutations_extended",
-                    }
-                )
-            )
+            fh.write(render_mutations_meta(study_id))
         artifacts["meta_mutations_extended.txt"] = meta_path
 
     # meta_study.txt — byte-identical to the reference's native writer
@@ -338,8 +352,7 @@ def write_load_stage_case_lists(
     artifacts["case_lists/cases_all.txt"] = path
 
     maf_path = None
-    for n in ("data_mutations_extended", "data_mutations_extended.txt",
-              "data_mutations.txt"):
+    for n in MAF_ARTIFACT_NAMES:
         p = os.path.join(bundle_dir, n)
         if os.path.exists(p):
             maf_path = p

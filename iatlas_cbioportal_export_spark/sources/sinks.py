@@ -99,12 +99,10 @@ def write_chunked_tsv(
 ) -> None:
     """S4: bound rows-per-output-file without driver-side slicing.
 
-    ``maxRecordsPerFile`` rolls files inside each task. We additionally
-    repartition to ceil(n/max_rows) only when the frame is small enough that a
-    single task would otherwise emit everything (matches the reference's
-    ceil-division chunk count, ``maf.py:43,63``) — on a large cluster the
-    natural partitioning already spreads rows and repartition is skipped by
-    passing ``repartition_small=False`` upstream if desired.
+    One ``count`` job sizes the write: the frame is always repartitioned to
+    ceil(n/max_rows) partitions (the reference's ceil-division chunk count,
+    ``maf.py:43,63``) and ``maxRecordsPerFile`` caps each file at
+    ``max_rows`` rows. A zero-row frame goes to :func:`write_tsv` as is.
     """
     n = df.count()
     if n == 0:

@@ -285,6 +285,29 @@ def test_cli_validate_strict_requires_passthroughs(spark, tmp_path):
     assert main(["validate", "--bundle", bundle, "--strict"]) == 1
 
 
+def test_cli_validate_exit_code_matches_printed_rows(spark, tmp_path, capsys):
+    """validate prints one tab-separated line per finding and exits 1
+    exactly when a printed row is ERROR: a repeated sample row is the one
+    planted ERROR."""
+    from iatlas_cbioportal_export_spark.operators.validation import FINDINGS_COLUMNS
+
+    bundle = _make_bundle(tmp_path)
+    path = os.path.join(bundle, "data_clinical_sample.txt")
+    with open(path) as fh:
+        last = fh.read().splitlines()[-1]
+    with open(path, "a") as fh:
+        fh.write(last + "\n")
+    rc = main(["validate", "--bundle", bundle])
+    lines = capsys.readouterr().out.splitlines()
+    rows = [ln.split("\t") for ln in lines if ln.count("\t") == 4]
+    assert rows[0] == FINDINGS_COLUMNS
+    assert {r[1] for r in rows[1:]} <= {"OK", "WARN", "ERROR"}
+    errors = [r for r in rows[1:] if r[1] == "ERROR"]
+    assert [r[0] for r in errors] == ["no_duplicate_sample_id_sample"]
+    assert errors[0][2:4] == ["1", "0"]
+    assert rc == 1
+
+
 @pytest.mark.slow
 def test_cli_validate_passthrough_matrix_checks(spark, tmp_path, capsys):
     bundle = _make_bundle(tmp_path)
