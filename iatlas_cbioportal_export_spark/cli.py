@@ -4,12 +4,15 @@
 Spark plans:
 
     python -m iatlas_cbioportal_export_spark.cli clinical  --clinical c.tsv --oncotree o.tsv --dataset D --out dir
-    python -m iatlas_cbioportal_export_spark.cli maf       --maf-folder dir --out dir [--endpoint URL]
+    python -m iatlas_cbioportal_export_spark.cli maf       --maf-folder dir --out dir [--endpoint BASE_URL]
     python -m iatlas_cbioportal_export_spark.cli validate  --bundle dir
     python -m iatlas_cbioportal_export_spark.cli load      --bundle dir --dest dir
 
-``validate`` exits non-zero when any check ERRORs — the reference's
-``ErrorFlagHandler`` gate (``utils.py:52-58``) as an exit code.
+``maf --endpoint`` takes the Genome Nexus base URL (the service root;
+the annotator posts to ``{BASE_URL}/annotation``); without it the offline
+fake annotator runs. ``validate`` exits non-zero when any check ERRORs —
+the reference's ``ErrorFlagHandler`` gate (``utils.py:52-58``) as an exit
+code.
 """
 
 from __future__ import annotations
@@ -102,10 +105,10 @@ def cmd_maf(args: argparse.Namespace) -> int:
         annotate,
         drop_chrm,
         fake_annotator,
-        http_annotator,
+        genome_nexus_annotator,
         split_annotation_errors,
     )
-    from iatlas_cbioportal_export_spark.plans.bundle import render_mutations_meta
+    from iatlas_cbioportal_export_spark.plans.bundle import write_mutations
     from iatlas_cbioportal_export_spark.sources.readers import read_maf_folder
     from iatlas_cbioportal_export_spark.sources.sinks import write_chunked_tsv
 
@@ -114,12 +117,15 @@ def cmd_maf(args: argparse.Namespace) -> int:
     if maf is None:
         print("no .maf files found", file=sys.stderr)
         return 1
-    annotator = http_annotator(args.endpoint) if args.endpoint else fake_annotator
-    ok, failed = split_annotation_errors(annotate(maf, annotator=annotator))
-    write_chunked_tsv(drop_chrm(ok), os.path.join(args.out, "data_mutations_extended"),
-                      max_rows=args.max_rows)
-    with open(os.path.join(args.out, "meta_mutations_extended.txt"), "w") as fh:
-        fh.write(render_mutations_meta(f"iatlas_{args.dataset}"))
+    annotator = genome_nexus_annotator(args.endpoint) if args.endpoint else fake_annotator
+    # Every action below (the chunked write's count and write, the failure
+    # count and report) reads this one checkpointed copy, so each variant
+    # goes through the annotator once. The checkpoint lives here, not in
+    # annotate(), which also takes streaming frames (those cannot be
+    # checkpointed).
+    annotated = annotate(maf, annotator=annotator).localCheckpoint(eager=False)
+    ok, failed = split_annotation_errors(annotated)
+    write_mutations(args.out, f"iatlas_{args.dataset}", drop_chrm(ok), args.max_rows)
     n_failed = failed.count()
     if n_failed:
         write_chunked_tsv(failed, os.path.join(args.out, "annotation_errors"))
@@ -425,7 +431,11 @@ def build_parser() -> argparse.ArgumentParser:
     m = sub.add_parser("maf", help="annotate and export mutation data")
     m.add_argument("--maf-folder", required=True)
     m.add_argument("--out", required=True)
-    m.add_argument("--endpoint", help="Genome Nexus REST endpoint (default: offline fake)")
+    m.add_argument(
+        "--endpoint",
+        help="Genome Nexus base URL, e.g. https://www.genomenexus.org"
+        " (default: offline fake annotator)",
+    )
     m.add_argument("--max-rows", type=int, default=40_000)
     m.add_argument("--dataset", default="study", help="dataset name for the study id")
     m.set_defaults(fn=cmd_maf)

@@ -10,7 +10,7 @@ batched calls per partition — the one "UDTF-shaped" operator in the
 reference. The real service needs network + docker (not available here), so
 the annotator is pluggable: a deterministic fake implements the same
 contract (adds annotation columns + routes failures to an error side-band)
-for tests; the HTTP implementation is a drop-in.
+for tests; :func:`genome_nexus_annotator` is the REST drop-in.
 """
 
 from __future__ import annotations
@@ -81,7 +81,7 @@ Annotator = Callable[[pd.DataFrame], pd.DataFrame]
 def fake_annotator(batch: pd.DataFrame) -> pd.DataFrame:
     """Deterministic stand-in for the Genome Nexus REST annotator.
 
-    Real implementation posts ≤40k-row batches to the GRCh38 endpoint with
+    The reference posts 40k-row chunks to the GRCh38 endpoint with
     ``--isoform-override mskcc`` (reference ``maf.py:113-121``); this fake
     derives the annotation from the VARIANT KEY (never from row/batch
     position, which would vary with partitioning) so runs are hermetic and
@@ -134,8 +134,7 @@ def fake_annotator(batch: pd.DataFrame) -> pd.DataFrame:
             # generic "<name>=<key>" marker would make every fake-annotated
             # MAF fail its own validator, and no single valid code is
             # consistent with arbitrary fixture alleles/positions. The fake
-            # leaves it NULL (rules skip missing); the HTTP annotator fills
-            # it for real.
+            # leaves it NULL (rules skip missing).
             cols[name] = pd.Series([None] * len(batch), index=batch.index)
             continue
         prefix = "p." if name == "HGVSp_Short" else f"{name}="
@@ -149,61 +148,6 @@ def fake_annotator(batch: pd.DataFrame) -> pd.DataFrame:
     return pd.concat(
         [out, pd.DataFrame(cols, index=batch.index)], axis=1, copy=False
     )
-
-
-def http_annotator(
-    endpoint: str,
-    transport: Callable[[bytes], bytes] | None = None,
-    timeout_s: float = 60.0,
-    isoform_override: str = "mskcc",
-) -> Annotator:
-    """Build a REST annotator for the real Genome Nexus service (reference
-    runs it as a docker subprocess per 40k-row chunk, ``maf.py:113-121``,
-    GRCh38 endpoint with ``--isoform-override mskcc``).
-
-    Executor-side: each Arrow batch is POSTed as JSON records and the
-    response's annotation columns are joined back positionally. ``transport``
-    abstracts the wire call (bytes in → bytes out) so tests inject a fake;
-    the default uses stdlib ``urllib`` — no extra dependencies. Failures mark
-    the whole batch FAILED rather than raising, matching the reference's
-    error-report routing (``maf.py:160-177``).
-    """
-    import json
-
-    def default_transport(payload: bytes) -> bytes:
-        from urllib.request import Request, urlopen
-
-        req = Request(
-            f"{endpoint}?isoformOverrideSource={isoform_override}",
-            data=payload,
-            headers={"Content-Type": "application/json"},
-        )
-        with urlopen(req, timeout=timeout_s) as resp:  # noqa: S310 (cluster-side)
-            return resp.read()
-
-    send = transport or default_transport
-
-    def annotator(batch: pd.DataFrame) -> pd.DataFrame:
-        out = batch.copy()
-        try:
-            payload = json.dumps(batch.to_dict(orient="records"), default=str).encode()
-            records = json.loads(send(payload))
-            ann = pd.DataFrame.from_records(records)
-            for name, _typ in ANNOTATION_COLS:
-                out[name] = (
-                    ann[name].to_numpy()
-                    if name in ann.columns and len(ann) == len(out)
-                    else None
-                )
-            if "Annotation_Status" not in ann.columns:
-                out["Annotation_Status"] = "SUCCESS"
-        except Exception as exc:  # network/parse failure → error side-band
-            for name, _typ in ANNOTATION_COLS:
-                out[name] = None
-            out["Annotation_Status"] = f"FAILED: {type(exc).__name__}"
-        return out
-
-    return annotator
 
 
 # annotation_summary.transcriptConsequenceSummary field → MAF annotation
@@ -228,23 +172,21 @@ _GN_SUMMARY_FIELD_MAP = {
 def genome_nexus_annotator(
     base_url: str,
     transport: Callable[[str, bytes], bytes] | None = None,
-    timeout_s: float = 60.0,
-    isoform_override: str = "mskcc",
     retries: int = 2,
     backoff_s: float = 0.5,
     max_variants_per_request: int = 500,
-    min_request_interval_s: float = 0.0,
 ) -> Annotator:
-    """The real Genome Nexus REST annotator, against the service's public
+    """The Genome Nexus REST annotator, against the service's public
     ``POST /annotation`` contract (the same GRCh38 endpoints the reference's
     docker ``annotationPipeline.jar`` hits with ``--isoform-override mskcc``,
     reference ``maf.py:113-121``; ``GENOMENEXUS_BASE`` env in
-    ``Dockerfile``).
+    ``Dockerfile``). ``base_url`` is the service root, e.g.
+    ``https://www.genomenexus.org``.
 
     Wire shape: each Arrow batch posts ONE JSON array of genomic-location
     strings ``"chrom,start,end,ref,alt"`` (leading ``chr`` stripped, as the
     annotation pipeline does) to
-    ``{base}/annotation?isoformOverrideSource=...&fields=annotation_summary``
+    ``{base}/annotation?isoformOverrideSource=mskcc&fields=annotation_summary``
     and maps each response object's
     ``annotation_summary.transcriptConsequenceSummary`` onto the MAF
     annotation columns via :data:`_GN_SUMMARY_FIELD_MAP`. Responses are
@@ -257,11 +199,11 @@ def genome_nexus_annotator(
     with NULL annotation columns, while the rest of the batch stays SUCCESS
     — finer than the reference's whole-chunk error report
     (``maf.py:160-177``). Transport-level failures (HTTP error, bad JSON)
-    mark the whole batch ``FAILED: <ExceptionName>``, same as
-    :func:`http_annotator`.
+    mark the whole batch ``FAILED: <ExceptionName>``.
 
     ``transport(url, payload) -> bytes`` abstracts the wire call for tests;
-    the default uses stdlib ``urllib`` (executor-side, no extra deps).
+    the default uses stdlib ``urllib`` (executor-side, no extra deps) with
+    a 60 s timeout.
 
     Resilience (the service rate limit is the first thing to break at
     scale — SCALE.md): each request retries up to ``retries`` times on
@@ -270,15 +212,14 @@ def genome_nexus_annotator(
     whole-batch FAILED routing). ``max_variants_per_request`` splits a
     large Arrow batch into bounded POSTs (the per-task request-size knob —
     1000 executors × default 500 variants matches the annotation
-    pipeline's own chunking), and ``min_request_interval_s`` throttles
-    consecutive requests within a task for hard rate caps.
+    pipeline's own chunking).
     """
     import json
-    import time as _time
+    import time
 
     url = (
         f"{base_url.rstrip('/')}/annotation"
-        f"?isoformOverrideSource={isoform_override}&fields=annotation_summary"
+        "?isoformOverrideSource=mskcc&fields=annotation_summary"
     )
 
     def default_transport(u: str, payload: bytes) -> bytes:
@@ -287,29 +228,20 @@ def genome_nexus_annotator(
         req = Request(
             u, data=payload, headers={"Content-Type": "application/json"}
         )
-        with urlopen(req, timeout=timeout_s) as resp:  # noqa: S310
+        with urlopen(req, timeout=60.0) as resp:  # noqa: S310
             return resp.read()
 
     send = transport or default_transport
-    _last_request = [0.0]  # per-task monotonic timestamp for throttling
 
-    def send_with_retry(u: str, payload: bytes) -> bytes:
+    def send_with_retry(payload: bytes) -> bytes:
         attempt = 0
         while True:
-            if min_request_interval_s > 0:
-                wait = (
-                    _last_request[0] + min_request_interval_s
-                    - _time.monotonic()
-                )
-                if wait > 0:
-                    _time.sleep(wait)
             try:
-                _last_request[0] = _time.monotonic()
-                return send(u, payload)
+                return send(url, payload)
             except Exception:
                 if attempt >= retries:
                     raise
-                _time.sleep(backoff_s * (2**attempt))
+                time.sleep(backoff_s * (2**attempt))
                 attempt += 1
 
     _KEY_COLS = (
@@ -346,19 +278,14 @@ def genome_nexus_annotator(
             step = max(1, max_variants_per_request)
             for i in range(0, len(queries), step):
                 chunk = queries[i : i + step]
-                records.extend(
-                    json.loads(send_with_retry(url, json.dumps(chunk).encode()))
-                )
+                records.extend(json.loads(send_with_retry(json.dumps(chunk).encode())))
             by_query: dict[str, dict] = {}
             for rec in records:
                 q = rec.get("originalVariantQuery") or rec.get("variant")
                 if q is not None:
                     by_query[str(q)] = rec
-            col_vals: dict[str, list] = {
-                name: [] for name, _ in ANNOTATION_COLS
-            }
-            status: list[str] = []
-            for k in keys:
+            col_vals = {name: [None] * len(keys) for name, _ in ANNOTATION_COLS}
+            for row, k in enumerate(keys):
                 rec = by_query.get(k) if k is not None else None
                 if k is None:
                     st = "FAILED: null variant key"
@@ -368,29 +295,21 @@ def genome_nexus_annotator(
                     st = "FAILED: annotation"
                 else:
                     st = "SUCCESS"
-                summary = (
-                    (rec or {})
-                    .get("annotation_summary", {})
-                    .get("transcriptConsequenceSummary", {})
-                    if st == "SUCCESS"
-                    else {}
+                col_vals["Annotation_Status"][row] = st
+                if st != "SUCCESS":
+                    continue
+                summary = rec.get("annotation_summary", {}).get(
+                    "transcriptConsequenceSummary", {}
                 )
-                for name, _typ in ANNOTATION_COLS:
-                    if name == "Annotation_Status":
-                        continue
-                    col_vals[name].append(None)
                 for gn_field, col in _GN_SUMMARY_FIELD_MAP.items():
                     v = summary.get(gn_field)
                     if isinstance(v, list):
                         v = ";".join(str(x) for x in v)
                     elif v is not None:
                         v = str(v)
-                    col_vals[col][-1] = v
-                status.append(st)
-            for name, _typ in ANNOTATION_COLS:
-                if name != "Annotation_Status":
-                    out[name] = col_vals[name]
-            out["Annotation_Status"] = status
+                    col_vals[col][row] = v
+            for name, vals in col_vals.items():
+                out[name] = vals
         except Exception as exc:  # transport/parse failure → error side-band
             for name, _typ in ANNOTATION_COLS:
                 out[name] = None
@@ -403,13 +322,13 @@ def genome_nexus_annotator(
 def annotate(
     maf: DataFrame,
     annotator: Annotator = fake_annotator,
-    max_rows_per_batch: int = 40_000,
     widen_parallelism: bool = True,
 ) -> DataFrame:
     """Annotation as a ``mapInPandas`` stage.
 
-    Partition sizing replaces the reference's manual 40k-row chunking: Arrow
-    batch size bounds each pandas batch handed to the annotator, and Spark
+    Partition sizing replaces the reference's manual 40k-row chunking: the
+    Arrow batch size (``spark.sql.execution.arrow.maxRecordsPerBatch``)
+    bounds each pandas batch handed to the annotator, and Spark
     task parallelism replaces ``multiprocessing.Pool(n_workers)``. Failed
     batches surface as ``Annotation_Status != 'SUCCESS'`` rows and are split
     by :func:`split_annotation_errors` (reference routes failures to an error
@@ -441,9 +360,7 @@ def annotate(
     schema = StructType(list(maf_safe.schema.fields) + ann_fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            for start in range(0, len(batch), max_rows_per_batch):
-                yield annotator(batch.iloc[start : start + max_rows_per_batch])
+        return map(annotator, batches)
 
     # r10: the annotation stage inherits the scan's partitioning, and a
     # small input (one parquet file) runs the whole Python stage in ONE
@@ -476,7 +393,6 @@ def annotate_by_variant(
     maf: DataFrame,
     annotator: Annotator = fake_annotator,
     key_cols: tuple[str, ...] = ("Chromosome", "Start_Position"),
-    max_rows_per_batch: int = 40_000,
 ) -> DataFrame:
     """Variant-level annotation: the scale path of :func:`annotate`.
 
@@ -493,9 +409,7 @@ def annotate_by_variant(
     from functools import reduce
 
     keys = maf.select(*key_cols).distinct()
-    ann_keys = annotate(
-        keys, annotator=annotator, max_rows_per_batch=max_rows_per_batch
-    )
+    ann_keys = annotate(keys, annotator=annotator)
     cond = reduce(
         lambda a, b: a & b, [maf[k].eqNullSafe(ann_keys[k]) for k in key_cols]
     )

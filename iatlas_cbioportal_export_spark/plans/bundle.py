@@ -27,7 +27,7 @@ stored partitioned by ``Dataset`` the filter is partition pruning, not a scan.
 from __future__ import annotations
 
 import os
-from collections.abc import Mapping
+from collections.abc import Iterable, Mapping
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
@@ -65,17 +65,55 @@ MAF_ARTIFACT_NAMES = (
 )
 
 
-def render_mutations_meta(study_id: str) -> str:
-    """``meta_mutations_extended.txt`` for the chunked MAF directory (the
-    reference's generate_meta_files step, ``maf.py:209-216``)."""
-    return render_meta_file(
-        {
-            "cancer_study_identifier": study_id,
-            "genetic_alteration_type": "MUTATION_EXTENDED",
-            "datatype": "MAF",
-            "data_filename": "data_mutations_extended",
-        }
-    )
+def write_mutations(
+    out_dir: str, study_id: str, mutations: DataFrame, max_rows: int
+) -> dict[str, str]:
+    """Write the chunked ``data_mutations_extended`` directory (≤``max_rows``
+    rows per file, S4) and its ``meta_mutations_extended.txt`` (the
+    reference's generate_meta_files step, ``maf.py:209-216``); returns
+    artifact name → path."""
+    maf_dir = os.path.join(out_dir, "data_mutations_extended")
+    write_chunked_tsv(mutations, maf_dir, max_rows=max_rows)
+    meta_path = os.path.join(out_dir, "meta_mutations_extended.txt")
+    with open(meta_path, "w") as fh:
+        fh.write(
+            render_meta_file(
+                {
+                    "cancer_study_identifier": study_id,
+                    "genetic_alteration_type": "MUTATION_EXTENDED",
+                    "datatype": "MAF",
+                    "data_filename": "data_mutations_extended",
+                }
+            )
+        )
+    return {"data_mutations_extended": maf_dir, "meta_mutations_extended.txt": meta_path}
+
+
+# cases_all / cases_sequenced: the reference delegates these to the external
+# datahub generate_case_lists.py (load.py:28-35); name and description follow
+# that tool's conf conventions (NUM = id count) over the same documented
+# case-list template the reference's native per-type writer uses.
+_CASE_LIST_TITLES = {
+    "all": ("All samples", "All samples ({n} samples)"),
+    "sequenced": ("Sequenced samples", "Samples with mutation data ({n} samples)"),
+}
+
+
+def _write_case_list(
+    case_list_dir: str, study_id: str, kind: str, ids: Iterable[str]
+) -> str:
+    """Write ``cases_<kind>.txt`` (``kind`` in :data:`_CASE_LIST_TITLES`)
+    over the sorted ``ids``; returns its path."""
+    name, description = _CASE_LIST_TITLES[kind]
+    ids = sorted(ids)
+    path = os.path.join(case_list_dir, f"cases_{kind}.txt")
+    with open(path, "w") as fh:
+        fh.write(
+            render_case_list_text(
+                study_id, kind, ids, name=name, description=description.format(n=len(ids))
+            )[1]
+        )
+    return path
 
 
 def write_study_bundle(
@@ -190,15 +228,8 @@ def write_study_bundle(
             order_by=order_by.get("merged"),
         )
 
-    # Mutations: chunked distributed TSV + meta descriptor.
     if mutations is not None:
-        maf_dir = os.path.join(out_dir, "data_mutations_extended")
-        write_chunked_tsv(mutations, maf_dir, max_rows=max_maf_rows)
-        artifacts["data_mutations_extended"] = maf_dir
-        meta_path = os.path.join(out_dir, "meta_mutations_extended.txt")
-        with open(meta_path, "w") as fh:
-            fh.write(render_mutations_meta(study_id))
-        artifacts["meta_mutations_extended.txt"] = meta_path
+        artifacts.update(write_mutations(out_dir, study_id, mutations, max_maf_rows))
 
     # meta_study.txt — byte-identical to the reference's native writer
     # (clinical.py:645-656: exact key order, TBD/PLACEHOLDER fields and
@@ -234,24 +265,9 @@ def write_study_bundle(
             fh.write(text)
         artifacts[f"case_lists/cases_{slug}.txt"] = path
 
-    # cases_all: the reference delegates this to the external datahub
-    # generate_case_lists.py (load.py:28-35); the name/description follow
-    # that tool's conf conventions ("All samples" / "... (NUM samples)",
-    # NUM = id count) over the same documented case-list template the
-    # reference's native per-type writer uses — byte-pinned by the bundle
-    # differential's documented-format re-statement of the tool.
-    path = os.path.join(case_list_dir, "cases_all.txt")
-    with open(path, "w") as fh:
-        fh.write(
-            render_case_list_text(
-                study_id,
-                "all",
-                sorted(all_ids),
-                name="All samples",
-                description=f"All samples ({len(all_ids)} samples)",
-            )[1]
-        )
-    artifacts["case_lists/cases_all.txt"] = path
+    artifacts["case_lists/cases_all.txt"] = _write_case_list(
+        case_list_dir, study_id, "all", all_ids
+    )
 
     # cases_sequenced: samples present in the mutation data (J5 semi-join).
     if mutations is not None:
@@ -265,21 +281,9 @@ def write_study_bundle(
             .select(sample_id_col)
             .collect()
         )
-        seq_ids = sorted(r[sample_id_col] for r in sequenced)
-        path = os.path.join(case_list_dir, "cases_sequenced.txt")
-        with open(path, "w") as fh:
-            fh.write(
-                render_case_list_text(
-                    study_id,
-                    "sequenced",
-                    seq_ids,
-                    name="Sequenced samples",
-                    description=(
-                        f"Samples with mutation data ({len(seq_ids)} samples)"
-                    ),
-                )[1]
-            )
-        artifacts["case_lists/cases_sequenced.txt"] = path
+        artifacts["case_lists/cases_sequenced.txt"] = _write_case_list(
+            case_list_dir, study_id, "sequenced", (r[sample_id_col] for r in sequenced)
+        )
 
     clinical_patient.unpersist()
     clinical_sample.unpersist()
@@ -337,19 +341,9 @@ def write_load_stage_case_lists(
     os.makedirs(case_list_dir, exist_ok=True)
     artifacts: dict[str, str] = {}
 
-    ids = sorted(r[sample_id_col] for r in samples.collect())
-    path = os.path.join(case_list_dir, "cases_all.txt")
-    with open(path, "w") as fh:
-        fh.write(
-            render_case_list_text(
-                study_id,
-                "all",
-                ids,
-                name="All samples",
-                description=f"All samples ({len(ids)} samples)",
-            )[1]
-        )
-    artifacts["case_lists/cases_all.txt"] = path
+    artifacts["case_lists/cases_all.txt"] = _write_case_list(
+        case_list_dir, study_id, "all", (r[sample_id_col] for r in samples.collect())
+    )
 
     maf_path = None
     for n in MAF_ARTIFACT_NAMES:
@@ -371,20 +365,7 @@ def write_load_stage_case_lists(
                 samples, maf,
                 clinical_key=sample_id_col, mutation_key=barcode_col,
             ).collect()
-            seq_ids = sorted(r[sample_id_col] for r in sequenced)
-            path = os.path.join(case_list_dir, "cases_sequenced.txt")
-            with open(path, "w") as fh:
-                fh.write(
-                    render_case_list_text(
-                        study_id,
-                        "sequenced",
-                        seq_ids,
-                        name="Sequenced samples",
-                        description=(
-                            f"Samples with mutation data "
-                            f"({len(seq_ids)} samples)"
-                        ),
-                    )[1]
-                )
-            artifacts["case_lists/cases_sequenced.txt"] = path
+            artifacts["case_lists/cases_sequenced.txt"] = _write_case_list(
+                case_list_dir, study_id, "sequenced", (r[sample_id_col] for r in sequenced)
+            )
     return artifacts

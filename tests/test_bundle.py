@@ -2,7 +2,10 @@
 
 import os
 
-from iatlas_cbioportal_export_spark.plans.bundle import write_study_bundle
+from iatlas_cbioportal_export_spark.plans.bundle import (
+    write_load_stage_case_lists,
+    write_study_bundle,
+)
 from iatlas_cbioportal_export_spark.sources.readers import (
     read_tsv_skip_cbioportal_header,
 )
@@ -102,6 +105,45 @@ def test_bundle_maf_chunking(spark, tmp_path):
     parts = [f for f in os.listdir(maf_dir) if f.endswith(".csv")]
     # 4 rows at ≤2 rows/file → ≥2 part files (ceil-division, maf.py:43,63)
     assert len(parts) >= 2
+
+
+def test_bundle_and_load_stage_case_lists_bytes(spark, tmp_path):
+    """cases_all / cases_sequenced are written by both the bundle writer
+    and the load stage; pin their full text, name and description lines
+    included, for one sample set."""
+    patient, sample, maf = _fixtures(spark)
+    out = str(tmp_path / "bundle")
+    write_study_bundle(out, "Demo_2026", patient, sample, mutations=maf)
+    expected = {
+        "cases_all.txt": (
+            "cancer_study_identifier: iatlas_Demo_2026\n"
+            "stable_id: iatlas_Demo_2026_all\n"
+            "case_list_name: All samples\n"
+            "case_list_description: All samples (4 samples)\n"
+            "case_list_ids: S1\tS2\tS3\tS4"
+        ),
+        "cases_sequenced.txt": (
+            "cancer_study_identifier: iatlas_Demo_2026\n"
+            "stable_id: iatlas_Demo_2026_sequenced\n"
+            "case_list_name: Sequenced samples\n"
+            "case_list_description: Samples with mutation data (2 samples)\n"
+            "case_list_ids: S1\tS3"
+        ),
+    }
+
+    def read_lists():
+        texts = {}
+        for name in expected:
+            path = os.path.join(out, "case_lists", name)
+            with open(path) as fh:
+                texts[name] = fh.read()
+            os.remove(path)
+        return texts
+
+    assert read_lists() == expected
+    written = write_load_stage_case_lists(spark, out)
+    assert set(written) == {f"case_lists/{name}" for name in expected}
+    assert read_lists() == expected
 
 
 def test_single_tsv_global_order_across_many_partitions(spark, tmp_path):

@@ -221,3 +221,42 @@ def test_genome_nexus_annotator_request_size_knob(spark, gn_server):
     assert rows["88"]["Annotation_Status"] == "FAILED: annotation"
     # 3 postable variants -> 3 single-variant requests (null key never posts)
     assert [len(c["queries"]) for c in _GNHandler.calls] == [1, 1, 1]
+
+
+def test_cli_maf_endpoint_annotates_each_variant_once(
+    spark, gn_server, tmp_path, capsys
+):
+    from collections import Counter
+
+    from iatlas_cbioportal_export_spark.cli import main
+
+    maf_dir = tmp_path / "mafs"
+    maf_dir.mkdir()
+    (maf_dir / "x.maf").write_text(
+        "#version 2.4\n"
+        "Chromosome\tStart_Position\tEnd_Position\tReference_Allele\t"
+        "Tumor_Seq_Allele2\tTumor_Sample_Barcode\n"
+        "chr7\t140753336\t140753336\tA\tT\tS_OK\n"      # annotates fine
+        "99\t1000\t1000\tG\tC\tS_OMITTED\n"             # omitted by the service
+        "88\t2000\t2000\tC\tG\tS_UNANNOTATED\n"         # successfully_annotated: false
+    )
+    out = tmp_path / "bundle"
+    rc = main(
+        ["maf", "--maf-folder", str(maf_dir), "--out", str(out),
+         "--endpoint", gn_server]
+    )
+    assert rc == 0
+    posted = Counter(q for c in _GNHandler.calls for q in c["queries"])
+    assert posted == {
+        "7,140753336,140753336,A,T": 1,
+        "99,1000,1000,G,C": 1,
+        "88,2000,2000,C,G": 1,
+    }
+    assert "2 rows failed annotation" in capsys.readouterr().err
+    errors = spark.read.option("sep", "\t").option("header", True).csv(
+        str(out / "annotation_errors")
+    )
+    assert sorted(r["Tumor_Sample_Barcode"] for r in errors.collect()) == [
+        "S_OMITTED",
+        "S_UNANNOTATED",
+    ]

@@ -112,51 +112,6 @@ def test_write_chunked_tsv(spark, tmp_path):
     assert total == 10
 
 
-def test_http_annotator_with_fake_transport(spark):
-    import json
-
-    from iatlas_cbioportal_export_spark.operators.maf import (
-        annotate,
-        http_annotator,
-    )
-
-    def fake_transport(payload: bytes) -> bytes:
-        records = json.loads(payload)
-        return json.dumps(
-            [
-                {
-                    "HGVSp_Short": f"p.{r['Hugo_Symbol']}X",
-                    "Annotation_Status": "SUCCESS",
-                }
-                for r in records
-            ]
-        ).encode()
-
-    df = spark.createDataFrame(
-        [("TP53", "chr17"), ("KRAS", "chr12")], "Hugo_Symbol string, Chromosome string"
-    )
-    ann = annotate(df, annotator=http_annotator("http://unused", transport=fake_transport))
-    rows = {r["Hugo_Symbol"]: r["HGVSp_Short"] for r in ann.collect()}
-    assert rows == {"TP53": "p.TP53X", "KRAS": "p.KRASX"}
-
-
-def test_http_annotator_failure_routes_to_error_band(spark):
-    from iatlas_cbioportal_export_spark.operators.maf import (
-        annotate,
-        http_annotator,
-        split_annotation_errors,
-    )
-
-    def broken_transport(payload: bytes) -> bytes:
-        raise ConnectionError("service down")
-
-    df = spark.createDataFrame([("TP53", "chr17")], "Hugo_Symbol string, Chromosome string")
-    ann = annotate(df, annotator=http_annotator("http://unused", transport=broken_transport))
-    ok, failed = split_annotation_errors(ann)
-    assert ok.count() == 0 and failed.count() == 1
-    assert failed.collect()[0]["Annotation_Status"].startswith("FAILED")
-
-
 def test_annotate_by_variant_matches_rowwise_annotate(spark):
     from iatlas_cbioportal_export_spark.operators.maf import (
         annotate,

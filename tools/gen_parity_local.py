@@ -39,7 +39,7 @@ def main() -> int:
 
     names = list(entrymod.queries())
     commit = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"],
+        ["git", "describe", "--always", "--dirty", "--abbrev=7"],
         capture_output=True,
         text=True,
         cwd="/root/repo",
