@@ -78,23 +78,15 @@ def cmd_clinical(args: argparse.Namespace) -> int:
         # non-key column as a sample attribute (documented degraded mode)
         attr_types = {c: "SAMPLE" for c in pre.columns if c not in ("PATIENT_ID",)}
     patient, sample = split_patient_sample(pre, attr_types)
-    bundle_kwargs: dict = {}
-    if getattr(args, "reference_artifacts", False):
-        # r9: byte-parity artifact mode — matches the reference main()'s
-        # output surface exactly: data_clinical_merged.txt next to the two
-        # views, %.12g float rendering, deterministic key-sorted rows
-        # (pinned by tests/test_reference_differential_bundle.py)
-        bundle_kwargs = {
-            "clinical_merged": pre,
-            "pandas_float_format": True,
-            "order_by": {
-                "patient": ["PATIENT_ID"],
-                "sample": ["SAMPLE_ID"],
-                "merged": ["SAMPLE_ID"],
-            },
-        }
+    # --reference-artifacts (r9): the reference main()'s byte-parity
+    # surface — data_clinical_merged.txt, %.12g floats, id-sorted rows
+    # (pinned by tests/test_reference_differential_bundle.py).
     artifacts = write_study_bundle(
-        args.out, args.dataset, patient, sample, **bundle_kwargs
+        args.out,
+        args.dataset,
+        patient,
+        sample,
+        clinical_merged=pre if args.reference_artifacts else None,
     )
     print(f"wrote {len(artifacts)} artifacts to {args.out}")
     return 0
@@ -176,7 +168,10 @@ def cmd_validate(args: argparse.Namespace) -> int:
         required_columns_present,
         table_profile_checks,
     )
-    from iatlas_cbioportal_export_spark.plans.bundle import MAF_ARTIFACT_NAMES
+    from iatlas_cbioportal_export_spark.plans.bundle import (
+        MAF_ARTIFACT_NAMES,
+        find_artifact,
+    )
     from iatlas_cbioportal_export_spark.sources.maf_schema import REQUIRED_MAF_COLS
     from iatlas_cbioportal_export_spark.sources.readers import (
         read_tsv,
@@ -187,22 +182,16 @@ def cmd_validate(args: argparse.Namespace) -> int:
     bundle = args.bundle
     findings = []
 
-    maf_name = next(
-        (n for n in MAF_ARTIFACT_NAMES if os.path.exists(os.path.join(bundle, n))),
-        None,
-    )
-    maf_meta = next(
-        (n for n in _MAF_META_NAMES if os.path.exists(os.path.join(bundle, n))),
-        None,
-    )
+    maf_path = find_artifact(bundle, MAF_ARTIFACT_NAMES)
+    maf_meta = find_artifact(bundle, _MAF_META_NAMES)
     required = [
         "data_clinical_patient.txt",
         "data_clinical_sample.txt",
         "meta_clinical_patient.txt",
         "meta_clinical_sample.txt",
         "meta_study.txt",
-        maf_name or MAF_ARTIFACT_NAMES[0],
-        maf_meta or _MAF_META_NAMES[0],
+        os.path.basename(maf_path or MAF_ARTIFACT_NAMES[0]),
+        os.path.basename(maf_meta or _MAF_META_NAMES[0]),
     ]
     optional = list(_PASSTHROUGH_FILES)
     if args.strict:
@@ -251,22 +240,12 @@ def cmd_validate(args: argparse.Namespace) -> int:
         )
 
     # --- mutation data: V12 schema, value conformance, referential checks ---
-    if maf_name is not None:
-        maf_path = os.path.join(bundle, maf_name)
-        if os.path.isdir(maf_path):
-            # Infer types on the chunked directory: a header-only read would
-            # make every column a string and turn numeric checks (position
-            # ordering, allele counts) lexicographic. maf_value_conformance
-            # also casts defensively, but typed columns keep every downstream
-            # check honest.
-            maf = (
-                spark.read.option("sep", "\t")
-                .option("header", True)
-                .option("inferSchema", True)
-                .csv(maf_path)
-            )
-        else:
-            maf = read_tsv(spark, maf_path, comment="#")
+    if maf_path is not None:
+        # One read for the chunked directory and the single-file spellings
+        # alike (the csv source takes both), `#version` lines skipped. Types
+        # are inferred: an all-string read would turn the numeric checks
+        # (position ordering, allele counts) lexicographic.
+        maf = read_tsv(spark, maf_path, comment="#")
         findings.append(
             required_columns_present(
                 maf, REQUIRED_MAF_COLS, check="maf_required_columns"

@@ -22,6 +22,11 @@ its sample-id list) and the kilobyte meta documents are collected — bounded
 by id-list size, never by table width or the MAF. For a multi-dataset run,
 call once per dataset over a ``.filter(Dataset == d)`` slice — with the input
 stored partitioned by ``Dataset`` the filter is partition pruning, not a scan.
+
+The module also owns reading a bundle back: :func:`find_artifact` is the
+one lookup of an artifact with several spellings (``cli validate`` and the
+load stage use it), and every read-back goes through
+``sources.readers.read_tsv``.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ import os
 from collections.abc import Iterable, Mapping
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 from iatlas_cbioportal_export_spark.operators.aggregates import case_list_groups
@@ -37,6 +43,8 @@ from iatlas_cbioportal_export_spark.operators.joins import semi_join_sequenced
 from iatlas_cbioportal_export_spark.operators.projections import (
     prune_all_null_columns,
 )
+from iatlas_cbioportal_export_spark.operators.validation import parse_meta_text
+from iatlas_cbioportal_export_spark.sources.readers import read_tsv
 from iatlas_cbioportal_export_spark.sources.sinks import (
     render_case_list_text,
     render_meta_file,
@@ -44,6 +52,11 @@ from iatlas_cbioportal_export_spark.sources.sinks import (
     write_chunked_tsv,
     write_single_tsv,
 )
+
+# The bundle's key columns (reference clinical.py / maf.py spellings).
+_SAMPLE_ID = "SAMPLE_ID"
+_CANCER_TYPE = "CANCER_TYPE"
+_BARCODE = "Tumor_Sample_Barcode"
 
 
 def _meta_clinical(study_id: str, datatype: str, filename: str) -> Mapping[str, object]:
@@ -65,6 +78,24 @@ MAF_ARTIFACT_NAMES = (
 )
 
 
+def find_artifact(bundle_dir: str, names: Iterable[str]) -> str | None:
+    """Path of the first of ``names`` that exists in ``bundle_dir``, else
+    ``None`` — the one lookup of a bundle artifact that has several
+    spellings (e.g. :data:`MAF_ARTIFACT_NAMES`)."""
+    for name in names:
+        path = os.path.join(bundle_dir, name)
+        if os.path.exists(path):
+            return path
+    return None
+
+
+def _write_text(path: str, text: str) -> str:
+    """Write one kilobyte document (meta file, case list); returns its path."""
+    with open(path, "w") as fh:
+        fh.write(text)
+    return path
+
+
 def write_mutations(
     out_dir: str, study_id: str, mutations: DataFrame, max_rows: int
 ) -> dict[str, str]:
@@ -74,18 +105,17 @@ def write_mutations(
     artifact name → path."""
     maf_dir = os.path.join(out_dir, "data_mutations_extended")
     write_chunked_tsv(mutations, maf_dir, max_rows=max_rows)
-    meta_path = os.path.join(out_dir, "meta_mutations_extended.txt")
-    with open(meta_path, "w") as fh:
-        fh.write(
-            render_meta_file(
-                {
-                    "cancer_study_identifier": study_id,
-                    "genetic_alteration_type": "MUTATION_EXTENDED",
-                    "datatype": "MAF",
-                    "data_filename": "data_mutations_extended",
-                }
-            )
-        )
+    meta_path = _write_text(
+        os.path.join(out_dir, "meta_mutations_extended.txt"),
+        render_meta_file(
+            {
+                "cancer_study_identifier": study_id,
+                "genetic_alteration_type": "MUTATION_EXTENDED",
+                "datatype": "MAF",
+                "data_filename": "data_mutations_extended",
+            }
+        ),
+    )
     return {"data_mutations_extended": maf_dir, "meta_mutations_extended.txt": meta_path}
 
 
@@ -106,14 +136,26 @@ def _write_case_list(
     over the sorted ``ids``; returns its path."""
     name, description = _CASE_LIST_TITLES[kind]
     ids = sorted(ids)
-    path = os.path.join(case_list_dir, f"cases_{kind}.txt")
-    with open(path, "w") as fh:
-        fh.write(
-            render_case_list_text(
-                study_id, kind, ids, name=name, description=description.format(n=len(ids))
-            )[1]
-        )
-    return path
+    return _write_text(
+        os.path.join(case_list_dir, f"cases_{kind}.txt"),
+        render_case_list_text(
+            study_id, kind, ids, name=name, description=description.format(n=len(ids))
+        )[1],
+    )
+
+
+def _write_sequenced(
+    case_list_dir: str, study_id: str, samples: DataFrame, mutations: DataFrame
+) -> str:
+    """Write ``cases_sequenced.txt``: the ``SAMPLE_ID``s of the one-column
+    ``samples`` frame that appear as a ``Tumor_Sample_Barcode`` in
+    ``mutations`` (J5 semi-join; only the matching id list is collected)."""
+    sequenced = semi_join_sequenced(
+        samples, mutations, clinical_key=_SAMPLE_ID, mutation_key=_BARCODE
+    ).collect()
+    return _write_case_list(
+        case_list_dir, study_id, "sequenced", (r[_SAMPLE_ID] for r in sequenced)
+    )
 
 
 def write_study_bundle(
@@ -123,13 +165,8 @@ def write_study_bundle(
     clinical_sample: DataFrame,
     mutations: DataFrame | None = None,
     attr_meta: Mapping[str, Mapping[str, object]] | None = None,
-    sample_id_col: str = "SAMPLE_ID",
-    cancer_type_col: str = "CANCER_TYPE",
-    barcode_col: str = "Tumor_Sample_Barcode",
     max_maf_rows: int = 40_000,
     clinical_merged: DataFrame | None = None,
-    pandas_float_format: bool = False,
-    order_by: Mapping[str, list[str]] | None = None,
 ) -> dict[str, str]:
     """Write one dataset's complete cBioPortal study bundle; returns
     artifact name → path.
@@ -140,28 +177,27 @@ def write_study_bundle(
     views are cached for the bundle's lifetime (memory-and-disk: safe when a
     dataset slice outgrows executor memory) and released before returning.
 
-    Reference byte-parity knobs (r9, pinned by the full-bundle
-    differential): ``clinical_merged`` writes the reference's
-    ``data_clinical_merged.txt`` (a single header'd TSV — column header but
-    none of the 4 ``#`` metadata lines; the reference's ``to_csv`` with the
-    ``header=True`` default, ``clinical.py:611-620``, after unconditionally
-    dropping the ``Dataset`` bookkeeping column — we drop it here too when
-    present); ``pandas_float_format=True`` renders float
-    columns with the reference's ``%.12g``; ``order_by`` gives each view a
-    deterministic global row order (keys ``"patient"``/``"sample"``/
-    ``"merged"`` → sort columns) so single-file artifacts are reproducible
-    byte-for-byte.
+    ``clinical_merged`` is the one switch for the reference's byte-parity
+    surface (r9, pinned by the full-bundle differential and by
+    ``tests/test_bundle.py``). When given, the bundle also carries the
+    reference's ``data_clinical_merged.txt`` (a single header'd TSV —
+    column header but none of the 4 ``#`` metadata lines; the reference's
+    ``to_csv`` with the ``header=True`` default, ``clinical.py:611-620``,
+    after unconditionally dropping the ``Dataset`` bookkeeping column — we
+    drop it here too when present), every float column renders with the
+    reference's ``%.12g``, and the rows are in a deterministic global order
+    (patient view by ``PATIENT_ID``, sample and merged by ``SAMPLE_ID``) so
+    the single-file artifacts reproduce byte-for-byte.
     """
     study_id = f"iatlas_{dataset}"
     os.makedirs(out_dir, exist_ok=True)
     case_list_dir = os.path.join(out_dir, "case_lists")
     os.makedirs(case_list_dir, exist_ok=True)
     attr_meta = attr_meta or {}
+    parity = clinical_merged is not None
     artifacts: dict[str, str] = {}
     clinical_patient = clinical_patient.persist()
     clinical_sample = clinical_sample.persist()
-
-    order_by = order_by or {}
 
     # Clinical views: prune 100%-null columns (P5), then header'd single file.
     # r11 (guide §2.6 overlap independent jobs): each artifact costs a fixed
@@ -173,39 +209,47 @@ def write_study_bundle(
     # Byte surface unchanged: same files, same contents, and the artifacts
     # dict is assembled in the original insertion order after the futures
     # complete.
-    def _clinical_artifact(name: str, view: DataFrame, okey: str):
+    def _clinical_artifact(name: str, view: DataFrame, key: str):
         pruned = prune_all_null_columns(view)
-        path = os.path.join(out_dir, name)
         written = write_cbioportal_clinical(
             pruned,
-            path,
+            os.path.join(out_dir, name),
             attr_meta,
-            pandas_float_format=pandas_float_format,
-            order_by=order_by.get(okey),
+            pandas_float_format=parity,
+            order_by=[key] if parity else None,
         )
         meta_name = "meta_" + name[len("data_") :]
         datatype = "PATIENT_ATTRIBUTES" if "patient" in name else "SAMPLE_ATTRIBUTES"
-        meta_path = os.path.join(out_dir, meta_name)
-        with open(meta_path, "w") as fh:
-            fh.write(render_meta_file(_meta_clinical(study_id, datatype, name)))
+        meta_path = _write_text(
+            os.path.join(out_dir, meta_name),
+            render_meta_file(_meta_clinical(study_id, datatype, name)),
+        )
         return [(name, written), (meta_name, meta_path)]
 
+    def _case_list_groups():
+        return case_list_groups(
+            clinical_sample, group_col=_CANCER_TYPE, id_col=_SAMPLE_ID
+        ).collect()
+
+    # Pool threads do not inherit the caller's local properties (job group,
+    # scheduler pool, job description). Each task is wrapped on its own in
+    # inheritable_thread_target, which hands the task a private copy of
+    # them: tasks sharing one copy would see each other's SQL execution
+    # ids. It is given no session, so it also works without pinned
+    # threads; PySpark then warns that job tags (unused here) are not
+    # inherited.
     with ThreadPoolExecutor(max_workers=3) as pool:
         clinical_futures = [
-            pool.submit(_clinical_artifact, name, view, okey)
-            for name, view, okey in (
-                ("data_clinical_patient.txt", clinical_patient, "patient"),
-                ("data_clinical_sample.txt", clinical_sample, "sample"),
+            pool.submit(inheritable_thread_target(_clinical_artifact), name, view, key)
+            for name, view, key in (
+                ("data_clinical_patient.txt", clinical_patient, "PATIENT_ID"),
+                ("data_clinical_sample.txt", clinical_sample, _SAMPLE_ID),
             )
         ]
         # Case lists need only the persisted sample view — kick the A1
         # aggregate off concurrently; its rendering happens below, after
         # the meta_study write, exactly where it happened before.
-        groups_future = pool.submit(
-            lambda: case_list_groups(
-                clinical_sample, group_col=cancer_type_col, id_col=sample_id_col
-            ).collect()
-        )
+        groups_future = pool.submit(inheritable_thread_target(_case_list_groups))
         for fut in clinical_futures:
             for key, value in fut.result():
                 artifacts[key] = value
@@ -217,15 +261,14 @@ def write_study_bundle(
     # subset as-is, minus the Dataset bookkeeping column, which it drops
     # unconditionally (clinical.py:615) — mirror that here so callers that
     # pass the pre-split frame straight through (the CLI) stay byte-equal.
-    if clinical_merged is not None:
+    if parity:
         if "Dataset" in clinical_merged.columns:
             clinical_merged = clinical_merged.drop("Dataset")
-        merged_path = os.path.join(out_dir, "data_clinical_merged.txt")
         artifacts["data_clinical_merged.txt"] = write_single_tsv(
             clinical_merged,
-            merged_path,
-            pandas_float_format=pandas_float_format,
-            order_by=order_by.get("merged"),
+            os.path.join(out_dir, "data_clinical_merged.txt"),
+            pandas_float_format=True,
+            order_by=[_SAMPLE_ID],
         )
 
     if mutations is not None:
@@ -234,55 +277,40 @@ def write_study_bundle(
     # meta_study.txt — byte-identical to the reference's native writer
     # (clinical.py:645-656: exact key order, TBD/PLACEHOLDER fields and
     # all; pinned by the rendering differential).
-    meta_study_path = os.path.join(out_dir, "meta_study.txt")
-    with open(meta_study_path, "w") as fh:
-        fh.write(
-            render_meta_file(
-                {
-                    "cancer_study_identifier": study_id,
-                    "type_of_cancer": "mixed",
-                    "name": "TBD",
-                    "pmid": "29033130",
-                    "reference_genome": "hg38",
-                    "citation": "PLACEHOLDER",
-                    "description": "PLACEHOLDER",
-                }
-            )
-        )
-    artifacts["meta_study.txt"] = meta_study_path
+    artifacts["meta_study.txt"] = _write_text(
+        os.path.join(out_dir, "meta_study.txt"),
+        render_meta_file(
+            {
+                "cancer_study_identifier": study_id,
+                "type_of_cancer": "mixed",
+                "name": "TBD",
+                "pmid": "29033130",
+                "reference_genome": "hg38",
+                "citation": "PLACEHOLDER",
+                "description": "PLACEHOLDER",
+            }
+        ),
+    )
 
     # Case lists. ONE aggregation pass (A1); collected result is one row per
     # cancer type carrying its (sorted) sample-id list (computed concurrently
     # with the clinical artifacts above).
     groups = groups_future.result()
     all_ids: list[str] = []
-    for row in sorted(groups, key=lambda r: (r[cancer_type_col] is None, r[cancer_type_col])):
+    for row in sorted(groups, key=lambda r: (r[_CANCER_TYPE] is None, r[_CANCER_TYPE])):
         ids = row["sample_ids"]
         all_ids.extend(ids)
-        slug, text = render_case_list_text(study_id, row[cancer_type_col], ids)
-        path = os.path.join(case_list_dir, f"cases_{slug}.txt")
-        with open(path, "w") as fh:
-            fh.write(text)
-        artifacts[f"case_lists/cases_{slug}.txt"] = path
+        slug, text = render_case_list_text(study_id, row[_CANCER_TYPE], ids)
+        artifacts[f"case_lists/cases_{slug}.txt"] = _write_text(
+            os.path.join(case_list_dir, f"cases_{slug}.txt"), text
+        )
 
     artifacts["case_lists/cases_all.txt"] = _write_case_list(
         case_list_dir, study_id, "all", all_ids
     )
-
-    # cases_sequenced: samples present in the mutation data (J5 semi-join).
     if mutations is not None:
-        sequenced = (
-            semi_join_sequenced(
-                clinical_sample.select(sample_id_col),
-                mutations,
-                clinical_key=sample_id_col,
-                mutation_key=barcode_col,
-            )
-            .select(sample_id_col)
-            .collect()
-        )
-        artifacts["case_lists/cases_sequenced.txt"] = _write_case_list(
-            case_list_dir, study_id, "sequenced", (r[sample_id_col] for r in sequenced)
+        artifacts["case_lists/cases_sequenced.txt"] = _write_sequenced(
+            case_list_dir, study_id, clinical_sample.select(_SAMPLE_ID), mutations
         )
 
     clinical_patient.unpersist()
@@ -290,82 +318,61 @@ def write_study_bundle(
     return artifacts
 
 
-def write_load_stage_case_lists(
-    spark,
-    bundle_dir: str,
-    sample_id_col: str = "SAMPLE_ID",
-    barcode_col: str = "Tumor_Sample_Barcode",
-) -> dict[str, str]:
+def write_load_stage_case_lists(spark, bundle_dir: str) -> dict[str, str]:
     """The reference's LOAD-stage case-list generation
     (``load.py:12-35``, ``write_case_lists_all_and_sequenced`` → external
     ``generate_case_lists.py``): ``cases_all.txt`` and — when the bundle
     carries mutation data — ``cases_sequenced.txt`` (J5 semi-join), written
-    from the already-exported bundle artifacts right before upload. The
-    study id is parsed from the bundle's own ``meta_study.txt``; sample ids
-    come from ``data_clinical_merged.txt`` when present (the staging file
-    the external tool reads) else ``data_clinical_sample.txt``.
+    from the already-exported bundle artifacts right before upload.
+
+    The study id comes from ``meta_study.txt`` (parsed by
+    ``operators.validation.parse_meta_text``). The sample file and the
+    mutation artifact are found with :func:`find_artifact` and read back
+    with ``sources.readers.read_tsv(comment="#")``: sample ids from
+    ``data_clinical_merged.txt`` when present (the staging file the
+    external tool reads) else ``data_clinical_sample.txt`` (its 4 ``#``
+    header lines skipped); barcodes from the first of
+    :data:`MAF_ARTIFACT_NAMES` that exists — the chunked directory and the
+    single-file spellings read alike, ``#version`` lines skipped, the
+    schema inferred (one small job, the same read ``cli validate`` does).
 
     Scale shape: only the distinct sample-id list is collected (the same
     KB/MB-bounded id-list class as the bundle writer's case lists); the
     semi-join and distincts run distributed. Returns artifact → path for
     whatever it wrote (empty dict when the bundle has no clinical file)."""
-    from iatlas_cbioportal_export_spark.sources.readers import (
-        read_tsv,
-        read_tsv_skip_cbioportal_header,
-    )
-
     meta_study = os.path.join(bundle_dir, "meta_study.txt")
-    study_id = None
-    if os.path.exists(meta_study):
-        with open(meta_study) as fh:
-            for line in fh:
-                if line.startswith("cancer_study_identifier:"):
-                    study_id = line.split(":", 1)[1].strip()
-                    break
+    if not os.path.exists(meta_study):
+        return {}
+    with open(meta_study) as fh:
+        study_id = parse_meta_text("meta_study.txt", fh.read()).get(
+            "cancer_study_identifier"
+        )
     if study_id is None:
         return {}
 
-    merged_path = os.path.join(bundle_dir, "data_clinical_merged.txt")
-    sample_path = os.path.join(bundle_dir, "data_clinical_sample.txt")
-    if os.path.exists(merged_path):
-        samples = read_tsv(spark, merged_path)
-    elif os.path.exists(sample_path):
-        samples = read_tsv_skip_cbioportal_header(spark, sample_path)
-    else:
+    sample_path = find_artifact(
+        bundle_dir, ("data_clinical_merged.txt", "data_clinical_sample.txt")
+    )
+    if sample_path is None:
         return {}
-    if sample_id_col not in samples.columns:
+    samples = read_tsv(spark, sample_path, comment="#")
+    if _SAMPLE_ID not in samples.columns:
         return {}
-    samples = samples.select(sample_id_col).distinct()
+    samples = samples.select(_SAMPLE_ID).distinct()
 
     case_list_dir = os.path.join(bundle_dir, "case_lists")
     os.makedirs(case_list_dir, exist_ok=True)
-    artifacts: dict[str, str] = {}
+    artifacts = {
+        "case_lists/cases_all.txt": _write_case_list(
+            case_list_dir, study_id, "all", (r[_SAMPLE_ID] for r in samples.collect())
+        )
+    }
 
-    artifacts["case_lists/cases_all.txt"] = _write_case_list(
-        case_list_dir, study_id, "all", (r[sample_id_col] for r in samples.collect())
-    )
-
-    maf_path = None
-    for n in MAF_ARTIFACT_NAMES:
-        p = os.path.join(bundle_dir, n)
-        if os.path.exists(p):
-            maf_path = p
-            break
+    maf_path = find_artifact(bundle_dir, MAF_ARTIFACT_NAMES)
     if maf_path is not None:
-        if os.path.isdir(maf_path):
-            maf = (
-                spark.read.option("sep", "\t")
-                .option("header", True)
-                .csv(maf_path)
-            )
-        else:
-            maf = read_tsv(spark, maf_path, comment="#")
-        if barcode_col in maf.columns:
-            sequenced = semi_join_sequenced(
-                samples, maf,
-                clinical_key=sample_id_col, mutation_key=barcode_col,
-            ).collect()
-            artifacts["case_lists/cases_sequenced.txt"] = _write_case_list(
-                case_list_dir, study_id, "sequenced", (r[sample_id_col] for r in sequenced)
+        maf = read_tsv(spark, maf_path, comment="#")
+        if _BARCODE in maf.columns:
+            artifacts["case_lists/cases_sequenced.txt"] = _write_sequenced(
+                case_list_dir, study_id, samples, maf
             )
     return artifacts

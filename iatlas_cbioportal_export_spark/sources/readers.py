@@ -63,18 +63,14 @@ def read_tsv(
     return reader.csv(path)
 
 
-def read_maf_folder(
-    spark: SparkSession,
-    folder: str,
-    schema: StructType | None = None,
-) -> DataFrame | None:
+def read_maf_folder(spark: SparkSession, folder: str) -> DataFrame | None:
     """S2: scan ``*.maf`` files in a folder, skipping ``#`` comment lines.
 
     The reference reads each file then ``pd.concat(ignore_index=True)`` which
-    outer-aligns columns by NAME (``maf.py:14-36``). With a declared schema a
-    single globbed scan expresses that; with heterogeneous headers we read
-    per-file and ``unionByName(allowMissingColumns=True)`` — same semantics,
-    still a parallel scan per file.
+    outer-aligns columns by NAME (``maf.py:14-36``). Headers may differ from
+    file to file, so each file is its own scan and the scans are combined
+    with ``unionByName(allowMissingColumns=True)`` — same semantics, still a
+    parallel scan per file.
 
     Returns ``None`` when the folder holds no ``.maf`` files (reference
     returns ``None`` for an empty folder).
@@ -84,8 +80,6 @@ def read_maf_folder(
     )
     if not files:
         return None
-    if schema is not None:
-        return read_tsv(spark, files, schema=schema, comment="#")  # type: ignore[arg-type]
     dfs = [read_tsv(spark, f, comment="#") for f in files]
     out = dfs[0]
     for df in dfs[1:]:

@@ -71,7 +71,6 @@ def with_pandas_float_format(df: DataFrame) -> DataFrame:
 def write_tsv(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     pandas_float_format: bool = False,
     order_by: Iterable[str] | None = None,
 ) -> None:
@@ -85,7 +84,7 @@ def write_tsv(
     if order_by:
         df = df.orderBy(*order_by)
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .option("sep", "\t")
         .option("header", True)
         .option("emptyValue", "")
@@ -94,9 +93,7 @@ def write_tsv(
     )
 
 
-def write_chunked_tsv(
-    df: DataFrame, path: str, max_rows: int = 40_000, mode: str = "overwrite"
-) -> None:
+def write_chunked_tsv(df: DataFrame, path: str, max_rows: int = 40_000) -> None:
     """S4: bound rows-per-output-file without driver-side slicing.
 
     One ``count`` job sizes the write: the frame is always repartitioned to
@@ -106,12 +103,12 @@ def write_chunked_tsv(
     """
     n = df.count()
     if n == 0:
-        write_tsv(df.limit(0), path, mode=mode)
+        write_tsv(df.limit(0), path)
         return
     n_chunks = math.ceil(n / max_rows)
     (
         df.repartition(n_chunks)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("sep", "\t")
         .option("header", True)
         .option("maxRecordsPerFile", max_rows)

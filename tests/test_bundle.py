@@ -202,3 +202,90 @@ def test_concat_csv_parts_survives_empty_leading_part(tmp_path):
     assert lines[0] == "# meta"
     assert lines[1] == "k\tv", "column header lost to an empty leading part"
     assert lines[2:] == ["z1\t1", "z2\t2"]
+
+
+def _data_lines(path):
+    """A clinical artifact's column header and data rows (``#`` lines dropped)."""
+    with open(path) as fh:
+        lines = [ln for ln in fh.read().splitlines() if not ln.startswith("#")]
+    return lines[0].split("\t"), [ln.split("\t") for ln in lines[1:]]
+
+
+def test_bundle_jobs_keep_caller_job_group(spark, tmp_path):
+    """The bundle's thread-pool jobs carry the caller's job group, so a tool
+    that attributes jobs by group sees every one of them."""
+    patient, sample, maf = _fixtures(spark)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("bundle-probe", "write_study_bundle job-group probe")
+    try:
+        write_study_bundle(
+            str(tmp_path / "bundle"), "Demo_2026", patient, sample, mutations=maf
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert tracker.getJobIdsForGroup("bundle-probe")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def test_bundle_reference_parity_surface(spark, tmp_path):
+    """``clinical_merged`` alone switches on the byte-parity surface: the
+    merged file (minus ``Dataset``), ``%.12g`` floats and id-sorted rows in
+    all three clinical files."""
+    merged = spark.createDataFrame(
+        [
+            ("S2", "P2", "Melanoma", "D", 12.0),
+            ("S1", "P1", "Melanoma", "D", 0.1 + 0.2),
+        ],
+        "SAMPLE_ID string, PATIENT_ID string, CANCER_TYPE string, "
+        "Dataset string, SCORE double",
+    )
+    patient = merged.select("PATIENT_ID", "SCORE")
+    sample = merged.select("SAMPLE_ID", "PATIENT_ID", "CANCER_TYPE", "SCORE")
+    artifacts = write_study_bundle(
+        str(tmp_path / "bundle"), "Demo_2026", patient, sample, clinical_merged=merged
+    )
+    for name, key in (
+        ("data_clinical_patient.txt", "PATIENT_ID"),
+        ("data_clinical_sample.txt", "SAMPLE_ID"),
+        ("data_clinical_merged.txt", "SAMPLE_ID"),
+    ):
+        header, rows = _data_lines(artifacts[name])
+        assert "Dataset" not in header, name
+        ids = [r[header.index(key)] for r in rows]
+        assert ids == sorted(ids) and len(ids) == 2, (name, ids)
+        assert [r[header.index("SCORE")] for r in rows] == ["0.3", "12"], name
+
+
+def test_load_stage_case_lists_on_reference_spellings(spark, tmp_path):
+    """The load stage reads the merged clinical file before the sample
+    file, and skips a single-file MAF's ``#version`` line."""
+    bundle = tmp_path / "bundle"
+    bundle.mkdir()
+    (bundle / "meta_study.txt").write_text(
+        "cancer_study_identifier: iatlas_Ref\nreference_genome: hg38\n"
+    )
+    (bundle / "data_clinical_merged.txt").write_text(
+        "SAMPLE_ID\tPATIENT_ID\nS1\tP1\nS2\tP1\nS3\tP2\n"
+    )
+    (bundle / "data_clinical_sample.txt").write_text(
+        "#Sample\n#Sample\n#STRING\n#1\nSAMPLE_ID\nS1\nS9\n"
+    )
+    (bundle / "data_mutations.txt").write_text(
+        "#version 2.4\nHugo_Symbol\tTumor_Sample_Barcode\n"
+        "TP53\tS1\nKRAS\tS3\nEGFR\tS9\nBRAF\tS1\n"
+    )
+    written = write_load_stage_case_lists(spark, str(bundle))
+    assert set(written) == {"case_lists/cases_all.txt", "case_lists/cases_sequenced.txt"}
+    ids = {}
+    for name, path in written.items():
+        with open(path) as fh:
+            lines = fh.read().splitlines()
+        assert lines[0] == "cancer_study_identifier: iatlas_Ref"
+        ids[name] = lines[-1]
+    assert ids["case_lists/cases_all.txt"] == "case_list_ids: S1\tS2\tS3"
+    assert ids["case_lists/cases_sequenced.txt"] == "case_list_ids: S1\tS3"

@@ -309,12 +309,6 @@ def _run_engine_bundle(tmp_path, spark, cli_dfs) -> dict[str, str]:
             mutations=None,
             attr_meta=ATTR_META,
             clinical_merged=merged,
-            pandas_float_format=True,
-            order_by={
-                "patient": ["PATIENT_ID"],
-                "sample": ["SAMPLE_ID"],
-                "merged": ["SAMPLE_ID"],
-            },
         )
         out[ds] = out_dir
     return out
