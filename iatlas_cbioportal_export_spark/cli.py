@@ -24,10 +24,10 @@ import sys
 
 from pyspark.sql import SparkSession
 
+from iatlas_cbioportal_export_spark.session import get_spark, job_label
+
 
 def _spark() -> SparkSession:
-    from iatlas_cbioportal_export_spark.session import get_spark
-
     return get_spark("iatlas-cli")
 
 
@@ -54,7 +54,10 @@ def cmd_clinical(args: argparse.Namespace) -> int:
         # reference: header renames (clinical.py:334-340), per-column case
         # normalization (clinical.py:136-167) and the PATIENT/SAMPLE split
         # (clinical.py:381-395). It is a kilobyte dimension table — collect.
-        for row in read_tsv(spark, args.mapping).collect():
+        mapping = read_tsv(spark, args.mapping)
+        with job_label(spark, "collect mapping"):
+            mapping_rows = mapping.collect()
+        for row in mapping_rows:
             src = row["iATLAS_attribute"] if "iATLAS_attribute" in row else None
             dst = row["NORMALIZED_HEADER"]
             if src and dst and src != dst:
@@ -114,11 +117,14 @@ def cmd_maf(args: argparse.Namespace) -> int:
     # count and report) reads this one checkpointed copy, so each variant
     # goes through the annotator once. The checkpoint lives here, not in
     # annotate(), which also takes streaming frames (those cannot be
-    # checkpointed).
-    annotated = annotate(maf, annotator=annotator).localCheckpoint(eager=False)
+    # checkpointed). Lazy as it is, the checkpoint runs the round-robin
+    # repartition's shuffle stage when it is built.
+    with job_label(spark, "repartition MAF for annotation"):
+        annotated = annotate(maf, annotator=annotator).localCheckpoint(eager=False)
     ok, failed = split_annotation_errors(annotated)
     write_mutations(args.out, f"iatlas_{args.dataset}", drop_chrm(ok), args.max_rows)
-    n_failed = failed.count()
+    with job_label(spark, "count annotation failures"):
+        n_failed = failed.count()
     if n_failed:
         write_chunked_tsv(failed, os.path.join(args.out, "annotation_errors"))
         print(f"{n_failed} rows failed annotation", file=sys.stderr)
@@ -303,7 +309,8 @@ def cmd_validate(args: argparse.Namespace) -> int:
                 )
             )
 
-    rows = findings_union(findings).collect()
+    with job_label(spark, "collect findings"):
+        rows = findings_union(findings).collect()
     print("\t".join(FINDINGS_COLUMNS))
     for row in rows:
         print("\t".join("NULL" if v is None else str(v) for v in row))
@@ -353,7 +360,8 @@ def cmd_curate(args: argparse.Namespace) -> int:
         ]
     )
     docs = read_jsonl(spark, args.input, schema)
-    n_in = docs.count()
+    with job_label(spark, "count input docs"):
+        n_in = docs.count()
     normed = cur.normalize_text(docs).withColumnRenamed("text_norm", "text")
     gates = cur.gopher_quality(normed, min_words=args.min_words)
     kept = normed.join(
@@ -375,7 +383,8 @@ def cmd_curate(args: argparse.Namespace) -> int:
     keepers = exact_dedup_keep_min(redacted).select("doc_id")
     out = redacted.select("doc_id", "text").join(keepers, "doc_id", "left_semi")
     write_jsonl(out, args.output)
-    n_out = out.count()
+    with job_label(spark, "count curated docs"):
+        n_out = out.count()
     print(f"curated {n_in} -> {n_out} docs ({args.input} -> {args.output})")
     return 0
 

@@ -119,11 +119,6 @@ def stopword_hits_of_tokens(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
 
 
-def stopword_hits(c: Column | str, lang: str) -> Column:
-    """Count of tokens that are stopwords of ``lang`` — the language-ID vote."""
-    return stopword_hits_of_tokens(tokens(c), lang)
-
-
 # Polynomial rolling-hash parameters. 31 is the classic Horner base; the
 # modulus keeps every intermediate < 2^62 so bigint arithmetic is exact and
 # portable (identical in Spark and the DuckDB oracle).

@@ -40,16 +40,6 @@ def case_list_groups(
     )
 
 
-def distinct_count(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
-    """A2: distinct key count (reference ``clinical.py:809-812``). ``approx``
-    switches to HyperLogLog ``approx_count_distinct`` — the right call at
-    100 TB when the count feeds a sanity check, not an exact invariant."""
-    agg = (
-        F.approx_count_distinct(col) if approx else F.countDistinct(col)
-    ).alias(f"n_distinct_{col.lower()}")
-    return df.agg(agg)
-
-
 def null_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """A4: one-pass null profile — per column: null count, non-null count,
     all-null flag (reference ``clinical.py:129-132,826-837`` runs

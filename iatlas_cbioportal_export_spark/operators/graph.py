@@ -16,9 +16,10 @@ MapReduce and Beyond", SoCC 2014) converges in O(log² n) rounds regardless
 of diameter, at the cost of one extra shuffle per round.
 
 Every round-by-round loop except PageRank's runs through :func:`_rounds`,
-which owns the round policy: lazily checkpointed round states and at most
-one aggregate job per round. No operator here changes session confs; AQE
-sizes each round's shuffles.
+which owns the round policy: lazily checkpointed round states, at most
+one aggregate per round, and a ``round k`` job label on each round's jobs
+(HITS labels its rounds the same way). No operator here changes session
+confs; AQE sizes each round's shuffles.
 """
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from iatlas_cbioportal_export_spark.session import job_label
 
 _LOG = logging.getLogger(__name__)
 
@@ -53,15 +56,18 @@ def _rounds(
     wrapper cuts the logical plan at the round when it is built, so plan
     growth stays bounded however many rounds run (rounds reference their
     predecessor more than once, and an uncut state grows analysis
-    exponentially), yet it runs no job of its own. ``done(state)`` is the
-    round's single aggregate job: it materializes the round and reports
-    whether the loop has converged. Without ``done`` the caller's action
-    materializes every round.
+    exponentially). It still runs the step's shuffle stages when it is
+    built: adaptive execution plans them before the checkpoint's RDD
+    exists. ``done(state)`` is the round's single aggregate: it
+    materializes the round and reports whether the loop has converged.
+    Without ``done`` the caller's action materializes every round. Every
+    job of round k carries the job label ``round k``.
     """
-    for _ in range(rounds):
-        state = step(state).localCheckpoint(eager=False)
-        if done is not None and done(state):
-            return state, True
+    for k in range(1, rounds + 1):
+        with job_label(state.sparkSession, f"round {k}"):
+            state = step(state).localCheckpoint(eager=False)
+            if done is not None and done(state):
+                return state, True
     return state, False
 
 
@@ -644,9 +650,10 @@ def hits(
         )
 
     hub = nodes.select("node", F.lit(_HITS_SCALE).cast("long").alias("h"))
-    for _ in range(iterations):
-        auth = half_round(hub, "src", "dst", "a")
-        hub = half_round(auth, "dst", "src", "h")
+    for k in range(1, iterations + 1):
+        with job_label(edges.sparkSession, f"round {k}"):
+            auth = half_round(hub, "src", "dst", "a")
+            hub = half_round(auth, "dst", "src", "h")
     return (
         nodes.join(hub, "node", "left")
         .join(auth, "node", "left")

@@ -14,6 +14,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from iatlas_cbioportal_export_spark.session import job_label
+
 
 def split_patient_sample(
     df: DataFrame,
@@ -55,9 +57,10 @@ def prune_all_null_columns(df: DataFrame) -> DataFrame:
     map-side, tiny shuffle of one row), one driver collect of that single row,
     then a metadata-only ``select``. Reference: ``clinical.py:538-547``.
     """
-    counts = df.agg(
-        *[F.count(F.col(c)).alias(c) for c in df.columns]
-    ).collect()[0]
+    with job_label(df.sparkSession, "count non-null values"):
+        counts = df.agg(
+            *[F.count(F.col(c)).alias(c) for c in df.columns]
+        ).collect()[0]
     keep = [c for c in df.columns if counts[c] > 0]
     return df.select(*keep)
 

@@ -44,6 +44,7 @@ from iatlas_cbioportal_export_spark.operators.projections import (
     prune_all_null_columns,
 )
 from iatlas_cbioportal_export_spark.operators.validation import parse_meta_text
+from iatlas_cbioportal_export_spark.session import job_label
 from iatlas_cbioportal_export_spark.sources.readers import read_tsv
 from iatlas_cbioportal_export_spark.sources.sinks import (
     render_case_list_text,
@@ -150,9 +151,10 @@ def _write_sequenced(
     """Write ``cases_sequenced.txt``: the ``SAMPLE_ID``s of the one-column
     ``samples`` frame that appear as a ``Tumor_Sample_Barcode`` in
     ``mutations`` (J5 semi-join; only the matching id list is collected)."""
-    sequenced = semi_join_sequenced(
-        samples, mutations, clinical_key=_SAMPLE_ID, mutation_key=_BARCODE
-    ).collect()
+    with job_label(samples.sparkSession, "collect sequenced samples"):
+        sequenced = semi_join_sequenced(
+            samples, mutations, clinical_key=_SAMPLE_ID, mutation_key=_BARCODE
+        ).collect()
     return _write_case_list(
         case_list_dir, study_id, "sequenced", (r[_SAMPLE_ID] for r in sequenced)
     )
@@ -227,9 +229,10 @@ def write_study_bundle(
         return [(name, written), (meta_name, meta_path)]
 
     def _case_list_groups():
-        return case_list_groups(
-            clinical_sample, group_col=_CANCER_TYPE, id_col=_SAMPLE_ID
-        ).collect()
+        with job_label(clinical_sample.sparkSession, "collect case-list groups"):
+            return case_list_groups(
+                clinical_sample, group_col=_CANCER_TYPE, id_col=_SAMPLE_ID
+            ).collect()
 
     # Pool threads do not inherit the caller's local properties (job group,
     # scheduler pool, job description). Each task is wrapped on its own in
@@ -362,9 +365,11 @@ def write_load_stage_case_lists(spark, bundle_dir: str) -> dict[str, str]:
 
     case_list_dir = os.path.join(bundle_dir, "case_lists")
     os.makedirs(case_list_dir, exist_ok=True)
+    with job_label(spark, "collect sample ids"):
+        rows = samples.collect()
     artifacts = {
         "case_lists/cases_all.txt": _write_case_list(
-            case_list_dir, study_id, "all", (r[_SAMPLE_ID] for r in samples.collect())
+            case_list_dir, study_id, "all", (r[_SAMPLE_ID] for r in rows)
         )
     }
 

@@ -29,6 +29,7 @@ from iatlas_cbioportal_export_spark.operators.joins import (
     code_expansion_join,
 )
 from iatlas_cbioportal_export_spark.operators.projections import rename_columns
+from iatlas_cbioportal_export_spark.session import job_label
 
 ONCOTREE_MERGE_COLS = ["TCGA_Study", "AMADEUS_Study", "Dataset"]
 STATUS_RECODE = {0: "0:LIVING", 1: "1:DECEASED"}
@@ -213,10 +214,11 @@ def logrank_test(
         F.count(F.when(F.col(group_col) == group_a, F.lit(1))).alias("c_a"),
         F.count(F.lit(1)).alias("c"),
     ).persist()
-    mm = per_t.agg(
-        F.min(F.expr("CAST(t AS BIGINT)")).alias("lo"),
-        F.max(F.expr("CAST(t AS BIGINT)")).alias("hi"),
-    ).collect()[0]
+    with job_label(df.sparkSession, "collect event-time range"):
+        mm = per_t.agg(
+            F.min(F.expr("CAST(t AS BIGINT)")).alias("lo"),
+            F.max(F.expr("CAST(t AS BIGINT)")).alias("hi"),
+        ).collect()[0]
     if mm["lo"] is None:
         grid = per_t.select(
             "t", "d_a", "d",

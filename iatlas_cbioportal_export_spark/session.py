@@ -11,6 +11,8 @@ local tests use 32.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -121,3 +123,23 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextmanager
+def job_label(spark: SparkSession, text: str) -> Iterator[None]:
+    """Label the Spark jobs this thread submits inside the block: the
+    thread-local ``spark.job.description`` becomes
+    ``"<enclosing description>:<text>"`` (``text`` alone when none is set),
+    and the previous value, unset included, comes back on exit. The label
+    lands in the event log's ``SparkListenerJobStart`` properties, so a
+    run shows what each job did without the Spark UI."""
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty(_JOB_DESCRIPTION)
+    sc.setJobDescription(f"{prior}:{text}" if prior else text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prior)  # None unsets it

@@ -1,10 +1,11 @@
 """Sources: TSV / MAF / parquet scans (SURVEY.md §2.1 S1-S3).
 
 Reference behavior being re-expressed (not copied):
-- S1 Synapse TSV scan  -> header'd tab-separated read with an explicit schema
-  (reference: ``clinical.py:319-322`` uses ``pd.read_csv(sep="\\t")`` with
-  inferred dtypes; we declare schemas so the whole ``%.12g`` float-format
-  subplot disappears).
+- S1 Synapse TSV scan  -> header'd tab-separated read (reference:
+  ``clinical.py:319-322`` uses ``pd.read_csv(sep="\\t")`` with inferred
+  dtypes). :func:`read_tsv` takes an explicit schema, but every read of the
+  CLI chain passes none today and infers its types, as the reference does:
+  a header job plus an inference job per file.
 - S2 multi-file MAF folder scan with ``comment="#"`` skip and outer column
   alignment (reference: ``maf.py:14-36``).
 - S3 header-skipping re-read of cBioPortal clinical output (reference:
@@ -13,7 +14,9 @@ Reference behavior being re-expressed (not copied):
 
 Scale notes: every reader returns a lazy DataFrame; globbed multi-file reads
 parallelize across executors; column pruning and predicate pushdown reach the
-scan because nothing is materialized here.
+scan because nothing is materialized here. The jobs a read does run itself
+(csv header and inference, parquet footers) and every write are labelled
+``read <name>`` / ``write <name>`` with ``session.job_label``.
 """
 
 from __future__ import annotations
@@ -22,6 +25,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from iatlas_cbioportal_export_spark.session import job_label
 
 TESTDATA_TABLES = (
     "region",
@@ -60,7 +65,8 @@ def read_tsv(
         reader = reader.schema(schema)
     else:
         reader = reader.option("inferSchema", True)
-    return reader.csv(path)
+    with job_label(spark, f"read {os.path.basename(path)}"):
+        return reader.csv(path)
 
 
 def read_maf_folder(spark: SparkSession, folder: str) -> DataFrame | None:
@@ -104,7 +110,8 @@ def read_jsonl(
     on a 100 TB corpus — declare the shape, let the scan project only the
     requested fields (Spark's json reader prunes unparsed fields when the
     schema names only what you need)."""
-    return spark.read.schema(schema).json(path)
+    with job_label(spark, f"read {os.path.basename(path)}"):
+        return spark.read.schema(schema).json(path)
 
 
 def read_jsonl_tracked(
@@ -126,12 +133,13 @@ def read_jsonl_tracked(
 
     corrupt = "_corrupt_record"
     full = StructType(list(schema.fields) + [StructField(corrupt, StringType())])
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt)
-        .json(path)
-    )
+    with job_label(spark, f"read {os.path.basename(path)}"):
+        df = (
+            spark.read.schema(full)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", corrupt)
+            .json(path)
+        )
     # Spark disallows filtering on only the corrupt column of a lazy json
     # scan (SPARK-21610) — materialize the tiny bad set via cache
     df = df.cache()
@@ -145,7 +153,8 @@ def read_jsonl_tracked(
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """JSON-lines sink (one object per line, the LLM-corpus interchange
     format). Distributed write — one file per partition."""
-    df.write.mode(mode).json(path)
+    with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
+        df.write.mode(mode).json(path)
 
 
 def read_orc(
@@ -156,12 +165,14 @@ def read_orc(
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.orc(path)
+    with job_label(spark, f"read {os.path.basename(path)}"):
+        return reader.orc(path)
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """ORC sink — the interchange format for Hive-ecosystem consumers."""
-    df.write.mode(mode).orc(path)
+    with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
+        df.write.mode(mode).orc(path)
 
 
 def read_xml(
@@ -181,7 +192,8 @@ def read_xml(
     reader = spark.read.option("rowTag", row_tag)
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.xml(path)
+    with job_label(spark, f"read {os.path.basename(path)}"):
+        return reader.xml(path)
 
 
 def write_xml(
@@ -190,14 +202,16 @@ def write_xml(
     """XML sink — one ``<row_tag>`` element per row, one file per
     partition. Interchange with XML-expecting consumers (clinical-data
     registries, legacy ETL); not a storage format."""
-    df.write.mode(mode).option("rowTag", row_tag).xml(path)
+    with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
+        df.write.mode(mode).option("rowTag", row_tag).xml(path)
 
 
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
 ) -> dict[str, DataFrame]:
     """Load the driver's parquet testdata tables as lazy DataFrames."""
-    return {
-        name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        for name in names
-    }
+    with job_label(spark, "read testdata tables"):
+        return {
+            name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+            for name in names
+        }

@@ -25,6 +25,8 @@ from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame
 
+from iatlas_cbioportal_export_spark.session import job_label
+
 # Byte-identical to the reference's template (clinical.py:56-62): five
 # key:value lines, NO trailing newline — pinned by the rendering
 # differential against the actual reference writer.
@@ -83,14 +85,15 @@ def write_tsv(
         df = with_pandas_float_format(df)
     if order_by:
         df = df.orderBy(*order_by)
-    (
-        df.write.mode("overwrite")
-        .option("sep", "\t")
-        .option("header", True)
-        .option("emptyValue", "")
-        .option("nullValue", "")
-        .csv(path)
-    )
+    with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
+        (
+            df.write.mode("overwrite")
+            .option("sep", "\t")
+            .option("header", True)
+            .option("emptyValue", "")
+            .option("nullValue", "")
+            .csv(path)
+        )
 
 
 def write_chunked_tsv(df: DataFrame, path: str, max_rows: int = 40_000) -> None:
@@ -101,19 +104,22 @@ def write_chunked_tsv(df: DataFrame, path: str, max_rows: int = 40_000) -> None:
     ``maf.py:43,63``) and ``maxRecordsPerFile`` caps each file at
     ``max_rows`` rows. A zero-row frame goes to :func:`write_tsv` as is.
     """
-    n = df.count()
+    name = os.path.basename(path)
+    with job_label(df.sparkSession, f"count {name} rows"):
+        n = df.count()
     if n == 0:
         write_tsv(df.limit(0), path)
         return
     n_chunks = math.ceil(n / max_rows)
-    (
-        df.repartition(n_chunks)
-        .write.mode("overwrite")
-        .option("sep", "\t")
-        .option("header", True)
-        .option("maxRecordsPerFile", max_rows)
-        .csv(path)
-    )
+    with job_label(df.sparkSession, f"write {name}"):
+        (
+            df.repartition(n_chunks)
+            .write.mode("overwrite")
+            .option("sep", "\t")
+            .option("header", True)
+            .option("maxRecordsPerFile", max_rows)
+            .csv(path)
+        )
 
 
 def cbioportal_clinical_header(
@@ -218,11 +224,8 @@ def write_partitioned_datasets(
     per-dataset filter loop (``clinical.py:922-950``) with a single
     ``partitionBy`` write, and makes every later ``Dataset == d`` filter a
     partition-pruned scan instead of a full read."""
-    (
-        df.write.mode(mode)
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
+    with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
+        df.write.mode(mode).partitionBy(partition_col).parquet(path)
 
 
 def write_bucketed(
@@ -322,7 +325,9 @@ def tsv_text_remove_pandas_float(df: DataFrame, header: bool = True) -> str:
     lines = []
     if header:
         lines.append("\t".join(cols))
-    for row in df.collect():
+    with job_label(df.sparkSession, "collect TSV text"):
+        rows = df.collect()
+    for row in rows:
         lines.append("\t".join(cell(row[c]) for c in cols))
     text = "\n".join(lines) + "\n"
     return text.replace(".0\t", "\t").replace(".0\n", "\n")

@@ -2,10 +2,13 @@
 
 import os
 
+import pytest
+
 from iatlas_cbioportal_export_spark.plans.bundle import (
     write_load_stage_case_lists,
     write_study_bundle,
 )
+from iatlas_cbioportal_export_spark.session import job_label
 from iatlas_cbioportal_export_spark.sources.readers import (
     read_tsv_skip_cbioportal_header,
 )
@@ -230,6 +233,30 @@ def test_bundle_jobs_keep_caller_job_group(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert tracker.getJobIdsForGroup("bundle-probe")
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+    # ... and each names its purpose after the caller's description
+    store = sc._jsc.sc().statusStore()
+    options = [
+        store.job(job_id).description()
+        for job_id in tracker.getJobIdsForGroup("bundle-probe")
+    ]
+    descriptions = [d.get() if d.isDefined() else None for d in options]
+    assert all(
+        (d or "").startswith("write_study_bundle job-group probe:") for d in descriptions
+    ), descriptions
+
+
+def test_job_label_nests_and_restores(spark):
+    sc = spark.sparkContext
+    key = "spark.job.description"
+    sc.setJobDescription(None)
+    with job_label(spark, "outer"):
+        assert sc.getLocalProperty(key) == "outer"
+        with pytest.raises(RuntimeError):
+            with job_label(spark, "round 1"):
+                assert sc.getLocalProperty(key) == "outer:round 1"
+                raise RuntimeError
+        assert sc.getLocalProperty(key) == "outer"
+    assert sc.getLocalProperty(key) is None
 
 
 def test_bundle_reference_parity_surface(spark, tmp_path):

@@ -1,9 +1,13 @@
-"""Operators never mutate session confs: ``plans/bundle.py`` builds plans
-from several threads over one session, so a conf an operator sets leaks
-into every plan built meanwhile. ``cli.py`` and ``plans/`` read files only
-through ``sources/readers.py``, so every read shares one set of csv options
-(and one traced call site)."""
+"""Three lints. Operators never mutate session confs: ``plans/bundle.py``
+builds plans from several threads over one session, so a conf an operator
+sets leaks into every plan built meanwhile. ``cli.py`` and ``plans/`` read
+files only through ``sources/readers.py``, so every read shares one set of
+csv options (and one traced call site). Every eager action in ``cli.py``,
+``plans/``, ``sources/readers.py`` and ``sources/sinks.py`` runs inside a
+``with job_label(...)`` block, so each of its jobs says in the event log
+what it is for."""
 
+import ast
 from pathlib import Path
 
 import iatlas_cbioportal_export_spark.operators as operators
@@ -29,4 +33,60 @@ def test_cli_and_plans_read_only_through_readers():
         for lineno, line in enumerate(path.read_text().splitlines(), 1)
         if "spark.read" in line
     ]
+    assert offenders == []
+
+
+# Calls that run Spark jobs: actions, reader/writer format methods (a read
+# without a schema runs header, inference or footer jobs) and
+# localCheckpoint, which runs the plan's shuffle stages when it is built
+# even with eager=False (adaptive execution plans them).
+_EAGER_METHODS = {
+    "collect", "count", "toPandas", "csv", "json", "parquet", "orc", "xml", "save",
+    "localCheckpoint",
+}
+
+
+def _is_eager(call: ast.Call) -> bool:
+    func = call.func
+    return (
+        isinstance(func, ast.Attribute)
+        and func.attr in _EAGER_METHODS
+        and getattr(func.value, "id", None) != "F"  # F.count is a column function
+    )
+
+
+def _is_job_label(expr: ast.expr) -> bool:
+    return (
+        isinstance(expr, ast.Call)
+        and isinstance(expr.func, ast.Name)
+        and expr.func.id == "job_label"
+    )
+
+
+def _unlabelled_eager_calls(path: Path) -> list[str]:
+    offenders = []
+
+    def visit(node: ast.AST, labelled: bool) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.Lambda)):
+            labelled = False  # a body runs when called, not where defined
+        elif isinstance(node, ast.With):
+            labelled = labelled or any(_is_job_label(i.context_expr) for i in node.items)
+        elif isinstance(node, ast.Call) and _is_eager(node) and not labelled:
+            offenders.append(f"{path.name}:{node.lineno}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, labelled)
+
+    visit(ast.parse(path.read_text()), False)
+    return offenders
+
+
+def test_eager_actions_are_labelled():
+    sources = PACKAGE_DIR / "sources"
+    paths = [
+        PACKAGE_DIR / "cli.py",
+        *sorted((PACKAGE_DIR / "plans").glob("*.py")),
+        sources / "readers.py",
+        sources / "sinks.py",
+    ]
+    offenders = [o for path in paths for o in _unlabelled_eager_calls(path)]
     assert offenders == []
