@@ -110,8 +110,7 @@ def read_jsonl(
     on a 100 TB corpus — declare the shape, let the scan project only the
     requested fields (Spark's json reader prunes unparsed fields when the
     schema names only what you need)."""
-    with job_label(spark, f"read {os.path.basename(path)}"):
-        return spark.read.schema(schema).json(path)
+    return spark.read.schema(schema).json(path)
 
 
 def read_jsonl_tracked(
@@ -133,13 +132,12 @@ def read_jsonl_tracked(
 
     corrupt = "_corrupt_record"
     full = StructType(list(schema.fields) + [StructField(corrupt, StringType())])
-    with job_label(spark, f"read {os.path.basename(path)}"):
-        df = (
-            spark.read.schema(full)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", corrupt)
-            .json(path)
-        )
+    df = (
+        spark.read.schema(full)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", corrupt)
+        .json(path)
+    )
     # Spark disallows filtering on only the corrupt column of a lazy json
     # scan (SPARK-21610) — materialize the tiny bad set via cache
     df = df.cache()

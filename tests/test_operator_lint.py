@@ -37,7 +37,8 @@ def test_cli_and_plans_read_only_through_readers():
 
 
 # Calls that run Spark jobs: actions, reader/writer format methods (a read
-# without a schema runs header, inference or footer jobs) and
+# without a declared schema runs header, inference or footer jobs; a reader
+# chain that calls ``.schema(...)`` is exempt) and
 # localCheckpoint, which runs the plan's shuffle stages when it is built
 # even with eager=False (adaptive execution plans them).
 _EAGER_METHODS = {
@@ -46,12 +47,30 @@ _EAGER_METHODS = {
 }
 
 
+_READ_METHODS = {"csv", "json", "parquet", "orc", "xml"}
+
+
+def _declares_schema(expr: ast.expr) -> bool:
+    """Whether a reader chain such as ``spark.read.schema(s).option(...)``
+    calls ``.schema(...)``: a read with a declared schema only lists its
+    files on the driver and runs no job."""
+    while isinstance(expr, (ast.Call, ast.Attribute)):
+        if isinstance(expr, ast.Call):
+            if isinstance(expr.func, ast.Attribute) and expr.func.attr == "schema":
+                return True
+            expr = expr.func
+        else:
+            expr = expr.value
+    return False
+
+
 def _is_eager(call: ast.Call) -> bool:
     func = call.func
     return (
         isinstance(func, ast.Attribute)
         and func.attr in _EAGER_METHODS
         and getattr(func.value, "id", None) != "F"  # F.count is a column function
+        and not (func.attr in _READ_METHODS and _declares_schema(func.value))
     )
 
 

@@ -1,5 +1,9 @@
-"""Smoke test of ``tools/profile.py``: one cheap query, one rep, in its own
-process (the tool starts its own session with an event log)."""
+"""Tests of ``tools/``: a smoke test of ``tools/query_profile.py`` (one cheap
+query, one rep, in its own process: the tool starts its own session with an
+event log), and a lint that no tool is named after a standard-library module.
+``python tools/X.py`` puts ``tools/`` first on ``sys.path``, so such a tool
+would shadow that module for every script there: a ``tools/profile.py``
+breaks pyspark's import of cProfile, which imports ``profile``."""
 
 import json
 import os
@@ -15,7 +19,7 @@ ROOT = Path(__file__).resolve().parents[1]
 def test_profile_reports_walls_jobs_and_labels(tmp_path):
     out = tmp_path / "out"
     proc = subprocess.run(
-        [sys.executable, str(ROOT / "tools" / "profile.py"), "graph_sssp",
+        [sys.executable, str(ROOT / "tools" / "query_profile.py"), "graph_sssp",
          "--sf-dir", SF_DIR, "--reps", "1", "--out", str(out)],
         capture_output=True, text=True, timeout=300,
         env={**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"},
@@ -28,3 +32,8 @@ def test_profile_reports_walls_jobs_and_labels(tmp_path):
     # the rounds' convergence counts carry the package's "round k" label
     assert rec["labels"]["round 1"]["jobs"] > 0
     assert (out / "graph_sssp.txt").read_text().startswith("== Physical Plan ==")
+
+
+def test_no_tool_shadows_a_stdlib_module():
+    stems = {path.stem for path in (ROOT / "tools").glob("*.py")}
+    assert sorted(stems & sys.stdlib_module_names) == []

@@ -1,6 +1,6 @@
 """Profile registry queries from one local Spark event log.
 
-    python tools/profile.py QUERY... [--sf-dir DIR] [--reps N] [--out DIR]
+    python tools/query_profile.py QUERY... [--sf-dir DIR] [--reps N] [--out DIR]
 
 Each query runs once to warm up, then ``--reps`` times, through the noop
 sink (every column is computed, nothing is written). Its wall splits into
@@ -29,9 +29,7 @@ from collections import defaultdict
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
-# A script's own directory leads sys.path; this file would shadow the
-# standard library's ``profile`` there, which cProfile imports.
-sys.path[0] = str(ROOT)
+sys.path.insert(0, str(ROOT))
 sys.path.append(str(ROOT / "perfbench"))
 
 import __spark_entry__ as entrymod  # noqa: E402
