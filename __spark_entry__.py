@@ -4916,6 +4916,10 @@ def q_curation_pii_pseudonyms(spark, sf_dir):
     return pii_pseudonym_map(docs).orderBy("kind", "value")
 
 
+# Input schema of the synthetic-media query builders.
+_MEDIA_SCHEMA = "media_id long, modality string, mime_type string, payload binary"
+
+
 def q_multimodal_wav_roundtrip(spark, sf_dir):
     """REAL audio decode under the driver gate — not the fake extractor:
     deterministic PCM (s_i = ((media_id·31 + i·7) % 256) − 128, 256
@@ -4926,14 +4930,6 @@ def q_multimodal_wav_roundtrip(spark, sf_dir):
     encode→decode round trip (44-byte header + 512 PCM bytes, bucket
     arithmetic) is value-hash checked end to end. mp3/jpeg remain behind
     the honest NotImplementedError stub."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_features,
         stdlib_decoder,
@@ -4943,14 +4939,6 @@ def q_multimodal_wav_roundtrip(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 200)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -4985,7 +4973,7 @@ def q_multimodal_wav_roundtrip(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     feats = extract_features(media, extractor=stdlib_decoder)
     return feats.select(
         "media_id",
@@ -5002,14 +4990,6 @@ def q_multimodal_image_resize(spark, sf_dir):
     then decoded by the stdlib netpbm parser. The oracle computes the
     sampled-pixel mean from the closed-form image, so encode→resize→decode
     is value-hash checked end to end."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_features,
         resize_images,
@@ -5020,14 +5000,6 @@ def q_multimodal_image_resize(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 200)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5052,7 +5024,7 @@ def q_multimodal_image_resize(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     small = resize_images(media, 8, 6)
     feats = extract_features(small, extractor=stdlib_decoder)
     return feats.select(
@@ -5073,14 +5045,6 @@ def q_multimodal_png_roundtrip(spark, sf_dir):
     by the stdlib PNG parser. The oracle computes the channel-0 mean from
     the closed-form pixel formula, so deflate→inflate→unfilter is
     value-hash checked end to end across every filter type."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_features,
         png_encode,
@@ -5091,14 +5055,6 @@ def q_multimodal_png_roundtrip(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 200)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5128,7 +5084,7 @@ def q_multimodal_png_roundtrip(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     feats = extract_features(media, extractor=stdlib_decoder)
     return feats.select(
         "media_id",
@@ -5148,14 +5104,6 @@ def q_multimodal_zip_index(spark, sf_dir):
     zip-parsing trap). The oracle replays the offset arithmetic
     closed-form: local header = 30 + len(name) bytes, members
     back-to-back. Archive bytes never shuffle."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_zip_index,
     )
@@ -5164,14 +5112,6 @@ def q_multimodal_zip_index(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 30)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5203,7 +5143,7 @@ def q_multimodal_zip_index(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return extract_zip_index(media).select(
         "media_id", "name", "method", "size", "compressed_size",
         "data_offset",
@@ -5221,14 +5161,6 @@ def q_multimodal_zip64_index(spark, sf_dir):
     identical to the r7 ``multimodal_zip_index`` query, so the oracle
     replays the same closed-form offset arithmetic: local header =
     30 + len(name) bytes, members back-to-back."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_zip_index,
     )
@@ -5237,14 +5169,6 @@ def q_multimodal_zip64_index(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 30)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5310,7 +5234,7 @@ def q_multimodal_zip64_index(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return extract_zip_index(media).select(
         "media_id", "name", "method", "size", "compressed_size",
         "data_offset",
@@ -5427,14 +5351,6 @@ def q_multimodal_image_dhash(spark, sf_dir):
     groups by the recomputed hash, so even accidental cross-key hash
     collisions stay consistent. Pixels never shuffle; only 64-bit
     sketches do."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         dhash_duplicate_groups,
     )
@@ -5443,14 +5359,6 @@ def q_multimodal_image_dhash(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 96)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5477,7 +5385,7 @@ def q_multimodal_image_dhash(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     # member list as CSV — the repo's array-column oracle pattern
     # (plain-session toPandas stringifies lists and DuckDB stringifies
     # numpy arrays DIFFERENTLY, so raw array columns can't value-hash)
@@ -5497,14 +5405,6 @@ def q_multimodal_vad_segments(spark, sf_dir):
     frame-energy VAD. The oracle replays the segment starts/lengths
     closed-form from the planting arithmetic. Audio bytes never shuffle;
     downstream speech selection range-reads (start_ms, duration_ms)."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_vad_segments,
     )
@@ -5513,14 +5413,6 @@ def q_multimodal_vad_segments(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 200)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5556,7 +5448,7 @@ def q_multimodal_vad_segments(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return extract_vad_segments(media, frame_ms=20, threshold=200)
 
 
@@ -5568,14 +5460,6 @@ def q_multimodal_bmp_roundtrip(spark, sf_dir):
     row padding, the format's three classic traps — then decoded by the
     stdlib parser. Same oracle shape as the PNG round trip: channel-0
     mean ppm recomputed closed-form."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         bmp_encode,
         extract_features,
@@ -5586,14 +5470,6 @@ def q_multimodal_bmp_roundtrip(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 170)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5620,7 +5496,7 @@ def q_multimodal_bmp_roundtrip(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     feats = extract_features(media, extractor=stdlib_decoder)
     return feats.select(
         "media_id",
@@ -5645,14 +5521,6 @@ def q_multimodal_jpeg_roundtrip(spark, sf_dir):
     Huffman coder, byte stuffing, RSTn handling, and (for odd ids) the
     YCbCr transform are value-hash checked end to end. Payload bytes
     never shuffle (encode and decode live in the same Arrow stages)."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.jpeg_codec import (
         jpeg_encode,
     )
@@ -5665,14 +5533,6 @@ def q_multimodal_jpeg_roundtrip(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 200)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5705,7 +5565,7 @@ def q_multimodal_jpeg_roundtrip(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     feats = extract_features(media, extractor=stdlib_decoder)
     return feats.select(
         "media_id",
@@ -5730,14 +5590,6 @@ def q_multimodal_container_metadata(spark, sf_dir):
     frame stepping (144·kbps·1000//rate), syncsafe skip, and marker
     arithmetic are all value-hash checked. Pixel/audio DECODE for these
     formats remains honestly stubbed (needs codec libs)."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_container_metadata,
         jpeg_encode_headers,
@@ -5749,14 +5601,6 @@ def q_multimodal_container_metadata(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 180)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5794,7 +5638,7 @@ def q_multimodal_container_metadata(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return extract_container_metadata(media).select(
         "media_id", "container", "brand", "width", "height",
         "duration_ms", "sample_rate", "n_tracks", "n_frames",
@@ -5813,14 +5657,6 @@ def q_multimodal_mp4_samples(spark, sf_dir):
     bytes never shuffle. The oracle rebuilds every field closed-form
     (offsets/dts as prefix-sum windows), so the whole box-walk arithmetic
     is value-hash checked."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_mp4_samples,
         mp4_encode_track,
@@ -5830,14 +5666,6 @@ def q_multimodal_mp4_samples(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 40)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5867,7 +5695,7 @@ def q_multimodal_mp4_samples(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return extract_mp4_samples(media).select(
         "media_id", "track_id", "sample_idx", "chunk_idx",
         "offset", "size", "dts", "duration", "is_sync",
@@ -5882,14 +5710,6 @@ def q_multimodal_mp3_frames(spark, sf_dir):
     parallel workers could decode independently. The oracle replays the
     frame-length arithmetic (144·kbps·1000//rate) and syncsafe tag skip
     closed-form."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_mp3_frames,
         mp3_encode,
@@ -5899,14 +5719,6 @@ def q_multimodal_mp3_frames(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 60)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -5934,7 +5746,7 @@ def q_multimodal_mp3_frames(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return extract_mp3_frames(media).select(
         "media_id", "frame_idx", "offset", "size", "dts_ms", "bitrate_kbps",
     )
@@ -5950,14 +5762,6 @@ def q_multimodal_gif_roundtrip(spark, sf_dir):
     closed-form from the palette/index formulas over the 192-pixel grid,
     so compress→decompress→palette-expand (and the interlace reorder) is
     value-hash checked end to end."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.gif_codec import gif_encode
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_features,
@@ -5968,14 +5772,6 @@ def q_multimodal_gif_roundtrip(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 150)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -6010,7 +5806,7 @@ def q_multimodal_gif_roundtrip(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     feats = extract_features(media, extractor=stdlib_decoder)
     return feats.select(
         "media_id",
@@ -6030,14 +5826,6 @@ def q_multimodal_id3_tags(spark, sf_dir):
     pass an audio corpus runs before any decode. The oracle rebuilds the
     planted strings closed-form, so frame-size decoding in BOTH tag
     versions is value-hash checked."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_id3_tags,
         id3v2_encode,
@@ -6048,14 +5836,6 @@ def q_multimodal_id3_tags(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 160)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -6083,7 +5863,7 @@ def q_multimodal_id3_tags(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return extract_id3_tags(media).select(
         "media_id", "title", "artist", "album"
     )
@@ -6100,14 +5880,6 @@ def q_multimodal_webdataset_index(spark, sf_dir):
     (offset = 512·(j+1) + Σ ceil512(prev sizes)) closed-form, so octal
     size decoding and block stepping are value-hash checked. Shard
     bytes never shuffle."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_tar_index,
     )
@@ -6116,14 +5888,6 @@ def q_multimodal_webdataset_index(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 30)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -6158,7 +5922,7 @@ def q_multimodal_webdataset_index(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return extract_tar_index(media).select(
         "media_id", "name", "offset", "size", "typeflag", "mtime"
     )
@@ -6195,14 +5959,6 @@ def q_multimodal_audio_features(spark, sf_dir):
     The oracle reproduces every field closed-form from the square-wave
     parameters (crossings = (n-1)//h for a block wave), so the whole
     decode+DSP path is value-hash checked."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         extract_audio_features,
     )
@@ -6211,14 +5967,6 @@ def q_multimodal_audio_features(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 120)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -6256,7 +6004,7 @@ def q_multimodal_audio_features(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return extract_audio_features(media).select(
         "media_id", "n_samples", "sample_rate", "duration_ms", "peak",
         "mean_abs_ppm", "energy", "zero_crossings", "silence_ppm",
@@ -6272,14 +6020,6 @@ def q_multimodal_g711_stats(spark, sf_dir):
     stats. The oracle replays the µ-law (bias-132 segment shift) and
     A-law (0x55 toggle) expansions closed-form in SQL, so the decode math
     itself is value-hash checked."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from iatlas_cbioportal_export_spark.operators.multimodal import (
         _ALAW_TABLE,
         _MULAW_TABLE,
@@ -6291,14 +6031,6 @@ def q_multimodal_g711_stats(spark, sf_dir):
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("media_id"))
         .filter(F.col("media_id") < 100)
-    )
-    media_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("modality", StringType()),
-            StructField("mime_type", StringType()),
-            StructField("payload", BinaryType()),
-        ]
     )
 
     def encode(batches):
@@ -6322,7 +6054,7 @@ def q_multimodal_g711_stats(spark, sf_dir):
                 }
             )
 
-    media = ids.mapInPandas(encode, schema=media_schema)
+    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return g711_wav_stats(media).select(
         "media_id", "sample_rate", "n_samples", "sum_pcm", "min_pcm",
         "max_pcm",

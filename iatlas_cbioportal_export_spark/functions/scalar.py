@@ -106,9 +106,7 @@ def case_normalize(c: Column | str, mode: str | None) -> Column:
     return col
 
 
-def recode_values(
-    c: Column | str, mapping: Mapping[object, str], cast_passthrough: str = "string"
-) -> Column:
+def recode_values(c: Column | str, mapping: Mapping[object, str]) -> Column:
     """F3: dict value recode with passthrough for unmapped values.
 
     Reference applies ``{0: "0:LIVING", 1: "1:DECEASED"}`` to OS/PFS status
@@ -122,11 +120,11 @@ def recode_values(
         cond = col == F.lit(key)
         expr = F.when(cond, F.lit(val)) if expr is None else expr.when(cond, F.lit(val))
     if expr is None:
-        return col.cast(cast_passthrough)
-    return expr.otherwise(col.cast(cast_passthrough))
+        return col.cast("string")
+    return expr.otherwise(col.cast("string"))
 
 
-def days_to_months(c: Column | str, days_per_month: float = 30.44) -> Column:
+def days_to_months(c: Column | str) -> Column:
     """F5: survival days → months, ``round(col / 30.44, 2)``
     (reference ``clinical.py:515-535``; constant at ``clinical.py:531``).
 
@@ -136,7 +134,7 @@ def days_to_months(c: Column | str, days_per_month: float = 30.44) -> Column:
     our test suite.
     """
     col = F.col(c) if isinstance(c, str) else c
-    return F.round(col / F.lit(days_per_month), 2)
+    return F.round(col / F.lit(30.44), 2)
 
 
 def coalesce_remap(df: DataFrame, out_col: str, preferred: str, fallback: str) -> DataFrame:

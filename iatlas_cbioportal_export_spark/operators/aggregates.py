@@ -11,7 +11,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -40,7 +40,7 @@ def case_list_groups(
     )
 
 
-def null_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
+def null_profile(df: DataFrame) -> DataFrame:
     """A4: one-pass null profile — per column: null count, non-null count,
     all-null flag (reference ``clinical.py:129-132,826-837`` runs
     ``isna().sum()``, ``isna().any()``, ``isna().all()`` as separate pandas
@@ -48,7 +48,7 @@ def null_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
 
     Output: one row per column (unpivoted for usability downstream).
     """
-    cols = list(cols or df.columns)
+    cols = df.columns
     total = F.count(F.lit(1))
     agg = df.agg(
         total.alias("__total"),
@@ -78,33 +78,27 @@ def duplicate_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFr
     )
 
 
-def drop_duplicates(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """A7: whole-row (or keyed) dedup, keep-any (reference keep-first on
-    identical rows — equivalent, ``clinical.py:398``)."""
-    return df.dropDuplicates(list(subset) if subset else None)
+def drop_duplicates(df: DataFrame) -> DataFrame:
+    """A7: whole-row dedup, keep-any (reference keep-first on identical
+    rows — equivalent, ``clinical.py:398``)."""
+    return df.dropDuplicates()
 
 
-def keep_last_upsert(
-    old: DataFrame,
-    new: DataFrame,
-    key: str,
-    order_cols: Sequence[str] = (),
-) -> DataFrame:
+def keep_last_upsert(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
     """A8: concat(old, new) then per-key keep-LAST — the attribute-metadata
     upsert (reference ``clinical.py:465-468``:
     ``concat().drop_duplicates(subset=key, keep="last")``).
 
     pandas "last" means: rows from ``new`` win; within a frame, later rows
-    win. Spark has no row order, so we tag provenance (old=0, new=1) plus
-    optional ``order_cols`` as the tie-break, then take ``row_number() == 1``
-    over ``Window.partitionBy(key).orderBy(desc(...))`` — the one Window in
+    win. Spark has no row order, so we tag provenance (old=0, new=1), then
+    take ``row_number() == 1`` over
+    ``Window.partitionBy(key).orderBy(desc(provenance))`` — the one Window in
     parity scope (SURVEY.md §2.5).
     """
     o = old.withColumn("__src", F.lit(0))
     n = new.withColumn("__src", F.lit(1))
     unioned = o.unionByName(n, allowMissingColumns=True)
-    order = [F.col("__src").desc()] + [F.col(c).desc() for c in order_cols]
-    w = Window.partitionBy(key).orderBy(*order)
+    w = Window.partitionBy(key).orderBy(F.col("__src").desc())
     return (
         unioned.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -128,10 +122,7 @@ def keep_latest_by(
 
 
 def chunk_assignment(
-    df: DataFrame,
-    order_col: str,
-    max_rows: int = 40_000,
-    bucket_width: int = 100_000,
+    df: DataFrame, order_col: str, max_rows: int = 40_000
 ) -> DataFrame:
     """S4 as a computation: assign each row its output chunk id under a
     deterministic ordering — ceil-division semantics of the reference's
@@ -141,7 +132,7 @@ def chunk_assignment(
     Scale shape: the global row position is an inclusive prefix COUNT,
     computed by :func:`global_running_sum` over a constant-1 column — the
     two-phase bucketed cumsum (within-bucket window partitioned by
-    ``order_col div bucket_width``, then the KB-sized bucket-offsets table
+    ``order_col div 100000``, then the KB-sized bucket-offsets table
     collected and stamped back as a literal-map projection). NO
     single-partition / no-partition ``Window`` anywhere in the plan — not
     even over the bucket totals — so no "moving all data to a single
@@ -159,7 +150,7 @@ def chunk_assignment(
         df.withColumn("__one", F.lit(1)),
         order_col=order_col,
         value_col="__one",
-        bucket_width=bucket_width,
+        bucket_width=100_000,
     )
     return (
         run.withColumn(
@@ -173,12 +164,11 @@ def approx_profile(
     df: DataFrame,
     distinct_cols: Sequence[str] = (),
     percentile_cols: Sequence[str] = (),
-    percentiles: Sequence[float] = (0.5, 0.95, 0.99),
     rsd: float = 0.05,
 ) -> DataFrame:
     """Sketch-based profiling for 100 TB interactive exploration: HLL++
     approximate distinct counts (``rsd`` relative error, constant memory per
-    column) and quantile-sketch percentiles — ONE aggregate pass, map-side
+    column) and quantile-sketch p50/p95/p99 — ONE aggregate pass, map-side
     combined, constant-size state per column regardless of input size. The
     exact equivalents (countDistinct, exact percentile-by-sort) shuffle the
     full key/value sets; at scale those are batch jobs, not profile queries.
@@ -194,7 +184,7 @@ def approx_profile(
             F.approx_count_distinct(c, rsd=rsd).alias(f"approx_distinct_{c}")
         )
     for c in percentile_cols:
-        for p in percentiles:
+        for p in (0.5, 0.95, 0.99):
             aggs.append(
                 F.percentile_approx(F.col(c), p, 10_000).alias(
                     f"p{int(p * 100)}_{c}"
@@ -206,13 +196,7 @@ def approx_profile(
 
 
 def sketch_accuracy_report(
-    df: DataFrame,
-    distinct_col: str,
-    value_col: str,
-    quantile: float = 0.5,
-    accuracy: int = 10_000,
-    rsd: float = 0.01,
-    distinct_rel_bound: float = 0.05,
+    df: DataFrame, distinct_col: str, value_col: str
 ) -> DataFrame:
     """Sketch-accuracy GATE: turns the two engine-defined sketches
     (:func:`approx_profile`'s HLL++ distinct and ``percentile_approx``'s
@@ -220,13 +204,13 @@ def sketch_accuracy_report(
     the pattern for validating approximate operators whose raw outputs can
     never be oracle-hashed.
 
-    - HLL: ``|approx − exact| ≤ distinct_rel_bound · exact``. With
-      ``rsd=0.01`` and a 5% bound that is a 5σ margin — deterministically
+    - HLL: ``|approx − exact| ≤ 0.05 · exact``. With ``rsd=0.01`` that
+      5% bound is a 5σ margin — deterministically
       true for a correct sketch, false only on an engine regression.
-    - Quantile: ``percentile_approx`` guarantees a RANK error ≤
-      ``n/accuracy``. The returned value's rank interval
-      ``[count(< v)+1, count(≤ v)]`` (interval, so heavy ties can't fake a
-      failure) must intersect ``quantile·n ± n/accuracy``.
+    - Quantile: the median's ``percentile_approx`` at accuracy 10⁴
+      guarantees a RANK error ≤ ``n/10⁴``. The returned value's rank
+      interval ``[count(< v)+1, count(≤ v)]`` (interval, so heavy ties
+      can't fake a failure) must intersect ``0.5·n ± n/10⁴``.
 
     Three KB-bounded aggregates (exact+sketch fused scan, then one rank
     scan seeded by the collected sketch value — a decision scalar, the same
@@ -236,9 +220,9 @@ def sketch_accuracy_report(
     """
     first = df.agg(
         F.countDistinct(distinct_col).alias("exact_d"),
-        F.approx_count_distinct(distinct_col, rsd=rsd).alias("approx_d"),
+        F.approx_count_distinct(distinct_col, rsd=0.01).alias("approx_d"),
         F.count(value_col).alias("n"),
-        F.percentile_approx(F.col(value_col), quantile, accuracy).alias("v"),
+        F.percentile_approx(F.col(value_col), 0.5, 10_000).alias("v"),
     ).collect()[0]
     n = first["n"]
     ranks = df.agg(
@@ -249,23 +233,20 @@ def sketch_accuracy_report(
             "r_hi"
         ),
     ).collect()[0]
-    d_ok = (
-        abs(first["approx_d"] - first["exact_d"])
-        <= distinct_rel_bound * first["exact_d"]
-    )
+    d_ok = abs(first["approx_d"] - first["exact_d"]) <= 0.05 * first["exact_d"]
     # The published contract is floor((p−err)·N) ≤ rank ≤ ceil((p+err)·N)
     # with err = 1/accuracy (GK/quantile-digest semantics). The floor/ceil
     # matter when N/accuracy < 1 row: at N=6000, accuracy=10⁴ the slack is
     # 0.6, and a rank-2999 answer for p50 is within contract (floor(2999.4)
     # = 2999) but would fail an un-floored ±0.6 window.
-    target, slack = quantile * n, n / accuracy
+    target, slack = 0.5 * n, n / 10_000
     q_ok = (ranks["r_lo"] + 1) <= math.ceil(target + slack) and ranks[
         "r_hi"
     ] >= math.floor(target - slack)
     return df.sparkSession.createDataFrame(
         [
             (f"distinct_{distinct_col}", int(first["exact_d"]), bool(d_ok)),
-            (f"p{int(quantile * 100)}_rank_{value_col}", int(n), bool(q_ok)),
+            (f"p50_rank_{value_col}", int(n), bool(q_ok)),
         ],
         "stat string, reference long, within_bound boolean",
     )
@@ -342,14 +323,10 @@ def scd2_history(
 
 
 def pivot_wide(
-    df: DataFrame,
-    group_col: str,
-    pivot_col: str,
-    values: Sequence[str],
-    agg: Column | None = None,
+    df: DataFrame, group_col: str, pivot_col: str, values: Sequence[str]
 ) -> DataFrame:
     """Long→wide reshape: one output column per ``values`` entry, filled by
-    ``agg`` (default row count). ``values`` is REQUIRED, not inferred: at
+    the row count. ``values`` is REQUIRED, not inferred: at
     100 TB the no-values form runs an extra distinct-collect job over the
     pivot column before planning, and an unbounded value set would explode
     the schema — the caller names the columns, the plan stays one shuffle
@@ -359,25 +336,19 @@ def pivot_wide(
     out = (
         df.groupBy(group_col)
         .pivot(pivot_col, list(values))
-        .agg(agg if agg is not None else F.count(F.lit(1)))
+        .agg(F.count(F.lit(1)))
     )
-    # pivot leaves NULL where a (group, value) pair never occurred; for
-    # count-shaped aggs the honest value is 0 (matches the oracle's
+    # pivot leaves NULL where a (group, value) pair never occurred; for a
+    # count the honest value is 0 (matches the oracle's
     # conditional-aggregation form)
-    if agg is None:
-        out = out.select(
-            group_col,
-            *[F.coalesce(F.col(v), F.lit(0)).alias(v) for v in values],
-        )
-    return out
+    return out.select(
+        group_col,
+        *[F.coalesce(F.col(v), F.lit(0)).alias(v) for v in values],
+    )
 
 
 def unpivot_long(
-    df: DataFrame,
-    id_cols: Sequence[str],
-    value_cols: Sequence[str],
-    var_name: str = "metric",
-    value_name: str = "value",
+    df: DataFrame, id_cols: Sequence[str], value_cols: Sequence[str]
 ) -> DataFrame:
     """Wide→long reshape (melt): one output row per (row, value column).
     Built on ``DataFrame.unpivot`` — a NARROW map (each input split expands
@@ -388,7 +359,7 @@ def unpivot_long(
     keyed = df.select(
         *id_cols, *[F.col(c).cast("double").alias(c) for c in value_cols]
     )
-    return keyed.unpivot(list(id_cols), list(value_cols), var_name, value_name)
+    return keyed.unpivot(list(id_cols), list(value_cols), "metric", "value")
 
 
 def apply_changelog(
@@ -396,14 +367,12 @@ def apply_changelog(
     changelog: DataFrame,
     key_cols: Sequence[str],
     order_cols: Sequence[str],
-    op_col: str = "op",
-    delete_op: str = "D",
 ) -> DataFrame:
     """CDC MERGE: fold a change log of upserts and deletes into a snapshot —
     the batch form of applying a Debezium/binlog-style feed to a base table.
 
     Semantics: per key, the LATEST changelog row (max under ``order_cols``,
-    later cols break ties) wins; a ``delete_op`` row removes the key, any
+    later cols break ties) wins; an ``op = 'D'`` row removes the key, any
     other op replaces the snapshot row with the changelog row's payload.
     Keys untouched by the log pass through unchanged.
 
@@ -418,9 +387,7 @@ def apply_changelog(
     keys = list(key_cols)
     latest = keep_latest_by(changelog, keys, list(order_cols))
     payload = snapshot.columns
-    survivors = (
-        latest.filter(F.col(op_col) != delete_op).select(*payload)
-    )
+    survivors = latest.filter(F.col("op") != "D").select(*payload)
     untouched = snapshot.join(
         latest.select(*keys), on=keys, how="left_anti"
     )
@@ -541,11 +508,7 @@ def exact_order_statistics(
     return n, [(k, st[0]) for k, st in zip(ks, state)]
 
 
-def equi_depth_buckets(
-    df: DataFrame,
-    col: str,
-    qs: Sequence[float] = (0.25, 0.5, 0.75),
-) -> tuple[list[int], DataFrame]:
+def equi_depth_buckets(df: DataFrame, col: str) -> tuple[list[int], DataFrame]:
     """Equal-frequency (equi-depth) binning at scale: boundaries are EXACT
     order statistics from :func:`exact_order_statistics` (all quantiles
     share the same few narrow histogram passes — never a global sort,
@@ -556,7 +519,7 @@ def equi_depth_buckets(
     Returns (boundaries, df + ``bucket`` column); bucket b means
     ``boundary[b-1] < value <= boundary[b]`` with open ends.
     """
-    _, res = exact_order_statistics(df, col, qs)
+    _, res = exact_order_statistics(df, col, (0.25, 0.5, 0.75))
     bounds = [v for _k, v in res]
     c = F.col(col)
     bucket = F.lit(0)
@@ -1476,13 +1439,7 @@ def confusion_matrix_report(
     )
 
 
-def reciprocal_rank_report(
-    results: DataFrame,
-    relevance: DataFrame,
-    query_col: str = "query_id",
-    doc_col: str = "doc_id",
-    rank_col: str = "rank",
-) -> DataFrame:
+def reciprocal_rank_report(results: DataFrame, relevance: DataFrame) -> DataFrame:
     """Per-query reciprocal rank — the retrieval-eval leg next to
     :func:`grouped_auc` (classification ranking) and the calibration
     deciles: given ranked results and a (query, doc) relevance set, report
@@ -1497,13 +1454,13 @@ def reciprocal_rank_report(
     one min aggregate per query + a left join back to the distinct query
     set. Only (query, doc, rank) rows move.
     """
-    hits = results.join(relevance.select(query_col, doc_col), [query_col, doc_col])
-    first = hits.groupBy(query_col).agg(
-        F.min(rank_col).cast("int").alias("first_rel_rank")
+    hits = results.join(relevance.select("query_id", "doc_id"), ["query_id", "doc_id"])
+    first = hits.groupBy("query_id").agg(
+        F.min("rank").cast("int").alias("first_rel_rank")
     )
-    allq = results.select(query_col).distinct()
-    return allq.join(first, query_col, "left").select(
-        query_col,
+    allq = results.select("query_id").distinct()
+    return allq.join(first, "query_id", "left").select(
+        "query_id",
         "first_rel_rank",
         F.when(
             F.col("first_rel_rank").isNotNull(),

@@ -32,31 +32,22 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def redact_pii(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Replace emails / IPv4 addresses / phone numbers with typed
     placeholder tokens and count each category. Narrow (no shuffle); each
     pattern is one codegen'd ``regexp_replace`` + ``regexp_count`` pass.
     Output: (id, text_redacted, n_email, n_ipv4, n_phone)."""
     counts = [
-        F.regexp_count(F.col(text_col), F.lit(rx)).alias(f"n_{name}")
+        F.regexp_count(F.col("text"), F.lit(rx)).alias(f"n_{name}")
         for name, rx, _ in PII_PATTERNS
     ]
-    redacted: Column = F.col(text_col)
+    redacted: Column = F.col("text")
     for _, rx, token in PII_PATTERNS:
         redacted = F.regexp_replace(redacted, rx, token)
-    return df.select(id_col, redacted.alias("text_redacted"), *counts)
+    return df.select("doc_id", redacted.alias("text_redacted"), *counts)
 
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-) -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
     """Flag training documents sharing any word ``n``-gram with a benchmark
     (eval-set) corpus — the standard decontamination pass before training.
 
@@ -69,12 +60,12 @@ def decontaminate(
     Output: (doc_id, n_hits, contaminated).
     """
     bench_grams = (
-        benchmark.select(T.tokens(bench_text_col).alias("__toks"))
+        benchmark.select(T.tokens("text").alias("__toks"))
         .select(F.explode(T.word_ngrams_of_tokens(F.col("__toks"), n)).alias("gram"))
         .distinct()
     )
     doc_grams = (
-        docs.select(F.col(id_col).alias("doc_id"), T.tokens(text_col).alias("__toks"))
+        docs.select("doc_id", T.tokens("text").alias("__toks"))
         .select(
             "doc_id",
             F.explode(
@@ -88,7 +79,7 @@ def decontaminate(
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select("doc_id")
         .join(hits, on="doc_id", how="left")
         .select(
             "doc_id",
@@ -98,31 +89,24 @@ def decontaminate(
     )
 
 
-def remove_repeated_paragraphs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = "\n",
-) -> DataFrame:
+def remove_repeated_paragraphs(df: DataFrame) -> DataFrame:
     """Drop repeated paragraphs within each document, keeping the FIRST
     occurrence in order (boilerplate/navigation repetition removal).
 
     Narrow: ``split`` → ``array_distinct`` (documented to preserve
     first-occurrence order) → ``array_join``. No shuffle, no UDF.
     Output: (id, text_clean, n_paragraphs, n_removed)."""
-    parts = F.split(F.col(text_col), F.lit(sep), -1)
+    parts = F.split(F.col("text"), F.lit("\n"), -1)
     kept = F.array_distinct(parts)
     return df.select(
-        id_col,
-        F.array_join(kept, sep).alias("text_clean"),
+        "doc_id",
+        F.array_join(kept, "\n").alias("text_clean"),
         F.size(parts).alias("n_paragraphs"),
         (F.size(parts) - F.size(kept)).alias("n_removed"),
     )
 
 
-def normalize_text(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """Canonical text normalization before hashing/dedup: strip control
     characters, collapse all whitespace runs to single spaces, trim, and
     lowercase. Narrow, pure regexp/codegen — the standard preprocessing that
@@ -130,11 +114,11 @@ def normalize_text(
     folding needs ICU and is deliberately out of scope for the JVM-side
     path; plug a Pandas UDF stage upstream when corpus demands it.)
     Output: (id, text_norm, n_chars_removed)."""
-    raw = F.col(text_col)
+    raw = F.col("text")
     stripped = F.regexp_replace(raw, r"[\x00-\x1F\x7F]", " ")
     collapsed = F.trim(F.regexp_replace(stripped, r"\s+", " "))
     return df.select(
-        id_col,
+        "doc_id",
         F.lower(collapsed).alias("text_norm"),
         (F.length(raw) - F.length(collapsed)).alias("n_chars_removed"),
     )
@@ -151,18 +135,14 @@ GOPHER_MIN_ALPHA_WORD_RATIO = 0.8
 GOPHER_MIN_STOPWORD_HITS = 2
 
 
-def gopher_quality(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = GOPHER_MIN_WORDS,
-    max_words: int = GOPHER_MAX_WORDS,
-) -> DataFrame:
+def gopher_quality(df: DataFrame, min_words: int = GOPHER_MIN_WORDS) -> DataFrame:
     """Gopher-style per-document quality gates. One narrow projection; the
     token array is bound once (see ``word_ngrams_of_tokens`` for why) and
     every rule is a JVM expression over it. Output: per-rule metrics +
     booleans + overall ``passes``."""
-    base = df.select(id_col, F.col(text_col).alias("__text"), T.tokens(text_col).alias("__toks"))
+    base = df.select(
+        "doc_id", F.col("text").alias("__text"), T.tokens("text").alias("__toks")
+    )
     toks = F.col("__toks")
     n_words = F.size(toks)
     mean_len = F.when(
@@ -179,7 +159,7 @@ def gopher_quality(
     alpha_ratio = F.when(n_words > 0, n_alpha_words / n_words).otherwise(F.lit(0.0))
     n_stop = T.stopword_hits_of_tokens(toks, "en")
     metrics = base.select(
-        id_col,
+        "doc_id",
         n_words.alias("n_words"),
         F.round(mean_len, 4).alias("mean_word_len"),
         F.round(symbol_ratio, 4).alias("symbol_ratio"),
@@ -188,7 +168,7 @@ def gopher_quality(
     )
     rules = metrics.select(
         "*",
-        F.col("n_words").between(min_words, max_words).alias("ok_word_count"),
+        F.col("n_words").between(min_words, GOPHER_MAX_WORDS).alias("ok_word_count"),
         F.col("mean_word_len")
         .between(GOPHER_MIN_MEAN_WORD_LEN, GOPHER_MAX_MEAN_WORD_LEN)
         .alias("ok_mean_word_len"),
@@ -247,11 +227,7 @@ def _hashed_features(df: DataFrame, dim: int, text_col: str, id_col: str) -> Dat
 
 
 def dsir_importance_weights(
-    df: DataFrame,
-    target: DataFrame,
-    dim: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, target: DataFrame, dim: int = 64
 ) -> DataFrame:
     """DSIR-style importance weights for data selection (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"): score
@@ -275,7 +251,7 @@ def dsir_importance_weights(
 
     def hist(frame: DataFrame) -> tuple[list[int], int]:
         rows = (
-            _hashed_features(frame, dim, text_col, id_col)
+            _hashed_features(frame, dim, "text", "doc_id")
             .select(F.explode("__bks").alias("__b"))
             .groupBy("__b")
             .agg(F.count(F.lit(1)).alias("__n"))
@@ -294,24 +270,20 @@ def dsir_importance_weights(
         for b in range(dim)
     ]
     w_lit = F.array(*[F.lit(float(w)) for w in weights])
-    feats = _hashed_features(df, dim, text_col, id_col)
+    feats = _hashed_features(df, dim, "text", "doc_id")
     score = F.aggregate(
         F.col("__bks"),
         F.lit(0.0),
         lambda acc, b: acc + F.element_at(w_lit, b + 1),
     )
     return feats.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("__bks").alias("n_features"),
         F.round(score, 6).alias("dsir_weight"),
     )
 
 
-def char_entropy_score(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def char_entropy_score(df: DataFrame) -> DataFrame:
     """Per-document Shannon character entropy (nats) — the gibberish/
     degeneracy detector in a curation stack: near-zero entropy flags
     repeated-character spam ("aaaa…"), implausibly high entropy flags
@@ -326,7 +298,7 @@ def char_entropy_score(
     # split("", "") yields [""] — drop empty elements so an empty document
     # reports 0 chars (matches the oracle's filtered split)
     chars = F.filter(
-        F.split(F.col(text_col), ""), lambda c: c != ""
+        F.split(F.col("text"), ""), lambda c: c != ""
     )
     classes = F.array_sort(F.array_distinct(chars))
     counts = F.transform(
@@ -344,16 +316,14 @@ def char_entropy_score(
         ),
     ).otherwise(F.lit(0.0))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         n.alias("n_chars"),
         F.size(classes).alias("n_distinct_chars"),
         F.round(ent, 6).alias("entropy"),
     )
 
 
-def pii_pseudonym_map(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_pseudonym_map(df: DataFrame) -> DataFrame:
     """Key-PRESERVING pseudonymization map — the GDPR-shaped complement to
     :func:`redact_pii`: redaction destroys referential integrity (every
     email becomes the same ``<EMAIL>`` token), while entity resolution,
@@ -376,9 +346,9 @@ def pii_pseudonym_map(
     distinct PII values with counts, never documents.
     """
     extracted = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[
-            F.regexp_extract_all(F.col(text_col), F.lit(rx), 0).alias(
+            F.regexp_extract_all(F.col("text"), F.lit(rx), 0).alias(
                 f"__m_{name}"
             )
             for name, rx, _ in PII_PATTERNS
@@ -386,7 +356,7 @@ def pii_pseudonym_map(
     )
     per_kind = [
         extracted.select(
-            id_col, F.lit(name).alias("kind"), F.explode(f"__m_{name}").alias("value")
+            "doc_id", F.lit(name).alias("kind"), F.explode(f"__m_{name}").alias("value")
         )
         for name, _rx, _ in PII_PATTERNS
     ]
@@ -396,7 +366,7 @@ def pii_pseudonym_map(
     return (
         melted.groupBy("kind", "value")
         .agg(
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct("doc_id").alias("n_docs"),
             F.count(F.lit(1)).alias("n_occurrences"),
         )
         .select(
@@ -415,9 +385,7 @@ def pii_pseudonym_map(
     )
 
 
-def nfc_normalize(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def nfc_normalize(df: DataFrame) -> DataFrame:
     """REAL Unicode NFC normalization — the canonical-composition pass every
     text pipeline needs BEFORE hashing/dedup (the same user-visible string
     can arrive as 'é' or 'e'+U+0301; unnormalized, exact dedup and
@@ -434,32 +402,30 @@ def nfc_normalize(
 
     from pyspark.sql.types import StringType, StructField, StructType
 
-    id_type = df.schema[id_col].dataType
+    id_type = df.schema["doc_id"].dataType
     schema = StructType(
-        [StructField(id_col, id_type), StructField("text_nfc", StringType())]
+        [StructField("doc_id", id_type), StructField("text_nfc", StringType())]
     )
 
     def run(batches):
         for batch in batches:
             yield pd.DataFrame(
                 {
-                    id_col: batch[id_col],
+                    "doc_id": batch["doc_id"],
                     "text_nfc": [
                         None if s is None else unicodedata.normalize("NFC", s)
-                        for s in batch[text_col]
+                        for s in batch["text"]
                     ],
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return df.select("doc_id", "text").mapInPandas(run, schema=schema)
 
 
 _TRACKING_PARAM_RE = r"^(utm_[^=]*|gclid|fbclid|msclkid|ref_src)="
 
 
-def canonicalize_urls(
-    df: DataFrame, url_col: str = "url", out_col: str = "canonical_url"
-) -> DataFrame:
+def canonicalize_urls(df: DataFrame) -> DataFrame:
     """URL canonicalization — the first hop of web-corpus dedup (the same
     page arrives under scheme/host case variants, default ports, tracking
     parameters, shuffled query strings, fragments and trailing slashes;
@@ -479,21 +445,21 @@ def canonicalize_urls(
     hash groupBy on a short string. Extension op (SURVEY.md §7): the
     reference has no web-corpus surface at all.
     """
-    url = F.col(url_col)
-    scheme = F.lower(F.expr(f"parse_url({url_col}, 'PROTOCOL')"))
-    auth = F.lower(F.expr(f"parse_url({url_col}, 'AUTHORITY')"))
+    url = F.col("url")
+    scheme = F.lower(F.expr("parse_url(url, 'PROTOCOL')"))
+    auth = F.lower(F.expr("parse_url(url, 'AUTHORITY')"))
     auth = (
         F.when(scheme == "http", F.regexp_replace(auth, ":80$", ""))
         .when(scheme == "https", F.regexp_replace(auth, ":443$", ""))
         .otherwise(auth)
     )
     path = F.regexp_replace(
-        F.coalesce(F.expr(f"parse_url({url_col}, 'PATH')"), F.lit("")),
+        F.coalesce(F.expr("parse_url(url, 'PATH')"), F.lit("")),
         "/+$",
         "",
     )
     params = F.filter(
-        F.split(F.coalesce(F.expr(f"parse_url({url_col}, 'QUERY')"), F.lit("")), "&"),
+        F.split(F.coalesce(F.expr("parse_url(url, 'QUERY')"), F.lit("")), "&"),
         lambda p: (p != "") & ~p.rlike(_TRACKING_PARAM_RE),
     )
     sorted_q = F.array_join(F.array_sort(params), "&")
@@ -506,7 +472,7 @@ def canonicalize_urls(
             F.lit("")
         ),
     )
-    return df.withColumn(out_col, F.when(url.isNotNull(), canonical))
+    return df.withColumn("canonical_url", F.when(url.isNotNull(), canonical))
 
 
 def k_anonymity_report(

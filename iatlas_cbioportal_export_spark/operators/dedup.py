@@ -61,9 +61,7 @@ def _shingle_sets(
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup_keep_min(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_keep_min(df: DataFrame) -> DataFrame:
     """Exact dedup keeping the smallest id per identical text.
 
     Groups on sha256(text) so the shuffle key is 64 bytes regardless of
@@ -72,26 +70,24 @@ def exact_dedup_keep_min(
     """
     return (
         df.select(
-            F.col(id_col),
-            F.sha2(F.col(text_col), 256).alias("text_sha256"),
+            F.col("doc_id"),
+            F.sha2(F.col("text"), 256).alias("text_sha256"),
         )
         .groupBy("text_sha256")
         .agg(
-            F.min(id_col).alias(id_col),
+            F.min("doc_id").alias("doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def exact_duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
     """Exact-duplicate groups only (n_copies > 1), with member ids."""
     return (
-        df.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("text_sha256"))
+        df.select(F.col("doc_id"), F.sha2(F.col("text"), 256).alias("text_sha256"))
         .groupBy("text_sha256")
         .agg(
-            F.sort_array(F.collect_list(id_col)).alias("member_ids"),
+            F.sort_array(F.collect_list("doc_id")).alias("member_ids"),
             F.count(F.lit(1)).alias("n_copies"),
         )
         .filter(F.col("n_copies") > 1)
@@ -104,12 +100,7 @@ def exact_duplicate_groups(
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_col: str | None = None,
-    n: int = 3,
-    threshold: float = 0.5,
+    df: DataFrame, bucket_col: str | None = None, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:
     """Exact near-dup pairs by word n-gram Jaccard ≥ threshold.
 
@@ -125,7 +116,7 @@ def ngram_jaccard_pairs(
     Output: (id_a, id_b, n_common, n_a, n_b, jaccard).
     """
     bucket = [bucket_col] if bucket_col else []
-    shingled = _shingle_sets(df, text_col, id_col, n, extra_cols=bucket).select(
+    shingled = _shingle_sets(df, "text", "doc_id", n, extra_cols=bucket).select(
         "id", *bucket, F.explode("shingles").alias("shingle")
     )
     sizes = shingled.groupBy("id").agg(F.count(F.lit(1)).alias("set_size"))
@@ -196,17 +187,11 @@ def shingle_hashes(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, n: int = 3, num_hashes: int = 32) -> DataFrame:
     """MinHash signatures as columns mh0..mh{K-1}: ONE groupBy(id) with K
     parallel ``min((a_i*h + b_i) % p)`` aggregates — single shuffle,
     map-side combined."""
-    hashes = shingle_hashes(df, text_col, id_col, n)
+    hashes = shingle_hashes(df, "text", "doc_id", n)
     aggs = [
         F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(_MH_PRIME)).alias(f"mh{i}")
         for i, (a, b) in enumerate(_mh_params(num_hashes))
@@ -215,12 +200,7 @@ def minhash_signatures(
 
 
 def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
+    df: DataFrame, n: int = 3, num_hashes: int = 32, bands: int = 8
 ) -> DataFrame:
     """LSH banded candidate pairs: signature → ``bands`` bands of
     ``num_hashes/bands`` rows → band-hash buckets → self-join bucket-mates.
@@ -229,7 +209,7 @@ def minhash_lsh_candidates(
     ANY band collides. Output: (id_a, id_b, n_bands_matched).
     """
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes)
+    sig = minhash_signatures(df, n=n, num_hashes=num_hashes)
     band_structs = [
         F.struct(
             F.lit(band).alias("band_id"),
@@ -262,8 +242,6 @@ def minhash_lsh_candidates(
 
 def minhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
@@ -285,9 +263,9 @@ def minhash_near_duplicates(
     # (pairs + their shingle sets, never the corpus), evictable
     # MEMORY_AND_DISK, cleared by callers via clearCache().
     cands = minhash_lsh_candidates(
-        df, text_col, id_col, n=n, num_hashes=num_hashes, bands=bands
+        df, n=n, num_hashes=num_hashes, bands=bands
     ).persist()
-    shingled = _shingle_sets(df, text_col, id_col, n)
+    shingled = _shingle_sets(df, "text", "doc_id", n)
     # No .distinct(): the left_semi join's build side dedups by itself
     # (build keys hash into a set; duplicates cannot multiply probe rows),
     # so the distinct's exchange bought nothing.
@@ -310,14 +288,7 @@ def minhash_near_duplicates(
 
 
 def minhash_cross_corpus_duplicates(
-    batch: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
+    batch: DataFrame, corpus: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """Incremental dedup: flag documents in a NEW batch that near-duplicate
     an EXISTING corpus (the continuous-ingestion form of
@@ -330,9 +301,10 @@ def minhash_cross_corpus_duplicates(
     index updated per batch, not recomputed — the plan is identical either
     way. Output: (batch_id, corpus_id, jaccard).
     """
-    sig_b = minhash_signatures(batch, text_col, id_col, n, num_hashes)
-    sig_c = minhash_signatures(corpus, text_col, id_col, n, num_hashes)
-    rows_per_band = num_hashes // bands
+    # 32 hashes of word 3-gram shingles, in 8 bands of 4 rows
+    sig_b = minhash_signatures(batch)
+    sig_c = minhash_signatures(corpus)
+    rows_per_band = 4
 
     def banded(sig: DataFrame) -> DataFrame:
         structs = [
@@ -345,7 +317,7 @@ def minhash_cross_corpus_duplicates(
                     ]
                 ).alias("band_hash"),
             )
-            for band in range(bands)
+            for band in range(8)
         ]
         return sig.select("id", F.explode(F.array(*structs)).alias("band")).select(
             "id", "band.band_id", "band.band_hash"
@@ -368,10 +340,10 @@ def minhash_cross_corpus_duplicates(
         .dropDuplicates(["batch_id", "corpus_id"])
         .persist()
     )
-    sh_b = _shingle_sets(batch, text_col, id_col, n).join(
+    sh_b = _shingle_sets(batch, "text", "doc_id", 3).join(
         cands.select(F.col("batch_id").alias("id")), "id", "left_semi"
     )
-    sh_c = _shingle_sets(corpus, text_col, id_col, n).join(
+    sh_c = _shingle_sets(corpus, "text", "doc_id", 3).join(
         cands.select(F.col("corpus_id").alias("id")), "id", "left_semi"
     )
     return (
@@ -398,17 +370,15 @@ def minhash_cross_corpus_duplicates(
 # ---------------------------------------------------------------------------
 
 
-def simhash_sketches(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """(id, simhash) — 64-bit SimHash over word n-gram shingles.
+def simhash_sketches(df: DataFrame) -> DataFrame:
+    """(id, simhash) — 64-bit SimHash over word 3-gram shingles.
 
     Same single-shuffle shape as minhash: explode shingle hashes once, then
     ONE groupBy(id) with 64 ``sum(±1)`` bit-vote aggregates; the sketch long
     is assembled from the votes with shift/add expressions.
     """
     hashes = (
-        _shingle_sets(df, text_col, id_col, n)
+        _shingle_sets(df, "text", "doc_id", 3)
         .select("id", F.explode("shingles").alias("shingle"))
         .select("id", F.xxhash64("shingle").alias("h64"))
     )
@@ -430,13 +400,7 @@ def simhash_sketches(
 
 
 def simhash_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    prefix_bits: int = 16,
-    max_hamming: int = 8,
-    rotations: int = 1,
+    df: DataFrame, prefix_bits: int = 16, max_hamming: int = 8, rotations: int = 1
 ) -> DataFrame:
     """SimHash near-dup candidates: bucket on the top ``prefix_bits`` of the
     sketch, verify bucket-mates by Hamming distance ≤ ``max_hamming``.
@@ -449,7 +413,7 @@ def simhash_buckets(
     only (id, sketch) tuples shuffle, ``rotations``× — and pairs found by
     several rotations dedup once. Output: (id_a, id_b, hamming).
     """
-    sk = simhash_sketches(df, text_col, id_col, n).withColumnRenamed(
+    sk = simhash_sketches(df).withColumnRenamed(
         "simhash", "sketch"
     )
     return hamming_bucket_pairs(
@@ -526,10 +490,7 @@ def hamming_bucket_pairs(
 
 
 def keyed_keep_best(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    score_col: str,
-    id_col: str = "doc_id",
+    df: DataFrame, key_cols: Sequence[str], score_col: str
 ) -> DataFrame:
     """Keep the BEST-scoring row per key — the recrawl-dedup semantic (the
     same URL fetched repeatedly; keep the highest-quality capture), and the
@@ -543,7 +504,7 @@ def keyed_keep_best(
     score, n_copies)."""
     best = F.max(
         F.struct(
-            F.col(score_col).alias("s"), (-F.col(id_col)).alias("nid")
+            F.col(score_col).alias("s"), (-F.col("doc_id")).alias("nid")
         )
     )
     return (
@@ -551,7 +512,7 @@ def keyed_keep_best(
         .agg(best.alias("__b"), F.count(F.lit(1)).alias("n_copies"))
         .select(
             *key_cols,
-            (-F.col("__b.nid")).alias(id_col),
+            (-F.col("__b.nid")).alias("doc_id"),
             F.col("__b.s").alias(score_col),
             "n_copies",
         )
@@ -563,12 +524,7 @@ def keyed_keep_best(
 # ---------------------------------------------------------------------------
 
 
-def duplicated_spans(
-    df: DataFrame,
-    k: int = 6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def duplicated_spans(df: DataFrame, k: int = 6) -> DataFrame:
     """Exact substring-level duplication signal: for every document, count
     the k-token sliding windows whose content also occurs in at least one
     OTHER document (the window-level analogue of suffix-array training-data
@@ -602,7 +558,7 @@ def duplicated_spans(
     b2 = F.lit(1_000_003)
     mod = F.lit(1_000_000_007)
     toks = df.select(
-        F.col(id_col).alias("id"), tokens(text_col).alias("__toks")
+        F.col("doc_id").alias("id"), tokens("text").alias("__toks")
     ).select(
         "id",
         F.size("__toks").alias("__n"),
@@ -882,11 +838,7 @@ def _jaccard_deletion_candidates(toks, t: float):
 
 
 def jaccard_prefix_join(
-    df: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    blocking: str = "auto",
+    df: DataFrame, threshold: float = 0.5, blocking: str = "auto"
 ) -> DataFrame:
     """EXACT token-set Jaccard similarity self-join (J ≥ threshold) — the
     exact-answer complement to the MinHash tier: no probabilistic recall,
@@ -966,8 +918,8 @@ def jaccard_prefix_join(
     # (NOT 1.0 — two blank documents are not near-duplicates), and an empty
     # set can never reach a positive threshold against a non-empty one.
     doc_toks = df.select(
-        F.col(id_col).alias("id"),
-        F.array_sort(F.array_distinct(tokens(text_col))).alias("ts"),
+        F.col("doc_id").alias("id"),
+        F.array_sort(F.array_distinct(tokens("text"))).alias("ts"),
     ).filter(F.size("ts") > 0)
     sets = (
         doc_toks.groupBy("ts")
@@ -1109,11 +1061,7 @@ def jaccard_prefix_join(
 def containment_join(
     df: DataFrame,
     threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     ngram_n: int | None = 5,
-    max_df: int | None = None,
-    max_df_frac: float = 0.05,
     exact: bool = False,
 ) -> DataFrame:
     """EXACT directed token-set containment self-join:
@@ -1134,7 +1082,7 @@ def containment_join(
     pruned: containment puts no upper bound on |b|, so the b-side indexes
     every token (the candidate volume is Σ over a-prefix tokens of df(tok)
     — rarest-first keeps those blocks small). By DEFAULT shingles whose df
-    exceeds ``max_df`` (or ``max_df_frac`` of the corpus) are dropped from
+    exceeds 5% of the corpus (at least 2) are dropped from
     candidate generation on BOTH sides — the fan-out bound that keeps a
     growing corpus linear (df of boilerplate shingles grows with corpus
     size, so uncapped candidates grow super-linearly); verification stays
@@ -1203,9 +1151,9 @@ def containment_join(
     t_micro = int(round(t * 1_000_000))
     if ngram_n is None:
         hashed = df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.array_distinct(
-                F.transform(tokens(text_col), lambda x: F.xxhash64(x))
+                F.transform(tokens("text"), lambda x: F.xxhash64(x))
             ).alias("hs"),
         )
     else:
@@ -1213,8 +1161,8 @@ def containment_join(
         # token hashes bound in their own projection (same reason as
         # word_ngrams_of_tokens: inlining re-evaluates the split per index)
         th = df.select(
-            F.col(id_col).alias("id"),
-            F.transform(tokens(text_col), lambda x: F.xxhash64(x)).alias(
+            F.col("doc_id").alias("id"),
+            F.transform(tokens("text"), lambda x: F.xxhash64(x)).alias(
                 "__th"
             ),
         )
@@ -1246,23 +1194,21 @@ def containment_join(
     # so a boilerplate shingle shared by k docs costs k candidates for
     # every prefix that carries it — at a growing corpus that is the one
     # super-linear term (measured: 10x-rows probe ratio 8.0 uncapped).
-    # Dropping tokens with df > max_df from BOTH the prefix computation
-    # and the b-side index bounds fan-out to max_df per token; surviving
+    # Dropping tokens with df > the cap from BOTH the prefix computation
+    # and the b-side index bounds fan-out to the cap per token; surviving
     # candidates are still verified against the FULL string arrays, so
     # every reported pair's n_a/inter/containment_ppm stay exact — the cap
     # costs recall only for pairs whose entire overlap is hot shingles
     # (boilerplate, for the decontamination use case). Same contract and
     # opt-out (``exact=True``) as text.cosine_similarity_pairs' df-cap.
     if not exact:
-        if max_df is None:
-            # Resolve the fractional cap against the INPUT row count (a
-            # metadata-cheap action) — counting doc_toks would force a
-            # full extra shingling pass just to size the threshold, and
-            # empty-token docs are a rounding error on the frac. No eager
-            # hot-shingle count either (same reason); the drop is
-            # observable by diffing df_tbl against the cap when auditing.
-            n_docs = df.count()
-            max_df = max(2, int(math.ceil(max_df_frac * n_docs)))
+        # Resolve the fractional cap against the INPUT row count (a
+        # metadata-cheap action) — counting doc_toks would force a
+        # full extra shingling pass just to size the threshold, and
+        # empty-token docs are a rounding error on the frac. No eager
+        # hot-shingle count either (same reason); the drop is
+        # observable by diffing df_tbl against the cap when auditing.
+        max_df = max(2, int(math.ceil(0.05 * df.count())))
         df_tbl = df_tbl.filter(F.col("df") <= max_df)
     pref_len = (F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1).cast("int")
     # ONE ranked postings table feeds BOTH join sides: per doc, each
@@ -1341,10 +1287,10 @@ def containment_join(
     # (no checkpoint, so the whole pipeline stays visible to plan audits),
     # and the joins ship only candidate documents' text.
     va = df.select(
-        F.col(id_col).alias("id_a"), F.col(text_col).alias("__ta")
+        F.col("doc_id").alias("id_a"), F.col("text").alias("__ta")
     )
     vb = df.select(
-        F.col(id_col).alias("id_b"), F.col(text_col).alias("__tb")
+        F.col("doc_id").alias("id_b"), F.col("text").alias("__tb")
     )
     joined = cands.join(va, "id_a").join(vb, "id_b")
     if ngram_n is None:
@@ -1392,15 +1338,9 @@ def containment_join(
     )
 
 
-def dedup_paragraphs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep_regex: str = r"\n\n",
-    joiner: str = "\n\n",
-) -> DataFrame:
+def dedup_paragraphs(df: DataFrame) -> DataFrame:
     """Paragraph-level exact dedup (round 7) — the C4/Dolma sub-document
-    pass: split each document on ``sep_regex``, keep only the FIRST
+    pass: split each document on blank lines, keep only the FIRST
     corpus-order occurrence (min (doc_id, position)) of every distinct
     paragraph, and reassemble the documents. This is what strips repeated
     cookie banners / license blocks / navigation chrome that whole-doc
@@ -1423,11 +1363,11 @@ def dedup_paragraphs(
 
     paras = (
         df.select(
-            F.col(id_col),
-            F.split(F.col(text_col), sep_regex).alias("__arr"),
+            F.col("doc_id"),
+            F.split(F.col("text"), r"\n\n").alias("__arr"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             # per-doc paragraph count BEFORE the explode — array-side, so
             # it rides along instead of costing a third shuffle
             F.size(
@@ -1438,13 +1378,13 @@ def dedup_paragraphs(
         .filter(F.col("__para") != "")
     )
     w = Window.partitionBy(F.xxhash64("__para")).orderBy(
-        "__para", id_col, "__pos"
+        "__para", "doc_id", "__pos"
     )
     kept = paras.withColumn("__rn", F.row_number().over(w)).filter(
         F.col("__rn") == 1
     )
     return (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.max("__n").alias("n_paragraphs"),
             F.count(F.lit(1)).alias("n_kept"),
@@ -1455,8 +1395,8 @@ def dedup_paragraphs(
                     ),
                     lambda s: s["__para"],
                 ),
-                joiner,
-            ).alias(text_col),
+                "\n\n",
+            ).alias("text"),
         )
         .withColumn("n_paragraphs", F.col("n_paragraphs").cast("long"))
         .withColumn("n_kept", F.col("n_kept").cast("long"))

@@ -112,11 +112,11 @@ def _canon_edges(pairs: DataFrame, left_col: str, right_col: str) -> DataFrame:
     )
 
 
-def _directed_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+def _directed_edges(edges: DataFrame) -> DataFrame:
     """Directed edge list as (src, dst) longs, duplicates dropped."""
     return edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
     ).distinct()
 
 
@@ -132,12 +132,7 @@ def _nodes(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    left_col: str = "id_a",
-    right_col: str = "id_b",
-    max_iterations: int = 10,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iterations: int = 10) -> DataFrame:
     """Components of the undirected pair graph.
 
     Returns (id, component_id) with ``component_id = min(id in component)``
@@ -152,8 +147,8 @@ def connected_components(
     # 1 GiB driver heap after two rounds. (On a real cluster prefer reliable
     # ``checkpoint()`` — same truncation, executor-loss-safe.)
     edges = (
-        pairs.select(F.col(left_col).alias("src"), F.col(right_col).alias("dst"))
-        .union(pairs.select(F.col(right_col), F.col(left_col)))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b"), F.col("id_a")))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -182,10 +177,7 @@ def connected_components(
 
 
 def connected_components_star(
-    pairs: DataFrame,
-    left_col: str = "id_a",
-    right_col: str = "id_b",
-    max_iterations: int = 25,
+    pairs: DataFrame, left_col: str = "id_a", right_col: str = "id_b"
 ) -> DataFrame:
     """Components via alternating large-star / small-star (Kiveris et al.,
     SoCC 2014) — same contract as :func:`connected_components` (returns
@@ -262,7 +254,7 @@ def connected_components_star(
         prev, sig = sig, _signature(e)
         return sig == prev
 
-    edges, _ = _rounds(edges, star, max_iterations, unchanged)
+    edges, _ = _rounds(edges, star, 25, unchanged)
     comps = edges.withColumnsRenamed({"u": "id", "v": "component_id"})
     return all_ids.join(comps, on="id", how="left").select(
         "id", F.coalesce("component_id", "id").alias("component_id")
@@ -273,8 +265,6 @@ def dedup_components(
     pairs: DataFrame,
     corpus_ids: DataFrame,
     id_col: str = "id",
-    left_col: str = "id_a",
-    right_col: str = "id_b",
     algorithm: str = "minlabel",
 ) -> DataFrame:
     """Label EVERY corpus id with its dedup component (singletons keep their
@@ -285,7 +275,7 @@ def dedup_components(
     components = (
         connected_components_star if algorithm == "star" else connected_components
     )
-    comps = components(pairs, left_col=left_col, right_col=right_col)
+    comps = components(pairs)
     return (
         corpus_ids.select(F.col(id_col).alias("id"))
         .join(comps, on="id", how="left")
@@ -294,12 +284,7 @@ def dedup_components(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def pagerank(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list, computed in EXACT
     integer micro-units so the result is bit-identical under any partitioning
     / shuffle-fetch order / engine (a double-summed PageRank drifts with
@@ -332,15 +317,11 @@ def pagerank(
 
     Output: ``(node, rank_int)`` — rank in micro-units of ``scale``.
     """
-    return _pagerank(edges, iterations, src_col, dst_col)
+    return _pagerank(edges, iterations)
 
 
 def personalized_pagerank(
-    edges: DataFrame,
-    seeds: Sequence[int],
-    iterations: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
+    edges: DataFrame, seeds: Sequence[int], iterations: int = 4
 ) -> DataFrame:
     """Personalized PageRank: identical exact-integer iteration to
     :func:`pagerank`, but ALL teleport mass returns to the ``seeds``
@@ -357,20 +338,16 @@ def personalized_pagerank(
     seed_list = sorted(int(s) for s in seeds)
     if not seed_list:
         raise ValueError("personalized_pagerank requires at least one seed")
-    return _pagerank(edges, iterations, src_col, dst_col, seed_list)
+    return _pagerank(edges, iterations, seed_list)
 
 
 def _pagerank(
-    edges: DataFrame,
-    iterations: int,
-    src_col: str,
-    dst_col: str,
-    seeds: list[int] | None = None,
+    edges: DataFrame, iterations: int, seeds: list[int] | None = None
 ) -> DataFrame:
     """The body of :func:`pagerank` and, with ``seeds``, of
     :func:`personalized_pagerank`: the initial rank and the teleport mass
     land on every node, or only on the seeds."""
-    e = _directed_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
+    e = _directed_edges(edges).localCheckpoint(eager=False)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     # (src, dst, od): built once, hash-laid-out on the per-round join key
     edeg = e.join(deg, on="src").repartition("src").localCheckpoint(eager=False)
@@ -402,11 +379,7 @@ def _pagerank(
     return ranks
 
 
-def count_triangles(
-    pairs: DataFrame,
-    left_col: str = "src",
-    right_col: str = "dst",
-) -> DataFrame:
+def count_triangles(pairs: DataFrame) -> DataFrame:
     """Global triangle count of the undirected graph — the clustering /
     community-density primitive (MapReduce triangle counting à la Suri &
     Vassilvitskii 2011): orient every edge from the lower to the higher
@@ -421,7 +394,7 @@ def count_triangles(
 
     Output: one row (n_vertices, n_edges, n_triangles).
     """
-    canon = _canon_edges(pairs, left_col, right_col).localCheckpoint(eager=False)
+    canon = _canon_edges(pairs, "src", "dst").localCheckpoint(eager=False)
     deg = (
         canon.select(F.col("u").alias("x"))
         .union(canon.select("v"))
@@ -454,13 +427,7 @@ def count_triangles(
     )
 
 
-def kcore_peel(
-    pairs: DataFrame,
-    k: int,
-    rounds: int = 4,
-    left_col: str = "src",
-    right_col: str = "dst",
-) -> DataFrame:
+def kcore_peel(pairs: DataFrame, k: int, rounds: int = 4) -> DataFrame:
     """Fixed-round k-core peeling: repeatedly drop vertices of degree < k
     and the edges touching them — the dense-subgraph extractor (spam rings,
     co-purchase cores, community nuclei). A FIXED round count keeps the
@@ -498,20 +465,14 @@ def kcore_peel(
         stats.append((len(stats) + 1, int(row["n"]), int(row["d"] or 0) // 2))
         return False
 
-    canon = _canon_edges(pairs, left_col, right_col).localCheckpoint(eager=False)
+    canon = _canon_edges(pairs, "src", "dst").localCheckpoint(eager=False)
     _rounds(canon, peel, rounds, record)
     return pairs.sparkSession.createDataFrame(
         stats, "round int, n_nodes long, n_edges long"
     )
 
 
-def bfs_distances(
-    pairs: DataFrame,
-    source: int,
-    rounds: int = 3,
-    left_col: str = "src",
-    right_col: str = "dst",
-) -> DataFrame:
+def bfs_distances(pairs: DataFrame, source: int, rounds: int = 3) -> DataFrame:
     """Single-source BFS hop distances (≤ ``rounds`` hops) over the
     undirected graph — frontier expansion, the canonical iterative-join
     primitive under "friends-of-friends" / blast-radius queries. Hop-count
@@ -524,19 +485,14 @@ def bfs_distances(
     (source included at dist 0), dist an int.
     """
     unit = pairs.select(
-        F.col(left_col).alias("s"), F.col(right_col).alias("t"), F.lit(1).alias("w")
+        F.col("src").alias("s"), F.col("dst").alias("t"), F.lit(1).alias("w")
     )
     return sssp_distances(unit, source, rounds, "s", "t", "w").select(
         "node", F.col("dist").cast("int").alias("dist")
     )
 
 
-def label_propagation(
-    pairs: DataFrame,
-    rounds: int = 3,
-    left_col: str = "src",
-    right_col: str = "dst",
-) -> DataFrame:
+def label_propagation(pairs: DataFrame, rounds: int = 3) -> DataFrame:
     """Fixed-round synchronous label propagation — community detection by
     majority vote: every node starts as its own label; each round it
     adopts the most frequent label among its neighbors (ties → smallest
@@ -552,7 +508,7 @@ def label_propagation(
 
     Output: (node, label) after ``rounds`` rounds.
     """
-    s, t = F.col(left_col).cast("long"), F.col(right_col).cast("long")
+    s, t = F.col("src").cast("long"), F.col("dst").cast("long")
     e = (
         pairs.select(s.alias("s"), t.alias("t"))
         .union(pairs.select(t, s))
@@ -580,12 +536,7 @@ def label_propagation(
     return labels
 
 
-def hits(
-    edges: DataFrame,
-    iterations: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over a directed edge list
     in EXACT integer units — the link-analysis dual of :func:`pagerank`
     (good hubs point at good authorities and vice versa; on a bipartite
@@ -610,7 +561,7 @@ def hits(
     source nodes carry auth 0 and sink nodes hub 0 after round 1.
     """
     e = (
-        _directed_edges(edges, src_col, dst_col)
+        _directed_edges(edges)
         .repartition("src")
         .localCheckpoint(eager=False)
     )
@@ -754,11 +705,7 @@ def dedup_cluster_report(labeled: DataFrame, id_col: str = "id") -> DataFrame:
 
 
 def link_prediction(
-    edges: DataFrame,
-    top_k: int = 200,
-    max_degree: int = 1000,
-    left_col: str = "src",
-    right_col: str = "dst",
+    edges: DataFrame, top_k: int = 200, max_degree: int = 1000
 ) -> DataFrame:
     """Common-neighbor link prediction over an undirected graph — the
     classic "who should be connected" primitive (recommendations, missing
@@ -782,10 +729,10 @@ def link_prediction(
     TakeOrderedAndProject for top-k — no full sort, no payload shuffle.
     """
     und = (
-        edges.select(F.col(left_col).alias("n"), F.col(right_col).alias("m"))
+        edges.select(F.col("src").alias("n"), F.col("dst").alias("m"))
         .unionByName(
             edges.select(
-                F.col(right_col).alias("n"), F.col(left_col).alias("m")
+                F.col("dst").alias("n"), F.col("src").alias("m")
             )
         )
         .distinct()

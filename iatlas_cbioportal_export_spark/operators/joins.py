@@ -104,19 +104,14 @@ def semi_join_sequenced(
 
 
 def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    value_cols: Sequence[str] = (),
+    left: DataFrame, right: DataFrame, on: str, value_cols: Sequence[str] = ()
 ) -> DataFrame:
     """As-of join: for each left row, attach ``value_cols`` from the LATEST
-    right row with ``right_ts <= left_ts`` for the same key (NULL when no
+    right row with ``right.ts <= left.ts`` for the same key (NULL when no
     prior right row exists).
 
     Spark has no native as-of join; the naive formulation (theta-join on
-    ``right_ts <= left_ts`` + keep-latest) explodes to O(|matches|) rows
+    ``right.ts <= left.ts`` + keep-latest) explodes to O(|matches|) rows
     before pruning. This is the scale-correct union-LOCF plan instead: union
     both sides, ONE shuffle on the key, and a running ``last(ignorenulls)``
     window ordered by (timestamp, side) carries each right value forward to
@@ -128,9 +123,9 @@ def asof_join(
     from pyspark.sql import Window
 
     vals = list(value_cols)
-    l_side = left.withColumn("__ts", F.col(left_ts)).withColumn("__src", F.lit(1))
+    l_side = left.withColumn("__ts", F.col("ts")).withColumn("__src", F.lit(1))
     r_side = (
-        right.select(on, F.col(right_ts).alias("__ts"), *vals)
+        right.select(on, F.col("ts").alias("__ts"), *vals)
         .withColumn("__src", F.lit(0))
     )
     unioned = l_side.unionByName(r_side, allowMissingColumns=True)
@@ -184,15 +179,11 @@ def range_join(
 
 
 def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    how: str = "inner",
-    salt_buckets: int = 16,
+    fact: DataFrame, dim: DataFrame, on: str, how: str = "inner"
 ) -> DataFrame:
     """Skew-resistant equi-join: salt the fact key with a random-ish bucket
     derived from other fact columns, replicate the (smaller) ``dim`` side
-    ``salt_buckets`` times, join on (key, salt).
+    16 times, join on (key, salt).
 
     AQE's skew-join split handles MOST skew at runtime (session.py turns it
     on); explicit salting is the deterministic fallback for the pathological
@@ -213,13 +204,13 @@ def salted_join(
         raise ValueError(
             f"salted_join supports how='inner'|'left' only (got {how!r}): "
             "the replicated dim side would emit unmatched rows "
-            f"{salt_buckets}x under right/full-outer semantics"
+            "16x under right/full-outer semantics"
         )
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(16))
     salted_fact = fact.withColumn("__salt", salt)
     replicated_dim = dim.withColumn(
         "__salt",
-        F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])),
+        F.explode(F.array(*[F.lit(i) for i in range(16)])),
     )
     return salted_fact.join(replicated_dim, on=[on, "__salt"], how=how).drop("__salt")
 
@@ -238,12 +229,7 @@ def keyset_equality(
 
 
 def point_in_time_join(
-    facts: DataFrame,
-    history: DataFrame,
-    key_col: str,
-    ts_col: str,
-    valid_from_col: str = "valid_from",
-    valid_to_col: str = "valid_to",
+    facts: DataFrame, history: DataFrame, key_col: str, ts_col: str
 ) -> DataFrame:
     """Join facts to the SCD2 dimension version valid AT the fact's
     timestamp: ``valid_from <= ts < coalesce(valid_to, +inf)`` (exclusive
@@ -260,10 +246,10 @@ def point_in_time_join(
     f, h = facts.alias("__f"), history.alias("__h")
     cond = (
         (F.col(f"__f.{key_col}") == F.col(f"__h.{key_col}"))
-        & (F.col(f"__h.{valid_from_col}") <= F.col(f"__f.{ts_col}"))
+        & (F.col("__h.valid_from") <= F.col(f"__f.{ts_col}"))
         & (
-            F.col(f"__h.{valid_to_col}").isNull()
-            | (F.col(f"__f.{ts_col}") < F.col(f"__h.{valid_to_col}"))
+            F.col("__h.valid_to").isNull()
+            | (F.col(f"__f.{ts_col}") < F.col("__h.valid_to"))
         )
     )
     return f.join(h, cond, "left").drop(F.col(f"__h.{key_col}"))
@@ -274,9 +260,7 @@ def longest_prefix_join(
     rules: DataFrame,
     id_col: str,
     name_col: str,
-    prefix_col: str = "prefix",
     max_depth: int = 4,
-    broadcast_rules: bool = True,
 ) -> DataFrame:
     """Longest-prefix-match join: each fact matches the DEEPEST rule whose
     token-prefix starts its name — the join shape behind IP-route lookup,
@@ -286,8 +270,7 @@ def longest_prefix_join(
     Plan: explode each fact into its 1..max_depth token prefixes (bounded
     fan-out — max_depth rows per fact, NOT a cross join against the rule
     table), equi-join candidates on the prefix string (rule tables are
-    dimension-sized → broadcast by default; set broadcast_rules=False for a
-    shuffle join on huge rule sets), then ONE map-side-combined argmax
+    dimension-sized → broadcast), then ONE map-side-combined argmax
     ``max(struct(depth, prefix))`` per fact. A fact has exactly one k-token
     prefix, so at most one rule matches per depth and the argmax is
     deterministic without tie-break columns.
@@ -308,9 +291,7 @@ def longest_prefix_join(
             )
         ).alias("c"),
     ).select("id", F.col("c.depth").alias("depth"), F.col("c.pfx").alias("pfx"))
-    r = rules.select(F.col(prefix_col).alias("pfx")).distinct()
-    if broadcast_rules:
-        r = F.broadcast(r)
+    r = F.broadcast(rules.select(F.col("prefix").alias("pfx")).distinct())
     matched = cand.join(r, on="pfx")
     return (
         matched.groupBy("id")

@@ -718,18 +718,14 @@ def jpeg_feature_extractor(payload: bytes, mime_type: str) -> list[float]:
     ]
 
 
-def jpeg_resize(
-    payload: bytes, out_w: int, out_h: int, quality: int = 90
-) -> bytes:
+def jpeg_resize(payload: bytes, out_w: int, out_h: int) -> bytes:
     """REAL JPEG resize — decode, nearest-neighbour integer sampling (the
     same ``src = x·W // out_w`` arithmetic as the netpbm/PNG resizers), and
-    re-encode at ``quality`` (re-encoding is lossy by nature of the format;
+    re-encode at quality 90 (re-encoding is lossy by nature of the format;
     the resize itself replays exactly)."""
     channels, width, height, pix = jpeg_decode(payload)
     arr = np.frombuffer(pix, dtype=np.uint8).reshape(height, width, channels)
     ys = (np.arange(out_h) * height) // out_h
     xs = (np.arange(out_w) * width) // out_w
     out = arr[ys][:, xs]
-    return jpeg_encode(
-        out.tobytes(), out_w, out_h, channels=channels, quality=quality
-    )
+    return jpeg_encode(out.tobytes(), out_w, out_h, channels=channels, quality=90)

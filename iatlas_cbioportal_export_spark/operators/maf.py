@@ -171,7 +171,6 @@ _GN_SUMMARY_FIELD_MAP = {
 
 def genome_nexus_annotator(
     base_url: str,
-    transport: Callable[[str, bytes], bytes] | None = None,
     retries: int = 2,
     backoff_s: float = 0.5,
     max_variants_per_request: int = 500,
@@ -201,8 +200,7 @@ def genome_nexus_annotator(
     (``maf.py:160-177``). Transport-level failures (HTTP error, bad JSON)
     mark the whole batch ``FAILED: <ExceptionName>``.
 
-    ``transport(url, payload) -> bytes`` abstracts the wire call for tests;
-    the default uses stdlib ``urllib`` (executor-side, no extra deps) with
+    The wire call uses stdlib ``urllib`` (executor-side, no extra deps) with
     a 60 s timeout.
 
     Resilience (the service rate limit is the first thing to break at
@@ -222,7 +220,7 @@ def genome_nexus_annotator(
         "?isoformOverrideSource=mskcc&fields=annotation_summary"
     )
 
-    def default_transport(u: str, payload: bytes) -> bytes:
+    def send(u: str, payload: bytes) -> bytes:
         from urllib.request import Request, urlopen
 
         req = Request(
@@ -230,8 +228,6 @@ def genome_nexus_annotator(
         )
         with urlopen(req, timeout=60.0) as resp:  # noqa: S310
             return resp.read()
-
-    send = transport or default_transport
 
     def send_with_retry(payload: bytes) -> bytes:
         attempt = 0
@@ -389,11 +385,7 @@ def annotate(
     return out
 
 
-def annotate_by_variant(
-    maf: DataFrame,
-    annotator: Annotator = fake_annotator,
-    key_cols: tuple[str, ...] = ("Chromosome", "Start_Position"),
-) -> DataFrame:
+def annotate_by_variant(maf: DataFrame) -> DataFrame:
     """Variant-level annotation: the scale path of :func:`annotate`.
 
     Genome Nexus annotates VARIANTS, not sample rows — every row sharing a
@@ -408,8 +400,9 @@ def annotate_by_variant(
     """
     from functools import reduce
 
+    key_cols = ("Chromosome", "Start_Position")
     keys = maf.select(*key_cols).distinct()
-    ann_keys = annotate(keys, annotator=annotator)
+    ann_keys = annotate(keys)
     cond = reduce(
         lambda a, b: a & b, [maf[k].eqNullSafe(ann_keys[k]) for k in key_cols]
     )
@@ -428,10 +421,10 @@ def split_annotation_errors(annotated: DataFrame) -> tuple[DataFrame, DataFrame]
     return ok, failed
 
 
-def drop_chrm(maf: DataFrame, chrom_col: str = "Chromosome") -> DataFrame:
+def drop_chrm(maf: DataFrame) -> DataFrame:
     """P2: drop mitochondrial variants, keeping NULL chromosomes (pandas
     ``!=`` semantics — reference ``maf.py:181-195``)."""
-    c = F.col(chrom_col)
+    c = F.col("Chromosome")
     return maf.filter((c != F.lit("chrM")) | c.isNull())
 
 
@@ -446,12 +439,7 @@ def allele_frequency(maf: DataFrame) -> DataFrame:
     )
 
 
-def oncoprint_matrix(
-    maf: DataFrame,
-    gene_col: str = "Hugo_Symbol",
-    sample_col: str = "Tumor_Sample_Barcode",
-    top_genes: int = 10,
-) -> DataFrame:
+def oncoprint_matrix(maf: DataFrame, top_genes: int = 10) -> DataFrame:
     """Oncoprint-style alteration matrix: the top-N most recurrently
     mutated genes (by DISTINCT mutated samples — recurrence, not raw
     variant count) × every sample carrying them — the gene×sample grid
@@ -471,22 +459,22 @@ def oncoprint_matrix(
     Output: (gene, gene_rank, sample, n_mutations).
     """
     ranked = (
-        maf.groupBy(F.col(gene_col).alias("gene"))
-        .agg(F.count_distinct(F.col(sample_col)).alias("n_samples"))
+        maf.groupBy(F.col("Hugo_Symbol").alias("gene"))
+        .agg(F.count_distinct(F.col("Tumor_Sample_Barcode")).alias("n_samples"))
         .orderBy(F.desc("n_samples"), "gene")
         .limit(top_genes)
         .select("gene")
         .collect()
     )
-    gene_type = maf.schema[gene_col].dataType.simpleString()
+    gene_type = maf.schema["Hugo_Symbol"].dataType.simpleString()
     gene_rank = maf.sparkSession.createDataFrame(
         [(r["gene"], i + 1) for i, r in enumerate(ranked)],
         schema=f"gene {gene_type}, gene_rank int",
     )
     return (
         maf.select(
-            F.col(gene_col).alias("gene"),
-            F.col(sample_col).alias("sample"),
+            F.col("Hugo_Symbol").alias("gene"),
+            F.col("Tumor_Sample_Barcode").alias("sample"),
         )
         .join(F.broadcast(gene_rank), on="gene")
         .groupBy("gene", "gene_rank", "sample")
@@ -494,12 +482,7 @@ def oncoprint_matrix(
     )
 
 
-def gene_co_occurrence(
-    maf: DataFrame,
-    gene_col: str = "Hugo_Symbol",
-    sample_col: str = "Tumor_Sample_Barcode",
-    top_genes: int = 10,
-) -> DataFrame:
+def gene_co_occurrence(maf: DataFrame, top_genes: int = 10) -> DataFrame:
     """Pairwise mutation co-occurrence / mutual-exclusivity screen over the
     recurrently mutated genes — the analysis cBioPortal runs right after
     the oncoprint: for each gene pair, how many samples carry BOTH
@@ -518,21 +501,22 @@ def gene_co_occurrence(
     with gene_a < gene_b.
     """
     top = (
-        maf.groupBy(F.col(gene_col).alias("gene"))
-        .agg(F.count_distinct(F.col(sample_col)).alias("n_samples"))
+        maf.groupBy(F.col("Hugo_Symbol").alias("gene"))
+        .agg(F.count_distinct(F.col("Tumor_Sample_Barcode")).alias("n_samples"))
         .orderBy(F.desc("n_samples"), "gene")
         .limit(top_genes)
         .select("gene", "n_samples")
     )
     gs = (
         maf.select(
-            F.col(gene_col).alias("gene"), F.col(sample_col).alias("s")
+            F.col("Hugo_Symbol").alias("gene"),
+            F.col("Tumor_Sample_Barcode").alias("s"),
         )
         .join(F.broadcast(top.select("gene")), on="gene")
         .distinct()
     )
     n_total = maf.select(
-        F.count_distinct(F.col(sample_col)).alias("n")
+        F.count_distinct(F.col("Tumor_Sample_Barcode")).alias("n")
     )
     a = gs.select(F.col("gene").alias("gene_a"), "s")
     b = gs.select(F.col("gene").alias("gene_b"), "s")

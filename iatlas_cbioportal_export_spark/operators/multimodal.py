@@ -65,24 +65,23 @@ def real_decode_stub(payload: bytes, mime_type: str) -> object:
     )
 
 
-def fake_feature_extractor(payload: bytes, mime_type: str, dim: int = 8) -> list[float]:
-    """Deterministic fake 'decode + feature-extract': a dim-length feature
+def fake_feature_extractor(payload: bytes, mime_type: str) -> list[float]:
+    """Deterministic fake 'decode + feature-extract': an 8-lane feature
     derived from payload bytes. Keeps the full pipeline runnable/testable."""
-    acc = [0] * dim
+    acc = [0] * 8
     for i, byte in enumerate(payload):
-        acc[i % dim] = (acc[i % dim] * 31 + byte) % 1_000_003
+        acc[i % 8] = (acc[i % 8] * 31 + byte) % 1_000_003
     return [a / 1_000_003 for a in acc]
 
 
-def attach_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def attach_metadata(df: DataFrame) -> DataFrame:
     """Derive typed metadata (size) from the binary payload — JVM-side."""
-    return df.withColumn("n_bytes", F.length(F.col(payload_col)).cast("long"))
+    return df.withColumn("n_bytes", F.length(F.col("payload")).cast("long"))
 
 
 def extract_features(
     media: DataFrame,
     extractor: Callable[[bytes, str], list[float]] = fake_feature_extractor,
-    batch_size_hint: int = 1024,
 ) -> DataFrame:
     """Decode + feature-extract via ``mapInPandas`` (Arrow batches).
 
@@ -108,9 +107,7 @@ def extract_features(
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def sample_frames(
-    video: DataFrame, every_n: int = 30, frame_count_col: str = "n_frames"
-) -> DataFrame:
+def sample_frames(video: DataFrame, every_n: int = 30) -> DataFrame:
     """Frame-sampling PLAN for video rows: expand (media_id, frame_index)
     pairs for every ``every_n``-th frame — pure JVM ``sequence``/``explode``;
     the actual frame decode plugs in as an :func:`extract_features` stage."""
@@ -119,7 +116,7 @@ def sample_frames(
         F.explode(
             F.sequence(
                 F.lit(0),
-                F.greatest(F.col(frame_count_col) - 1, F.lit(0)),
+                F.greatest(F.col("n_frames") - 1, F.lit(0)),
                 F.lit(every_n),
             )
         ).alias("frame_index"),
@@ -152,13 +149,11 @@ def ingest_binary_files(
     )
 
 
-def wav_feature_extractor(
-    payload: bytes, mime_type: str, buckets: int = 8
-) -> list[float]:
+def wav_feature_extractor(payload: bytes, mime_type: str) -> list[float]:
     """REAL audio decode for PCM WAV — stdlib only (``wave`` + ``struct``),
     so unlike :func:`real_decode_stub` this runs in this container: parse
     the RIFF header, decode 8/16-bit mono PCM frames, and emit a
-    ``buckets``-length envelope of integer mean-abs-amplitude ppm per
+    8-bucket envelope of integer mean-abs-amplitude ppm per
     temporal bucket (``sum|s|·1e6 // n`` — integer-exact, so the value is
     reproducible by any engine that can see the samples). The compressed /
     container formats (mp3/ogg/mp4) still require codec libs and stay
@@ -181,13 +176,11 @@ def wav_feature_extractor(
         samples = [b - 128 for b in raw]
     n = len(samples)
     if n == 0:
-        return [0.0] * buckets
-    per = max(1, n // buckets)
+        return [0.0] * 8
+    per = max(1, n // 8)
     feats = []
-    for b in range(buckets):
-        chunk = samples[b * per : (b + 1) * per] if b < buckets - 1 else samples[
-            (buckets - 1) * per :
-        ]
+    for b in range(8):
+        chunk = samples[b * per : (b + 1) * per] if b < 7 else samples[7 * per :]
         if not chunk:
             feats.append(0.0)
             continue
@@ -582,24 +575,19 @@ def stdlib_decoder(payload: bytes, mime_type: str) -> list[float]:
     return real_decode_stub(payload, mime_type)  # type: ignore[return-value]
 
 
-def resize_images(
-    media: DataFrame,
-    out_w: int,
-    out_h: int,
-    resizer: Callable[[bytes, int, int], bytes] = netpbm_resize,
-) -> DataFrame:
+def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Image resize as an Arrow ``mapInPandas`` stage: payload in → resized
     payload out, schema preserved — the standard thumbnail/normalize hop
     before feature extraction. The payload stays within the stage's tasks
-    (narrow; nothing shuffles); ``resizer`` plugs real codec resizes in on
-    a cluster image, :func:`netpbm_resize` is the stdlib-real default."""
+    (narrow; nothing shuffles); the resize is the stdlib-real
+    :func:`netpbm_resize`."""
     schema = media.schema
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             out = batch.copy()
             out["payload"] = [
-                resizer(bytes(p), out_w, out_h) for p in batch["payload"]
+                netpbm_resize(bytes(p), out_w, out_h) for p in batch["payload"]
             ]
             yield out
 
@@ -1030,14 +1018,15 @@ def _rle(values: list[int]) -> list[tuple[int, int]]:
     return runs
 
 
+_MP4_TIMESCALE = 90000  # media-header ticks per second
+
+
 def mp4_encode_track(
     sample_sizes: list[int],
     sample_deltas: list[int],
-    timescale: int = 90000,
     track_id: int = 1,
     sync_every: int = 0,
     samples_per_chunk: list[int] | None = None,
-    brand: str = "isom",
 ) -> bytes:
     """Build a VALID single-track ISO-BMFF stream whose sample table is
     fully populated — ``ftyp`` + ``mdat`` (mdat-FIRST layout, the
@@ -1059,7 +1048,7 @@ def mp4_encode_track(
         raise ValueError("samples_per_chunk must partition the sample list")
 
     ftyp = _mp4_box(
-        b"ftyp", brand.encode("ascii") + (0).to_bytes(4, "big") + b"isom"
+        b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isom"
     )
     mdat_body = b"".join(
         bytes([i % 256]) * size for i, size in enumerate(sample_sizes)
@@ -1122,7 +1111,7 @@ def mp4_encode_track(
     mdhd = _mp4_full(
         b"mdhd",
         (0).to_bytes(4, "big") * 2  # creation/modification
-        + timescale.to_bytes(4, "big")
+        + _MP4_TIMESCALE.to_bytes(4, "big")
         + sum(sample_deltas).to_bytes(4, "big")
         + (0x55C4).to_bytes(2, "big")  # language 'und'
         + (0).to_bytes(2, "big"),
@@ -1139,7 +1128,7 @@ def mp4_encode_track(
     )
     mvhd_body = (
         (0).to_bytes(4, "big") * 2
-        + timescale.to_bytes(4, "big")
+        + _MP4_TIMESCALE.to_bytes(4, "big")
         + sum(sample_deltas).to_bytes(4, "big")
         + (0x00010000).to_bytes(4, "big")
         + (0x0100).to_bytes(2, "big")
@@ -1400,13 +1389,13 @@ def extract_mp3_frames(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, schema=MP3_FRAME_SCHEMA)
 
 
-def wav_audio_features(payload: bytes, silence_threshold: int = 100) -> dict:
+def wav_audio_features(payload: bytes) -> dict:
     """REAL audio feature extraction over PCM WAV — the curation signals an
     audio training pipeline gates on, all INTEGER-EXACT so any engine that
     can see the samples reproduces them bit-for-bit: ``peak`` (max |s|),
     ``mean_abs_ppm`` (sum|s|·1e6 // n), ``energy`` (mean square, floor),
     ``zero_crossings`` (sign-boundary count with sign(0)=+), and
-    ``silence_ppm`` (share of samples with |s| ≤ threshold, in ppm).
+    ``silence_ppm`` (share of samples with |s| ≤ 100, in ppm).
     Decodes 8/16-bit mono PCM via the stdlib ``wave`` module — no codec
     libraries; compressed formats stay behind the honest stub."""
     import io
@@ -1446,9 +1435,7 @@ def wav_audio_features(payload: bytes, silence_threshold: int = 100) -> dict:
             for a, b in zip(samples, samples[1:])
             if (a >= 0) != (b >= 0)
         ),
-        "silence_ppm": sum(
-            1 for s in samples if abs(s) <= silence_threshold
-        ) * 1_000_000 // n,
+        "silence_ppm": sum(1 for s in samples if abs(s) <= 100) * 1_000_000 // n,
     }
 
 
@@ -1467,9 +1454,7 @@ AUDIO_FEATURE_SCHEMA = StructType(
 )
 
 
-def extract_audio_features(
-    media: DataFrame, silence_threshold: int = 100
-) -> DataFrame:
+def extract_audio_features(media: DataFrame) -> DataFrame:
     """Audio curation features as an Arrow ``mapInPandas`` stage: WAV
     payload in → one integer-exact feature row out (payload never
     shuffles). The gate a speech/audio corpus runs before paying for
@@ -1480,7 +1465,7 @@ def extract_audio_features(
         for batch in batches:
             out: dict[str, list] = {f.name: [] for f in AUDIO_FEATURE_SCHEMA}
             for mid, p in zip(batch["media_id"], batch["payload"]):
-                row = wav_audio_features(bytes(p), silence_threshold)
+                row = wav_audio_features(bytes(p))
                 out["media_id"].append(int(mid))
                 for k, v in row.items():
                     out[k].append(v)
@@ -2125,9 +2110,7 @@ def extract_zip_index(media: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def decode_image_pixels(
-    payload: bytes, mime_type: str | None = None
-) -> tuple[int, int, int, bytes]:
+def decode_image_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
     """Dispatch by MAGIC BYTES to every REAL stdlib image decoder in this
     package (binary netpbm, PNG, BMP, GIF first frame, baseline JPEG) →
     ``(channels, width, height, top-down interleaved pixel bytes)``.
@@ -2148,7 +2131,7 @@ def decode_image_pixels(
         from .jpeg_codec import jpeg_decode
 
         return jpeg_decode(payload)
-    return real_decode_stub(payload, mime_type or "")  # type: ignore[return-value]
+    return real_decode_stub(payload, "")  # type: ignore[return-value]
 
 
 def image_dhash(payload: bytes) -> tuple[int, int, int, int]:
@@ -2342,12 +2325,7 @@ def extract_vad_segments(
     return media.mapInPandas(run, schema=VAD_SEGMENT_SCHEMA)
 
 
-def dhash_near_duplicates(
-    media: DataFrame,
-    prefix_bits: int = 16,
-    max_hamming: int = 6,
-    rotations: int = 4,
-) -> DataFrame:
+def dhash_near_duplicates(media: DataFrame, max_hamming: int = 6) -> DataFrame:
     """NEAR-duplicate image pairs: combine the dHash halves into one
     64-bit sketch and reuse the rotation-prefix Hamming-bucket join shared
     with text SimHash (:func:`~.dedup.hamming_bucket_pairs`) — bucket on
@@ -2363,9 +2341,4 @@ def dhash_near_duplicates(
         .bitwiseOR(F.col("dhash_lo"))
         .alias("sketch"),
     )
-    return hamming_bucket_pairs(
-        sk,
-        prefix_bits=prefix_bits,
-        max_hamming=max_hamming,
-        rotations=rotations,
-    )
+    return hamming_bucket_pairs(sk, max_hamming=max_hamming, rotations=4)

@@ -96,11 +96,7 @@ def key_skew_report(
     )
 
 
-def table_profile(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    exact_distinct: bool = True,
-) -> DataFrame:
+def table_profile(df: DataFrame, exact_distinct: bool = True) -> DataFrame:
     """Whole-table column profile in ONE pass over the data: per column —
     null count, distinct count, numeric min/max/mean, string/date min/max
     and mean length. The "what am I about to shuffle" reconnaissance step
@@ -125,7 +121,7 @@ def table_profile(
     str_min, str_max, len_avg) — one row per profiled column, ordered by
     col_name.
     """
-    cols = columns or df.columns
+    cols = df.columns
     numeric = {"int", "bigint", "double", "float", "smallint", "tinyint",
                "decimal", "long", "short"}
     # r10: both the wide aggregate and the explode projection render as

@@ -9,7 +9,7 @@ reference pays (``clinical.py:538-547``), but here it is a single distributed
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -17,16 +17,13 @@ from pyspark.sql import functions as F
 from iatlas_cbioportal_export_spark.session import job_label
 
 
+# Key columns that lead each view, in this order.
+_PATIENT_KEYS = ("PATIENT_ID",)
+_SAMPLE_KEYS = ("SAMPLE_ID", "PATIENT_ID", "CANCER_TYPE", "CANCER_TYPE_DETAILED")
+
+
 def split_patient_sample(
-    df: DataFrame,
-    attr_types: Mapping[str, str],
-    patient_keys: Sequence[str] = ("PATIENT_ID",),
-    sample_keys: Sequence[str] = (
-        "SAMPLE_ID",
-        "PATIENT_ID",
-        "CANCER_TYPE",
-        "CANCER_TYPE_DETAILED",
-    ),
+    df: DataFrame, attr_types: Mapping[str, str]
 ) -> tuple[DataFrame, DataFrame]:
     """P4 + A7: split the clinical table into patient / sample views.
 
@@ -40,12 +37,12 @@ def split_patient_sample(
     patient_cols = [c for c in df.columns if attr_types.get(c) == "PATIENT"]
     sample_cols = [c for c in df.columns if attr_types.get(c) == "SAMPLE"]
     patient = df.select(
-        *[c for c in patient_keys if c in df.columns],
-        *[c for c in patient_cols if c not in patient_keys],
+        *[c for c in _PATIENT_KEYS if c in df.columns],
+        *[c for c in patient_cols if c not in _PATIENT_KEYS],
     ).dropDuplicates()
     sample = df.select(
-        *[c for c in sample_keys if c in df.columns],
-        *[c for c in sample_cols if c not in sample_keys],
+        *[c for c in _SAMPLE_KEYS if c in df.columns],
+        *[c for c in sample_cols if c not in _SAMPLE_KEYS],
     )
     return patient, sample
 

@@ -52,7 +52,6 @@ def stratified_sample(
     strata_col: str,
     fractions: Mapping[str, float],
     default_fraction: float = 0.0,
-    salt: int = 0,
 ) -> DataFrame:
     """Per-stratum deterministic sampling — the source-mixture weighting
     step of a training-data pipeline (keep 80% of source A, 5% of source B,
@@ -63,7 +62,7 @@ def stratified_sample(
     for name, frac in fractions.items():
         if not 0.0 <= frac <= 1.0:
             raise ValueError(f"fraction for {name!r} must be in [0, 1], got {frac}")
-    bucket = _bucket(id_col, salt)
+    bucket = _bucket(id_col, 0)
     threshold = None
     for name, frac in fractions.items():
         cond = F.col(strata_col) == name
@@ -82,7 +81,6 @@ def weighted_sample(
     weight_col: str,
     k: int,
     salt: int = 0,
-    key_col: str = "es_key",
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement, k rows, by the
     Efraimidis–Spirakis exponential race (Inf. Proc. Letters 97(5), 2006):
@@ -105,7 +103,7 @@ def weighted_sample(
     Plan shape: narrow key computation → ``orderBy(key desc).limit(k)``,
     which Spark plans as ``TakeOrderedAndProject`` — per-partition k-row
     heaps, ONE k·P-row exchange, never a full sort. Output adds
-    ``key_col`` (the E-S key, rounded to 6 dp for the report) and keeps
+    ``es_key`` (the E-S key, rounded to 6 dp for the report) and keeps
     every input column.
     """
     if k <= 0:
@@ -118,17 +116,13 @@ def weighted_sample(
         .withColumn("__es_key_raw", key)
         .orderBy(F.col("__es_key_raw").desc(), F.col(id_col).asc())
         .limit(k)
-        .withColumn(key_col, F.round(F.col("__es_key_raw"), 6))
+        .withColumn("es_key", F.round(F.col("__es_key_raw"), 6))
         .drop("__es_key_raw")
     )
 
 
 def hash_split(
-    df: DataFrame,
-    id_col: str,
-    weights: Mapping[str, float] | None = None,
-    salt: int = 0,
-    split_col: str = "split",
+    df: DataFrame, id_col: str, weights: Mapping[str, float] | None = None
 ) -> DataFrame:
     """Assign every row a deterministic train/val/test (or custom) split
     label by id-hash bucket ranges. Weights must sum to 1 (±1e-9); split
@@ -138,7 +132,7 @@ def hash_split(
     total = sum(weights.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"weights must sum to 1, got {total}")
-    bucket = _bucket(id_col, salt)
+    bucket = _bucket(id_col, 0)
     expr = None
     cum = 0.0
     names = list(weights)
@@ -148,15 +142,10 @@ def hash_split(
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     last = F.lit(names[-1])
     out = last if expr is None else expr.otherwise(last)
-    return df.withColumn(split_col, out)
+    return df.withColumn("split", out)
 
 
-def class_balanced_sample(
-    df: DataFrame,
-    id_col: str,
-    class_col: str,
-    salt: int = 0,
-) -> DataFrame:
+def class_balanced_sample(df: DataFrame, id_col: str, class_col: str) -> DataFrame:
     """Downsample every class to the MINORITY class's size — exact class
     balancing for classifier training sets, deterministic across runs,
     partitionings and engines: within each class rows are ranked by the
@@ -178,7 +167,7 @@ def class_balanced_sample(
     )
     target = counts.agg(F.min("__n").alias("__target"))
     w = Window.partitionBy(class_col).orderBy(
-        _bucket(id_col, salt).asc(), F.col(id_col).asc()
+        _bucket(id_col, 0).asc(), F.col(id_col).asc()
     )
     return (
         df.withColumn("__rk", F.row_number().over(w))
@@ -188,13 +177,7 @@ def class_balanced_sample(
     )
 
 
-def leakage_safe_splits(
-    labeled: DataFrame,
-    component_col: str = "component_id",
-    weights: Mapping[str, float] | None = None,
-    salt: int = 0,
-    split_col: str = "split",
-) -> DataFrame:
+def leakage_safe_splits(labeled: DataFrame) -> DataFrame:
     """Train/val/test assignment by DEDUP CLUSTER, not by row — the
     leakage guard for near-duplicate corpora: hash-splitting documents
     individually puts near-copies of one text on both sides of the
@@ -210,13 +193,7 @@ def leakage_safe_splits(
     Output: input columns + split label; invariant (tested): one split
     per component.
     """
-    return hash_split(
-        labeled,
-        component_col,
-        weights=weights,
-        salt=salt,
-        split_col=split_col,
-    )
+    return hash_split(labeled, "component_id")
 
 
 def mixture_weights(

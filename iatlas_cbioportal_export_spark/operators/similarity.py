@@ -116,13 +116,7 @@ def _partition_topk(
 
 
 def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_queries: int = 1000,
+    corpus: DataFrame, queries: DataFrame, k: int = 10, max_queries: int = 1000
 ) -> DataFrame:
     """Exact top-k nearest neighbors by cosine for each query vector.
 
@@ -153,19 +147,19 @@ def brute_force_topk(
             "for large query sets, or raise max_queries explicitly."
         )
     q = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
     )
     scored = corpus.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col(query_id_col)
+        F.col("vec_id") != F.col("query_id")
     )
     scored = scored.select(
-        query_id_col,
-        id_col,
-        _round6_cosine("__qvec", vec_col).alias("cosine_sim"),
+        "query_id",
+        "vec_id",
+        _round6_cosine("__qvec", "embedding").alias("cosine_sim"),
     )
-    partial = _partition_topk(scored, k, query_id_col, "cosine_sim", id_col)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
+    partial = _partition_topk(scored, k, "query_id", "cosine_sim", "vec_id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id").asc()
     )
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -174,13 +168,7 @@ def brute_force_topk(
 
 
 def mips_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_queries: int = 1000,
+    corpus: DataFrame, queries: DataFrame, k: int = 10, max_queries: int = 1000
 ) -> DataFrame:
     """Exact top-k by MAXIMUM INNER PRODUCT (MIPS) — the retrieval scoring
     used by dot-product-trained dual encoders (DPR-style dense retrieval),
@@ -205,19 +193,19 @@ def mips_topk(
             "query sets, or raise max_queries explicitly."
         )
     q = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
     )
     scored = corpus.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col(query_id_col)
+        F.col("vec_id") != F.col("query_id")
     )
     scored = scored.select(
-        query_id_col,
-        id_col,
-        F.round(_dot(F.col("__qvec"), F.col(vec_col)), 6).alias("inner_product"),
+        "query_id",
+        "vec_id",
+        F.round(_dot(F.col("__qvec"), F.col("embedding")), 6).alias("inner_product"),
     )
-    partial = _partition_topk(scored, k, query_id_col, "inner_product", id_col)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("inner_product").desc(), F.col(id_col).asc()
+    partial = _partition_topk(scored, k, "query_id", "inner_product", "vec_id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("inner_product").desc(), F.col("vec_id").asc()
     )
     return (
         partial.withColumn("rank", F.row_number().over(w))
@@ -225,11 +213,7 @@ def mips_topk(
     )
 
 
-def mips_augment(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    out_col: str = "augmented",
-) -> DataFrame:
+def mips_augment(corpus: DataFrame) -> DataFrame:
     """MIPS→cosine reduction (Bachrach et al. 2014 / Shrivastava & Li 2014):
     append component ``sqrt(M² − ‖x‖²)`` to every corpus vector, where M is
     the corpus max norm — all augmented vectors then share norm M, so for a
@@ -245,15 +229,15 @@ def mips_augment(
     ‖x‖ ≈ M.
     """
     norm2 = F.aggregate(
-        F.col(vec_col),
+        F.col("embedding"),
         F.lit(0.0),
         lambda acc, x: acc + x.cast("double") * x.cast("double"),
     )
     m2 = corpus.agg(F.max(norm2).alias("m2")).collect()[0]["m2"]
     return corpus.withColumn(
-        out_col,
+        "augmented",
         F.concat(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")),
             F.array(F.sqrt(F.greatest(F.lit(float(m2)) - norm2, F.lit(0.0)))),
         ),
     )
@@ -303,9 +287,6 @@ def ann_topk_lsh(
     dim: int,
     k: int = 10,
     num_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's hyperplane-sign bucket
     (or differ in ≤1 bit via broadcast of query signatures); exact cosine
@@ -321,11 +302,11 @@ def ann_topk_lsh(
     # resolves per-plan) — the plane-matrix literal parses once instead of
     # twice; the probe array renders as one expr (each bitwiseXOR Column op
     # was a py4j round trip).
-    sig = hyperplane_signature(F.col(vec_col), dim, num_planes)
+    sig = hyperplane_signature(F.col("embedding"), dim, num_planes)
     c_sig = corpus.withColumn("__sig", sig)
     q_sig = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
         sig.alias("__qsig"),
     )
     # neighbor buckets: exact + 1-bit flips (multi-probe LSH)
@@ -335,19 +316,19 @@ def ann_topk_lsh(
         + ")"
     )
     q_probed = q_sig.select(
-        query_id_col, "__qvec", F.explode(probes).alias("__sig")
+        "query_id", "__qvec", F.explode(probes).alias("__sig")
     )
     cands = c_sig.join(F.broadcast(q_probed), on="__sig").filter(
-        F.col(id_col) != F.col(query_id_col)
+        F.col("vec_id") != F.col("query_id")
     )
     scored = cands.select(
-        query_id_col,
-        id_col,
-        _round6_cosine("__qvec", vec_col).alias("cosine_sim"),
-    ).dropDuplicates([query_id_col, id_col])
-    scored = _partition_topk(scored, k, query_id_col, "cosine_sim", id_col)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
+        "query_id",
+        "vec_id",
+        _round6_cosine("__qvec", "embedding").alias("cosine_sim"),
+    ).dropDuplicates(["query_id", "vec_id"])
+    scored = _partition_topk(scored, k, "query_id", "cosine_sim", "vec_id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
@@ -406,9 +387,6 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF-style ANN top-k: partition the corpus into ``n_cells`` Voronoi
     cells around deterministic centroids; queries probe their ``n_probe``
@@ -428,35 +406,38 @@ def ivf_topk(
     recall. Output schema matches :func:`brute_force_topk`.
     """
     centroids = [
-        (i, [float(x) for x in row[vec_col]])
+        (i, [float(x) for x in row["embedding"]])
         for i, row in enumerate(
-            corpus.select(vec_col, id_col).orderBy(id_col).limit(n_cells).collect()
+            corpus.select("embedding", "vec_id")
+            .orderBy("vec_id")
+            .limit(n_cells)
+            .collect()
         )
     ]
     assigned = corpus.withColumn(
-        "__cell", F.array_max(_centroid_sims_expr(vec_col, centroids))["cell_id"]
+        "__cell", F.array_max(_centroid_sims_expr("embedding", centroids))["cell_id"]
     )
     probes = F.slice(
-        F.reverse(F.array_sort(_centroid_sims_expr(vec_col, centroids))),
+        F.reverse(F.array_sort(_centroid_sims_expr("embedding", centroids))),
         1,
         n_probe,
     )
     q_probed = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
         F.explode(probes).alias("__probe"),
-    ).select(query_id_col, "__qvec", F.col("__probe.cell_id").alias("__cell"))
+    ).select("query_id", "__qvec", F.col("__probe.cell_id").alias("__cell"))
     cands = assigned.join(F.broadcast(q_probed), on="__cell").filter(
-        F.col(id_col) != F.col(query_id_col)
+        F.col("vec_id") != F.col("query_id")
     )
     scored = cands.select(
-        query_id_col,
-        id_col,
-        _round6_cosine("__qvec", vec_col).alias("cosine_sim"),
-    ).dropDuplicates([query_id_col, id_col])
-    scored = _partition_topk(scored, k, query_id_col, "cosine_sim", id_col)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
+        "query_id",
+        "vec_id",
+        _round6_cosine("__qvec", "embedding").alias("cosine_sim"),
+    ).dropDuplicates(["query_id", "vec_id"])
+    scored = _partition_topk(scored, k, "query_id", "cosine_sim", "vec_id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
@@ -464,11 +445,7 @@ def ivf_topk(
 
 
 def kmeans_centroids(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, n_cells: int = 16, iterations: int = 3
 ) -> list[tuple[int, list[float]]]:
     """Train IVF centroids with Lloyd's k-means, DataFrame-native.
 
@@ -482,16 +459,19 @@ def kmeans_centroids(
     (deterministic); empty cells keep their previous centroid.
     """
     centroids = [
-        (i, [float(x) for x in row[vec_col]])
+        (i, [float(x) for x in row["embedding"]])
         for i, row in enumerate(
-            corpus.select(vec_col, id_col).orderBy(id_col).limit(n_cells).collect()
+            corpus.select("embedding", "vec_id")
+            .orderBy("vec_id")
+            .limit(n_cells)
+            .collect()
         )
     ]
     for _ in range(iterations):
         assigned = corpus.withColumn(
             "__cell",
-            F.array_max(_centroid_sims_expr(vec_col, centroids))["cell_id"],
-        ).select("__cell", F.posexplode(F.col(vec_col)).alias("__pos", "__val"))
+            F.array_max(_centroid_sims_expr("embedding", centroids))["cell_id"],
+        ).select("__cell", F.posexplode(F.col("embedding")).alias("__pos", "__val"))
         means = (
             assigned.groupBy("__cell", "__pos")
             .agg(F.avg(F.col("__val").cast("double")).alias("__mean"))
@@ -519,41 +499,38 @@ def ivf_topk_trained(
     n_cells: int = 16,
     n_probe: int = 4,
     iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """:func:`ivf_topk` with k-means-trained centroids instead of raw seeds —
     tighter cells, better recall at the same ``n_probe``. The training is the
     iterative-algorithm path (driver loop over lazy jobs); search is
     identical to the untrained variant."""
     centroids = kmeans_centroids(
-        corpus, n_cells=n_cells, iterations=iterations, id_col=id_col, vec_col=vec_col
+        corpus, n_cells=n_cells, iterations=iterations
     )
     assigned = corpus.withColumn(
-        "__cell", F.array_max(_centroid_sims_expr(vec_col, centroids))["cell_id"]
+        "__cell", F.array_max(_centroid_sims_expr("embedding", centroids))["cell_id"]
     )
     probes = F.slice(
-        F.reverse(F.array_sort(_centroid_sims_expr(vec_col, centroids))),
+        F.reverse(F.array_sort(_centroid_sims_expr("embedding", centroids))),
         1,
         n_probe,
     )
     q_probed = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
         F.explode(probes).alias("__probe"),
-    ).select(query_id_col, "__qvec", F.col("__probe.cell_id").alias("__cell"))
+    ).select("query_id", "__qvec", F.col("__probe.cell_id").alias("__cell"))
     cands = assigned.join(F.broadcast(q_probed), on="__cell").filter(
-        F.col(id_col) != F.col(query_id_col)
+        F.col("vec_id") != F.col("query_id")
     )
     scored = cands.select(
-        query_id_col,
-        id_col,
-        _round6_cosine("__qvec", vec_col).alias("cosine_sim"),
-    ).dropDuplicates([query_id_col, id_col])
-    scored = _partition_topk(scored, k, query_id_col, "cosine_sim", id_col)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
+        "query_id",
+        "vec_id",
+        _round6_cosine("__qvec", "embedding").alias("cosine_sim"),
+    ).dropDuplicates(["query_id", "vec_id"])
+    scored = _partition_topk(scored, k, "query_id", "cosine_sim", "vec_id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
@@ -565,8 +542,6 @@ def embedding_near_duplicates(
     dim: int,
     threshold: float = 0.95,
     num_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket_size: int = 10_000,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via hyperplane sign buckets.
@@ -582,8 +557,8 @@ def embedding_near_duplicates(
     above any healthy bucket size). Output: (id_a, id_b, cosine_sim).
     """
     sig = df.select(
-        F.col(id_col).alias("id"),
-        hyperplane_signature(F.col(vec_col), dim, num_planes).alias("__sig"),
+        F.col("vec_id").alias("id"),
+        hyperplane_signature(F.col("embedding"), dim, num_planes).alias("__sig"),
     )
     bucket_sizes = sig.groupBy("__sig").agg(F.count(F.lit(1)).alias("__bn"))
     sig = sig.join(
@@ -615,9 +590,9 @@ def embedding_near_duplicates(
     cand_ids = cand.select(F.col("id_a").alias("id")).union(
         cand.select("id_b")
     )
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__vec")).join(
-        cand_ids, "id", "left_semi"
-    )
+    vecs = df.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("__vec")
+    ).join(cand_ids, "id", "left_semi")
     return (
         cand.join(vecs.withColumnsRenamed({"id": "id_a", "__vec": "vec_a"}), "id_a")
         .join(vecs.withColumnsRenamed({"id": "id_b", "__vec": "vec_b"}), "id_b")
@@ -627,15 +602,13 @@ def embedding_near_duplicates(
     )
 
 
-def corpus_dim_ranges(
-    df: DataFrame, dim: int, vec_col: str = "embedding"
-) -> tuple[list[float], list[float]]:
+def corpus_dim_ranges(df: DataFrame, dim: int) -> tuple[list[float], list[float]]:
     """Per-dimension (min, max) over the corpus — ONE aggregate whose
     shuffle carries dim×2 doubles of combined state (posexplode + groupBy
     position, map-side combined); only the 2×dim range vectors reach the
     driver (kilobytes, like the IVF centroids)."""
     rows = (
-        df.select(F.posexplode(F.col(vec_col)).alias("__pos", "__val"))
+        df.select(F.posexplode(F.col("embedding")).alias("__pos", "__val"))
         .groupBy("__pos")
         .agg(
             F.min(F.col("__val").cast("double")).alias("__mn"),
@@ -652,76 +625,59 @@ def corpus_dim_ranges(
 
 
 def scalar_quantize(
-    df: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 8,
-    ranges: tuple[list[float], list[float]] | None = None,
+    df: DataFrame, dim: int, ranges: tuple[list[float], list[float]] | None = None
 ) -> DataFrame:
     """Per-dimension scalar quantization of an embedding column — the
     memory side of the ANN scale path (int8 codes are 4-8x smaller than
     float32/64 vectors, which at 100 TB decides whether the candidate set
     fits executor memory).
 
-    ``code_i = round((x_i - min_i) / (max_i - min_i) · (2^bits - 1))``
-    (0 where the dimension is constant). The (min, max) range vectors are
+    ``code_i = round((x_i - min_i) / (max_i - min_i) · 255)`` (8-bit codes;
+    0 where the dimension is constant). The (min, max) range vectors are
     driver-collected kilobytes baked into the plan as literals, so encoding
     is a NARROW map — no shuffle, no model table join. Output:
-    (id_col, codes array<int>).
+    (vec_id, codes array<int>).
     """
-    levels = (1 << bits) - 1
-    mins, maxs = ranges if ranges is not None else corpus_dim_ranges(df, dim, vec_col)
+    levels = 255
+    mins, maxs = ranges if ranges is not None else corpus_dim_ranges(df, dim)
     mins_arr = F.array(*[F.lit(float(m)) for m in mins])
     spans_arr = F.array(
         *[F.lit(float(mx - mn) if mx > mn else 1.0) for mn, mx in zip(mins, maxs)]
     )
     codes = F.expr(
-        f"zip_with({vec_col}, zip_with(__mins, __spans, (mn, sp) -> struct(mn, sp)), "
+        "zip_with(embedding, zip_with(__mins, __spans, (mn, sp) -> struct(mn, sp)), "
         f"(x, r) -> cast(round((cast(x as double) - r.mn) / r.sp * {levels}, 0) as int))"
     )
     return (
         df.withColumn("__mins", mins_arr)
         .withColumn("__spans", spans_arr)
-        .select(F.col(id_col), codes.alias("codes"))
+        .select(F.col("vec_id"), codes.alias("codes"))
     )
 
 
-def dequantize(
-    quantized: DataFrame,
-    mins: list[float],
-    maxs: list[float],
-    bits: int = 8,
-    codes_col: str = "codes",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def dequantize(quantized: DataFrame, mins: list[float], maxs: list[float]) -> DataFrame:
     """Inverse of :func:`scalar_quantize`:
-    ``x̂_i = min_i + code_i · span_i / (2^bits - 1)`` — narrow map; feeds the
+    ``x̂_i = min_i + code_i · span_i / 255`` — narrow map; feeds the
     exact scorers (brute_force_topk etc.) for quantized-recall evaluation."""
-    levels = (1 << bits) - 1
+    levels = 255
     mins_arr = F.array(*[F.lit(float(m)) for m in mins])
     spans_arr = F.array(
         *[F.lit(float(mx - mn) if mx > mn else 1.0) for mn, mx in zip(mins, maxs)]
     )
     vec = F.expr(
-        f"zip_with({codes_col}, zip_with(__mins, __spans, (mn, sp) -> struct(mn, sp)), "
+        "zip_with(codes, zip_with(__mins, __spans, (mn, sp) -> struct(mn, sp)), "
         f"(c, r) -> r.mn + cast(c as double) * r.sp / {levels})"
     )
     return (
         quantized.withColumn("__mins", mins_arr)
         .withColumn("__spans", spans_arr)
-        .withColumn(vec_col, vec)
-        .drop("__mins", "__spans", codes_col)
+        .withColumn("embedding", vec)
+        .drop("__mins", "__spans", "codes")
     )
 
 
 def pq_seed_codebooks(
-    df: DataFrame,
-    dim: int,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    df: DataFrame, dim: int, m: int = 8, k: int = 16
 ) -> list[list[list[float]]]:
     """Seeded product-quantization codebooks: subvector j's codebook is the
     j-th subvector of the k lowest-id corpus vectors (deterministic — the
@@ -732,9 +688,9 @@ def pq_seed_codebooks(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d = dim // m
-    rows = df.select(vec_col, id_col).orderBy(id_col).limit(k).collect()
+    rows = df.select("embedding", "vec_id").orderBy("vec_id").limit(k).collect()
     return [
-        [[float(x) for x in row[vec_col][j * d : (j + 1) * d]] for row in rows]
+        [[float(x) for x in row["embedding"][j * d : (j + 1) * d]] for row in rows]
         for j in range(m)
     ]
 
@@ -762,28 +718,18 @@ def _pq_codes_expr(
     return F.expr("array(" + ",".join(f"cast({s} as int)" for s in subs) + ")")
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(df: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """Product-quantize vectors to m centroid indices — with k=16 codebooks
     that is m·4 bits per vector (16-64x smaller than float32), the standard
     billion-scale ANN memory layout. Codebooks are plan literals, so
     encoding is a NARROW map: no shuffle, no model join. Output:
-    (id_col, codes array<int>)."""
+    (vec_id, codes array<int>)."""
     return df.select(
-        F.col(id_col), _pq_codes_expr(vec_col, codebooks).alias("codes")
+        F.col("vec_id"), _pq_codes_expr("embedding", codebooks).alias("codes")
     )
 
 
-def pq_reconstruct(
-    encoded: DataFrame,
-    codebooks: list[list[list[float]]],
-    codes_col: str = "codes",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_reconstruct(encoded: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """Decode PQ codes back to the concatenated centroid vectors (the
     implicit vectors an ADC scan scores against) — narrow map over literal
     codebooks; feeds the exact scorers for recall evaluation."""
@@ -799,21 +745,19 @@ def pq_reconstruct(
     expr = (
         f"flatten(transform(sequence(0, {m - 1}), "
         f"j -> element_at(array({books_sql}), j + 1)"
-        f"[{codes_col}[j]]))"
+        "[codes[j]]))"
     )
-    return encoded.withColumn(vec_col, F.expr(expr)).drop(codes_col)
+    return encoded.withColumn("embedding", F.expr(expr)).drop("codes")
 
 
-def l2_normalize(
-    df: DataFrame, vec_col: str = "embedding", out_col: str | None = None
-) -> DataFrame:
+def l2_normalize(df: DataFrame, out_col: str | None = None) -> DataFrame:
     """Unit-normalize an embedding column (the standard step before cosine
     ANN indexing — dot product on unit vectors IS cosine, so the index math
     gets cheaper). Narrow, pure JVM expressions; zero vectors map to zero
     vectors (not NaN). The fold order is the same deterministic sequential
     left fold as :func:`cosine`, so results are oracle-comparable."""
-    out = out_col or vec_col
-    vec = F.col(vec_col)
+    out = out_col or "embedding"
+    vec = F.col("embedding")
     nrm = _norm(vec)
     normalized = F.when(
         nrm > 0, F.transform(vec, lambda x: x.cast("double") / nrm)
@@ -821,13 +765,7 @@ def l2_normalize(
     return df.withColumn(out, normalized)
 
 
-def mean_pool(
-    df: DataFrame,
-    group_col: str,
-    vec_col: str = "embedding",
-    out_col: str = "pooled",
-    sums_col: str | None = None,
-) -> DataFrame:
+def mean_pool(df: DataFrame, group_col: str, sums_col: str | None = None) -> DataFrame:
     """Mean-pool vectors per group (chunk embeddings → document embedding).
 
     Plan: posexplode → groupBy(group, position) (ONE shuffle of
@@ -842,9 +780,9 @@ def mean_pool(
     the per-position sums decimal-rounded to 6 dp (rounding in the DECIMAL
     domain is exact and engine-portable — rounding a double is not, the two
     differ by 1 ulp near .5 boundaries).
-    Output: (group_col, n_vectors, out_col[, sums_col])."""
+    Output: (group_col, n_vectors, pooled[, sums_col])."""
     exploded = df.select(
-        F.col(group_col), F.posexplode(vec_col).alias("__pos", "__v")
+        F.col(group_col), F.posexplode("embedding").alias("__pos", "__v")
     ).select(
         group_col,
         "__pos",
@@ -863,7 +801,7 @@ def mean_pool(
     )
     aggs = [
         F.max("__n").alias("n_vectors"),
-        F.transform(ordered, lambda s: s["__mean"]).alias(out_col),
+        F.transform(ordered, lambda s: s["__mean"]).alias("pooled"),
     ]
     if sums_col:
         aggs.append(F.transform(ordered, lambda s: s["__sum6"]).alias(sums_col))
@@ -875,8 +813,6 @@ def semantic_dedup_pairs(
     threshold: float = 0.95,
     n_cells: int = 16,
     iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cell_size: int = 100_000,
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs: k-means cells as the candidate
@@ -904,7 +840,7 @@ def semantic_dedup_pairs(
     Output: (id_a, id_b, cosine_sim) with id_a < id_b, cosine_sim >= threshold.
     """
     centroids = kmeans_centroids(
-        df, n_cells=n_cells, iterations=iterations, id_col=id_col, vec_col=vec_col
+        df, n_cells=n_cells, iterations=iterations
     )
     # TRUNCATE lineage here: ``assigned`` is (id, cell) longs, but its plan
     # nests the full argmax-over-centroid-literals expression over the
@@ -913,8 +849,8 @@ def semantic_dedup_pairs(
     # the corpus and re-runs the centroid expression (measured 20.4s → the
     # whole query re-deriving assignment per branch at sf0.01).
     assigned = df.select(
-        F.col(id_col).alias("id"),
-        F.array_max(_centroid_sims_expr(vec_col, centroids))["cell_id"].alias(
+        F.col("vec_id").alias("id"),
+        F.array_max(_centroid_sims_expr("embedding", centroids))["cell_id"].alias(
             "__cell"
         ),
     ).localCheckpoint(eager=False)
@@ -935,9 +871,9 @@ def semantic_dedup_pairs(
     cand_ids = cand.select(F.col("id_a").alias("id")).union(
         cand.select("id_b")
     ).distinct()
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__vec")).join(
-        cand_ids, "id", "left_semi"
-    )
+    vecs = df.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("__vec")
+    ).join(cand_ids, "id", "left_semi")
     return (
         cand.join(vecs.withColumnsRenamed({"id": "id_a", "__vec": "vec_a"}), "id_a")
         .join(vecs.withColumnsRenamed({"id": "id_b", "__vec": "vec_b"}), "id_b")
@@ -948,13 +884,7 @@ def semantic_dedup_pairs(
 
 
 def build_lsh_index(
-    corpus: DataFrame,
-    table: str,
-    dim: int,
-    num_planes: int = 12,
-    num_buckets: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, table: str, dim: int, num_planes: int = 12
 ) -> None:
     """Persist an ANN index: corpus vectors + their hyperplane signatures as
     a catalog table BUCKETED on the signature — the build-once/query-many
@@ -970,11 +900,11 @@ def build_lsh_index(
     from iatlas_cbioportal_export_spark.sources.bucketing import write_bucketed
 
     indexed = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        hyperplane_signature(F.col(vec_col), dim, num_planes).alias("sig"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        hyperplane_signature(F.col("embedding"), dim, num_planes).alias("sig"),
     )
-    write_bucketed(indexed, table, ["sig"], num_buckets, ["sig"])
+    write_bucketed(indexed, table, ["sig"], 16, ["sig"])
 
 
 def query_lsh_index(
@@ -983,9 +913,6 @@ def query_lsh_index(
     dim: int,
     k: int = 10,
     num_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Top-k against a persisted :func:`build_lsh_index` table. Identical
     output contract to :func:`ann_topk_lsh` over the same corpus/params —
@@ -994,37 +921,32 @@ def query_lsh_index(
     spark = queries.sparkSession
     c_sig = spark.table(table).withColumnsRenamed({"sig": "__sig"})
     q_sig = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        hyperplane_signature(F.col(vec_col), dim, num_planes).alias("__qsig"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        hyperplane_signature(F.col("embedding"), dim, num_planes).alias("__qsig"),
     )
     probes = F.expr(
         "array(`__qsig`, "
         + ", ".join(f"`__qsig` ^ {1 << p}" for p in range(num_planes))
         + ")"
     )
-    q_probed = q_sig.select(query_id_col, "__qvec", F.explode(probes).alias("__sig"))
+    q_probed = q_sig.select("query_id", "__qvec", F.explode(probes).alias("__sig"))
     cands = c_sig.join(F.broadcast(q_probed), on="__sig").filter(
-        F.col(id_col) != F.col(query_id_col)
+        F.col("vec_id") != F.col("query_id")
     )
     scored = cands.select(
-        query_id_col,
-        id_col,
-        _round6_cosine("__qvec", vec_col).alias("cosine_sim"),
-    ).dropDuplicates([query_id_col, id_col])
-    scored = _partition_topk(scored, k, query_id_col, "cosine_sim", id_col)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
+        "query_id",
+        "vec_id",
+        _round6_cosine("__qvec", "embedding").alias("cosine_sim"),
+    ).dropDuplicates(["query_id", "vec_id"])
+    scored = _partition_topk(scored, k, "query_id", "cosine_sim", "vec_id")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def random_projection(
-    df: DataFrame,
-    dim_out: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def random_projection(df: DataFrame, dim_out: int) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction: project each vector
     through a DETERMINISTIC ±1 matrix (sign from a fixed quadratic-parity
     formula — no stored model, any engine/rebuild derives the identical
@@ -1041,7 +963,7 @@ def random_projection(
     import math
 
     inv = 1.0 / math.sqrt(dim_out)
-    vec = F.col(vec_col)
+    vec = F.col("embedding")
 
     def lane(j: int):
         # sign(i, j) = parity of (i·131 + j·137 + 13)² mod 1000003 —
@@ -1067,17 +989,13 @@ def random_projection(
 
     lanes = F.array(*[F.round(lane(j), 6) for j in range(dim_out)])
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         F.posexplode(lanes).alias("pos", "value"),
     )
 
 
 def item_cooccurrence_similarity(
-    interactions: DataFrame,
-    user_col: str = "user_id",
-    item_col: str = "item_id",
-    top_n: int = 100,
-    max_user_items: int = 1000,
+    interactions: DataFrame, top_n: int = 100, max_user_items: int = 1000
 ) -> DataFrame:
     """Item-item collaborative-filtering similarity from an interaction
     log: cosine over binary user vectors, which reduces to
@@ -1096,7 +1014,7 @@ def item_cooccurrence_similarity(
     item_a, item_b), item_a < item_b.
     """
     ui = interactions.select(
-        F.col(user_col).alias("u"), F.col(item_col).alias("i")
+        F.col("user_id").alias("u"), F.col("item_id").alias("i")
     ).distinct()
     per_user = ui.groupBy("u").agg(F.count(F.lit(1)).alias("nu"))
     ui = ui.join(
@@ -1134,12 +1052,7 @@ def item_cooccurrence_similarity(
 
 
 def association_rules(
-    interactions: DataFrame,
-    user_col: str = "user_id",
-    item_col: str = "item_id",
-    min_pair_support: int = 2,
-    top_n: int = 100,
-    max_user_items: int = 1000,
+    interactions: DataFrame, min_pair_support: int = 2, top_n: int = 100
 ) -> DataFrame:
     """Market-basket association rules a→b from the same co-occurrence
     counts as :func:`item_cooccurrence_similarity`: support = c_ab,
@@ -1154,11 +1067,11 @@ def association_rules(
     consequent).
     """
     ui = interactions.select(
-        F.col(user_col).alias("u"), F.col(item_col).alias("i")
+        F.col("user_id").alias("u"), F.col("item_id").alias("i")
     ).distinct()
     per_user = ui.groupBy("u").agg(F.count(F.lit(1)).alias("nu"))
     ui = ui.join(
-        F.broadcast(per_user.filter(F.col("nu") <= max_user_items)),
+        F.broadcast(per_user.filter(F.col("nu") <= 1000)),
         on="u",
         how="left_semi",
     )
@@ -1201,11 +1114,7 @@ def association_rules(
     )
 
 
-def covariance_matrix(
-    df: DataFrame,
-    dims: int = 8,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def covariance_matrix(df: DataFrame, dims: int = 8) -> DataFrame:
     """Exact covariance matrix of the first ``dims`` embedding
     coordinates in ONE aggregate pass — the PCA front half: every moment
     (Σxᵢ, Σxᵢxⱼ) is a DECIMAL-lane sum (inputs quantized to
@@ -1232,7 +1141,7 @@ def covariance_matrix(
     # alone measured ~1.4 s of pure driver time, independent of scale.
     quant = df.selectExpr(
         *[
-            f"CAST(CAST(element_at({vec_col}, {i + 1}) AS double)"
+            f"CAST(CAST(element_at(embedding, {i + 1}) AS double)"
             f" AS decimal(18,9)) AS x_{i}"
             for i in range(dims)
         ]
@@ -1262,11 +1171,7 @@ def covariance_matrix(
 
 
 def pca_power_projection(
-    df: DataFrame,
-    dims: int = 8,
-    iterations: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    df: DataFrame, dims: int = 8, iterations: int = 8
 ) -> DataFrame:
     """Top principal component by power iteration + per-row projection —
     the PCA back half over :func:`covariance_matrix`: the KB-sized exact
@@ -1280,7 +1185,7 @@ def pca_power_projection(
     positive (eigenvectors are sign-ambiguous). Output: (id, pc1 6dp,
     eigenvalue 6dp).
     """
-    rows = covariance_matrix(df, dims=dims, vec_col=vec_col).collect()
+    rows = covariance_matrix(df, dims=dims).collect()
     c = [[0.0] * dims for _ in range(dims)]
     for r in rows:
         c[r["i"]][r["j"]] = r["cov"]
@@ -1300,10 +1205,10 @@ def pca_power_projection(
         v = [-t for t in v]
     proj = None
     for i in range(dims):
-        term = F.element_at(vec_col, i + 1).cast("double") * F.lit(v[i])
+        term = F.element_at("embedding", i + 1).cast("double") * F.lit(v[i])
         proj = term if proj is None else proj + term
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(proj, 6).alias("pc1"),
         F.lit(round(eig, 6)).alias("eigenvalue"),
     )
@@ -1317,9 +1222,6 @@ def ivfpq_topk(
     n_probe: int = 4,
     m: int = 8,
     kc: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF-PQ approximate nearest neighbours — the billion-scale ANN
     memory layout (Jégou et al. 2011): IVF coarse cells bound WHICH
@@ -1365,19 +1267,19 @@ def ivfpq_topk(
     import pandas as pd
     from pyspark.sql import types as ST
 
-    first = corpus.select(F.size(vec_col).alias("d")).first()
+    first = corpus.select(F.size("embedding").alias("d")).first()
     dim = int(first["d"])
     d = dim // m
     centroids = [
-        (i, [float(x) for x in row[vec_col]])
+        (i, [float(x) for x in row["embedding"]])
         for i, row in enumerate(
-            corpus.select(vec_col, id_col)
-            .orderBy(id_col)
+            corpus.select("embedding", "vec_id")
+            .orderBy("vec_id")
             .limit(n_cells)
             .collect()
         )
     ]
-    books = pq_seed_codebooks(corpus, dim, m=m, k=kc, id_col=id_col, vec_col=vec_col)
+    books = pq_seed_codebooks(corpus, dim, m=m, k=kc)
 
     cent_norms = []
     for _, cv in centroids:
@@ -1386,10 +1288,10 @@ def ivfpq_topk(
             acc = acc + v * v
         cent_norms.append(math.sqrt(acc))
 
-    id_type = corpus.schema[id_col].dataType
+    id_type = corpus.schema["vec_id"].dataType
     assigned_schema = ST.StructType(
         [
-            ST.StructField(id_col, id_type),
+            ST.StructField("vec_id", id_type),
             ST.StructField("__cell", ST.IntegerType()),
             ST.StructField("__codes", ST.ArrayType(ST.IntegerType())),
         ]
@@ -1402,7 +1304,7 @@ def ivfpq_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = _stack(pdf[vec_col])
+            x = _stack(pdf["embedding"])
             n = x.shape[0]
             # ||x|| via the contract fold: acc = ((0 + x0²) + x1²) ...
             acc = np.zeros(n)
@@ -1433,32 +1335,32 @@ def ivfpq_topk(
                     codes[upd, j] = c
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "vec_id": pdf["vec_id"].values,
                     "__cell": best_cell,
                     "__codes": list(codes),
                 }
             )
 
-    assigned = corpus.select(id_col, vec_col).mapInPandas(
+    assigned = corpus.select("vec_id", "embedding").mapInPandas(
         assign_encode, schema=assigned_schema
     )
 
     probes = F.slice(
-        F.reverse(F.array_sort(_centroid_sims_expr(vec_col, centroids))),
+        F.reverse(F.array_sort(_centroid_sims_expr("embedding", centroids))),
         1,
         n_probe,
     )
     q_probed = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
         F.explode(probes).alias("__probe"),
-    ).select(query_id_col, "__qvec", F.col("__probe.cell_id").alias("__cell"))
+    ).select("query_id", "__qvec", F.col("__probe.cell_id").alias("__cell"))
 
-    qid_type = queries.schema[id_col].dataType
+    qid_type = queries.schema["vec_id"].dataType
     scored_schema = ST.StructType(
         [
-            ST.StructField(query_id_col, qid_type),
-            ST.StructField(id_col, id_type),
+            ST.StructField("query_id", qid_type),
+            ST.StructField("vec_id", id_type),
             ST.StructField("__d2", ST.DoubleType()),
         ]
     )
@@ -1481,7 +1383,7 @@ def ivfpq_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            qids = pdf[query_id_col].values
+            qids = pdf["query_id"].values
             for qid, qvec in zip(qids, pdf["__qvec"]):
                 if qid not in tabs:
                     tabs[qid] = adc_tab(np.asarray(qvec, dtype=np.float64))
@@ -1496,8 +1398,8 @@ def ivfpq_topk(
                 acc = acc + tab3[inv, j, codes[:, j]]
             yield pd.DataFrame(
                 {
-                    query_id_col: qids,
-                    id_col: pdf[id_col].values,
+                    "query_id": qids,
+                    "vec_id": pdf["vec_id"].values,
                     "__d2": acc,
                 }
             )
@@ -1505,30 +1407,23 @@ def ivfpq_topk(
     cands = assigned.join(F.broadcast(q_probed), on="__cell").mapInPandas(
         adc_score, schema=scored_schema
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("__d2").asc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("__d2").asc(), F.col("vec_id").asc()
     )
     return (
-        cands.dropDuplicates([query_id_col, id_col])
+        cands.dropDuplicates(["query_id", "vec_id"])
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            query_id_col,
-            id_col,
+            "query_id",
+            "vec_id",
             F.round(F.col("__d2"), 6).alias("adc_d2"),
             "rank",
         )
     )
 
 
-def grid_dbscan(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    eps: float = 0.05,
-    min_pts: int = 4,
-    dims: tuple[int, int] = (0, 1),
-) -> DataFrame:
+def grid_dbscan(df: DataFrame, eps: float = 0.05, min_pts: int = 4) -> DataFrame:
     """Grid-density clustering (GriDBSCAN / DBSCAN's standard cell
     approximation) over two embedding coordinates: points land in
     eps-sized grid cells, cells holding >= ``min_pts`` points are DENSE,
@@ -1564,16 +1459,11 @@ def grid_dbscan(
         connected_components_star,
     )
 
-    d1, d2 = dims
     e = F.lit(float(eps))
     pts = df.select(
-        F.col(id_col).alias("id"),
-        F.floor(
-            F.element_at(vec_col, d1 + 1).cast("double") / e
-        ).alias("cx"),
-        F.floor(
-            F.element_at(vec_col, d2 + 1).cast("double") / e
-        ).alias("cy"),
+        F.col("vec_id").alias("id"),
+        F.floor(F.element_at("embedding", 1).cast("double") / e).alias("cx"),
+        F.floor(F.element_at("embedding", 2).cast("double") / e).alias("cy"),
     )
     cells = pts.groupBy("cx", "cy").agg(F.count(F.lit(1)).alias("n"))
     cid = (F.col("cx") * 100_000 + F.col("cy")).alias("cid")

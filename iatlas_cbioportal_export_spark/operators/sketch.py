@@ -38,12 +38,7 @@ def _token_hash(tok: Column) -> Column:
     )
 
 
-def count_min_build(
-    df: DataFrame,
-    depth: int = 4,
-    width: int = 256,
-    text_col: str = "text",
-) -> list[list[int]]:
+def count_min_build(df: DataFrame, depth: int = 4, width: int = 256) -> list[list[int]]:
     """Build the d×w counter matrix over the corpus's tokens. One explode to
     (row, bucket) pairs (d rows per token — combined map-side to ≤ d·w rows
     per partition before the shuffle) and one groupBy; the matrix (d·w
@@ -51,7 +46,7 @@ def count_min_build(
     pattern."""
     h = _token_hash(F.col("tok"))
     pairs = (
-        df.select(F.explode(T.tokens(text_col)).alias("tok"))
+        df.select(F.explode(T.tokens("text")).alias("tok"))
         .select(
             F.explode(
                 F.array(
@@ -260,10 +255,7 @@ def hll_distinct(
 
 
 def count_min_estimate(
-    df: DataFrame,
-    probes: Sequence[str],
-    counters: list[list[int]],
-    text_col: str = "text",
+    df: DataFrame, probes: Sequence[str], counters: list[list[int]]
 ) -> DataFrame:
     """Estimate each probe token's corpus frequency from the sketch (min
     over rows of its counter) next to the TRUE count (an exact groupBy over
@@ -289,7 +281,7 @@ def count_min_estimate(
         ]
     )
     true_counts = (
-        df.select(F.explode(T.tokens(text_col)).alias("token"))
+        df.select(F.explode(T.tokens("text")).alias("token"))
         .filter(F.col("token").isin(list(probes)))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("true_count"))
@@ -685,10 +677,7 @@ def bitmap_distinct(
 
 
 def rank_sample_quantile_gate(
-    df: DataFrame,
-    value_col: str,
-    quantiles: Sequence[float] = (0.5, 0.9, 0.99),
-    samples_per_batch: int = 256,
+    df: DataFrame, value_col: str, quantiles: Sequence[float] = (0.5, 0.9, 0.99)
 ) -> DataFrame:
     """Custom MERGEABLE quantile sketch (one-level uniform compaction, the
     KLL level-0 idea) + its deterministic rank-error contract, reduced to
@@ -738,7 +727,7 @@ def rank_sample_quantile_gate(
     """
     import pandas as pd
 
-    B = int(samples_per_batch)
+    B = 256
     spark = df.sparkSession
 
     def _partials(batches):

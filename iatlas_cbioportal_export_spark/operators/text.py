@@ -16,18 +16,21 @@ from iatlas_cbioportal_export_spark.functions import text as T
 
 _LOG = logging.getLogger(__name__)
 
+# Probability floor of the n-gram scorers: an unseen token scores log10(1e-9).
+_OOV_FLOOR = 1e-9
 
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+
+def token_stats(df: DataFrame) -> DataFrame:
     """Per-document token statistics: token count, char count, mean token
     length. Narrow (no shuffle); the token array is materialized in its own
     projection so the split+filter runs once per row, not once per consuming
     expression (see ``functions/text.py::word_ngrams_of_tokens``)."""
     toks = F.col("__toks")
     return df.select(
-        id_col, F.length(text_col).alias("n_chars_computed"),
-        T.tokens(text_col).alias("__toks"),
+        "doc_id", F.length("text").alias("n_chars_computed"),
+        T.tokens("text").alias("__toks"),
     ).select(
-        id_col,
+        "doc_id",
         "n_chars_computed",
         F.size(toks).alias("n_tokens"),
         F.round(
@@ -43,14 +46,14 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality score in [0,1]: long-enough, low punctuation noise,
     reasonable stopword density — the standard cheap pre-filter for LLM
     training corpora. Narrow."""
     base = df.select(
-        id_col,
-        T.tokens(text_col).alias("__toks"),
-        T.punct_ratio(text_col).alias("__punct"),
+        "doc_id",
+        T.tokens("text").alias("__toks"),
+        T.punct_ratio("text").alias("__punct"),
     )
     toks = F.col("__toks")
     n_tok = F.size(toks)
@@ -67,7 +70,7 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
         + F.least(stop * 3.0, F.lit(0.3))
     )
     return base.select(
-        id_col,
+        "doc_id",
         n_tok.alias("n_tokens"),
         F.round(punct, 6).alias("punct_ratio"),
         F.round(stop, 6).alias("stopword_ratio"),
@@ -75,7 +78,7 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Stopword-vote language ID: count stopword hits per candidate language,
     argmax wins (ties broken by language code order, 'und' when zero hits).
 
@@ -83,12 +86,12 @@ def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     Output: (id, predicted_lang, n_hits).
     """
     langs = sorted(T.STOPWORDS)
-    tokenized = df.select(F.col(id_col), T.tokens(text_col).alias("__toks"))
+    tokenized = df.select(F.col("doc_id"), T.tokens("text").alias("__toks"))
     hit_cols = [
         T.stopword_hits_of_tokens(F.col("__toks"), lang).alias(f"hits_{lang}")
         for lang in langs
     ]
-    scored = tokenized.select(F.col(id_col), *hit_cols)
+    scored = tokenized.select(F.col("doc_id"), *hit_cols)
     best = F.greatest(*[F.col(f"hits_{lang}") for lang in langs])
     pred = F.lit("und")
     for lang in reversed(langs):  # earlier lang wins ties → apply later langs first
@@ -96,25 +99,23 @@ def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
             (F.col(f"hits_{lang}") == best) & (best > 0), F.lit(lang)
         ).otherwise(pred)
     return scored.select(
-        id_col,
+        "doc_id",
         pred.alias("predicted_lang"),
         best.alias("n_hits"),
     )
 
 
-def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """Deterministic rolling-hash document fingerprints (exactly reproducible
     in any engine — see functions/text.py). Narrow."""
     return df.select(
-        id_col,
-        T.rolling_fingerprint(text_col).alias("fingerprint"),
-        F.length(text_col).alias("n_chars_computed"),
+        "doc_id",
+        T.rolling_fingerprint("text").alias("fingerprint"),
+        F.length("text").alias("n_chars_computed"),
     )
 
 
-def top_ngrams(
-    df: DataFrame, text_col: str = "text", n: int = 2, k: int = 20
-) -> DataFrame:
+def top_ngrams(df: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     """Corpus-level top-k most frequent word n-grams (stop-gram / boilerplate
     detection in a training-data pipeline).
 
@@ -125,7 +126,7 @@ def top_ngrams(
     sort shuffle of the n-gram dictionary. Ties break on the n-gram string,
     so the result is deterministic. Output: (ngram, n_occurrences).
     """
-    grams = df.select(T.tokens(text_col).alias("__toks")).select(
+    grams = df.select(T.tokens("text").alias("__toks")).select(
         F.explode(T.word_ngrams_of_tokens(F.col("__toks"), n)).alias("ngram")
     )
     return (
@@ -136,12 +137,7 @@ def top_ngrams(
     )
 
 
-def tf_idf(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_k: int | None = None,
-) -> DataFrame:
+def tf_idf(df: DataFrame, top_k: int | None = None) -> DataFrame:
     """Per-(doc, term) TF-IDF over lowercased whitespace tokens.
 
     ``tf_idf = (tf / doc_len) · (ln((N+1)/(df+1)) + 1)`` (smoothed idf).
@@ -153,17 +149,17 @@ def tf_idf(
     already pre-aggregated before they shuffle, so term skew is bounded by
     the combiner. With ``top_k`` the per-doc ranking window runs over the
     (already tiny) per-doc term lists. Output:
-    (id_col, term, tf, tf_idf[, rank]).
+    (doc_id, term, tf, tf_idf[, rank]).
     """
     toks = df.select(
-        F.col(id_col), F.explode(T.tokens(text_col)).alias("__tok")
-    ).select(F.col(id_col), F.lower("__tok").alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    doc_len = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("__doc_len"))
+        F.col("doc_id"), F.explode(T.tokens("text")).alias("__tok")
+    ).select(F.col("doc_id"), F.lower("__tok").alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    doc_len = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__doc_len"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("__n_docs"))
     out = (
-        tf.join(doc_len, id_col)
+        tf.join(doc_len, "doc_id")
         .join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
         .withColumn(
@@ -180,13 +176,13 @@ def tf_idf(
                 6,
             ),
         )
-        .select(id_col, "term", "tf", "tf_idf")
+        .select("doc_id", "term", "tf", "tf_idf")
     )
     if top_k is None:
         return out
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("tf_idf").desc(), F.col("term").asc()
     )
     return out.withColumn("rank", F.row_number().over(w)).filter(
@@ -194,47 +190,38 @@ def tf_idf(
     )
 
 
-def bm25(
-    df: DataFrame,
-    query_terms: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    query_id_col: str = "query_id",
-    term_col: str = "term",
-    k1: float = 1.2,
-    b: float = 0.75,
-    top_k: int | None = None,
-) -> DataFrame:
+def bm25(df: DataFrame, query_terms: DataFrame, top_k: int | None = None) -> DataFrame:
     """Okapi BM25 ranking of documents against term-set queries.
 
     ``idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))``;
-    ``score(q,d) = Σ_t idf·tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))``.
+    ``score(q,d) = Σ_t idf·tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))``
+    with ``k1 = 1.2``, ``b = 0.75``.
 
     Plan shape: the (id, term) tf table and per-term df are the same
     combiner-reduced aggregations as :func:`tf_idf`; corpus constants
     (N, avgdl) are a one-row broadcast; the query-term table (small by
     construction — queries are human-sized) broadcasts into the term join,
     so the per-(query, doc) score is ONE map-side-combined sum. Raw text
-    never shuffles. Output: (query_id, id_col, bm25[, rank]).
+    never shuffles. Output: (query_id, doc_id, bm25[, rank]).
     """
     toks = df.select(
-        F.col(id_col), F.explode(T.tokens(text_col)).alias("__tok")
-    ).select(F.col(id_col), F.lower("__tok").alias(term_col))
-    tf = toks.groupBy(id_col, term_col).agg(F.count(F.lit(1)).alias("tf"))
-    doc_len = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("__dl"))
-    dfreq = tf.groupBy(term_col).agg(F.count(F.lit(1)).alias("__df"))
+        F.col("doc_id"), F.explode(T.tokens("text")).alias("__tok")
+    ).select(F.col("doc_id"), F.lower("__tok").alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    doc_len = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__dl"))
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     consts = df.agg(F.count(F.lit(1)).alias("__n")).crossJoin(
-        toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("__l")).agg(
+        toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__l")).agg(
             F.avg("__l").alias("__avgdl")
         )
     )
     q = query_terms.select(
-        F.col(query_id_col), F.lower(F.col(term_col)).alias(term_col)
+        F.col("query_id"), F.lower(F.col("term")).alias("term")
     ).distinct()
     scored = (
-        tf.join(F.broadcast(q), term_col)
-        .join(doc_len, id_col)
-        .join(dfreq, term_col)
+        tf.join(F.broadcast(q), "term")
+        .join(doc_len, "doc_id")
+        .join(dfreq, "term")
         .crossJoin(F.broadcast(consts))
     )
     idf = F.log(
@@ -243,18 +230,19 @@ def bm25(
         / (F.col("__df").cast("double") + 0.5)
     )
     tf_d = F.col("tf").cast("double")
+    k1, b = 1.2, 0.75
     norm = tf_d + k1 * (1.0 - b + b * F.col("__dl") / F.col("__avgdl"))
     per_term = idf * tf_d * (k1 + 1.0) / norm
     out = (
-        scored.groupBy(query_id_col, id_col)
+        scored.groupBy("query_id", "doc_id")
         .agg(F.round(F.sum(per_term), 6).alias("bm25"))
     )
     if top_k is None:
         return out
     from pyspark.sql import Window
 
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("bm25").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("bm25").desc(), F.col("doc_id").asc()
     )
     return out.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= top_k
@@ -262,11 +250,7 @@ def bm25(
 
 
 def chunk_documents(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 100,
-    overlap: int = 10,
+    df: DataFrame, chunk_tokens: int = 100, overlap: int = 10
 ) -> DataFrame:
     """Split documents into overlapping token-window chunks (the standard
     context-window preprocessing for LLM training/embedding corpora).
@@ -281,41 +265,35 @@ def chunk_documents(
     ``sequence``/``explode``, each chunk a ``slice`` + ``concat_ws``. No
     shuffle at all — at 100 TB this is a pure map stage that composes with
     any downstream partitioning. Output:
-    (id_col, chunk_id, n_chunk_tokens, chunk_text).
+    (doc_id, chunk_id, n_chunk_tokens, chunk_text).
     """
     if overlap >= chunk_tokens:
         raise ValueError(
             f"overlap ({overlap}) must be smaller than chunk_tokens ({chunk_tokens})"
         )
     w, s = chunk_tokens, chunk_tokens - overlap
-    base = df.select(F.col(id_col), T.tokens(text_col).alias("__toks")).select(
-        F.col(id_col), "__toks", F.size("__toks").alias("__n")
+    base = df.select(F.col("doc_id"), T.tokens("text").alias("__toks")).select(
+        F.col("doc_id"), "__toks", F.size("__toks").alias("__n")
     )
     n = F.col("__n")
     n_chunks = F.when(n <= w, F.lit(1)).otherwise(
         F.floor((n - w + s - 1) / s).cast("int") + 1
     )
     chunked = base.filter(n > 0).select(
-        F.col(id_col),
+        F.col("doc_id"),
         "__toks",
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
     )
     piece = F.slice(F.col("__toks"), F.col("chunk_id") * s + 1, w)
     return chunked.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_id").cast("int").alias("chunk_id"),
         F.size(piece).alias("n_chunk_tokens"),
         F.concat_ws(" ", piece).alias("chunk_text"),
     )
 
 
-def pack_token_budget_bins(
-    df: DataFrame,
-    budget_tokens: int = 2048,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    stratum_col: str = "source",
-) -> DataFrame:
+def pack_token_budget_bins(df: DataFrame, budget_tokens: int = 2048) -> DataFrame:
     """Assign documents to fixed-token-budget training bins by token offset
     (sequence packing for LLM batch assembly).
 
@@ -325,8 +303,8 @@ def pack_token_budget_bins(
     fixed-length training sequences. Both are correct — but they are
     different contracts, so they no longer share a name.
 
-    Documents are laid out in deterministic ``id_col`` order WITHIN each
-    stratum (e.g. source) and binned by their start offset in the
+    Documents are laid out in deterministic ``doc_id`` order WITHIN each
+    stratum (the ``source`` column) and binned by their start offset in the
     concatenated token stream: ``bin_id = floor(start_offset / budget)``.
     This is offset binning — a document whose tokens straddle a budget
     boundary keeps the bin of its start (downstream chunking handles the
@@ -339,14 +317,14 @@ def pack_token_budget_bins(
     (id, stratum, n_tokens, start_offset, bin_id).
     """
     base = df.select(
-        F.col(id_col),
-        F.col(stratum_col).alias("stratum"),
-        T.token_count(text_col).alias("n_tokens"),
+        F.col("doc_id"),
+        F.col("source").alias("stratum"),
+        T.token_count("text").alias("n_tokens"),
     )
-    w = Window.partitionBy("stratum").orderBy(id_col)
+    w = Window.partitionBy("stratum").orderBy("doc_id")
     cum = F.sum("n_tokens").over(w)
     return base.select(
-        id_col,
+        "doc_id",
         "stratum",
         "n_tokens",
         (cum - F.col("n_tokens")).alias("start_offset"),
@@ -361,12 +339,7 @@ def pack_token_budget_bins(
 pack_sequences = pack_token_budget_bins
 
 
-def unigram_logprob_score(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    oov_floor: float = 1e-9,
-) -> DataFrame:
+def unigram_logprob_score(df: DataFrame) -> DataFrame:
     """Statistical quality score: mean unigram log10-probability per
     document under the CORPUS's own unigram distribution (the KenLM/CCNet
     quality-filter shape with the n-gram LM order reduced to 1 — rare-token
@@ -381,8 +354,8 @@ def unigram_logprob_score(
     import math
 
     toks = (
-        df.select(F.col(id_col), T.tokens(text_col).alias("__toks"))
-        .select(F.col(id_col), F.explode_outer("__toks").alias("tok"))
+        df.select(F.col("doc_id"), T.tokens("text").alias("__toks"))
+        .select(F.col("doc_id"), F.explode_outer("__toks").alias("tok"))
     )
     vocab = (
         toks.filter(F.col("tok").isNotNull())
@@ -391,13 +364,13 @@ def unigram_logprob_score(
     )
     total = vocab.agg(F.sum("__n").alias("__total"))
     lp = F.log10(
-        F.greatest(F.col("__n") / F.col("__total"), F.lit(oov_floor))
+        F.greatest(F.col("__n") / F.col("__total"), F.lit(_OOV_FLOOR))
     )
     scored = (
         toks.join(vocab, on="tok", how="left")
         .crossJoin(F.broadcast(total))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("tok"),
             F.when(F.col("tok").isNull(), F.lit(None).cast("double"))
             .otherwise(lp)
@@ -411,10 +384,10 @@ def unigram_logprob_score(
             .alias("__lpd"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.col("tok")).alias("n_tokens"),
         F.round(
-            F.coalesce(F.avg("__lp"), F.lit(math.log10(oov_floor))), 6
+            F.coalesce(F.avg("__lp"), F.lit(math.log10(_OOV_FLOOR))), 6
         ).alias("mean_logprob"),
         F.coalesce(
             F.round(F.sum("__lpd"), 6).cast("double"), F.lit(0.0)
@@ -422,13 +395,7 @@ def unigram_logprob_score(
     )
 
 
-def hashed_embedding(
-    df: DataFrame,
-    dim: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    normalize: bool = True,
-) -> DataFrame:
+def hashed_embedding(df: DataFrame, dim: int = 32, normalize: bool = True) -> DataFrame:
     """Feature-hashing ("hashing trick") text embedding: each token is
     bucketed by the PORTABLE rolling hash (``functions/text.py``, exact in
     any engine — deliberately not xxhash64, so the oracle can reproduce it),
@@ -463,13 +430,13 @@ def hashed_embedding(
         ),
     )
     base = (
-        df.select(F.col(id_col), T.tokens(text_col).alias("__toks"))
+        df.select(F.col("doc_id"), T.tokens("text").alias("__toks"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.transform(toks, bucket).alias("__bks"),
             F.size(toks).alias("n_tokens"),
         )
-        .select(F.col(id_col), counts.alias("__counts"), "n_tokens")
+        .select(F.col("doc_id"), counts.alias("__counts"), "n_tokens")
     )
     vec = F.col("__counts")
     if normalize:
@@ -477,14 +444,11 @@ def hashed_embedding(
             F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x)
         )
         vec = F.when(nrm > 0, F.transform(vec, lambda x: x / nrm)).otherwise(vec)
-    return base.select(id_col, vec.alias("embedding"), "n_tokens")
+    return base.select("doc_id", vec.alias("embedding"), "n_tokens")
 
 
 def length_histogram(
-    df: DataFrame,
-    text_col: str = "text",
-    max_tokens: int = 200,
-    num_bins: int = 20,
+    df: DataFrame, max_tokens: int = 200, num_bins: int = 20
 ) -> DataFrame:
     """Corpus document-length histogram: equal-width token-count bins via
     ``width_bucket`` (bin 0 = below range, bin num_bins+1 = above), count
@@ -492,7 +456,7 @@ def length_histogram(
     profiling query you run before choosing chunk/packing budgets.
     Output: (bin, bin_lo, bin_hi, n_docs, share)."""
     width = max_tokens / num_bins
-    n_tok = T.token_count(text_col)
+    n_tok = T.token_count("text")
     binned = df.select(
         F.width_bucket(n_tok, F.lit(0), F.lit(max_tokens), F.lit(num_bins)).alias(
             "bin"
@@ -512,10 +476,10 @@ def length_histogram(
     )
 
 
-def corpus_language_report(df: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_language_report(df: DataFrame) -> DataFrame:
     """Corpus-level report: predicted language × document count + mean hits.
     One shuffle on the (tiny-cardinality) language key."""
-    lid = language_id(df, text_col=text_col)
+    lid = language_id(df)
     return (
         lid.groupBy("predicted_lang")
         .agg(
@@ -526,12 +490,7 @@ def corpus_language_report(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def bigram_logprob_score(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lambda_interp: float = 0.7,
-    oov_floor: float = 1e-9,
-    model: DataFrame | None = None,
+    df: DataFrame, lambda_interp: float = 0.7, model: DataFrame | None = None
 ) -> DataFrame:
     """Order-2 statistical quality score: mean log10 probability of each
     document's bigrams under an interpolated corpus bigram LM —
@@ -560,9 +519,9 @@ def bigram_logprob_score(
     import math
 
     def _bg(frame):
-        t = frame.select(F.col(id_col), T.tokens(text_col).alias("__toks"))
+        t = frame.select(F.col("doc_id"), T.tokens("text").alias("__toks"))
         return t.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.when(
                     F.size("__toks") >= 2,
@@ -578,7 +537,7 @@ def bigram_logprob_score(
                 )
             ).alias("__bg"),
         ).select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("__bg.prev").alias("prev"),
             F.col("__bg.cur").alias("cur"),
         )
@@ -586,7 +545,7 @@ def bigram_logprob_score(
     train = model if model is not None else df
     bigrams = _bg(df)
     uni = (
-        train.select(T.tokens(text_col).alias("__toks"))
+        train.select(T.tokens("text").alias("__toks"))
         .select(F.explode("__toks").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("__cw"))
@@ -608,7 +567,7 @@ def bigram_logprob_score(
         F.col("__ccur").isNotNull(),
         F.lit(1.0 - lambda_interp) * F.col("__ccur") / F.col("__t"),
     ).otherwise(F.lit(0.0))
-    lp = F.log10(F.greatest(cond + unig, F.lit(oov_floor)))
+    lp = F.log10(F.greatest(cond + unig, F.lit(_OOV_FLOOR)))
     scored = (
         bigrams.join(bi, on=["prev", "cur"], how="left")
         .join(
@@ -622,9 +581,9 @@ def bigram_logprob_score(
             how="left",
         )
         .crossJoin(F.broadcast(total))
-        .select(F.col(id_col), lp.cast("decimal(28,12)").alias("__lpd"))
+        .select(F.col("doc_id"), lp.cast("decimal(28,12)").alias("__lpd"))
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         # cast the exact decimal sum to double BEFORE dividing: decimal
         # division scale/rounding rules differ between engines, double
@@ -634,14 +593,14 @@ def bigram_logprob_score(
         ),
     )
     # every doc gets a row: < 2 tokens -> 0 bigrams, floor score
-    all_docs = df.select(F.col(id_col))
+    all_docs = df.select(F.col("doc_id"))
     return (
-        all_docs.join(per_doc, on=id_col, how="left")
+        all_docs.join(per_doc, on="doc_id", how="left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
             F.coalesce(
-                F.col("mean_logprob"), F.lit(round(math.log10(oov_floor), 6))
+                F.col("mean_logprob"), F.lit(round(math.log10(_OOV_FLOOR), 6))
             ).alias("mean_logprob"),
         )
     )
@@ -653,9 +612,7 @@ def bigram_logprob_score(
 
 
 def bpe_train_merges(
-    df: DataFrame,
-    n_merges: int = 4,
-    text_col: str = "text",
+    df: DataFrame, n_merges: int = 4
 ) -> tuple[list[tuple[str, str, int]], DataFrame]:
     """Train byte-pair-encoding merges over a corpus, DataFrame-native —
     the vocabulary-learning step of an LLM data pipeline (Sennrich et al.
@@ -684,7 +641,7 @@ def bpe_train_merges(
     in round order, final state frame).
     """
     words = (
-        df.select(F.explode(T.tokens(text_col)).alias("w"))
+        df.select(F.explode(T.tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -775,12 +732,7 @@ def _apply_merges(word_col, merges: list[tuple[str, str]]):
     return syms
 
 
-def bpe_segment_stats(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bpe_segment_stats(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Tokenizer APPLY side: segment every document with a trained BPE merge
     table and emit per-doc stats — subword count (the token-budget number a
     packing/pricing pipeline needs) and an order-sensitive segmentation
@@ -801,7 +753,7 @@ def bpe_segment_stats(
     mod = F.lit(1_000_000_007)
     from iatlas_cbioportal_export_spark.operators.sketch import _token_hash
 
-    seg = F.transform(T.tokens(text_col), lambda w: _apply_merges(w, merges))
+    seg = F.transform(T.tokens("text"), lambda w: _apply_merges(w, merges))
     word_hashes = F.transform(
         seg,
         lambda syms: F.aggregate(
@@ -811,8 +763,8 @@ def bpe_segment_stats(
         ),
     )
     return df.select(
-        F.col(id_col).alias("id"),
-        F.size(T.tokens(text_col)).alias("n_tokens"),
+        F.col("doc_id").alias("id"),
+        F.size(T.tokens("text")).alias("n_tokens"),
         F.aggregate(
             seg, F.lit(0).cast("long"), lambda acc, s: acc + F.size(s)
         ).alias("n_subwords"),
@@ -824,12 +776,7 @@ def bpe_segment_stats(
     )
 
 
-def cooccurrence_pmi(
-    df: DataFrame,
-    text_col: str = "text",
-    window: int = 3,
-    top_n: int = 200,
-) -> DataFrame:
+def cooccurrence_pmi(df: DataFrame, window: int = 3, top_n: int = 200) -> DataFrame:
     """Windowed token co-occurrence counts with pointwise mutual
     information — the corpus statistic behind GloVe-style embedding
     pretraining and collocation mining. An ORDERED pair (a, b) is counted
@@ -856,7 +803,7 @@ def cooccurrence_pmi(
     # references it: the tokenizer expression otherwise re-inlines into
     # every lambda reference — the O(tokens²) trap (measured 19.9s → 6.9s
     # at sf0.1 for this query)
-    tokenized = df.select(T.tokens(text_col).alias("__toks"))
+    tokenized = df.select(T.tokens("text").alias("__toks"))
     t = F.col("__toks")
     n = F.size(t)
     pair_arr = F.when(
@@ -926,11 +873,7 @@ def cooccurrence_pmi(
 
 
 def vocabulary_growth(
-    df: DataFrame,
-    fractions: tuple[float, ...] = (0.25, 0.5, 0.75, 1.0),
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    salt: int = 0,
+    df: DataFrame, fractions: tuple[float, ...] = (0.25, 0.5, 0.75, 1.0)
 ) -> DataFrame:
     """Heaps-law vocabulary-growth curve: distinct-token count at nested
     deterministic corpus prefixes — the curve that decides whether a corpus
@@ -959,9 +902,9 @@ def vocabulary_growth(
     )
 
     thresholds = sorted({int(round(f * _BUCKETS)) for f in fractions})
-    b = _bucket(id_col, salt)
+    b = _bucket("doc_id", 0)
     tok_min = (
-        df.select(b.alias("__b"), T.tokens(text_col).alias("__toks"))
+        df.select(b.alias("__b"), T.tokens("text").alias("__toks"))
         .select("__b", F.explode("__toks").alias("tok"))
         .groupBy("tok")
         .agg(F.min("__b").alias("mb"))
@@ -986,12 +929,7 @@ def vocabulary_growth(
 
 
 def inverted_index(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 1,
-    max_df_ratio: float = 0.5,
-    ngram: int = 1,
+    df: DataFrame, min_df: int = 1, max_df_ratio: float = 0.5, ngram: int = 1
 ) -> DataFrame:
     """Inverted-index (postings-list) construction — the retrieval-index
     build step of a corpus pipeline: per surviving term, its document
@@ -1016,8 +954,8 @@ def inverted_index(
     # Token array materialized once per row (re-inlining trap): every
     # n-gram position references it.
     toked = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(T.tokens(text_col), lambda t: F.lower(t)).alias("__toks"),
+        F.col("doc_id").alias("id"),
+        F.transform(T.tokens("text"), lambda t: F.lower(t)).alias("__toks"),
     )
     if ngram <= 1:
         term_arr = F.col("__toks")
@@ -1087,12 +1025,7 @@ _QUALITY_WEIGHTS = {
 _QUALITY_STOPWORDS = ("the", "of", "and", "to", "a", "in", "is", "for")
 
 
-def quality_classifier(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
+def quality_classifier(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Model-based quality scoring with a fixed literal linear model — the
     fasttext-style "looks like reference text" gate of CCNet/GPT-3-era
     curation pipelines, reduced to an engine-portable form: interpretable
@@ -1110,7 +1043,7 @@ def quality_classifier(
     # Materialize the token array ONCE per row: referencing T.tokens(...)
     # from every feature expression would re-run the tokenizer per feature
     # (the documented re-inlining trap).
-    df = df.withColumn("__toks", T.tokens(text_col))
+    df = df.withColumn("__toks", T.tokens("text"))
     toks = F.col("__toks")
     n_tok = F.size(toks)
     safe_n = F.greatest(n_tok, F.lit(1)).cast("double")
@@ -1130,9 +1063,9 @@ def quality_classifier(
     )
     alpha_ratio = F.round(
         (
-            F.length(F.regexp_replace(F.col(text_col), "[^A-Za-z]", ""))
+            F.length(F.regexp_replace(F.col("text"), "[^A-Za-z]", ""))
         ).cast("double")
-        / F.greatest(F.length(F.col(text_col)), F.lit(1)).cast("double"),
+        / F.greatest(F.length(F.col("text")), F.lit(1)).cast("double"),
         6,
     )
     long_doc = (n_tok >= F.lit(50)).cast("double")
@@ -1146,7 +1079,7 @@ def quality_classifier(
     )
     prob = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         mean_word_len.alias("mean_word_len"),
         stopword_ratio.alias("stopword_ratio"),
         alpha_ratio.alias("alpha_ratio"),
@@ -1156,13 +1089,7 @@ def quality_classifier(
     )
 
 
-def naive_bayes_train_apply(
-    df: DataFrame,
-    label_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    train_mod: int = 5,
-) -> DataFrame:
+def naive_bayes_train_apply(df: DataFrame, train_mod: int = 5) -> DataFrame:
     """Multinomial Naive Bayes text classifier, trained and applied inside
     one logical plan — the TRAINED counterpart to the fixed-literal
     :func:`quality_classifier` (fasttext-role): per-class token
@@ -1187,7 +1114,7 @@ def naive_bayes_train_apply(
 
     Output: (id, true label, pred label, score_pred double(6dp), correct).
     """
-    lbl, txt, did = F.col(label_col), F.col(text_col), F.col(id_col)
+    lbl, txt, did = F.col("lang"), F.col("text"), F.col("doc_id")
     train = df.filter(did % train_mod != 0)
     test = df.filter(did % train_mod == 0)
 
@@ -1297,7 +1224,7 @@ def naive_bayes_train_apply(
         scores.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "true_label",
             F.col("label").alias("pred_label"),
             F.round(F.col("score_dec"), 6).cast("double").alias("score_pred"),
@@ -1413,10 +1340,7 @@ def _dense_exact_cosine_pairs(
 def cosine_similarity_pairs(
     df: DataFrame,
     threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
-    max_df_frac: float = 0.5,
     exact: bool = False,
     dense_kernel: bool | None = None,
 ) -> DataFrame:
@@ -1439,8 +1363,8 @@ def cosine_similarity_pairs(
     partial-product aggregation; raw text never shuffles. Per-term pair
     fan-out is Σ df_t², so high-df terms dominate cost while contributing
     least discrimination — by DEFAULT terms appearing in more than
-    ``max_df_frac`` of the corpus (or more than ``max_df`` documents, when
-    given) are dropped from the postings self-join so an accidentally
+    half of the corpus (or more than ``max_df`` documents, when given) are
+    dropped from the postings self-join so an accidentally
     dense vocabulary can never go quadratic (df-capped semantics: a
     surviving pair must share ≥1 kept term; each candidate is then
     VERIFIED against the full tf vectors, so the dot, the threshold gate
@@ -1469,10 +1393,10 @@ def cosine_similarity_pairs(
     t_num, t_den = t2.numerator, t2.denominator
 
     toks = df.select(
-        F.col(id_col), F.explode(T.tokens(text_col)).alias("__tok")
-    ).select(F.col(id_col), F.lower("__tok").alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    norms = tf.groupBy(id_col).agg(
+        F.col("doc_id"), F.explode(T.tokens("text")).alias("__tok")
+    ).select(F.col("doc_id"), F.lower("__tok").alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    norms = tf.groupBy("doc_id").agg(
         F.sum(F.col("tf") * F.col("tf")).alias("n2")
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
@@ -1481,8 +1405,8 @@ def cosine_similarity_pairs(
         if max_df is None:
             import math as _math
 
-            n_docs = df.select(id_col).count()
-            max_df = max(2, int(_math.ceil(max_df_frac * n_docs)))
+            n_docs = df.select("doc_id").count()
+            max_df = max(2, int(_math.ceil(0.5 * n_docs)))
         dropped = kept.filter(F.col("__df") > max_df).count()
         if dropped:
             _LOG.warning(
@@ -1496,12 +1420,12 @@ def cosine_similarity_pairs(
 
     a = postings.select(
         F.col("term"),
-        F.col(id_col).alias("doc_a"),
+        F.col("doc_id").alias("doc_a"),
         F.col("tf").alias("__tfa"),
     )
     b = postings.select(
         F.col("term"),
-        F.col(id_col).alias("doc_b"),
+        F.col("doc_id").alias("doc_b"),
         F.col("tf").alias("__tfb"),
     )
     if exact:
@@ -1515,7 +1439,7 @@ def cosine_similarity_pairs(
         # feed the identical norm-join/gate/round tail, so the result is
         # bit-identical either way.
         dense = (
-            _dense_exact_cosine_pairs(tf, id_col)
+            _dense_exact_cosine_pairs(tf, "doc_id")
             if dense_kernel is not False
             else None
         )
@@ -1562,12 +1486,12 @@ def cosine_similarity_pairs(
             .distinct()
         )
         full_a = tf.select(
-            F.col(id_col).alias("doc_a"),
+            F.col("doc_id").alias("doc_a"),
             F.col("term"),
             F.col("tf").alias("__tfa"),
         )
         full_b = tf.select(
-            F.col(id_col).alias("doc_b"),
+            F.col("doc_id").alias("doc_b"),
             F.col("term"),
             F.col("tf").alias("__tfb"),
         )
@@ -1578,10 +1502,10 @@ def cosine_similarity_pairs(
             .agg(F.sum(F.col("__tfa") * F.col("__tfb")).alias("dot"))
         )
     na = norms.select(
-        F.col(id_col).alias("doc_a"), F.col("n2").alias("__na")
+        F.col("doc_id").alias("doc_a"), F.col("n2").alias("__na")
     )
     nb = norms.select(
-        F.col(id_col).alias("doc_b"), F.col("n2").alias("__nb")
+        F.col("doc_id").alias("doc_b"), F.col("n2").alias("__nb")
     )
     dec = "decimal(38,0)"
     return (
@@ -1604,11 +1528,7 @@ def cosine_similarity_pairs(
     )
 
 
-def repetition_metrics(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def repetition_metrics(df: DataFrame) -> DataFrame:
     """Gopher-style repetition metrics (Rae et al. 2021 §A1.1, the
     repetition half of the quality suite — :func:`curation.gopher_quality`
     covers the word-count/ratio half): per document, the character mass of
@@ -1632,9 +1552,9 @@ def repetition_metrics(
     top_2gram_char_ppm, dup_3gram_char_ppm).
     """
     base = df.select(
-        F.col(id_col), T.tokens(text_col).alias("__toks")
+        F.col("doc_id"), T.tokens("text").alias("__toks")
     ).select(
-        id_col,
+        "doc_id",
         F.col("__toks"),
         F.size("__toks").alias("n_words"),
         F.aggregate(
@@ -1645,25 +1565,25 @@ def repetition_metrics(
     def gram_counts(n: int) -> DataFrame:
         return (
             base.select(
-                id_col,
+                "doc_id",
                 F.explode(
                     T.word_ngrams_of_tokens(F.col("__toks"), n)
                 ).alias("gram"),
             )
-            .groupBy(id_col, "gram")
+            .groupBy("doc_id", "gram")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
     top2 = (
         gram_counts(2)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.min(
                 F.struct((-F.col("cnt")).alias("neg"), F.col("gram"))
             ).alias("__top")
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("__top.gram").alias("top_2gram"),
             (-F.col("__top.neg")).cast("long").alias("top_2gram_count"),
         )
@@ -1672,7 +1592,7 @@ def repetition_metrics(
     # word chars of one gram occurrence = length minus the n-1 separator
     # spaces baked in by concat_ws
     chars3 = F.col("cnt") * (F.length("gram") - 2)
-    dup3 = g3.groupBy(id_col).agg(
+    dup3 = g3.groupBy("doc_id").agg(
         F.sum(F.when(F.col("cnt") >= 2, chars3).otherwise(0)).alias(
             "__dup_chars"
         ),
@@ -1680,15 +1600,15 @@ def repetition_metrics(
     )
     out = (
         base.drop("__toks")
-        .join(top2, id_col, "left")
-        .join(dup3, id_col, "left")
+        .join(top2, "doc_id", "left")
+        .join(dup3, "doc_id", "left")
     )
     top2_chars = F.col("top_2gram_count") * (F.length("top_2gram") - 1)
     # integral DIV, not floor(double division): the double quotient is
     # correctly rounded, and floor() of it can land one off at integer
     # boundaries; DIV replays exactly as DuckDB's //.
     return out.withColumn("__top2_chars", top2_chars).select(
-        id_col,
+        "doc_id",
         "n_words",
         "word_chars",
         "top_2gram",
@@ -1710,14 +1630,10 @@ def repetition_metrics(
     )
 
 
-def trigram_backoff_score(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 0.4,
-    oov_floor: float = 1e-9,
-    model: DataFrame | None = None,
-) -> DataFrame:
+_BACKOFF_ALPHA = 0.4  # stupid-backoff discount per backed-off order
+
+
+def trigram_backoff_score(df: DataFrame, model: DataFrame | None = None) -> DataFrame:
     """Order-3 statistical quality score with STUPID BACKOFF (Brants et
     al. 2007 — the web-scale scheme that skips discount estimation):
     ``S(w3|w1w2) = c(w1w2w3)/c(w1w2)`` when the trigram was seen, else
@@ -1746,10 +1662,10 @@ def trigram_backoff_score(
     # exactly (CASE WHEN ⟺ when/otherwise, named_struct ⟺ aliased struct,
     # 0-based two-arg transform lambdas in both), so counts — and the
     # untouched float scoring below — are bit-identical.
-    toks_sql = T.tokens_sql(f"`{text_col}`")
+    toks_sql = T.tokens_sql("`text`")
 
     def _tg(frame):
-        t = frame.selectExpr(f"`{id_col}`", f"{toks_sql} AS __toks")
+        t = frame.selectExpr("`doc_id`", f"{toks_sql} AS __toks")
         tg = (
             "CASE WHEN size(__toks) >= 3 THEN "
             "transform(slice(__toks, 1, size(__toks) - 2), (tk, i) -> "
@@ -1757,8 +1673,8 @@ def trigram_backoff_score(
             "'w3', element_at(__toks, i + 3))) "
             "ELSE cast(array() as array<struct<w1:string,w2:string,w3:string>>) END"
         )
-        return t.selectExpr(f"`{id_col}`", f"explode({tg}) AS __tg").selectExpr(
-            f"`{id_col}`",
+        return t.selectExpr("`doc_id`", f"explode({tg}) AS __tg").selectExpr(
+            "`doc_id`",
             "__tg.w1 AS w1",
             "__tg.w2 AS w2",
             "__tg.w3 AS w3",
@@ -1802,15 +1718,15 @@ def trigram_backoff_score(
         )
         .when(
             F.col("__c23").isNotNull() & F.col("__c2").isNotNull(),
-            F.lit(alpha) * F.col("__c23") / F.col("__c2"),
+            F.lit(_BACKOFF_ALPHA) * F.col("__c23") / F.col("__c2"),
         )
         .when(
             F.col("__c3").isNotNull(),
-            F.lit(alpha * alpha) * F.col("__c3") / F.col("__t"),
+            F.lit(_BACKOFF_ALPHA * _BACKOFF_ALPHA) * F.col("__c3") / F.col("__t"),
         )
         .otherwise(F.lit(0.0))
     )
-    lp = F.log10(F.greatest(score, F.lit(oov_floor)))
+    lp = F.log10(F.greatest(score, F.lit(_OOV_FLOOR)))
     scored = (
         events.join(tri, on=["w1", "w2", "w3"], how="left")
         .join(
@@ -1840,22 +1756,22 @@ def trigram_backoff_score(
             how="left",
         )
         .crossJoin(F.broadcast(total))
-        .select(F.col(id_col), lp.cast("decimal(28,12)").alias("__lpd"))
+        .select(F.col("doc_id"), lp.cast("decimal(28,12)").alias("__lpd"))
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_trigrams"),
         F.round(F.sum("__lpd").cast("double") / F.count(F.lit(1)), 6).alias(
             "mean_logprob"
         ),
     )
     return (
-        df.select(F.col(id_col))
-        .join(per_doc, on=id_col, how="left")
+        df.select(F.col("doc_id"))
+        .join(per_doc, on="doc_id", how="left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("n_trigrams"), F.lit(0)).alias("n_trigrams"),
             F.coalesce(
-                F.col("mean_logprob"), F.lit(round(math.log10(oov_floor), 6))
+                F.col("mean_logprob"), F.lit(round(math.log10(_OOV_FLOOR), 6))
             ).alias("mean_logprob"),
         )
     )

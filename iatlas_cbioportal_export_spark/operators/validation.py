@@ -114,12 +114,10 @@ def count_equality(
     return _in_out_equal(df_in, df_out, F.count(F.lit(1)), check)
 
 
-def distinct_count_equality(
-    df_in: DataFrame, df_out: DataFrame, col: str, check_prefix: str = "distinct"
-) -> DataFrame:
+def distinct_count_equality(df_in: DataFrame, df_out: DataFrame, col: str) -> DataFrame:
     """V3/V4: distinct key counts in == out (reference ``clinical.py:809-825``)."""
     return _in_out_equal(
-        df_in, df_out, F.countDistinct(col), f"{check_prefix}_{col.lower()}_preserved"
+        df_in, df_out, F.countDistinct(col), f"distinct_{col.lower()}_preserved"
     )
 
 
@@ -223,9 +221,7 @@ def required_columns_present(
     return _findings(df.sparkSession.range(1), [_violation(check, len(missing), detail)])
 
 
-def schema_matches_exactly(
-    df: DataFrame, required: Sequence[str], check: str = "schema_matches_exactly"
-) -> DataFrame:
+def schema_matches_exactly(df: DataFrame, required: Sequence[str]) -> DataFrame:
     """V12 (reference-faithful form): the column SET must equal ``required``
     — reference ``validate.py:159-172`` errs on ``set(required) !=
     set(columns)``, i.e. EXTRA columns fail too (its message lists only the
@@ -240,9 +236,10 @@ def schema_matches_exactly(
         parts.append("missing: " + ",".join(missing))
     if extra:
         parts.append("extra: " + ",".join(extra))
+    n = len(missing) + len(extra)
     return _findings(
         df.sparkSession.range(1),
-        [_violation(check, len(missing) + len(extra), "; ".join(parts))],
+        [_violation("schema_matches_exactly", n, "; ".join(parts))],
     )
 
 
@@ -304,26 +301,7 @@ _VARIANT_CLASSIFICATIONS = (
 )
 
 
-def maf_value_conformance(
-    maf: DataFrame,
-    chrom_col: str = "Chromosome",
-    ref_col: str = "Reference_Allele",
-    alt_col: str = "Tumor_Seq_Allele2",
-    start_col: str = "Start_Position",
-    end_col: str = "End_Position",
-    t_ref_col: str = "t_ref_count",
-    t_alt_col: str = "t_alt_count",
-    build_col: str = "NCBI_Build",
-    vt_col: str = "Variant_Type",
-    barcode_col: str = "Tumor_Sample_Barcode",
-    mstatus_col: str = "Mutation_Status",
-    entrez_col: str = "Entrez_Gene_Id",
-    vc_col: str = "Variant_Classification",
-    valstatus_col: str = "Validation_Status",
-    verstatus_col: str = "Verification_Status",
-    strand_col: str = "Strand",
-    hgvsp_col: str = "HGVSp_Short",
-) -> DataFrame:
+def maf_value_conformance(maf: DataFrame) -> DataFrame:
     """Per-field MAF value checks — the native subset of cBioPortal
     ``validateData.py --strict_maf_checks`` the reference shells out to
     (``validate.py:211-216``). Tier 1: chromosome vocabulary, allele
@@ -344,16 +322,16 @@ def maf_value_conformance(
     violation predicates), one finding row per rule; NULL field values are
     skipped by each rule (presence is V5/V6/V11's job, not a value check).
     """
-    chrom = F.col(chrom_col)
-    ref, alt = F.col(ref_col), F.col(alt_col)
+    chrom = F.col("Chromosome")
+    ref, alt = F.col("Reference_Allele"), F.col("Tumor_Seq_Allele2")
     # Cast positions numerically so the ordering rule is type-safe even when
     # the caller read the MAF with an all-string schema (e.g. a header-only
     # directory scan): lexicographic "99" > "100" must not fire the rule, and
     # real violations with wider End digits must not be missed.
-    start = F.col(start_col).cast("long")
-    end = F.col(end_col).cast("long")
-    t_ref = F.col(t_ref_col).cast("double")
-    t_alt = F.col(t_alt_col).cast("double")
+    start = F.col("Start_Position").cast("long")
+    end = F.col("End_Position").cast("long")
+    t_ref = F.col("t_ref_count").cast("double")
+    t_alt = F.col("t_alt_count").cast("double")
 
     def _present(c: Column) -> Column:
         # TSV-borne MAFs carry missing values as EMPTY STRINGS, not NULLs
@@ -375,15 +353,15 @@ def maf_value_conformance(
     cols = set(maf.columns)
     # t_ref/t_alt_count are OPTIONAL MAF columns (unlike the coordinate and
     # allele fields) — emit the count-sanity rule only when both exist.
-    if t_ref_col in cols and t_alt_col in cols:
+    if "t_ref_count" in cols and "t_alt_count" in cols:
         rules["maf_negative_allele_counts"] = (t_ref < 0) | (t_alt < 0)
-    if build_col in cols:
-        build = F.col(build_col)
+    if "NCBI_Build" in cols:
+        build = F.col("NCBI_Build")
         rules["maf_ncbi_build"] = _present(build) & ~build.isin(
             *_NCBI_BUILDS
         )
-    if vt_col in cols:
-        vt = F.col(vt_col)
+    if "Variant_Type" in cols:
+        vt = F.col("Variant_Type")
         rules["maf_variant_type_vocabulary"] = _present(vt) & ~vt.isin(
             *_VARIANT_TYPES
         )
@@ -423,40 +401,40 @@ def maf_value_conformance(
                 )
             )
         )
-    if barcode_col in cols:
-        bc = F.col(barcode_col)
+    if "Tumor_Sample_Barcode" in cols:
+        bc = F.col("Tumor_Sample_Barcode")
         rules["maf_barcode_format"] = _present(bc) & ~bc.rlike(_BARCODE_RE)
-    if mstatus_col in cols:
-        ms = F.lower(F.col(mstatus_col))
+    if "Mutation_Status" in cols:
+        ms = F.lower(F.col("Mutation_Status"))
         rules["maf_mutation_status_vocabulary"] = _present(
-            F.col(mstatus_col)
+            F.col("Mutation_Status")
         ) & ~ms.isin(*_MUTATION_STATUSES)
-    if vc_col in cols:
-        vc = F.col(vc_col)
+    if "Variant_Classification" in cols:
+        vc = F.col("Variant_Classification")
         rules["maf_variant_classification_vocabulary"] = _present(
             vc
         ) & ~vc.isin(*_VARIANT_CLASSIFICATIONS)
-    if entrez_col in cols:
-        ez = F.col(entrez_col).cast("string")
+    if "Entrez_Gene_Id" in cols:
+        ez = F.col("Entrez_Gene_Id").cast("string")
         rules["maf_entrez_gene_id_format"] = _present(ez) & ~ez.rlike(
             r"^[0-9]+$"
         )
-    if valstatus_col in cols:
-        vs = F.col(valstatus_col)
+    if "Validation_Status" in cols:
+        vs = F.col("Validation_Status")
         rules["maf_validation_status_vocabulary"] = _present(vs) & ~F.lower(
             vs
         ).isin(*_VALIDATION_STATUSES)
-    if verstatus_col in cols:
-        vrs = F.col(verstatus_col)
+    if "Verification_Status" in cols:
+        vrs = F.col("Verification_Status")
         rules["maf_verification_status_vocabulary"] = _present(
             vrs
         ) & ~F.lower(vrs).isin(*_VERIFICATION_STATUSES)
     rules["maf_positive_start"] = start.isNotNull() & (start < 1)
-    if strand_col in cols:
-        st = F.col(strand_col)
+    if "Strand" in cols:
+        st = F.col("Strand")
         rules["maf_strand_symbol"] = _present(st) & ~st.isin("+", "-")
-    if hgvsp_col in cols:
-        hp = F.col(hgvsp_col)
+    if "HGVSp_Short" in cols:
+        hp = F.col("HGVSp_Short")
         rules["maf_hgvsp_prefix"] = (
             hp.isNotNull() & (hp != "") & ~hp.startswith("p.")
         )
@@ -730,10 +708,6 @@ def clinical_value_conformance(
     clinical: DataFrame,
     number_cols: Sequence[str] = (),
     boolean_cols: Sequence[str] = (),
-    patient_col: str = "PATIENT_ID",
-    sample_col: str = "SAMPLE_ID",
-    os_status_col: str = "OS_STATUS",
-    pfs_status_col: str = "PFS_STATUS",
 ) -> DataFrame:
     """Per-field CLINICAL value checks — the clinical-file half of
     cBioPortal ``validateData.py`` (the MAF half is
@@ -762,13 +736,13 @@ def clinical_value_conformance(
     id_re = r"^[A-Za-z0-9._-]+$"
     num_re = r"^-?[0-9]+(\.[0-9]+)?([eE][+-]?[0-9]+)?$"
     rules: dict[str, Column] = {}
-    if patient_col in cols:
-        pid = F.col(patient_col)
+    if "PATIENT_ID" in cols:
+        pid = F.col("PATIENT_ID")
         rules["clinical_patient_id_format"] = (
             pid.isNotNull() & (pid != "") & ~pid.rlike(id_re)
         )
-    if sample_col in cols:
-        sid = F.col(sample_col)
+    if "SAMPLE_ID" in cols:
+        sid = F.col("SAMPLE_ID")
         rules["clinical_sample_id_format"] = (
             sid.isNotNull() & (sid != "") & ~sid.rlike(id_re)
         )
@@ -786,18 +760,18 @@ def clinical_value_conformance(
         rules[f"clinical_boolean_{c.lower()}"] = (
             F.col(c).isNotNull() & (v != "") & ~v.isin("TRUE", "FALSE", "NA")
         )
-    if os_status_col in cols:
-        osv = F.lower(F.col(os_status_col))
+    if "OS_STATUS" in cols:
+        osv = F.lower(F.col("OS_STATUS"))
         rules["clinical_os_status_vocabulary"] = (
-            F.col(os_status_col).isNotNull()
-            & (F.col(os_status_col) != "")
+            F.col("OS_STATUS").isNotNull()
+            & (F.col("OS_STATUS") != "")
             & ~osv.isin(*_OS_STATUSES)
         )
-    if pfs_status_col in cols:
-        pfv = F.lower(F.col(pfs_status_col))
+    if "PFS_STATUS" in cols:
+        pfv = F.lower(F.col("PFS_STATUS"))
         rules["clinical_pfs_status_vocabulary"] = (
-            F.col(pfs_status_col).isNotNull()
-            & (F.col(pfs_status_col) != "")
+            F.col("PFS_STATUS").isNotNull()
+            & (F.col("PFS_STATUS") != "")
             & ~pfv.isin(*_PFS_STATUSES)
         )
     return _rule_findings(clinical, rules)
@@ -828,8 +802,6 @@ def cross_file_referential_checks(
     sample_df: DataFrame,
     data_files: "dict[str, tuple[DataFrame, str]] | None" = None,
     case_lists: "dict[str, DataFrame] | None" = None,
-    patient_col: str = "PATIENT_ID",
-    sample_col: str = "SAMPLE_ID",
 ) -> DataFrame:
     """Cross-FILE referential checks — the bundle-level half of cBioPortal
     ``validateData.py`` that the reference reaches only through its
@@ -844,7 +816,7 @@ def cross_file_referential_checks(
     a single Spark action):
 
     - ``xref_sample_patients_in_patient_file`` (ERROR): every
-      ``patient_col`` in the sample file appears in the patient file.
+      ``PATIENT_ID`` in the sample file appears in the patient file.
     - ``xref_patients_have_samples`` (WARN): patients with zero samples.
     - ``xref_<name>_samples_in_clinical`` (ERROR): for each
       ``data_files[name] = (df, its_sample_column)`` — MAF barcodes,
@@ -861,12 +833,12 @@ def cross_file_referential_checks(
     """
     findings = [
         _count_violation(
-            _absent_keys(sample_df, patient_col, patient_df, patient_col),
+            _absent_keys(sample_df, "PATIENT_ID", patient_df, "PATIENT_ID"),
             "xref_sample_patients_in_patient_file",
             "sample-file patient ids absent from patient file",
         ),
         _count_violation(
-            _absent_keys(patient_df, patient_col, sample_df, patient_col),
+            _absent_keys(patient_df, "PATIENT_ID", sample_df, "PATIENT_ID"),
             "xref_patients_have_samples",
             "patients with no samples",
             severity="WARN",
@@ -875,7 +847,7 @@ def cross_file_referential_checks(
     for name, (df, df_sample_col) in (data_files or {}).items():
         findings.append(
             _count_violation(
-                _absent_keys(df, df_sample_col, sample_df, sample_col),
+                _absent_keys(df, df_sample_col, sample_df, "SAMPLE_ID"),
                 f"xref_{name}_samples_in_clinical",
                 f"{name} sample ids absent from clinical samples",
             )
@@ -885,7 +857,7 @@ def cross_file_referential_checks(
         ids = members.select(F.col(mcol).alias("__k")).filter(F.col("__k").isNotNull())
         findings += [
             _count_violation(
-                _absent_keys(members, mcol, sample_df, sample_col),
+                _absent_keys(members, mcol, sample_df, "SAMPLE_ID"),
                 f"case_list_{name}_members_in_clinical",
                 f"case list {name} ids absent from clinical samples",
             ),
@@ -1117,10 +1089,7 @@ def parse_clinical_header_text(name: str, text: str) -> list[dict]:
     ]
 
 
-def clinical_header_conformance(
-    attrs: DataFrame,
-    required_cols: Sequence[str] = ("PATIENT_ID",),
-) -> DataFrame:
+def clinical_header_conformance(attrs: DataFrame) -> DataFrame:
     """Attribute-HEADER conformance — the header tier of cBioPortal
     ``validateData.py``'s clinical validator (the reference only reaches it
     via the subprocess call, ``validate.py:211-216``), completing the
@@ -1142,9 +1111,8 @@ def clinical_header_conformance(
       with the column line's field count.
     - ``header_display_name_missing`` (WARN): empty display names load but
       render as raw ids in the portal UI.
-    - ``header_required_<col>`` (ERROR): every file carries each of
-      ``required_cols`` (PATIENT_ID for patient files; pass SAMPLE_ID too
-      for sample files).
+    - ``header_required_patient_id`` (ERROR): every file carries a
+      PATIENT_ID column.
 
     Scale: headers are KB-sized per file — this whole validator is a
     single combiner-reduced aggregate over descriptor rows; it reads no
@@ -1178,12 +1146,9 @@ def clinical_header_conformance(
             "__missing_display",
         ),
         F.countDistinct("filename").alias("__n_files"),
-        *[
-            F.countDistinct(
-                F.when(F.col("column_id") == rc, F.col("filename"))
-            ).alias(f"__has_{i}")
-            for i, rc in enumerate(required_cols)
-        ],
+        F.countDistinct(
+            F.when(F.col("column_id") == "PATIENT_ID", F.col("filename"))
+        ).alias("__has_patient_id"),
     ]
     agg = attrs.agg(*aggs)
     rules = [
@@ -1197,12 +1162,9 @@ def clinical_header_conformance(
          "files with ragged '#' header lines"),
         ("header_display_name_missing", F.col("__missing_display"), "WARN",
          "attrs with empty display names"),
-        *[
-            (f"header_required_{rc.lower()}",
-             F.col("__n_files") - F.col(f"__has_{i}"), "ERROR",
-             f"files missing required column {rc}")
-            for i, rc in enumerate(required_cols)
-        ],
+        ("header_required_patient_id",
+         F.col("__n_files") - F.col("__has_patient_id"), "ERROR",
+         "files missing required column PATIENT_ID"),
     ]
     return _findings(
         agg,

@@ -22,7 +22,7 @@ def _dec(c: str):
     return F.col(c).cast(_D)
 
 
-def pricing_summary(lineitem: DataFrame, ship_cutoff: str = "1998-09-02") -> DataFrame:
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1 shape: per (returnflag, linestatus) pricing summary.
 
     One scan, one shuffle on a 6-value key; every sum partial-aggregates
@@ -31,7 +31,7 @@ def pricing_summary(lineitem: DataFrame, ship_cutoff: str = "1998-09-02") -> Dat
     disc_price = _dec("l_extendedprice") * (F.lit(1).cast(_D) - _dec("l_discount"))
     charge = disc_price * (F.lit(1).cast(_D) + _dec("l_tax"))
     return (
-        lineitem.filter(F.col("l_shipdate") <= F.lit(ship_cutoff).cast("timestamp"))
+        lineitem.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum(_dec("l_quantity")), 2).cast("double").alias("sum_qty"),
@@ -53,12 +53,7 @@ def pricing_summary(lineitem: DataFrame, ship_cutoff: str = "1998-09-02") -> Dat
 
 
 def shipping_priority(
-    customer: DataFrame,
-    orders: DataFrame,
-    lineitem: DataFrame,
-    segment: str = "BUILDING",
-    cutoff: str = "1998-03-15",
-    k: int = 10,
+    customer: DataFrame, orders: DataFrame, lineitem: DataFrame
 ) -> DataFrame:
     """TPC-H Q3 shape: top-k open orders by discounted revenue.
 
@@ -68,10 +63,10 @@ def shipping_priority(
     determinism.
     """
     revenue = _dec("l_extendedprice") * (F.lit(1).cast(_D) - _dec("l_discount"))
-    cut = F.lit(cutoff).cast("timestamp")
+    cut = F.lit("1998-03-15").cast("timestamp")
     open_orders = orders.filter(F.col("o_orderdate") < cut).join(
         F.broadcast(
-            customer.filter(F.col("c_mktsegment") == segment).select("c_custkey")
+            customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
         ),
         orders["o_custkey"] == F.col("c_custkey"),
     )
@@ -85,7 +80,7 @@ def shipping_priority(
         )
         .agg(F.round(F.sum(revenue), 2).cast("double").alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -95,10 +90,6 @@ def volume_shipping(
     customer: DataFrame,
     supplier: DataFrame,
     nation: DataFrame,
-    nation_a: str = "NATION_1",
-    nation_b: str = "NATION_2",
-    date_from: str = "1995-01-01",
-    date_to: str = "1997-01-01",
 ) -> DataFrame:
     """TPC-H Q7 shape: shipping volume between two nations by year.
 
@@ -109,10 +100,10 @@ def volume_shipping(
     vol = _dec("l_extendedprice") * (F.lit(1).cast(_D) - _dec("l_discount"))
     n1 = nation.select(
         F.col("n_nationkey").alias("s_nationkey"), F.col("n_name").alias("supp_nation")
-    ).filter(F.col("supp_nation").isin(nation_a, nation_b))
+    ).filter(F.col("supp_nation").isin("NATION_1", "NATION_2"))
     n2 = nation.select(
         F.col("n_nationkey").alias("c_nationkey"), F.col("n_name").alias("cust_nation")
-    ).filter(F.col("cust_nation").isin(nation_a, nation_b))
+    ).filter(F.col("cust_nation").isin("NATION_1", "NATION_2"))
     supp = supplier.join(F.broadcast(n1), "s_nationkey").select(
         "s_suppkey", "supp_nation"
     )
@@ -124,14 +115,20 @@ def volume_shipping(
     )
     return (
         lineitem.filter(
-            (F.col("l_shipdate") >= F.lit(date_from).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(date_to).cast("timestamp"))
+            (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
         )
         .join(F.broadcast(supp), lineitem["l_suppkey"] == supp["s_suppkey"])
         .join(ord_c, lineitem["l_orderkey"] == ord_c["o_orderkey"])
         .filter(
-            ((F.col("supp_nation") == nation_a) & (F.col("cust_nation") == nation_b))
-            | ((F.col("supp_nation") == nation_b) & (F.col("cust_nation") == nation_a))
+            (
+                (F.col("supp_nation") == "NATION_1")
+                & (F.col("cust_nation") == "NATION_2")
+            )
+            | (
+                (F.col("supp_nation") == "NATION_2")
+                & (F.col("cust_nation") == "NATION_1")
+            )
         )
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(F.round(F.sum(vol), 2).cast("double").alias("revenue"))
@@ -139,21 +136,15 @@ def volume_shipping(
 
 
 def returned_item_report(
-    customer: DataFrame,
-    orders: DataFrame,
-    lineitem: DataFrame,
-    nation: DataFrame,
-    date_from: str = "1996-01-01",
-    date_to: str = "1996-04-01",
-    k: int = 20,
+    customer: DataFrame, orders: DataFrame, lineitem: DataFrame, nation: DataFrame
 ) -> DataFrame:
     """TPC-H Q10 shape: top-k customers by revenue lost to returned items in
     a quarter. Broadcast nation; orders date filter pushes to the scan;
     deterministic top-k tiebreak on custkey."""
     rev = _dec("l_extendedprice") * (F.lit(1).cast(_D) - _dec("l_discount"))
     ord_f = orders.filter(
-        (F.col("o_orderdate") >= F.lit(date_from).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(date_to).cast("timestamp"))
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
     returned = lineitem.filter(F.col("l_returnflag") == "R").select(
         "l_orderkey", rev.alias("rev")
@@ -168,24 +159,18 @@ def returned_item_report(
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(F.round(F.sum("rev"), 2).cast("double").alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(k)
+        .limit(20)
     )
 
 
-def promo_revenue_share(
-    lineitem: DataFrame,
-    part: DataFrame,
-    date_from: str = "1996-03-01",
-    date_to: str = "1996-04-01",
-    promo_type: str = "PROMO",
-) -> DataFrame:
+def promo_revenue_share(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """TPC-H Q14 shape: promotional revenue share for one month — part
     broadcast into the date-filtered lineitem scan, conditional + total sums
     in one aggregate, ratio at the edge."""
     rev = _dec("l_extendedprice") * (F.lit(1).cast(_D) - _dec("l_discount"))
     joined = lineitem.filter(
-        (F.col("l_shipdate") >= F.lit(date_from).cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit(date_to).cast("timestamp"))
+        (F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     ).join(
         F.broadcast(part.select("p_partkey", "p_type")),
         lineitem["l_partkey"] == F.col("p_partkey"),
@@ -193,7 +178,7 @@ def promo_revenue_share(
     return joined.agg(
         F.round(
             F.lit(100.0)
-            * F.sum(F.when(F.col("p_type") == promo_type, rev).otherwise(F.lit(0).cast(_D))).cast("double")
+            * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast(_D))).cast("double")
             / F.sum(rev).cast("double"),
             6,
         ).alias("promo_revenue_pct")
@@ -201,11 +186,7 @@ def promo_revenue_share(
 
 
 def large_volume_customers(
-    customer: DataFrame,
-    orders: DataFrame,
-    lineitem: DataFrame,
-    min_qty_sum: float = 250.0,
-    k: int = 100,
+    customer: DataFrame, orders: DataFrame, lineitem: DataFrame
 ) -> DataFrame:
     """TPC-H Q18 shape: customers whose single orders exceed a quantity
     threshold — aggregate-filter on lineitem produces the (tiny) qualifying
@@ -213,7 +194,7 @@ def large_volume_customers(
     big = (
         lineitem.groupBy("l_orderkey")
         .agg(F.round(F.sum(_dec("l_quantity")), 2).cast("double").alias("sum_qty"))
-        .filter(F.col("sum_qty") > min_qty_sum)
+        .filter(F.col("sum_qty") > 250.0)
     )
     return (
         orders.join(F.broadcast(big), orders["o_orderkey"] == big["l_orderkey"])
@@ -227,7 +208,7 @@ def large_volume_customers(
             "sum_qty",
         )
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-        .limit(k)
+        .limit(100)
     )
 
 
@@ -250,20 +231,15 @@ def customer_order_distribution(
     )
 
 
-def top_supplier(
-    lineitem: DataFrame,
-    supplier: DataFrame,
-    date_from: str = "1996-01-01",
-    date_to: str = "1996-04-01",
-) -> DataFrame:
+def top_supplier(lineitem: DataFrame, supplier: DataFrame) -> DataFrame:
     """TPC-H Q15 shape: supplier(s) with the maximum quarterly revenue — the
     revenue aggregate self-joins against its own max (a one-row broadcast),
     keeping ties like the spec's subquery formulation."""
     rev = _dec("l_extendedprice") * (F.lit(1).cast(_D) - _dec("l_discount"))
     by_supp = (
         lineitem.filter(
-            (F.col("l_shipdate") >= F.lit(date_from).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(date_to).cast("timestamp"))
+            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
         )
         .groupBy("l_suppkey")
         .agg(F.round(F.sum(rev), 2).cast("double").alias("total_revenue"))
@@ -278,13 +254,7 @@ def top_supplier(
     )
 
 
-def order_priority_check(
-    orders: DataFrame,
-    lineitem: DataFrame,
-    date_from: str = "1996-01-01",
-    date_to: str = "1996-07-01",
-    returnflag: str = "R",
-) -> DataFrame:
+def order_priority_check(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """TPC-H Q4 shape: order counts by priority for orders in a date window
     having at least one qualifying lineitem (EXISTS → left-semi join).
 
@@ -292,13 +262,13 @@ def order_priority_check(
     predicate is 'has a returned item' — the plan shape is Q4's: pushed-down
     date filter on orders, distinct-key semi join, 5-value groupBy.)
     """
-    qualifying = lineitem.filter(F.col("l_returnflag") == returnflag).select(
+    qualifying = lineitem.filter(F.col("l_returnflag") == "R").select(
         F.col("l_orderkey").alias("o_orderkey")
     )
     return (
         orders.filter(
-            (F.col("o_orderdate") >= F.lit(date_from).cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(date_to).cast("timestamp"))
+            (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
         )
         .join(qualifying, on="o_orderkey", how="left_semi")
         .groupBy("o_orderpriority")
@@ -306,25 +276,18 @@ def order_priority_check(
     )
 
 
-def forecast_revenue_change(
-    lineitem: DataFrame,
-    date_from: str = "1996-01-01",
-    date_to: str = "1997-01-01",
-    discount_lo: float = 0.05,
-    discount_hi: float = 0.07,
-    max_qty: float = 24.0,
-) -> DataFrame:
+def forecast_revenue_change(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q6: one-row filtered aggregate — the pure pushdown showcase.
     Every predicate (shipdate range, discount band, quantity cap) reaches the
     parquet scan; the aggregate is a map-side partial over decimal (exact)."""
     rev = _dec("l_extendedprice") * _dec("l_discount")
     return (
         lineitem.filter(
-            (F.col("l_shipdate") >= F.lit(date_from).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(date_to).cast("timestamp"))
-            & (F.col("l_discount") >= discount_lo)
-            & (F.col("l_discount") <= discount_hi)
-            & (F.col("l_quantity") < max_qty)
+            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
+            & (F.col("l_discount") >= 0.05)
+            & (F.col("l_discount") <= 0.07)
+            & (F.col("l_quantity") < 24.0)
         )
         .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
     )
@@ -337,9 +300,6 @@ def local_supplier_volume(
     supplier: DataFrame,
     nation: DataFrame,
     region: DataFrame,
-    region_name: str = "ASIA",
-    date_from: str = "1996-01-01",
-    date_to: str = "1997-01-01",
 ) -> DataFrame:
     """TPC-H Q5 shape: revenue by nation where customer and supplier share
     the nation, within one region and order-date year.
@@ -350,7 +310,7 @@ def local_supplier_volume(
     """
     revenue = _dec("l_extendedprice") * (F.lit(1).cast(_D) - _dec("l_discount"))
     nr = nation.join(
-        F.broadcast(region.filter(F.col("r_name") == region_name)),
+        F.broadcast(region.filter(F.col("r_name") == "ASIA")),
         nation["n_regionkey"] == F.col("r_regionkey"),
     ).select("n_nationkey", "n_name")
     cust = customer.join(
@@ -358,8 +318,8 @@ def local_supplier_volume(
     ).select("c_custkey", F.col("c_nationkey").alias("cust_nation"), "n_name")
     supp = supplier.select("s_suppkey", F.col("s_nationkey").alias("supp_nation"))
     ord_f = orders.filter(
-        (F.col("o_orderdate") >= F.lit(date_from).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(date_to).cast("timestamp"))
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
     return (
         lineitem.select("l_orderkey", "l_suppkey", revenue.alias("rev"))
@@ -390,10 +350,6 @@ def min_cost_supplier(
     supplier: DataFrame,
     nation: DataFrame,
     region: DataFrame,
-    region_name: str = "EUROPE",
-    p_type: str = "LARGE",
-    max_size: int = 15,
-    k: int = 100,
 ) -> DataFrame:
     """TPC-H Q2 shape: for each qualifying part, the supplier(s) offering it
     at the minimum cost within a region (partsupp → the observed
@@ -408,13 +364,13 @@ def min_cost_supplier(
     after the cut instead of the full offer set.
     """
     parts = part.filter(
-        (F.col("p_type") == p_type) & (F.col("p_size") <= max_size)
+        (F.col("p_type") == "LARGE") & (F.col("p_size") <= 15)
     ).select("p_partkey", "p_name")
     supp_region = (
         supplier.join(
             F.broadcast(
                 nation.join(
-                    F.broadcast(region.filter(F.col("r_name") == region_name)),
+                    F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
                     nation["n_regionkey"] == F.col("r_regionkey"),
                 ).select("n_nationkey", "n_name")
             ),
@@ -450,7 +406,7 @@ def min_cost_supplier(
             F.col("cost").cast("double").alias("min_supplycost"),
         )
         .orderBy(F.col("s_acctbal").desc(), F.col("p_partkey").asc(), F.col("s_suppkey").asc())
-        .limit(k)
+        .limit(100)
     )
 
 
@@ -462,11 +418,6 @@ def national_market_share(
     part: DataFrame,
     nation: DataFrame,
     region: DataFrame,
-    target_nation: str = "NATION_3",
-    region_name: str = "ASIA",
-    p_type: str = "STANDARD",
-    date_from: str = "1995-01-01",
-    date_to: str = "1997-01-01",
 ) -> DataFrame:
     """TPC-H Q8 shape: the target nation's share of revenue for one product
     type sold into one region's market, by order year.
@@ -477,7 +428,7 @@ def national_market_share(
     one aggregate — no second pass.
     """
     vol = _dec("l_extendedprice") * (F.lit(1).cast(_D) - _dec("l_discount"))
-    parts = part.filter(F.col("p_type") == p_type).select("p_partkey")
+    parts = part.filter(F.col("p_type") == "STANDARD").select("p_partkey")
     supp_n = supplier.join(
         F.broadcast(
             nation.select(
@@ -489,7 +440,7 @@ def national_market_share(
     cust_region = customer.join(
         F.broadcast(
             nation.join(
-                F.broadcast(region.filter(F.col("r_name") == region_name)),
+                F.broadcast(region.filter(F.col("r_name") == "ASIA")),
                 nation["n_regionkey"] == F.col("r_regionkey"),
             ).select("n_nationkey")
         ),
@@ -497,8 +448,8 @@ def national_market_share(
     ).select("c_custkey")
     ord_f = (
         orders.filter(
-            (F.col("o_orderdate") >= F.lit(date_from).cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(date_to).cast("timestamp"))
+            (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
+            & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
         )
         .join(F.broadcast(cust_region), orders["o_custkey"] == F.col("c_custkey"), "left_semi")
         .select("o_orderkey", F.year("o_orderdate").alias("o_year"))
@@ -511,7 +462,7 @@ def national_market_share(
         .agg(
             F.round(
                 F.sum(
-                    F.when(F.col("supp_nation") == target_nation, vol).otherwise(
+                    F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(
                         F.lit(0).cast(_D)
                     )
                 ).cast("double")
@@ -528,7 +479,6 @@ def product_type_profit(
     supplier: DataFrame,
     part: DataFrame,
     nation: DataFrame,
-    name_prefix: str = "red",
 ) -> DataFrame:
     """TPC-H Q9 shape: profit by supplier nation and order year for parts
     whose name matches a pattern (ps_supplycost → p_retailprice × quantity,
@@ -540,7 +490,7 @@ def product_type_profit(
     amount = _dec("l_extendedprice") * (F.lit(1).cast(_D) - _dec("l_discount")) - _dec(
         "p_retailprice"
     ) * _dec("l_quantity")
-    parts = part.filter(F.col("p_name").startswith(name_prefix)).select(
+    parts = part.filter(F.col("p_name").startswith("red")).select(
         "p_partkey", "p_retailprice"
     )
     supp_n = supplier.join(
@@ -562,11 +512,7 @@ def product_type_profit(
 
 
 def important_part_value(
-    lineitem: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    nation_name: str = "NATION_5",
-    fraction: float = 0.001,
+    lineitem: DataFrame, supplier: DataFrame, nation: DataFrame
 ) -> DataFrame:
     """TPC-H Q11 shape: parts whose revenue through one nation's suppliers
     exceeds a fraction of that nation's total (partsupp value → revenue
@@ -580,7 +526,7 @@ def important_part_value(
     vol = _dec("l_extendedprice") * (F.lit(1).cast(_D) - _dec("l_discount"))
     nation_supp = supplier.join(
         F.broadcast(
-            nation.filter(F.col("n_name") == nation_name).select("n_nationkey")
+            nation.filter(F.col("n_name") == "NATION_5").select("n_nationkey")
         ),
         supplier["s_nationkey"] == F.col("n_nationkey"),
         "left_semi",
@@ -595,7 +541,7 @@ def important_part_value(
         .agg(F.sum(vol).alias("value_dec"))
     )
     total = per_part.agg(
-        (F.sum("value_dec").cast("double") * F.lit(fraction)).alias("threshold")
+        (F.sum("value_dec").cast("double") * F.lit(0.001)).alias("threshold")
     )
     return (
         per_part.join(F.broadcast(total))
@@ -604,13 +550,7 @@ def important_part_value(
     )
 
 
-def late_shipment_priority(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    min_days_late: int = 90,
-    date_from: str = "1996-01-01",
-    date_to: str = "1997-01-01",
-) -> DataFrame:
+def late_shipment_priority(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     """TPC-H Q12 shape: per shipping class, how many high- vs low-priority
     orders shipped late (shipmode → l_returnflag, the only line-level
     category; receipt-vs-commit lateness → shipdate more than N days after
@@ -620,13 +560,13 @@ def late_shipment_priority(
     fold into a single aggregate pass exactly like the spec query.
     """
     late = lineitem.filter(
-        (F.col("l_shipdate") >= F.lit(date_from).cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit(date_to).cast("timestamp"))
+        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     joined = late.join(
         orders.select("o_orderkey", "o_orderdate", "o_orderpriority"),
         late["l_orderkey"] == F.col("o_orderkey"),
-    ).filter(F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > min_days_late)
+    ).filter(F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > 90)
     is_high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return joined.groupBy("l_returnflag").agg(
         F.sum(F.when(is_high, 1).otherwise(0)).alias("high_line_count"),
@@ -635,12 +575,7 @@ def late_shipment_priority(
 
 
 def parts_supplier_relationship(
-    lineitem: DataFrame,
-    part: DataFrame,
-    supplier: DataFrame,
-    excluded_brand: str = "Brand#5",
-    excluded_type: str = "PROMO",
-    sizes: tuple = (1, 4, 7, 10, 13, 16, 19, 22),
+    lineitem: DataFrame, part: DataFrame, supplier: DataFrame
 ) -> DataFrame:
     """TPC-H Q16 shape: distinct supplier count per (brand, type, size) for
     qualifying parts, excluding suppliers from a denylist built by a
@@ -651,9 +586,9 @@ def parts_supplier_relationship(
     (brand, type, size) grouping key with partial distinct map-side.
     """
     parts = part.filter(
-        (F.col("p_brand") != excluded_brand)
-        & (F.col("p_type") != excluded_type)
-        & (F.col("p_size").isin(*sizes))
+        (F.col("p_brand") != "Brand#5")
+        & (F.col("p_type") != "PROMO")
+        & (F.col("p_size").isin(1, 4, 7, 10, 13, 16, 19, 22))
     ).select("p_partkey", "p_brand", "p_type", "p_size")
     bad_supp = supplier.filter(F.col("s_acctbal") < 0).select("s_suppkey")
     return (
@@ -665,13 +600,7 @@ def parts_supplier_relationship(
     )
 
 
-def small_quantity_revenue(
-    lineitem: DataFrame,
-    part: DataFrame,
-    brand: str = "Brand#3",
-    p_type: str = "SMALL",
-    qty_fraction: float = 0.2,
-) -> DataFrame:
+def small_quantity_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """TPC-H Q17 shape: average yearly revenue lost if small-quantity orders
     were not taken — lineitem rows under 20% of their part's average
     quantity (container filter → p_type).
@@ -682,7 +611,7 @@ def small_quantity_revenue(
     the edge so both engines derive the identical double threshold.
     """
     parts = part.filter(
-        (F.col("p_brand") == brand) & (F.col("p_type") == p_type)
+        (F.col("p_brand") == "Brand#3") & (F.col("p_type") == "SMALL")
     ).select("p_partkey")
     li_parts = lineitem.join(
         F.broadcast(parts), lineitem["l_partkey"] == parts["p_partkey"], "left_semi"
@@ -692,7 +621,7 @@ def small_quantity_revenue(
     )
     return (
         li_parts.join(F.broadcast(per_part_avg), li_parts["l_partkey"] == F.col("a_partkey"))
-        .filter(F.col("l_quantity") < F.lit(qty_fraction) * F.col("avg_qty"))
+        .filter(F.col("l_quantity") < F.lit(0.2) * F.col("avg_qty"))
         .agg(
             F.round(F.sum(_dec("l_extendedprice")).cast("double") / F.lit(7.0), 2).alias(
                 "avg_yearly"
@@ -738,13 +667,7 @@ def discounted_brand_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
 
 
 def excess_shipping_suppliers(
-    lineitem: DataFrame,
-    part: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    name_prefix: str = "red",
-    min_qty: float = 100.0,
-    nation_name: str = "NATION_7",
+    lineitem: DataFrame, part: DataFrame, supplier: DataFrame, nation: DataFrame
 ) -> DataFrame:
     """TPC-H Q20 shape: suppliers in one nation who moved more than a
     threshold quantity of a name-matched part family (availqty-vs-shipped →
@@ -754,18 +677,20 @@ def excess_shipping_suppliers(
     aggregate (keyed shuffle) feeds a distinct supplier set that semi-joins
     into the nation-filtered supplier dim.
     """
-    parts = part.filter(F.col("p_name").startswith(name_prefix)).select("p_partkey")
+    parts = part.filter(F.col("p_name").startswith("red")).select("p_partkey")
     heavy = (
         lineitem.join(F.broadcast(parts), lineitem["l_partkey"] == parts["p_partkey"], "left_semi")
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(_dec("l_quantity")).alias("qty"))
-        .filter(F.col("qty").cast("double") > min_qty)
+        .filter(F.col("qty").cast("double") > 100.0)
         .select("l_suppkey")
         .distinct()
     )
     return (
         supplier.join(
-            F.broadcast(nation.filter(F.col("n_name") == nation_name).select("n_nationkey")),
+            F.broadcast(
+                nation.filter(F.col("n_name") == "NATION_7").select("n_nationkey")
+            ),
             supplier["s_nationkey"] == F.col("n_nationkey"),
             "left_semi",
         )
@@ -775,12 +700,7 @@ def excess_shipping_suppliers(
 
 
 def waiting_orders_suppliers(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    nation_name: str = "NATION_2",
-    k: int = 100,
+    lineitem: DataFrame, orders: DataFrame, supplier: DataFrame, nation: DataFrame
 ) -> DataFrame:
     """TPC-H Q21 shape: suppliers in one nation who were the ONLY supplier
     with a returned line in a finished multi-supplier order (late-delivery
@@ -800,7 +720,7 @@ def waiting_orders_suppliers(
         ).alias("n_bad_supp"),
     )
     nation_supp = supplier.join(
-        F.broadcast(nation.filter(F.col("n_name") == nation_name).select("n_nationkey")),
+        F.broadcast(nation.filter(F.col("n_name") == "NATION_2").select("n_nationkey")),
         supplier["s_nationkey"] == F.col("n_nationkey"),
         "left_semi",
     ).select("s_suppkey", "s_name")
@@ -818,16 +738,11 @@ def waiting_orders_suppliers(
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.col("numwait").desc(), F.col("s_name").asc())
-        .limit(k)
+        .limit(100)
     )
 
 
-def global_sales_opportunity(
-    customer: DataFrame,
-    orders: DataFrame,
-    segments: tuple = ("BUILDING", "AUTOMOBILE", "MACHINERY"),
-    order_cutoff: str = "2000-01-01",
-) -> DataFrame:
+def global_sales_opportunity(customer: DataFrame, orders: DataFrame) -> DataFrame:
     """TPC-H Q22 shape: well-funded customers in chosen segments with no
     recent orders (phone country code → market segment; "no orders" → no
     orders on/after the cutoff, since every synthetic customer has some
@@ -837,12 +752,14 @@ def global_sales_opportunity(
     count → identical double on any engine); NOT EXISTS is a broadcast
     anti-join against the date-filtered order keys.
     """
-    seg = customer.filter(F.col("c_mktsegment").isin(*segments))
+    seg = customer.filter(
+        F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE", "MACHINERY")
+    )
     avg_bal = seg.filter(F.col("c_acctbal") > 0).agg(
         (F.sum(_dec("c_acctbal")).cast("double") / F.count(F.lit(1))).alias("avg_bal")
     )
     recent = orders.filter(
-        F.col("o_orderdate") >= F.lit(order_cutoff).cast("timestamp")
+        F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     ).select("o_custkey")
     return (
         seg.join(F.broadcast(avg_bal))
@@ -856,7 +773,7 @@ def global_sales_opportunity(
     )
 
 
-def daily_revenue_moving_avg(orders: DataFrame, window_days: int = 7) -> DataFrame:
+def daily_revenue_moving_avg(orders: DataFrame) -> DataFrame:
     """Trailing N-day moving average of daily order revenue over existing
     days only — identical to a RANGE ``-(N-1)..0`` frame on the day number.
 
@@ -877,7 +794,7 @@ def daily_revenue_moving_avg(orders: DataFrame, window_days: int = 7) -> DataFra
     dn = F.unix_date(F.col("day"))
     contrib = daily.select(
         F.explode(
-            F.sequence(dn, dn + F.lit(int(window_days) - 1))
+            F.sequence(dn, dn + F.lit(6))
         ).alias("__target"),
         F.col("rev_dec").alias("__rev"),
     )

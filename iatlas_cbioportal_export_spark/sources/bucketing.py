@@ -33,8 +33,6 @@ def write_bucketed(
     bucket_cols: list[str],
     num_buckets: int,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
 ) -> None:
     """Persist ``df`` as a bucketed (+ optionally sorted) catalog table.
 
@@ -42,18 +40,16 @@ def write_bucketed(
     merge (no per-task sort); sorting on a secondary column instead serves
     bucket-pruned range scans.
     """
-    writer = df.write.format(fmt).mode(mode).bucketBy(num_buckets, *bucket_cols)
+    writer = (
+        df.write.format("parquet").mode("overwrite").bucketBy(num_buckets, *bucket_cols)
+    )
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
 
 
 def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: list[str],
-    how: str = "inner",
+    spark: SparkSession, left_table: str, right_table: str, on: list[str]
 ) -> DataFrame:
     """Join two same-bucketed catalog tables on their bucket key.
 
@@ -62,7 +58,7 @@ def bucketed_join(
     the join cost collapses to a co-located per-bucket merge, the plan you
     want for repeated fact-fact joins at 100 TB.
     """
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
+    return spark.table(left_table).join(spark.table(right_table), on=on, how="inner")
 
 
 def plan_has_no_exchange(df: DataFrame) -> bool:

@@ -148,29 +148,24 @@ def read_jsonl_tracked(
     return good, bad
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """JSON-lines sink (one object per line, the LLM-corpus interchange
     format). Distributed write — one file per partition."""
     with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
-        df.write.mode(mode).json(path)
+        df.write.mode("overwrite").json(path)
 
 
-def read_orc(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
+def read_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC scan. Columnar like parquet (column pruning + predicate pushdown
-    reach the scan); schema optional because ORC carries its own."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
+    reach the scan); ORC carries its own schema."""
     with job_label(spark, f"read {os.path.basename(path)}"):
-        return reader.orc(path)
+        return spark.read.orc(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink — the interchange format for Hive-ecosystem consumers."""
     with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
-        df.write.mode(mode).orc(path)
+        df.write.mode("overwrite").orc(path)
 
 
 def read_xml(
@@ -194,22 +189,18 @@ def read_xml(
         return reader.xml(path)
 
 
-def write_xml(
-    df: DataFrame, path: str, row_tag: str, mode: str = "overwrite"
-) -> None:
+def write_xml(df: DataFrame, path: str, row_tag: str) -> None:
     """XML sink — one ``<row_tag>`` element per row, one file per
     partition. Interchange with XML-expecting consumers (clinical-data
     registries, legacy ETL); not a storage format."""
     with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
-        df.write.mode(mode).option("rowTag", row_tag).xml(path)
+        df.write.mode("overwrite").option("rowTag", row_tag).xml(path)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load the driver's parquet testdata tables as lazy DataFrames."""
     with job_label(spark, "read testdata tables"):
         return {
             name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-            for name in names
+            for name in TESTDATA_TABLES
         }

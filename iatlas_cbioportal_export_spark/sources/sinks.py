@@ -216,45 +216,14 @@ def write_cbioportal_clinical(
     return _concat_csv_parts(tmp, path, header_lines)
 
 
-def write_partitioned_datasets(
-    df: DataFrame, path: str, partition_col: str = "Dataset", mode: str = "overwrite"
-) -> None:
+def write_partitioned_datasets(df: DataFrame, path: str) -> None:
     """P3 at scale: ONE pass writing every dataset slice under
-    ``{path}/{partition_col}=<value>/`` — replaces the reference's 23-iteration
+    ``{path}/Dataset=<value>/`` — replaces the reference's 23-iteration
     per-dataset filter loop (``clinical.py:922-950``) with a single
     ``partitionBy`` write, and makes every later ``Dataset == d`` filter a
     partition-pruned scan instead of a full read."""
     with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
-        df.write.mode(mode).partitionBy(partition_col).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_cols: Iterable[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a table bucketed (and optionally sorted) by the join/agg key.
-
-    Single-key convenience wrapper over
-    :func:`iatlas_cbioportal_export_spark.sources.bucketing.write_bucketed`
-    (the canonical multi-column form — see that module for the co-location
-    rationale and bucket sizing guidance).
-    """
-    from iatlas_cbioportal_export_spark.sources.bucketing import (
-        write_bucketed as _write_bucketed,
-    )
-
-    _write_bucketed(
-        df,
-        table,
-        [bucket_col],
-        num_buckets,
-        list(sort_cols) if sort_cols else None,
-        mode=mode,
-    )
+        df.write.mode("overwrite").partitionBy("Dataset").parquet(path)
 
 
 def render_case_list_text(

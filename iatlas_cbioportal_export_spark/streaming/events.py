@@ -12,14 +12,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def stream_events_from_parquet(
-    spark: SparkSession, path: str, schema=None
-) -> DataFrame:
-    """File-source stream over an events parquet directory. With
-    ``Trigger.AvailableNow`` this processes the backlog incrementally and
-    stops — the pattern for backfill-then-tail pipelines."""
-    if schema is None:
-        schema = spark.read.parquet(path).schema
+def stream_events_from_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over an events parquet directory, with the schema
+    the directory's files carry. With ``Trigger.AvailableNow`` this
+    processes the backlog incrementally and stops — the pattern for
+    backfill-then-tail pipelines."""
+    schema = spark.read.parquet(path).schema
     return spark.readStream.schema(schema).parquet(path)
 
 
@@ -66,11 +64,7 @@ def hourly_event_counts_batch(events: DataFrame) -> DataFrame:
     )
 
 
-def annotate_maf_stream(
-    spark: SparkSession,
-    maf_parquet_dir: str,
-    annotator=None,
-) -> DataFrame:
+def annotate_maf_stream(spark: SparkSession, maf_parquet_dir: str) -> DataFrame:
     """Streaming variant of the §3.2 MAF annotation path: a file-source
     stream of variant rows fanned through the same ``mapInPandas`` annotation
     stage used in batch (operators/maf.py), chrM-filtered downstream.
@@ -80,46 +74,32 @@ def annotate_maf_stream(
     replaces the reference's process pool exactly as in batch — the operator
     code is IDENTICAL because mapInPandas is stream/batch agnostic.
     """
-    from iatlas_cbioportal_export_spark.operators.maf import (
-        annotate,
-        drop_chrm,
-        fake_annotator,
-    )
+    from iatlas_cbioportal_export_spark.operators.maf import annotate, drop_chrm
 
     schema = spark.read.parquet(maf_parquet_dir).schema
     stream = spark.readStream.schema(schema).parquet(maf_parquet_dir)
-    return drop_chrm(annotate(stream, annotator=annotator or fake_annotator))
+    return drop_chrm(annotate(stream))
 
 
-def dedup_events(
-    events: DataFrame,
-    key_cols: tuple[str, ...] = ("user_id", "event_type"),
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def dedup_events(events: DataFrame) -> DataFrame:
     """Streaming exact dedup — the continuous-ingestion form of the exact
     dedup tier: on a stream, ``dropDuplicatesWithinWatermark`` keeps ONE row
-    per key with state bounded by the watermark (keys older than the
-    watermark are evicted, so state never grows unboundedly — the difference
-    from plain streaming ``dropDuplicates``, whose state is forever); on a
-    batch frame the same call site is a plain ``dropDuplicates``.
-    Stream/batch agnostic like :func:`hourly_event_counts`; the stream==batch
+    per (user_id, event_type) with state bounded by a 1-hour watermark on
+    ``ts`` (keys older than the watermark are evicted, so state never grows
+    unboundedly — the difference from plain streaming ``dropDuplicates``,
+    whose state is forever); on a batch frame the same call site is a
+    plain ``dropDuplicates``. Stream/batch agnostic like :func:`hourly_event_counts`; the stream==batch
     key-set equality is tested.
     """
-    keys = list(key_cols)
+    keys = ["user_id", "event_type"]
     if events.isStreaming:
-        return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
             keys
         )
     return events.dropDuplicates(keys)
 
 
-def sessionize_stream(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """STREAMING gap sessionization via ``applyInPandasWithState`` — the
     custom stateful operator of the streaming extension (SURVEY.md §2.8).
 
@@ -132,7 +112,7 @@ def sessionize_stream(
     stays open until timeout (tested against the batch twin).
 
     Scale: state is 3 longs per ACTIVE user (bounded by the timeout), and
-    each micro-batch shuffles once on ``user_col``.
+    each micro-batch shuffles once on ``user_id``.
     """
     import pandas as pd
 
@@ -140,7 +120,7 @@ def sessionize_stream(
 
     gap_sec = gap_minutes * 60
     out_schema = (
-        f"{user_col} long, session_start timestamp, session_end timestamp, "
+        "user_id long, session_start timestamp, session_end timestamp, "
         "n_events long"
     )
     state_schema = "start long, end long, n long"
@@ -151,7 +131,7 @@ def sessionize_stream(
         def emit(rows):
             return pd.DataFrame(
                 {
-                    user_col: [uid] * len(rows),
+                    "user_id": [uid] * len(rows),
                     "session_start": [pd.to_datetime(s, unit="s") for s, _, _ in rows],
                     "session_end": [pd.to_datetime(e, unit="s") for _, e, _ in rows],
                     "n_events": [n for _, _, n in rows],
@@ -166,7 +146,7 @@ def sessionize_stream(
         ts_all = sorted(
             t.timestamp()
             for pdf in pdf_iter
-            for t in pdf[ts_col]
+            for t in pdf["ts"]
             if t is not None and t == t  # drop NaT
         )
         start, end, n = state.get if state.exists else (None, None, 0)
@@ -185,7 +165,7 @@ def sessionize_stream(
             state.update((int(start), int(end), n))
             state.setTimeoutDuration(gap_sec * 1000)
 
-    return events.groupBy(user_col).applyInPandasWithState(
+    return events.groupBy("user_id").applyInPandasWithState(
         fn,
         out_schema,
         state_schema,
@@ -194,9 +174,7 @@ def sessionize_stream(
     )
 
 
-def sessionize(
-    events: DataFrame, gap_minutes: int = 30, user_col: str = "user_id", ts_col: str = "ts"
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Gap-based sessionization (batch): a new session starts when the gap
     since the user's previous event exceeds ``gap_minutes``.
 
@@ -206,13 +184,13 @@ def sessionize(
     Output: one row per session: (user_id, session_id, n_events,
     session_start, session_end).
     """
-    w_user = Window.partitionBy(user_col).orderBy(ts_col)
+    w_user = Window.partitionBy("user_id").orderBy("ts")
     gap_sec = gap_minutes * 60
     # timestamp_ntz cannot cast directly to long (Spark 4 forbids it); going
     # through "timestamp" first works for both ntz and ltz inputs (the ntz →
     # ltz cast interprets wall time in the session zone — pinned to UTC by
     # the callers' _ensure_session_confs, so this equals DuckDB's epoch()).
-    epoch_sec = F.col(ts_col).cast("timestamp").cast("long")
+    epoch_sec = F.col("ts").cast("timestamp").cast("long")
     with_breaks = events.withColumn(
         "__new_session",
         F.when(
@@ -227,32 +205,26 @@ def sessionize(
         ),
     )
     return (
-        with_breaks.groupBy(user_col, F.col("__session_seq").alias("session_id"))
+        with_breaks.groupBy("user_id", F.col("__session_seq").alias("session_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.date_format(F.min(ts_col), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format(F.max(ts_col), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
+            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
         )
     )
 
 
 def sliding_event_counts(
-    events: DataFrame,
-    window_minutes: int = 60,
-    slide_minutes: int = 15,
-    watermark: str | None = None,
+    events: DataFrame, window_minutes: int = 60, slide_minutes: int = 15
 ) -> DataFrame:
     """SLIDING-window event counts (window > slide ⇒ each event lands in
     window/slide overlapping windows — the trend-smoothing shape fixed
-    windows can't express). Works on streaming input with a watermark;
-    Spark expands each row into its window set map-side, so the shuffle
+    windows can't express). Works on streaming or batch input; Spark
+    expands each row into its window set map-side, so the shuffle
     carries (window, key) pairs, not per-window copies of the payload.
     Output: (window_start, event_type, n_events)."""
-    df = events
-    if df.isStreaming and watermark:
-        df = df.withWatermark("ts", watermark)
     return (
-        df.groupBy(
+        events.groupBy(
             F.window("ts", f"{window_minutes} minutes", f"{slide_minutes} minutes").alias(
                 "__w"
             ),
@@ -269,13 +241,7 @@ def sliding_event_counts(
     )
 
 
-def enrich_events(
-    events: DataFrame,
-    dim: DataFrame,
-    events_key: str = "user_id",
-    dim_key: str = "c_custkey",
-    dim_cols: tuple[str, ...] = ("c_mktsegment",),
-) -> DataFrame:
+def enrich_events(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment join: attach dimension attributes to an
     event stream. Works identically on streaming and batch input — with a
     streaming left side Spark re-broadcasts the static dimension per
@@ -283,9 +249,9 @@ def enrich_events(
     shape next to batch-batch and stream-stream). The dimension is
     explicitly broadcast: enrichment dims are small by definition and the
     fact/stream side must never shuffle for them."""
-    sel = dim.select(F.col(dim_key).alias("__k"), *dim_cols)
+    sel = dim.select(F.col("c_custkey").alias("__k"), "c_mktsegment")
     return events.join(
-        F.broadcast(sel), events[events_key] == F.col("__k"), "left"
+        F.broadcast(sel), events["user_id"] == F.col("__k"), "left"
     ).drop("__k")
 
 
@@ -315,12 +281,7 @@ def segment_hourly_counts(
     )
 
 
-def sessionize_session_window(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def sessionize_session_window(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Gap sessionization via the BUILT-IN ``session_window`` — the
     streaming-native form of :func:`sessionize`: on a streaming input (with
     a watermark) Spark maintains per-key session state and merges windows
@@ -334,43 +295,38 @@ def sessionize_session_window(
     bounds, not a per-user sequence number).
     Output: (user_id, n_events, session_start, session_end).
     """
-    win = F.session_window(F.col(ts_col), f"{gap_minutes} minutes")
+    win = F.session_window(F.col("ts"), f"{gap_minutes} minutes")
     return (
-        events.groupBy(F.col(user_col), win.alias("__w"))
+        events.groupBy(F.col("user_id"), win.alias("__w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.date_format(F.min(ts_col), "yyyy-MM-dd HH:mm:ss").alias(
+            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias(
                 "session_start"
             ),
-            F.date_format(F.max(ts_col), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
+            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
         )
-        .select(user_col, "n_events", "session_start", "session_end")
+        .select("user_id", "n_events", "session_start", "session_end")
     )
 
 
-def attribute_purchases(
-    events: DataFrame,
-    attribution_minutes: int = 30,
-    watermark: str = "1 hour",
-) -> DataFrame:
+def attribute_purchases(events: DataFrame) -> DataFrame:
     """Click→purchase attribution: every purchase joined to each click by
-    the same user within the preceding ``attribution_minutes``.
+    the same user within the preceding 30 minutes.
 
     Stream/batch agnostic, like :func:`hourly_event_counts`. On a streaming
-    input this is a STREAM-STREAM inner join: both sides carry watermarks
+    input this is a STREAM-STREAM inner join: both sides carry 1-hour
+    watermarks
     and the join condition bounds event time on both ends, so Spark can
     size join state and evict rows older than the watermark — the two
     requirements for an unbounded-input join to hold bounded state. On a
     batch input the same code plans as an equi-join on user_id with the
     interval predicate as a post-join filter (no nested loop).
     """
-    return _attribution_join(events, attribution_minutes, watermark, "inner")
+    return _attribution_join(events, "1 hour", "inner")
 
 
 def attribute_purchases_outer(
-    events: DataFrame,
-    attribution_minutes: int = 30,
-    watermark: str = "1 hour",
+    events: DataFrame, watermark: str = "1 hour"
 ) -> DataFrame:
     """LEFT-OUTER click→purchase attribution: every click appears, with
     NULL purchase columns when no purchase followed within the window —
@@ -384,17 +340,10 @@ def attribute_purchases_outer(
     join's output trails the watermark by design (late-emission, not loss;
     covered by the expiry test). Batch input plans as a plain left join
     with the interval residual."""
-    return _attribution_join(
-        events, attribution_minutes, watermark, "left_outer"
-    )
+    return _attribution_join(events, watermark, "left_outer")
 
 
-def _attribution_join(
-    events: DataFrame,
-    attribution_minutes: int,
-    watermark: str,
-    how: str,
-) -> DataFrame:
+def _attribution_join(events: DataFrame, watermark: str, how: str) -> DataFrame:
     clicks = events.filter(F.col("event_type") == "click").select(
         F.col("user_id"),
         F.col("event_id").alias("click_id"),
@@ -415,7 +364,7 @@ def _attribution_join(
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (
             F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {attribution_minutes} MINUTES")
+            <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")
         ),
         how,
     )
@@ -431,17 +380,11 @@ def _attribution_join(
     )
 
 
-def funnel_stages(
-    events: DataFrame,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def funnel_stages(events: DataFrame) -> DataFrame:
     """Ordered funnel analysis: how far does each user progress through the
-    ``steps`` sequence in event-time order? Stage s means steps[0..s-1] were
-    matched in order (greedy earliest-transition matching, which is optimal
-    for funnel existence). Output: (stage, n_users).
+    view → click → purchase sequence in event-time order? Stage s means the
+    first s steps were matched in order (greedy earliest-transition
+    matching, which is optimal for funnel existence). Output: (stage, n_users).
 
     The sequential pattern match is a single-shuffle composition — no UDF,
     no MATCH_RECOGNIZE: events are reduced map-side to (user, (k, step))
@@ -454,17 +397,17 @@ def funnel_stages(
     AQE skew-split handles the rest.
     """
     step_idx = F.lit(None).cast("int")
-    for i in reversed(range(len(steps))):
-        step_idx = F.when(F.col("event_type") == steps[i], F.lit(i + 1)).otherwise(
+    for i, step in reversed(list(enumerate(("view", "click", "purchase")))):
+        step_idx = F.when(F.col("event_type") == step, F.lit(i + 1)).otherwise(
             step_idx
         )
     k = (
-        F.col(ts_col).cast("timestamp").cast("long") * F.lit(1_000_000_000)
-        + F.col(id_col)
+        F.col("ts").cast("timestamp").cast("long") * F.lit(1_000_000_000)
+        + F.col("event_id")
     )
     pairs = (
         events.select(
-            F.col(user_col).alias("u"),
+            F.col("user_id").alias("u"),
             k.alias("k"),
             step_idx.alias("s"),
         )
@@ -485,12 +428,7 @@ def funnel_stages(
 
 
 def time_decayed_value(
-    events: DataFrame,
-    ref_epoch_sec: int,
-    half_life_days: float = 30.0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
+    events: DataFrame, ref_epoch_sec: int, half_life_days: float = 30.0
 ) -> DataFrame:
     """Recency-weighted engagement feature: per user, the sum of event
     values decayed by age — ``Σ value · 0.5^(Δdays / half_life)`` at a fixed
@@ -504,15 +442,15 @@ def time_decayed_value(
     Ages use truncated-second epochs (the engine-portable convention of
     ``funnel_stages``). Output: (user, n_events, decayed_value)."""
     age_days = (
-        F.lit(ref_epoch_sec) - F.col(ts_col).cast("timestamp").cast("long")
+        F.lit(ref_epoch_sec) - F.col("ts").cast("timestamp").cast("long")
     ) / F.lit(86400.0)
     term = (
-        F.col(value_col).cast("double")
+        F.col("value").cast("double")
         * F.pow(F.lit(0.5), age_days / F.lit(half_life_days))
     ).cast("decimal(28,12)")
     return (
-        events.filter(F.col(value_col).isNotNull())
-        .groupBy(user_col)
+        events.filter(F.col("value").isNotNull())
+        .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(term), 6).cast("double").alias("decayed_value"),
@@ -521,10 +459,7 @@ def time_decayed_value(
 
 
 def hourly_anomaly_zscore(
-    events: DataFrame,
-    trailing_hours: int = 24,
-    z_threshold: float = 3.0,
-    min_history: int = 12,
+    events: DataFrame, trailing_hours: int = 24, min_history: int = 12
 ) -> DataFrame:
     """Volume-anomaly detection: each (hour, event_type) count scored
     against its own trailing window — z = (n − mean)/std over the previous
@@ -571,16 +506,12 @@ def hourly_anomaly_zscore(
             "event_type",
             "n_events",
             F.round(z, 6).alias("zscore"),
-            (F.abs(z) > F.lit(z_threshold)).alias("is_anomaly"),
+            (F.abs(z) > F.lit(3.0)).alias("is_anomaly"),
         )
     )
 
 
-def retention_cohorts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Cohort retention matrix: users grouped by their FIRST-activity day,
     counted on each subsequent day they return — the standard product
     analytics rollup (cohort × day-offset triangle).
@@ -596,7 +527,7 @@ def retention_cohorts(
     Output: (cohort_day: string yyyy-MM-dd, offset_days, n_users).
     """
     activity = events.select(
-        F.col(user_col).alias("u"), F.to_date(ts_col).alias("d")
+        F.col("user_id").alias("u"), F.to_date("ts").alias("d")
     ).distinct()
     first = activity.groupBy("u").agg(F.min("d").alias("cohort"))
     return (
@@ -609,11 +540,7 @@ def retention_cohorts(
     )
 
 
-def activity_streaks(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def activity_streaks(events: DataFrame) -> DataFrame:
     """Gaps-and-islands: each user's runs of CONSECUTIVE active days
     (streaks) — the engagement metric behind "7-day streak" features, and
     the canonical islands idiom: group consecutive integers by
@@ -629,8 +556,8 @@ def activity_streaks(
     from pyspark.sql import Window
 
     days = events.select(
-        F.col(user_col).alias("u"),
-        F.datediff(F.to_date(ts_col), F.lit("1970-01-01")).alias("day"),
+        F.col("user_id").alias("u"),
+        F.datediff(F.to_date("ts"), F.lit("1970-01-01")).alias("day"),
     ).distinct()
     w = Window.partitionBy("u").orderBy("day")
     runs = days.withColumn(
@@ -643,7 +570,7 @@ def activity_streaks(
             F.count(F.lit(1)).alias("streak_days"),
         )
         .select(
-            F.col("u").alias(user_col),
+            F.col("u").alias("user_id"),
             F.date_format(
                 F.date_add(F.lit("1970-01-01"), F.col("__start")),
                 "yyyy-MM-dd",
@@ -653,13 +580,7 @@ def activity_streaks(
     )
 
 
-def exp_smoothing(
-    events: DataFrame,
-    alpha: float = 0.3,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def exp_smoothing(events: DataFrame, alpha: float = 0.3) -> DataFrame:
     """Single exponential smoothing over each key's HOURLY value series —
     the first-line forecasting/denoising primitive (sₜ = α·vₜ + (1−α)·sₜ₋₁,
     seeded with v₀): the smoothed last level IS the one-step-ahead
@@ -676,10 +597,10 @@ def exp_smoothing(
     Output: (key, n_hours, last_value, smoothed) — smoothed to 6dp.
     """
     hourly = events.groupBy(
-        F.col(key_col).alias("k"),
-        F.date_trunc("hour", ts_col).alias("h"),
+        F.col("event_type").alias("k"),
+        F.date_trunc("hour", "ts").alias("h"),
     ).agg(
-        F.sum(F.col(value_col).cast("decimal(18,2)")).alias("v")
+        F.sum(F.col("value").cast("decimal(18,2)")).alias("v")
     )
     series = hourly.groupBy("k").agg(
         F.array_sort(
@@ -694,20 +615,14 @@ def exp_smoothing(
         lambda acc, x: a * x + (F.lit(1.0) - a) * acc,
     )
     return series.select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("event_type"),
         F.size("sv").alias("n_hours"),
         F.round(F.element_at(vals, -1), 6).alias("last_value"),
         F.round(smoothed, 6).alias("smoothed"),
     )
 
 
-def transition_matrix(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def transition_matrix(events: DataFrame) -> DataFrame:
     """First-order Markov transition matrix over each user's event stream:
     counts and row-normalized probabilities of event-type bigrams — the
     behavioral model behind next-action prediction and anomaly scoring.
@@ -722,13 +637,13 @@ def transition_matrix(
     Output: (from_type, to_type, n_transitions, prob).
     """
     k = (
-        F.col(ts_col).cast("timestamp").cast("long") * F.lit(1_000_000_000)
-        + F.col(id_col)
+        F.col("ts").cast("timestamp").cast("long") * F.lit(1_000_000_000)
+        + F.col("event_id")
     )
-    w = Window.partitionBy(user_col).orderBy("k")
+    w = Window.partitionBy("user_id").orderBy("k")
     steps = (
         events.select(
-            F.col(user_col), k.alias("k"), F.col(type_col).alias("t")
+            F.col("user_id"), k.alias("k"), F.col("event_type").alias("t")
         )
         .withColumn("prev", F.lag("t").over(w))
         .filter(F.col("prev").isNotNull())
@@ -752,12 +667,7 @@ def transition_matrix(
     )
 
 
-def seasonal_profile_residuals(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def seasonal_profile_residuals(events: DataFrame) -> DataFrame:
     """Seasonal-mean decomposition of each key's hourly series: the
     hour-of-day profile (the "seasonal" component a daily-cycle metric
     repeats) and each bucket's residual against it — the de-seasonalized
@@ -774,9 +684,9 @@ def seasonal_profile_residuals(
     residual).
     """
     hourly = events.groupBy(
-        F.col(key_col).alias("k"),
-        F.date_trunc("hour", ts_col).alias("h"),
-    ).agg(F.sum(F.col(value_col).cast("decimal(18,2)")).alias("v"))
+        F.col("event_type").alias("k"),
+        F.date_trunc("hour", "ts").alias("h"),
+    ).agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("v"))
     hourly = hourly.withColumn("hod", F.hour("h"))
     seasonal = hourly.groupBy("k", "hod").agg(
         F.sum("v").alias("sv"), F.count(F.lit(1)).alias("cnt")
@@ -784,7 +694,7 @@ def seasonal_profile_residuals(
     return (
         hourly.join(F.broadcast(seasonal), on=["k", "hod"])
         .select(
-            F.col("k").alias(key_col),
+            F.col("k").alias("event_type"),
             F.date_format("h", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             F.col("hod").alias("hour_of_day"),
             F.col("v").cast("double").alias("hourly_value"),
@@ -800,16 +710,9 @@ def seasonal_profile_residuals(
     )
 
 
-def time_to_convert(
-    events: DataFrame,
-    first_step: str = "view",
-    second_step: str = "purchase",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def time_to_convert(events: DataFrame) -> DataFrame:
     """Conversion-latency profile: per user, the gap between the FIRST
-    ``first_step`` event and the first ``second_step`` AFTER it; exact
+    ``view`` event and the first ``purchase`` AFTER it; exact
     discrete median and p90 of those gaps — the "how long does conversion
     take" readout next to the funnel's "how many convert".
 
@@ -828,20 +731,22 @@ def time_to_convert(
     """
     import math
 
-    sec = F.col(ts_col).cast("timestamp").cast("long")
+    sec = F.col("ts").cast("timestamp").cast("long")
     per_user = (
-        events.filter(F.col(type_col).isin([first_step, second_step]))
-        .select(F.col(user_col).alias("u"), F.col(type_col).alias("t"), sec.alias("s"))
+        events.filter(F.col("event_type").isin(["view", "purchase"]))
+        .select(
+            F.col("user_id").alias("u"), F.col("event_type").alias("t"), sec.alias("s")
+        )
         .groupBy("u")
         .agg(
-            F.min(F.when(F.col("t") == first_step, F.col("s"))).alias("fv")
+            F.min(F.when(F.col("t") == "view", F.col("s"))).alias("fv")
         )
     )
     # first second_step AFTER the first first_step needs the fv bound:
     # one more conditional-min join pass keyed on user
     seconds = (
-        events.filter(F.col(type_col) == second_step)
-        .select(F.col(user_col).alias("u"), sec.alias("s"))
+        events.filter(F.col("event_type") == "purchase")
+        .select(F.col("user_id").alias("u"), sec.alias("s"))
         .join(per_user.filter(F.col("fv").isNotNull()), on="u")
         .filter(F.col("s") >= F.col("fv"))
         .groupBy("u", "fv")
@@ -897,12 +802,7 @@ def time_to_convert(
     )
 
 
-def resample_ffill(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
+def resample_ffill(events: DataFrame) -> DataFrame:
     """Regular-grid resampling with forward fill — the panel-building step
     of a time-series feature pipeline: per key, one row per hour of the
     GLOBAL event span carrying the last observed value at-or-before that
@@ -921,13 +821,13 @@ def resample_ffill(
     event-sized) data. At 100 TB: events shuffle once; everything after is
     proportional to the PANEL, which is what the consumer reads anyway.
     """
-    key, ts = F.col(key_col), F.col(ts_col)
+    key, ts = F.col("user_id"), F.col("ts")
     obs = (
         events.groupBy(
             key.alias("key"), F.date_trunc("hour", ts).alias("bucket_ts")
         )
         .agg(
-            F.max(F.struct(ts.alias("t"), F.col(value_col).alias("v")))
+            F.max(F.struct(ts.alias("t"), F.col("value").alias("v")))
             .alias("__last"),
             F.count(F.lit(1)).alias("n_obs"),
         )
@@ -956,7 +856,7 @@ def resample_ffill(
     return (
         grid.join(obs, on=["key", "bucket_ts"], how="left")
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("user_id"),
             "bucket_ts",
             F.last("__v", ignorenulls=True).over(w).alias("value_ffill"),
             F.coalesce("n_obs", F.lit(0)).alias("n_obs"),

@@ -19,10 +19,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 
 def write_stream_idempotent(
-    stream: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
+    stream: DataFrame, path: str, checkpoint_dir: str
 ) -> StreamingQuery:
     """Start a ``foreachBatch`` parquet sink whose writes are idempotent
     under micro-batch replay (overwrite-by-batch-id). Returns the running
@@ -36,9 +33,7 @@ def write_stream_idempotent(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def read_stream_output(spark: SparkSession, path: str) -> DataFrame:
@@ -48,11 +43,7 @@ def read_stream_output(spark: SparkSession, path: str) -> DataFrame:
 
 
 def topk_snapshot_stream(
-    stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-    available_now: bool = True,
+    stream: DataFrame, state_dir: str, checkpoint_dir: str, key_col: str = "user_id"
 ) -> StreamingQuery:
     """Incrementally-maintained count materialization over a stream — the
     materialized-view-maintenance pattern: a streaming ``groupBy(key)``
@@ -108,9 +99,7 @@ def topk_snapshot_stream(
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def read_topk_snapshot(

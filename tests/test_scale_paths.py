@@ -4,7 +4,7 @@ skew joins (same result, redistributed shuffle)."""
 import pyspark.sql.functions as F
 
 from iatlas_cbioportal_export_spark.operators.joins import salted_join
-from iatlas_cbioportal_export_spark.sources.sinks import write_bucketed
+from iatlas_cbioportal_export_spark.sources.bucketing import write_bucketed
 
 
 def _physical_plan(df) -> str:
@@ -23,8 +23,8 @@ def test_bucketed_join_has_no_exchange(spark):
     right = spark.range(0, 1000).select(
         F.col("id").alias("k"), (F.col("id") % 5).alias("b")
     )
-    write_bucketed(left, "t_left", "k", num_buckets=8, sort_cols=["k"])
-    write_bucketed(right, "t_right", "k", num_buckets=8, sort_cols=["k"])
+    write_bucketed(left, "t_left", ["k"], 8, ["k"])
+    write_bucketed(right, "t_right", ["k"], 8, ["k"])
     # disable broadcast so the join would otherwise need a shuffle
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
