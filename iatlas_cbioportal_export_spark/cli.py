@@ -140,17 +140,13 @@ _PASSTHROUGH_FILES = (
     "data_rna_seq_mrna.txt",
     "meta_rna_seq_mrna.txt",
 )
-# Columns that identify the gene row (not a sample) in the pass-through
-# matrices (gene-signature / RNA-seq: gene × sample wide tables).
-_MATRIX_GENE_COLS = {
-    "Hugo_Symbol", "Entrez_Gene_Id", "geneset_id", "NAME", "DESCRIPTION",
-}
 
 
 def cmd_validate(args: argparse.Namespace) -> int:
     """Full-bundle validation: the reference ``validate.py`` main flow
     (``validate.py:229-284``) re-expressed natively over the whole bundle —
-    V1 file presence (``utils.py:11-22``), per-clinical-table fused profile
+    V1 file presence (``utils.py:11-22``), then
+    ``operators.validation.bundle_checks``: per-clinical-table fused profile
     checks, patient↔sample referential keyset, the 118-column MAF schema
     check (V12, ``validate.py:159-172``), MAF value conformance (the native
     subset of cBioPortal ``validateData.py --strict_maf_checks`` the
@@ -158,35 +154,32 @@ def cmd_validate(args: argparse.Namespace) -> int:
     clinical-samples, V13 maf-vs-neoantigen keyset (``validate.py:135-157``,
     with ``--neoantigen``), and gene-signature / RNA-seq pass-through matrix
     checks (``validate.py:175-195``: present, non-empty, sample columns ⊆
-    clinical samples). The whole suite is ONE lazy findings union,
-    evaluated by one collect: each row prints as a tab-separated line and
-    any ERROR row exits 1 (ErrorFlagHandler semantics, ``utils.py:52-58``)."""
-    from pyspark.sql import functions as F
+    clinical samples).
 
+    Every file is read with an all-string schema taken from its header on
+    the driver, so no job runs before the one collect of the lazy findings
+    union, which scans each file once. The checks need no types: the
+    clinical ones test nulls and keys, and the MAF rules cast positions and
+    counts themselves. Each row prints as a tab-separated line and any
+    ERROR row exits 1 (ErrorFlagHandler semantics, ``utils.py:52-58``)."""
     from iatlas_cbioportal_export_spark.operators.validation import (
         FINDINGS_COLUMNS,
+        bundle_checks,
         file_presence_findings,
         findings_union,
-        keyed_dup_and_distinct_checks,
-        keyset_preserved,
-        keyset_subset,
-        maf_value_conformance,
-        required_columns_present,
-        table_profile_checks,
     )
     from iatlas_cbioportal_export_spark.plans.bundle import (
         MAF_ARTIFACT_NAMES,
         find_artifact,
     )
-    from iatlas_cbioportal_export_spark.sources.maf_schema import REQUIRED_MAF_COLS
     from iatlas_cbioportal_export_spark.sources.readers import (
         read_tsv,
         read_tsv_skip_cbioportal_header,
+        tsv_string_schema,
     )
 
     spark = _spark()
     bundle = args.bundle
-    findings = []
 
     maf_path = find_artifact(bundle, MAF_ARTIFACT_NAMES)
     maf_meta = find_artifact(bundle, _MAF_META_NAMES)
@@ -203,112 +196,38 @@ def cmd_validate(args: argparse.Namespace) -> int:
     if args.strict:
         required += optional
         optional = []
-    findings.append(file_presence_findings(spark, bundle, required, optional))
 
-    # --- clinical tables: fused single-scan profiles + keyed uniqueness ---
-    clinical: dict[str, object] = {}
-    for name, key in (
-        ("data_clinical_patient.txt", "PATIENT_ID"),
-        ("data_clinical_sample.txt", "SAMPLE_ID"),
-    ):
+    clinical = {}
+    for name in ("data_clinical_patient.txt", "data_clinical_sample.txt"):
         path = os.path.join(bundle, name)
-        if not os.path.exists(path):
-            continue  # already an ERROR finding from file presence
-        df = read_tsv_skip_cbioportal_header(spark, path)
-        clinical[name] = df
-        short = name[len("data_clinical_") : -len(".txt")]
-        findings.append(
-            table_profile_checks(
-                df,
-                no_null_cols=[key] if key in df.columns else [],
-                all_null_cols=list(df.columns),
+        if os.path.exists(path):  # else already an ERROR finding
+            clinical[name] = read_tsv_skip_cbioportal_header(
+                spark, path, tsv_string_schema(path, comment="#")
             )
-        )
-        if key in df.columns:
-            findings.append(
-                keyed_dup_and_distinct_checks(
-                    df, key, dup_check=f"no_duplicate_{key.lower()}_{short}"
-                )
-            )
-    patient = clinical.get("data_clinical_patient.txt")
-    sample = clinical.get("data_clinical_sample.txt")
-    if (
-        patient is not None
-        and sample is not None
-        and "PATIENT_ID" in sample.columns
-        and "PATIENT_ID" in patient.columns
-    ):
-        findings.append(
-            keyset_subset(
-                sample, "PATIENT_ID", patient, "PATIENT_ID",
-                check="sample_patients_in_patient_table",
-            )
-        )
-
-    # --- mutation data: V12 schema, value conformance, referential checks ---
+    maf = neo = None
     if maf_path is not None:
         # One read for the chunked directory and the single-file spellings
-        # alike (the csv source takes both), `#version` lines skipped. Types
-        # are inferred: an all-string read would turn the numeric checks
-        # (position ordering, allele counts) lexicographic.
-        maf = read_tsv(spark, maf_path, comment="#")
-        findings.append(
-            required_columns_present(
-                maf, REQUIRED_MAF_COLS, check="maf_required_columns"
-            )
-        )
-        findings.append(maf_value_conformance(maf))
-        if "Tumor_Sample_Barcode" in maf.columns:
-            findings.append(
-                table_profile_checks(maf, no_null_cols=["Tumor_Sample_Barcode"])
-            )
-            if sample is not None and "SAMPLE_ID" in sample.columns:
-                findings.append(
-                    keyset_subset(
-                        maf, "Tumor_Sample_Barcode", sample, "SAMPLE_ID",
-                        check="maf_barcodes_in_clinical",
-                    )
-                )
-            if args.neoantigen:
-                neo = read_tsv(spark, args.neoantigen)
-                findings.append(
-                    keyset_preserved(
-                        maf, "Tumor_Sample_Barcode", neo, "Sample_ID",
-                        check="neoantigen_maf_ids_equal",
-                    )
-                )
-
-    # --- pass-through matrices: non-empty + sample columns ⊆ clinical ---
+        # alike (the csv source takes both), `#version` lines skipped.
+        maf = read_tsv(spark, maf_path, tsv_string_schema(maf_path, comment="#"), comment="#")
+        if args.neoantigen:
+            neo = read_tsv(spark, args.neoantigen, tsv_string_schema(args.neoantigen))
+    matrices = {}
     for name in ("data_gene_signatures.txt", "data_rna_seq_mrna.txt"):
         path = os.path.join(bundle, name)
-        if not os.path.exists(path):
-            continue
-        mat = read_tsv(spark, path)
+        if os.path.exists(path):
+            matrices[name] = read_tsv(spark, path, tsv_string_schema(path))
+
+    findings = [file_presence_findings(spark, bundle, required, optional)]
+    if clinical or maf is not None or matrices:
         findings.append(
-            mat.agg(F.count(F.lit(1)).alias("n")).select(
-                F.lit(f"nonempty_{name}").alias("check"),
-                F.when(F.col("n") > 0, F.lit("OK"))
-                .otherwise(F.lit("ERROR"))
-                .alias("status"),
-                F.col("n").cast("long").alias("observed"),
-                F.lit(1).cast("long").alias("expected"),
-                F.lit("matrix row count").alias("detail"),
+            bundle_checks(
+                clinical.get("data_clinical_patient.txt"),
+                clinical.get("data_clinical_sample.txt"),
+                maf,
+                neo,
+                matrices,
             )
         )
-        sample_cols = [c for c in mat.columns if c not in _MATRIX_GENE_COLS]
-        if sample_cols == list(mat.columns):
-            sample_cols = sample_cols[1:]  # unknown gene column: skip the first
-        if sample_cols and sample is not None and "SAMPLE_ID" in sample.columns:
-            col_df = spark.createDataFrame(
-                [(c,) for c in sample_cols], "matrix_sample string"
-            )
-            findings.append(
-                keyset_subset(
-                    col_df, "matrix_sample", sample, "SAMPLE_ID",
-                    check=f"matrix_samples_in_clinical_{name}",
-                )
-            )
-
     with job_label(spark, "collect findings"):
         rows = findings_union(findings).collect()
     print("\t".join(FINDINGS_COLUMNS))

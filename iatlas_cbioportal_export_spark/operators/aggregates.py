@@ -804,8 +804,7 @@ def winsorize_report(
     n_clamped_low, n_clamped_high, sum_original, sum_winsorized) with
     the sums surfaced as exact strings.
     """
-    n, res = exact_order_statistics(df, col, [q_low, q_high])
-    (k_lo, lo), (k_hi, hi) = res
+    _, ((k_lo, lo), (k_hi, hi)) = exact_order_statistics(df, col, [q_low, q_high])
     c = F.col(col)
     clamped = F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
     return df.agg(

@@ -702,7 +702,6 @@ def _pq_codes_expr(
     expression (the hyperplane-matrix trick: literal nested arrays inside a
     single F.expr, not thousands of py4j Column objects). Ties break on the
     lower centroid index — array_min over (dist, c) structs."""
-    m = len(codebooks)
     d = len(codebooks[0][0])
     subs = []
     for j, book in enumerate(codebooks):

@@ -11,10 +11,14 @@ job per check; at 15k rows that was 6.5s of pure job overhead, measured).
 No check collects fact-table data to the driver; each is an aggregate whose
 result is a single row (or one row per audited column).
 
-Every finding row is one :func:`_finding` struct exploded over its
-aggregate by :func:`_findings`. The two exceptions: :func:`file_presence_findings`
-builds its rows on the driver, and :func:`constraint_suite` keeps its own
-``(rule, kind, violations, total, status)`` schema.
+Every predicate, aggregate and finding row is a SQL string (:func:`_lit`
+and :func:`_q` are the only renderers), so an aggregate costs one
+``selectExpr`` and its finding rows one more (:func:`_findings`), where a
+Column tree cost a py4j round trip per operator. :class:`_Pass` evaluates
+the checks over one or more tables with ONE scan per table;
+:func:`file_presence_findings` decides its rows on the driver, and
+:func:`constraint_suite` keeps its own ``(rule, kind, violations, total,
+status)`` schema.
 """
 
 from __future__ import annotations
@@ -22,88 +26,263 @@ from __future__ import annotations
 from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FINDINGS_COLUMNS = ["check", "status", "observed", "expected", "detail"]
 
 
-def _as_col(v) -> Column:
-    return v if isinstance(v, Column) else F.lit(v)
+def _lit(v) -> str:
+    """A Python value as a SQL literal."""
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, float):
+        return f"{v!r}D"
+    if isinstance(v, int):
+        # F.lit(int) picks IntegerType in int32 range, LongType above
+        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+    s = str(v).replace("\\", "\\\\").replace("'", "\\'")
+    return f"'{s}'"
 
 
-def _finding(check, ok, observed, expected, detail, severity: str = "ERROR") -> Column:
-    """One finding row as a struct: status OK when ``ok`` holds (a NULL
-    ``ok`` does not), else ``severity``. Plain values become literals."""
-    return F.struct(
-        _as_col(check).alias("check"),
-        F.when(_as_col(ok), F.lit("OK")).otherwise(F.lit(severity)).alias("status"),
-        _as_col(observed).cast("long").alias("observed"),
-        _as_col(expected).cast("long").alias("expected"),
-        _as_col(detail).alias("detail"),
+def _q(col: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _finding(
+    check: str, ok: str, observed: str, expected: str, detail: str,
+    severity: str = "ERROR",
+) -> str:
+    """One finding row as a SQL struct: status OK when the predicate ``ok``
+    holds (a NULL ``ok`` does not), else ``severity``. ``ok``,
+    ``observed``, ``expected`` and ``detail`` are SQL expressions."""
+    return (
+        f"named_struct('check', {_lit(check)}, "
+        f"'status', CASE WHEN {ok} THEN 'OK' ELSE {_lit(severity)} END, "
+        f"'observed', CAST({observed} AS BIGINT), "
+        f"'expected', CAST({expected} AS BIGINT), 'detail', {detail})"
     )
 
 
-def _violation(check: str, n, detail, severity: str = "ERROR") -> Column:
-    """A finding whose ``n`` counts violations: OK iff ``n`` is 0."""
-    return _finding(check, n == 0, n, 0, detail, severity)
+def _violation(check: str, n: str, detail: str, severity: str = "ERROR") -> str:
+    """A finding whose SQL count ``n`` counts violations: OK iff it is 0."""
+    return _finding(check, f"({n}) = 0", n, "0", detail, severity)
 
 
-def _findings(agg: DataFrame, rows: Sequence[Column]) -> DataFrame:
-    """Explode :func:`_finding` structs over ``agg`` into findings rows."""
-    return agg.select(F.explode(F.array(*rows)).alias("f")).select("f.*")
+def _unchanged(check: str, n: str) -> str:
+    """A self-comparison (in == out by construction): always OK."""
+    return _finding(check, "TRUE", n, n, f"format_string('in=%d out=%d', {n}, {n})")
+
+
+def _in_out(check: str, n_in: str, n_out: str) -> str:
+    """OK iff the SQL measures ``n_in`` and ``n_out`` are equal."""
+    detail = f"format_string('in=%d out=%d', {n_in}, {n_out})"
+    return _finding(check, f"{n_in} = {n_out}", n_out, n_in, detail)
+
+
+def _findings(agg: DataFrame, rows: Sequence[str]) -> DataFrame:
+    """The SQL struct ``rows`` over ``agg``'s columns as findings rows."""
+    return agg.selectExpr(f"inline(array({', '.join(rows)}))")
 
 
 def _count_violation(
     df: DataFrame, check: str, detail: str, severity: str = "ERROR"
 ) -> DataFrame:
     """One finding that counts every row of ``df`` as a violation."""
-    n = df.agg(F.count(F.lit(1)).alias("n"))
-    return _findings(n, [_violation(check, F.col("n"), detail, severity)])
-
-
-def _rule_findings(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
-    """One aggregate pass counting, per rule, the rows whose predicate
-    holds (a NULL predicate is no violation); one finding row per rule.
-    The count is a SUM, so a zero-row input reads NULL (ERROR)."""
-    agg = df.agg(
-        *[
-            F.sum(F.when(cond, 1).otherwise(0)).alias(f"__v{i}")
-            for i, cond in enumerate(rules.values())
-        ]
-    )
-    return _findings(
-        agg,
-        [
-            _violation(name, F.col(f"__v{i}"), "violating rows")
-            for i, name in enumerate(rules)
-        ],
-    )
+    n = df.selectExpr("count(1) AS n")
+    return _findings(n, [_violation(check, "n", _lit(detail), severity)])
 
 
 def _dup_groups(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """The ``keys`` groups of ``df`` holding more than one row."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .filter(F.col("__c") > 1)
-    )
+    return df.groupBy(*keys).agg(F.expr("count(1) AS __c")).filter("__c > 1")
 
 
-def _unchanged(check: str, n: Column) -> Column:
-    """A self-comparison (in == out by construction): always OK."""
-    return _finding(check, True, n, n, F.format_string("in=%d out=%d", n, n))
+class _Pass:
+    """Checks over one or more tables, evaluated with ONE scan per table.
 
+    :meth:`table` registers a frame with the key columns its key checks
+    read, each in a named key space; keys of one space are compared with
+    each other as strings. Each row emits one census entry per key (one
+    keyless entry when it has none), and its first entry also carries
+    the per-row values the row checks added, one slot each. When a key
+    check is added, one ``groupBy(space, key)`` sums every slot: a
+    co-group that moves key columns and counters only, which is all a
+    cross-file anti-join would read. Otherwise the entries feed the
+    aggregate directly. One aggregate then computes every check's numbers
+    and :meth:`findings` emits the rows in the order the checks were
+    added."""
 
-def _in_out_equal(
-    df_in: DataFrame, df_out: DataFrame, measure: Column, check: str
-) -> DataFrame:
-    n_in, n_out = F.col("n_in"), F.col("n_out")
-    both = df_in.agg(measure.alias("n_in")).crossJoin(
-        df_out.agg(measure.alias("n_out"))
-    )
-    detail = F.format_string("in=%d out=%d", n_in, n_out)
-    return _findings(both, [_finding(check, n_in == n_out, n_out, n_in, detail)])
+    def __init__(self) -> None:
+        self._tables: list[tuple[DataFrame, list[tuple[str, str]], dict[str, str]]] = []
+        self._aggs: list[str] = []
+        self._rows: list[str] = []
+        self._keyed = False
+
+    def table(self, df: DataFrame, keys: Sequence[tuple[str, str]]) -> int:
+        """Register ``df`` with its ``(space, column)`` keys; returns its id."""
+        self._tables.append((df, list(keys), {}))
+        return len(self._tables) - 1
+
+    def row(self, finding: str) -> None:
+        """Add a :func:`_finding` row over the aggregates."""
+        self._rows.append(finding)
+
+    def _agg(self, sql: str) -> str:
+        name = f"__a{len(self._aggs)}"
+        self._aggs.append(f"{sql} AS {name}")
+        return name
+
+    def _slot(self, t: int, pred: str) -> str:
+        values = self._tables[t][2]
+        slot = f"__t{t}v{len(values)}"
+        values[slot] = f"CASE WHEN {pred} THEN 1 ELSE 0 END"
+        return slot
+
+    def hits(self, t: int, pred: str) -> str:
+        """Rows of table ``t`` where the SQL predicate holds (a NULL
+        predicate does not); NULL on an empty table."""
+        return self._agg(f"sum({self._slot(t, pred)})")
+
+    def count(self, t: int, pred: str = "TRUE") -> str:
+        """Like :meth:`hits`, but 0 on an empty table."""
+        return self._agg(f"coalesce(sum({self._slot(t, pred)}), 0)")
+
+    def _in(self, t: int, space: str) -> tuple[str, str]:
+        """The condition selecting ``space``'s census groups, and the slot
+        counting table ``t``'s rows in a group (NULL where it has none)."""
+        self._keyed = True
+        spaces = [s for s, _ in self._tables[t][1]]
+        return f"__space = {_lit(space)}", f"__t{t}k{spaces.index(space)}"
+
+    def distinct(self, t: int, space: str) -> str:
+        """Distinct non-NULL ``space`` keys of table ``t``."""
+        cond, n = self._in(t, space)
+        return self._agg(f"count(CASE WHEN {cond} AND __key IS NOT NULL AND {n} > 0 THEN 1 END)")
+
+    def _absent(self, left: int, right: int, space: str, skip_null: bool) -> str:
+        cond, n_left = self._in(left, space)
+        n_right = self._in(right, space)[1]
+        missing = (
+            f"__key IS NOT NULL AND {n_right} IS NULL"
+            if skip_null
+            else f"(__key IS NULL OR {n_right} IS NULL)"
+        )
+        return self._agg(f"count(CASE WHEN {cond} AND {n_left} > 0 AND {missing} THEN 1 END)")
+
+    def subset(
+        self, left: int, right: int, space: str, check: str, detail: str,
+        skip_null: bool = False, severity: str = "ERROR",
+    ) -> None:
+        """Distinct ``space`` keys of ``left`` absent from ``right``. A NULL
+        key is absent (the anti-join semantics of :func:`keyset_subset`),
+        or skipped with ``skip_null``."""
+        n = self._absent(left, right, space, skip_null)
+        self.row(_violation(check, n, _lit(detail), severity))
+
+    def equal(self, left: int, right: int, space: str, check: str) -> None:
+        """The distinct ``space`` key sets of ``left`` and ``right`` are
+        equal (both anti-joins of :func:`keyset_preserved`)."""
+        lo = self._absent(left, right, space, False)
+        ro = self._absent(right, left, space, False)
+        detail = f"format_string('left_only=%d right_only=%d', {lo}, {ro})"
+        self.row(_violation(check, f"{lo} + {ro}", detail))
+
+    def duplicates(
+        self, t: int, space: str, check: str, distinct_check: str | None = None
+    ) -> None:
+        """:func:`keyed_dup_and_distinct_checks`: the ``space`` groups (a
+        NULL key is one) and those holding more than one row of ``t``; the
+        latter is NULL on an empty table."""
+        cond, n = self._in(t, space)
+        if distinct_check:
+            groups = self._agg(f"count(CASE WHEN {cond} AND {n} > 0 THEN 1 END)")
+            self.row(_unchanged(distinct_check, groups))
+        dup = self._agg(f"sum(CASE WHEN {cond} THEN CAST({n} > 1 AS INT) END)")
+        self.row(_violation(check, dup, _lit("duplicate key groups")))
+
+    def repeated(self, t: int, space: str, check: str, detail: str) -> None:
+        """Non-NULL ``space`` keys listed by more than one row of ``t``."""
+        cond, n = self._in(t, space)
+        dup = self._agg(f"count(CASE WHEN {cond} AND __key IS NOT NULL AND {n} > 1 THEN 1 END)")
+        self.row(_violation(check, dup, _lit(detail)))
+
+    def rules(self, t: int, rules: dict[str, str]) -> None:
+        """One finding per rule: the rows of ``t`` whose SQL predicate holds
+        (a NULL predicate is no violation); NULL, so ERROR, on an empty
+        table."""
+        for name, pred in rules.items():
+            self.row(_violation(name, self.hits(t, pred), _lit("violating rows")))
+
+    def profile(
+        self,
+        t: int,
+        count_check: str | None = None,
+        distinct_cols: Sequence[str] = (),
+        no_null_cols: Sequence[str] = (),
+        all_null_cols: Sequence[str] = (),
+    ) -> None:
+        """:func:`table_profile_checks`' rows over table ``t``; each of
+        ``distinct_cols`` must be one of its key spaces."""
+        n = self.count(t)
+        counts = {
+            c: self.count(t, f"{_q(c)} IS NOT NULL")
+            for c in dict.fromkeys([*no_null_cols, *all_null_cols])
+        }
+        if count_check:
+            self.row(_unchanged(count_check, n))
+        for c in distinct_cols:
+            self.row(_unchanged(f"distinct_{c.lower()}_preserved", self.distinct(t, c)))
+        for c in no_null_cols:
+            self.row(
+                _violation(f"no_null_{c.lower()}", f"{n} - {counts[c]}", _lit(f"null rows in {c}"))
+            )
+        if all_null_cols:
+            bad = "array_compact(array({}))".format(
+                ", ".join(f"CASE WHEN {counts[c]} = 0 THEN {_lit(c)} END" for c in all_null_cols)
+            )
+            detail = (
+                f"CASE WHEN size({bad}) > 0 THEN concat('all-null: ', concat_ws(',', {bad})) "
+                "ELSE '' END"
+            )
+            self.row(_violation("no_all_null_columns", f"size({bad})", detail))
+
+    def findings(self) -> DataFrame:
+        """The rows of every check added, in order, as one lazy frame."""
+        slots = [
+            slot
+            for t, (_, keys, values) in enumerate(self._tables)
+            for slot in [*(f"__t{t}k{j}" for j in range(len(keys))), *values]
+        ]
+        frames = []
+        for t, (df, keys, values) in enumerate(self._tables):
+            entries = []
+            for j, (space, col) in enumerate(keys or [(None, None)]):
+                own = dict(values) if j == 0 else {}
+                if col is not None:
+                    own[f"__t{t}k{j}"] = "1"
+                entries.append(
+                    {
+                        "__space": _lit(space) if space else "CAST(NULL AS STRING)",
+                        "__key": f"CAST({_q(col)} AS STRING)" if col else "CAST(NULL AS STRING)",
+                        **{s: own.get(s, "CAST(NULL AS INT)") for s in slots},
+                    }
+                )
+            if len(entries) == 1:
+                frames.append(df.selectExpr(*[f"{v} AS {k}" for k, v in entries[0].items()]))
+            else:
+                structs = ", ".join(
+                    "named_struct({})".format(", ".join(f"{_lit(k)}, {v}" for k, v in e.items()))
+                    for e in entries
+                )
+                frames.append(df.selectExpr(f"inline(array({structs}))"))
+        census = reduce(DataFrame.union, frames)
+        if self._keyed:
+            census = census.groupBy("__space", "__key").agg(
+                *[F.expr(f"sum({s}) AS {s}") for s in slots]
+            )
+        return _findings(census.selectExpr(*self._aggs), self._rows)
 
 
 def count_equality(
@@ -111,14 +290,17 @@ def count_equality(
 ) -> DataFrame:
     """V2/V8: row count in == out (reference ``clinical.py:814-817``,
     ``maf.py:234-237``)."""
-    return _in_out_equal(df_in, df_out, F.count(F.lit(1)), check)
+    p = _Pass()
+    p.row(_in_out(check, p.count(p.table(df_in, [])), p.count(p.table(df_out, []))))
+    return p.findings()
 
 
 def distinct_count_equality(df_in: DataFrame, df_out: DataFrame, col: str) -> DataFrame:
     """V3/V4: distinct key counts in == out (reference ``clinical.py:809-825``)."""
-    return _in_out_equal(
-        df_in, df_out, F.countDistinct(col), f"distinct_{col.lower()}_preserved"
-    )
+    p = _Pass()
+    n_in, n_out = (p.distinct(p.table(df, [(col, col)]), col) for df in (df_in, df_out))
+    p.row(_in_out(f"distinct_{col.lower()}_preserved", n_in, n_out))
+    return p.findings()
 
 
 def no_null_keys(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -147,39 +329,30 @@ def keyset_preserved(
     check: str = "keyset_preserved",
 ) -> DataFrame:
     """V10/V13: distinct key sets equal (reference ``maf.py:242-246``,
-    ``validate.py:135-157``) via symmetric anti-joins (J6)."""
-    from iatlas_cbioportal_export_spark.operators.joins import keyset_equality
-
-    lo, ro = keyset_equality(left, left_key, right, right_key)
-    n_lo, n_ro = F.col("n_lo"), F.col("n_ro")
-    both = lo.agg(F.count(F.lit(1)).alias("n_lo")).crossJoin(
-        ro.agg(F.count(F.lit(1)).alias("n_ro"))
-    )
-    detail = F.format_string("left_only=%d right_only=%d", n_lo, n_ro)
-    return _findings(both, [_violation(check, n_lo + n_ro, detail)])
+    ``validate.py:135-157``): both directions of the J6 symmetric
+    anti-join (``joins.keyset_equality``), counted in one co-group of the
+    two key columns."""
+    p = _Pass()
+    p.equal(p.table(left, [("k", left_key)]), p.table(right, [("k", right_key)]), "k", check)
+    return p.findings()
 
 
 def keyset_subset(
-    left: DataFrame, left_key: str, right: DataFrame, right_key: str,
-    check: str = "keyset_subset",
+    left: DataFrame, left_key: str, right: DataFrame, right_key: str
 ) -> DataFrame:
     """Referential check: every distinct ``left_key`` value appears in
     ``right_key`` (one-directional — the containment half of
     :func:`keyset_preserved`). This is the native form of cBioPortal
     ``validateData.py``'s sample-reference checks (MAF barcodes must be
     clinical samples; matrix columns must be clinical samples) that the
-    reference shells out to (``validate.py:211-216``). One distinct + one
-    anti-join on the key column only — never the full rows."""
-    missing = (
-        left.select(F.col(left_key).alias("__k"))
-        .distinct()
-        .join(
-            right.select(F.col(right_key).alias("__k")).distinct(),
-            "__k",
-            "left_anti",
-        )
+    reference shells out to (``validate.py:211-216``). One co-group of the
+    two key columns only — never the full rows."""
+    p = _Pass()
+    p.subset(
+        p.table(left, [("k", left_key)]), p.table(right, [("k", right_key)]), "k",
+        "keyset_subset", f"{left_key} values absent from {right_key}",
     )
-    return _count_violation(missing, check, f"{left_key} values absent from {right_key}")
+    return p.findings()
 
 
 def file_presence_findings(
@@ -194,17 +367,23 @@ def file_presence_findings(
     import os
 
     rows = []
-    for kind, names in (("required", required), ("optional", optional)):
+    for kind, severity, names in (("required", "ERROR", required), ("optional", "WARN", optional)):
         for name in names:
             present = os.path.exists(os.path.join(bundle_dir, name))
-            status = "OK" if present else ("ERROR" if kind == "required" else "WARN")
             rows.append(
-                (f"file_present_{name}", status, int(present), 1,
-                 "" if present else f"missing {kind} file {name}")
+                _finding(
+                    f"file_present_{name}", _lit(present), _lit(int(present)), "1",
+                    _lit("" if present else f"missing {kind} file {name}"), severity,
+                )
             )
-    return spark.createDataFrame(
-        rows, "check string, status string, observed long, expected long, detail string"
-    )
+    return _findings(spark.range(1), rows)
+
+
+def _missing_columns(columns: Sequence[str], required: Sequence[str], check: str) -> str:
+    """The :func:`required_columns_present` finding row."""
+    missing = [c for c in required if c not in columns]
+    detail = "missing: " + ",".join(missing) if missing else ""
+    return _violation(check, _lit(len(missing)), _lit(detail))
 
 
 def required_columns_present(
@@ -216,9 +395,7 @@ def required_columns_present(
     also fire — see :func:`schema_matches_exactly` for the faithful form;
     this subset form backs the "these columns must exist" contracts
     (v_validation_suite's lineitem_schema etc.)."""
-    missing = [c for c in required if c not in df.columns]
-    detail = "missing: " + ",".join(missing) if missing else ""
-    return _findings(df.sparkSession.range(1), [_violation(check, len(missing), detail)])
+    return _findings(df.sparkSession.range(1), [_missing_columns(df.columns, required, check)])
 
 
 def schema_matches_exactly(df: DataFrame, required: Sequence[str]) -> DataFrame:
@@ -239,7 +416,7 @@ def schema_matches_exactly(df: DataFrame, required: Sequence[str]) -> DataFrame:
     n = len(missing) + len(extra)
     return _findings(
         df.sparkSession.range(1),
-        [_violation("schema_matches_exactly", n, "; ".join(parts))],
+        [_violation("schema_matches_exactly", _lit(n), _lit("; ".join(parts)))],
     )
 
 
@@ -301,6 +478,105 @@ _VARIANT_CLASSIFICATIONS = (
 )
 
 
+def _present(c: str) -> str:
+    # TSV-borne MAFs carry missing values as EMPTY STRINGS, not NULLs (the
+    # 118-col fixture and real exports alike); a blank field is "missing"
+    # to every value rule, exactly like NULL — presence enforcement stays
+    # the validation suite's job.
+    return f"({c} IS NOT NULL AND {c} != '')"
+
+
+def _in_set(c: str, values: Sequence[str]) -> str:
+    return f"{c} IN ({', '.join(_lit(v) for v in values)})"
+
+
+def _maf_rules(columns: Sequence[str]) -> dict[str, str]:
+    """:func:`maf_value_conformance`'s rules as SQL predicates over a MAF
+    with these columns (each true on a violating row)."""
+    chrom, ref, alt = _q("Chromosome"), _q("Reference_Allele"), _q("Tumor_Seq_Allele2")
+    # Cast positions numerically so the ordering rule is type-safe on a MAF
+    # read with an all-string schema (as `cli validate` reads it):
+    # lexicographic "99" > "100" must not fire the rule, and real
+    # violations with wider End digits must not be missed.
+    start = f"CAST({_q('Start_Position')} AS BIGINT)"
+    end = f"CAST({_q('End_Position')} AS BIGINT)"
+    rules = {
+        "maf_chromosome_vocabulary": f"{_present(chrom)} AND NOT ({chrom} RLIKE {_lit(_CHROMOSOME_RE)})",
+        "maf_allele_alphabet": (
+            f"({_present(ref)} AND NOT ({ref} RLIKE {_lit(_ALLELE_RE)}))"
+            f" OR ({_present(alt)} AND NOT ({alt} RLIKE {_lit(_ALLELE_RE)}))"
+        ),
+        "maf_ref_equals_alt": f"{_present(ref)} AND {_present(alt)} AND ({ref} = {alt})",
+        "maf_position_order": f"{start} IS NOT NULL AND {end} IS NOT NULL AND ({start} > {end})",
+    }
+    cols = set(columns)
+    # t_ref/t_alt_count are OPTIONAL MAF columns (unlike the coordinate and
+    # allele fields) — emit the count-sanity rule only when both exist.
+    if "t_ref_count" in cols and "t_alt_count" in cols:
+        rules["maf_negative_allele_counts"] = (
+            f"(CAST({_q('t_ref_count')} AS DOUBLE) < 0)"
+            f" OR (CAST({_q('t_alt_count')} AS DOUBLE) < 0)"
+        )
+    if "NCBI_Build" in cols:
+        build = _q("NCBI_Build")
+        rules["maf_ncbi_build"] = f"{_present(build)} AND NOT ({_in_set(build, _NCBI_BUILDS)})"
+    if "Variant_Type" in cols:
+        vt = _q("Variant_Type")
+        lr, la = f"length({ref})", f"length({alt})"
+        rules["maf_variant_type_vocabulary"] = (
+            f"{_present(vt)} AND NOT ({_in_set(vt, _VARIANT_TYPES)})"
+        )
+        rules["maf_allele_vs_variant_type"] = (
+            f"{_present(vt)} AND {_present(ref)} AND {_present(alt)} AND ("
+            f"(({vt} = 'SNP') AND NOT (({lr} = 1) AND ({la} = 1) AND ({ref} != '-') AND ({alt} != '-')))"
+            f" OR (({vt} = 'DNP') AND NOT (({lr} = 2) AND ({la} = 2)))"
+            f" OR (({vt} = 'TNP') AND NOT (({lr} = 3) AND ({la} = 3)))"
+            f" OR (({vt} = 'ONP') AND NOT (({lr} = {la}) AND ({lr} > 3)))"
+            f" OR (({vt} = 'INS') AND NOT (({ref} = '-') OR ({la} > {lr})))"
+            f" OR (({vt} = 'DEL') AND NOT (({alt} = '-') OR ({lr} > {la}))))"
+        )
+        rules["maf_position_allele_span"] = (
+            f"{_present(vt)} AND {start} IS NOT NULL AND {end} IS NOT NULL AND ("
+            f"(({vt} = 'SNP') AND ({end} != {start}))"
+            f" OR (({vt} = 'DEL') AND {ref} IS NOT NULL AND ({ref} != '-')"
+            f" AND ((({end} - {start}) + 1) != {lr})))"
+        )
+    if "Tumor_Sample_Barcode" in cols:
+        bc = _q("Tumor_Sample_Barcode")
+        rules["maf_barcode_format"] = f"{_present(bc)} AND NOT ({bc} RLIKE {_lit(_BARCODE_RE)})"
+    if "Mutation_Status" in cols:
+        ms = _q("Mutation_Status")
+        rules["maf_mutation_status_vocabulary"] = (
+            f"{_present(ms)} AND NOT ({_in_set(f'lower({ms})', _MUTATION_STATUSES)})"
+        )
+    if "Variant_Classification" in cols:
+        vc = _q("Variant_Classification")
+        rules["maf_variant_classification_vocabulary"] = (
+            f"{_present(vc)} AND NOT ({_in_set(vc, _VARIANT_CLASSIFICATIONS)})"
+        )
+    if "Entrez_Gene_Id" in cols:
+        ez = f"CAST({_q('Entrez_Gene_Id')} AS STRING)"
+        rules["maf_entrez_gene_id_format"] = f"{_present(ez)} AND NOT ({ez} RLIKE '^[0-9]+$')"
+    if "Validation_Status" in cols:
+        vs = _q("Validation_Status")
+        rules["maf_validation_status_vocabulary"] = (
+            f"{_present(vs)} AND NOT ({_in_set(f'lower({vs})', _VALIDATION_STATUSES)})"
+        )
+    if "Verification_Status" in cols:
+        vrs = _q("Verification_Status")
+        rules["maf_verification_status_vocabulary"] = (
+            f"{_present(vrs)} AND NOT ({_in_set(f'lower({vrs})', _VERIFICATION_STATUSES)})"
+        )
+    rules["maf_positive_start"] = f"{start} IS NOT NULL AND ({start} < 1)"
+    if "Strand" in cols:
+        st = _q("Strand")
+        rules["maf_strand_symbol"] = f"{_present(st)} AND NOT ({_in_set(st, ('+', '-'))})"
+    if "HGVSp_Short" in cols:
+        hp = _q("HGVSp_Short")
+        rules["maf_hgvsp_prefix"] = f"{_present(hp)} AND NOT startswith({hp}, 'p.')"
+    return rules
+
+
 def maf_value_conformance(maf: DataFrame) -> DataFrame:
     """Per-field MAF value checks — the native subset of cBioPortal
     ``validateData.py --strict_maf_checks`` the reference shells out to
@@ -322,123 +598,9 @@ def maf_value_conformance(maf: DataFrame) -> DataFrame:
     violation predicates), one finding row per rule; NULL field values are
     skipped by each rule (presence is V5/V6/V11's job, not a value check).
     """
-    chrom = F.col("Chromosome")
-    ref, alt = F.col("Reference_Allele"), F.col("Tumor_Seq_Allele2")
-    # Cast positions numerically so the ordering rule is type-safe even when
-    # the caller read the MAF with an all-string schema (e.g. a header-only
-    # directory scan): lexicographic "99" > "100" must not fire the rule, and
-    # real violations with wider End digits must not be missed.
-    start = F.col("Start_Position").cast("long")
-    end = F.col("End_Position").cast("long")
-    t_ref = F.col("t_ref_count").cast("double")
-    t_alt = F.col("t_alt_count").cast("double")
-
-    def _present(c: Column) -> Column:
-        # TSV-borne MAFs carry missing values as EMPTY STRINGS, not NULLs
-        # (the 118-col fixture and real exports alike); a blank field is
-        # "missing" to every value rule, exactly like NULL — presence
-        # enforcement stays the validation suite's job.
-        return c.isNotNull() & (c != "")
-
-    rules = {
-        "maf_chromosome_vocabulary": _present(chrom)
-        & ~chrom.rlike(_CHROMOSOME_RE),
-        "maf_allele_alphabet": (_present(ref) & ~ref.rlike(_ALLELE_RE))
-        | (_present(alt) & ~alt.rlike(_ALLELE_RE)),
-        "maf_ref_equals_alt": _present(ref) & _present(alt) & (ref == alt),
-        "maf_position_order": start.isNotNull()
-        & end.isNotNull()
-        & (start > end),
-    }
-    cols = set(maf.columns)
-    # t_ref/t_alt_count are OPTIONAL MAF columns (unlike the coordinate and
-    # allele fields) — emit the count-sanity rule only when both exist.
-    if "t_ref_count" in cols and "t_alt_count" in cols:
-        rules["maf_negative_allele_counts"] = (t_ref < 0) | (t_alt < 0)
-    if "NCBI_Build" in cols:
-        build = F.col("NCBI_Build")
-        rules["maf_ncbi_build"] = _present(build) & ~build.isin(
-            *_NCBI_BUILDS
-        )
-    if "Variant_Type" in cols:
-        vt = F.col("Variant_Type")
-        rules["maf_variant_type_vocabulary"] = _present(vt) & ~vt.isin(
-            *_VARIANT_TYPES
-        )
-        lr, la = F.length(ref), F.length(alt)
-        rules["maf_allele_vs_variant_type"] = (
-            _present(vt)
-            & _present(ref)
-            & _present(alt)
-            & (
-                (
-                    (vt == "SNP")
-                    & ~(
-                        (lr == 1)
-                        & (la == 1)
-                        & (ref != "-")
-                        & (alt != "-")
-                    )
-                )
-                | ((vt == "DNP") & ~((lr == 2) & (la == 2)))
-                | ((vt == "TNP") & ~((lr == 3) & (la == 3)))
-                | ((vt == "ONP") & ~((lr == la) & (lr > 3)))
-                | ((vt == "INS") & ~((ref == "-") | (la > lr)))
-                | ((vt == "DEL") & ~((alt == "-") | (lr > la)))
-            )
-        )
-        rules["maf_position_allele_span"] = (
-            _present(vt)
-            & start.isNotNull()
-            & end.isNotNull()
-            & (
-                ((vt == "SNP") & (end != start))
-                | (
-                    (vt == "DEL")
-                    & ref.isNotNull()
-                    & (ref != "-")
-                    & (end - start + 1 != F.length(ref))
-                )
-            )
-        )
-    if "Tumor_Sample_Barcode" in cols:
-        bc = F.col("Tumor_Sample_Barcode")
-        rules["maf_barcode_format"] = _present(bc) & ~bc.rlike(_BARCODE_RE)
-    if "Mutation_Status" in cols:
-        ms = F.lower(F.col("Mutation_Status"))
-        rules["maf_mutation_status_vocabulary"] = _present(
-            F.col("Mutation_Status")
-        ) & ~ms.isin(*_MUTATION_STATUSES)
-    if "Variant_Classification" in cols:
-        vc = F.col("Variant_Classification")
-        rules["maf_variant_classification_vocabulary"] = _present(
-            vc
-        ) & ~vc.isin(*_VARIANT_CLASSIFICATIONS)
-    if "Entrez_Gene_Id" in cols:
-        ez = F.col("Entrez_Gene_Id").cast("string")
-        rules["maf_entrez_gene_id_format"] = _present(ez) & ~ez.rlike(
-            r"^[0-9]+$"
-        )
-    if "Validation_Status" in cols:
-        vs = F.col("Validation_Status")
-        rules["maf_validation_status_vocabulary"] = _present(vs) & ~F.lower(
-            vs
-        ).isin(*_VALIDATION_STATUSES)
-    if "Verification_Status" in cols:
-        vrs = F.col("Verification_Status")
-        rules["maf_verification_status_vocabulary"] = _present(
-            vrs
-        ) & ~F.lower(vrs).isin(*_VERIFICATION_STATUSES)
-    rules["maf_positive_start"] = start.isNotNull() & (start < 1)
-    if "Strand" in cols:
-        st = F.col("Strand")
-        rules["maf_strand_symbol"] = _present(st) & ~st.isin("+", "-")
-    if "HGVSp_Short" in cols:
-        hp = F.col("HGVSp_Short")
-        rules["maf_hgvsp_prefix"] = (
-            hp.isNotNull() & (hp != "") & ~hp.startswith("p.")
-        )
-    return _rule_findings(maf, rules)
+    p = _Pass()
+    p.rules(p.table(maf, []), _maf_rules(maf.columns))
+    return p.findings()
 
 
 def table_profile_checks(
@@ -450,42 +612,16 @@ def table_profile_checks(
 ) -> DataFrame:
     """The self-comparison (pipeline in == out) fusion of
     :func:`count_equality` + :func:`distinct_count_equality` +
-    :func:`no_null_keys` + :func:`no_all_null_columns`: ONE map-side-combined
-    aggregate scan emits all their finding rows (identical schema, names,
-    details) instead of 4-6 separate scans of the same table. At 100 TB a
-    validation pass re-reading the fact table per check is the difference
-    between one pass and six; the two-sided operators remain for genuine
-    in-vs-out comparisons."""
-    agg = df.agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[F.countDistinct(c).alias(f"__d_{c}") for c in distinct_cols],
-        *[
-            F.count(F.col(c)).alias(f"__c_{c}")
-            for c in sorted({*no_null_cols, *all_null_cols})
-        ],
-    )
-
-    n = F.col("__n")
-    rows = [_unchanged(count_check, n)] if count_check else []
-    rows += [
-        _unchanged(f"distinct_{c.lower()}_preserved", F.col(f"__d_{c}"))
-        for c in distinct_cols
-    ]
-    rows += [
-        _violation(f"no_null_{c.lower()}", n - F.col(f"__c_{c}"), f"null rows in {c}")
-        for c in no_null_cols
-    ]
-    if all_null_cols:
-        bad = F.array_compact(
-            F.array(
-                *[F.when(F.col(f"__c_{c}") == 0, F.lit(c)) for c in all_null_cols]
-            )
-        )
-        detail = F.when(
-            F.size(bad) > 0, F.concat(F.lit("all-null: "), F.concat_ws(",", bad))
-        ).otherwise(F.lit(""))
-        rows.append(_violation("no_all_null_columns", F.size(bad), detail))
-    return _findings(agg, rows)
+    :func:`no_null_keys` + :func:`no_all_null_columns`: ONE scan emits all
+    their finding rows (identical schema, names, details) instead of 4-6
+    separate scans of the same table. At 100 TB a validation pass
+    re-reading the fact table per check is the difference between one pass
+    and six; the two-sided operators remain for genuine in-vs-out
+    comparisons."""
+    p = _Pass()
+    t = p.table(df, [(c, c) for c in distinct_cols])
+    p.profile(t, count_check, distinct_cols, no_null_cols, all_null_cols)
+    return p.findings()
 
 
 def keyed_dup_and_distinct_checks(
@@ -496,16 +632,11 @@ def keyed_dup_and_distinct_checks(
 ) -> DataFrame:
     """Fusion of :func:`no_duplicate_rows` (keyed) with
     :func:`distinct_count_equality` (self-comparison): both derive from the
-    SAME ``groupBy(key)`` — the distinct count is the group count, the dup
+    SAME ``key`` grouping — the distinct count is the group count, the dup
     count is the >1 group count — so one shuffle serves two checks."""
-    grouped = df.groupBy(key).agg(F.count(F.lit(1)).alias("__k"))
-    agg = grouped.agg(
-        F.count(F.lit(1)).alias("__nd"),
-        F.sum(F.when(F.col("__k") > 1, 1).otherwise(0)).alias("__dup"),
-    )
-    rows = [_unchanged(distinct_check, F.col("__nd"))] if distinct_check else []
-    rows.append(_violation(dup_check, F.col("__dup"), "duplicate key groups"))
-    return _findings(agg, rows)
+    p = _Pass()
+    p.duplicates(p.table(df, [(key, key)]), key, dup_check, distinct_check)
+    return p.findings()
 
 
 def findings_union(findings: Sequence[DataFrame]) -> DataFrame:
@@ -517,7 +648,7 @@ def findings_union(findings: Sequence[DataFrame]) -> DataFrame:
 def has_errors(findings: DataFrame) -> bool:
     """ErrorFlagHandler semantics: any ERROR row ⇒ failed study
     (reference ``utils.py:52-58``, checked at ``clinical.py:949-950``)."""
-    return findings.filter(F.col("status") == "ERROR").limit(1).count() > 0
+    return findings.filter("status = 'ERROR'").limit(1).count() > 0
 
 
 def constraint_suite(
@@ -561,20 +692,6 @@ def constraint_suite(
     # every violation count is an exact integer, so results are
     # unchanged. Violation-count strings reference the slot aliases and
     # are re-used inside the struct rows below.
-    def _lit(v) -> str:
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, float):
-            return f"{v!r}D"
-        if isinstance(v, int):
-            # F.lit(int) picks IntegerType in int32 range, LongType above
-            return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
-        s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{s}'"
-
-    def _q(col: str) -> str:
-        return "`" + col.replace("`", "``") + "`"
-
     agg_exprs: list[str] = ["count(1) AS __n"]
     agg_rules: list[tuple[str, str, str]] = []  # (name, kind, viol SQL)
     fk_frames: list[DataFrame] = []
@@ -654,25 +771,23 @@ def constraint_suite(
             c, ref, ref_col = r["col"], r["ref"], r["ref_col"]
             name = name or f"fk_{c}"
             fk_viol = (
-                df.select(F.col(c).alias("__k"))
-                .filter(F.col("__k").isNotNull())
+                df.selectExpr(f"{_q(c)} AS __k")
+                .filter("__k IS NOT NULL")
                 .join(
-                    ref.select(F.col(ref_col).alias("__k")).distinct(),
+                    ref.selectExpr(f"{_q(ref_col)} AS __k").distinct(),
                     "__k",
                     "left_anti",
                 )
-                .agg(F.count(F.lit(1)).alias("__viol"))
+                .selectExpr("count(1) AS __viol")
             )
-            total = df.agg(F.count(F.lit(1)).alias("__n"))
+            total = df.selectExpr("count(1) AS __n")
             fk_frames.append(
-                fk_viol.crossJoin(F.broadcast(total)).select(
-                    F.lit(name).alias("rule"),
-                    F.lit(kind).alias("kind"),
-                    F.col("__viol").cast("long").alias("violations"),
-                    F.col("__n").cast("long").alias("total"),
-                    F.when(F.col("__viol") > 0, F.lit("ERROR"))
-                    .otherwise(F.lit("OK"))
-                    .alias("status"),
+                fk_viol.crossJoin(total.hint("broadcast")).selectExpr(
+                    f"{_lit(name)} AS rule",
+                    f"{_lit(kind)} AS kind",
+                    "CAST(__viol AS BIGINT) AS violations",
+                    "CAST(__n AS BIGINT) AS total",
+                    "CASE WHEN __viol > 0 THEN 'ERROR' ELSE 'OK' END AS status",
                 )
             )
         else:
@@ -680,7 +795,7 @@ def constraint_suite(
 
     frames: list[DataFrame] = []
     if agg_rules:
-        agg = df.agg(*[F.expr(e) for e in agg_exprs])
+        agg = df.selectExpr(*agg_exprs)
         rows = ", ".join(
             f"named_struct('rule', {_lit(name)}, 'kind', {_lit(kind)}, "
             f"'violations', cast({viol} as bigint), "
@@ -688,9 +803,7 @@ def constraint_suite(
             f"'status', CASE WHEN {viol} > 0 THEN 'ERROR' ELSE 'OK' END)"
             for name, kind, viol in agg_rules
         )
-        frames.append(
-            agg.selectExpr(f"explode(array({rows})) AS f").select("f.*")
-        )
+        frames.append(agg.selectExpr(f"inline(array({rows}))"))
     frames.extend(fk_frames)
     if not frames:
         raise ValueError("constraint_suite needs at least one rule")
@@ -733,68 +846,32 @@ def clinical_value_conformance(
     ONE aggregate pass, same findings schema as every validator here.
     """
     cols = set(clinical.columns)
-    id_re = r"^[A-Za-z0-9._-]+$"
-    num_re = r"^-?[0-9]+(\.[0-9]+)?([eE][+-]?[0-9]+)?$"
-    rules: dict[str, Column] = {}
-    if "PATIENT_ID" in cols:
-        pid = F.col("PATIENT_ID")
-        rules["clinical_patient_id_format"] = (
-            pid.isNotNull() & (pid != "") & ~pid.rlike(id_re)
-        )
-    if "SAMPLE_ID" in cols:
-        sid = F.col("SAMPLE_ID")
-        rules["clinical_sample_id_format"] = (
-            sid.isNotNull() & (sid != "") & ~sid.rlike(id_re)
-        )
+    id_re = _lit(r"^[A-Za-z0-9._-]+$")
+    num_re = _lit(r"^-?[0-9]+(\.[0-9]+)?([eE][+-]?[0-9]+)?$")
+    rules: dict[str, str] = {}
+    for c in ("PATIENT_ID", "SAMPLE_ID"):
+        if c in cols:
+            rules[f"clinical_{c.lower()}_format"] = f"{_present(_q(c))} AND NOT ({_q(c)} RLIKE {id_re})"
     for c in number_cols:
-        if c not in cols:
-            continue
-        v = F.col(c).cast("string")
-        rules[f"clinical_number_{c.lower()}"] = (
-            v.isNotNull() & (v != "NA") & (v != "") & ~v.rlike(num_re)
-        )
+        if c in cols:
+            v = f"CAST({_q(c)} AS STRING)"
+            rules[f"clinical_number_{c.lower()}"] = (
+                f"{v} IS NOT NULL AND ({v} != 'NA') AND ({v} != '') AND NOT ({v} RLIKE {num_re})"
+            )
     for c in boolean_cols:
-        if c not in cols:
-            continue
-        v = F.upper(F.col(c).cast("string"))
-        rules[f"clinical_boolean_{c.lower()}"] = (
-            F.col(c).isNotNull() & (v != "") & ~v.isin("TRUE", "FALSE", "NA")
-        )
-    if "OS_STATUS" in cols:
-        osv = F.lower(F.col("OS_STATUS"))
-        rules["clinical_os_status_vocabulary"] = (
-            F.col("OS_STATUS").isNotNull()
-            & (F.col("OS_STATUS") != "")
-            & ~osv.isin(*_OS_STATUSES)
-        )
-    if "PFS_STATUS" in cols:
-        pfv = F.lower(F.col("PFS_STATUS"))
-        rules["clinical_pfs_status_vocabulary"] = (
-            F.col("PFS_STATUS").isNotNull()
-            & (F.col("PFS_STATUS") != "")
-            & ~pfv.isin(*_PFS_STATUSES)
-        )
-    return _rule_findings(clinical, rules)
-
-
-def _absent_keys(
-    left: DataFrame, left_col: str, right: DataFrame, right_col: str
-) -> DataFrame:
-    """Distinct non-NULL values of ``left_col`` absent from ``right_col``
-    (unlike :func:`keyset_subset`, a NULL key is skipped, not missing).
-    Only distinct key values move — never the rows."""
-    return (
-        left.select(F.col(left_col).alias("__k"))
-        .filter(F.col("__k").isNotNull())
-        .distinct()
-        .join(
-            right.select(F.col(right_col).alias("__k"))
-            .filter(F.col("__k").isNotNull())
-            .distinct(),
-            "__k",
-            "left_anti",
-        )
-    )
+        if c in cols:
+            v = f"upper(CAST({_q(c)} AS STRING))"
+            rules[f"clinical_boolean_{c.lower()}"] = (
+                f"{_q(c)} IS NOT NULL AND ({v} != '') AND NOT ({_in_set(v, ('TRUE', 'FALSE', 'NA'))})"
+            )
+    for c, vocabulary in (("OS_STATUS", _OS_STATUSES), ("PFS_STATUS", _PFS_STATUSES)):
+        if c in cols:
+            rules[f"clinical_{c.lower()}_vocabulary"] = (
+                f"{_present(_q(c))} AND NOT ({_in_set(f'lower({_q(c)})', vocabulary)})"
+            )
+    p = _Pass()
+    p.rules(p.table(clinical, []), rules)
+    return p.findings()
 
 
 def cross_file_referential_checks(
@@ -812,7 +889,7 @@ def cross_file_referential_checks(
     undefined patient, and when a case list contains unknown or duplicate
     sample ids; it warns on patients that have no samples.
 
-    Checks (uniform findings schema, ONE lazy union — the whole report is
+    Checks (uniform findings schema, ONE lazy frame — the whole report is
     a single Spark action):
 
     - ``xref_sample_patients_in_patient_file`` (ERROR): every
@@ -826,48 +903,124 @@ def cross_file_referential_checks(
       ``case_list_<name>_duplicate_members`` (ERROR): for each
       ``case_lists[name]`` (a one-column DataFrame of member sample ids).
 
-    Scale: every check anti-joins DISTINCT id columns only; data-file rows
-    and clinical rows never shuffle. At 100 TB the distinct id sets are
-    the small side (ids are bounded by cohort size, not by variants), so
-    these joins broadcast or at worst shuffle ids alone.
+    A NULL id is skipped, not missing. Scale: every input is scanned once
+    and only its id columns move — one co-group of all of them, whose
+    groups are bounded by cohort size, not by variants; data-file rows and
+    clinical rows never shuffle.
     """
-    findings = [
-        _count_violation(
-            _absent_keys(sample_df, "PATIENT_ID", patient_df, "PATIENT_ID"),
-            "xref_sample_patients_in_patient_file",
-            "sample-file patient ids absent from patient file",
-        ),
-        _count_violation(
-            _absent_keys(patient_df, "PATIENT_ID", sample_df, "PATIENT_ID"),
-            "xref_patients_have_samples",
-            "patients with no samples",
-            severity="WARN",
-        ),
-    ]
+    p = _Pass()
+    patients = p.table(patient_df, [("PATIENT_ID", "PATIENT_ID")])
+    samples = p.table(sample_df, [("PATIENT_ID", "PATIENT_ID"), ("SAMPLE_ID", "SAMPLE_ID")])
+    p.subset(
+        samples, patients, "PATIENT_ID", "xref_sample_patients_in_patient_file",
+        "sample-file patient ids absent from patient file", skip_null=True,
+    )
+    p.subset(
+        patients, samples, "PATIENT_ID", "xref_patients_have_samples",
+        "patients with no samples", skip_null=True, severity="WARN",
+    )
     for name, (df, df_sample_col) in (data_files or {}).items():
-        findings.append(
-            _count_violation(
-                _absent_keys(df, df_sample_col, sample_df, "SAMPLE_ID"),
-                f"xref_{name}_samples_in_clinical",
-                f"{name} sample ids absent from clinical samples",
-            )
+        p.subset(
+            p.table(df, [("SAMPLE_ID", df_sample_col)]), samples, "SAMPLE_ID",
+            f"xref_{name}_samples_in_clinical",
+            f"{name} sample ids absent from clinical samples", skip_null=True,
         )
     for name, members in (case_lists or {}).items():
-        mcol = members.columns[0]
-        ids = members.select(F.col(mcol).alias("__k")).filter(F.col("__k").isNotNull())
-        findings += [
-            _count_violation(
-                _absent_keys(members, mcol, sample_df, "SAMPLE_ID"),
-                f"case_list_{name}_members_in_clinical",
-                f"case list {name} ids absent from clinical samples",
-            ),
-            _count_violation(
-                _dup_groups(ids, ["__k"]),
-                f"case_list_{name}_duplicate_members",
-                f"case list {name} ids listed more than once",
-            ),
-        ]
-    return findings_union(findings)
+        m = p.table(members, [("SAMPLE_ID", members.columns[0])])
+        p.subset(
+            m, samples, "SAMPLE_ID", f"case_list_{name}_members_in_clinical",
+            f"case list {name} ids absent from clinical samples", skip_null=True,
+        )
+        p.repeated(
+            m, "SAMPLE_ID", f"case_list_{name}_duplicate_members",
+            f"case list {name} ids listed more than once",
+        )
+    return p.findings()
+
+
+# Columns that identify the gene row (not a sample) in the pass-through
+# matrices (gene-signature / RNA-seq: gene × sample wide tables).
+_MATRIX_GENE_COLS = {
+    "Hugo_Symbol", "Entrez_Gene_Id", "geneset_id", "NAME", "DESCRIPTION",
+}
+
+
+def bundle_checks(
+    patient: DataFrame | None,
+    sample: DataFrame | None,
+    maf: DataFrame | None,
+    neoantigen: DataFrame | None,
+    matrices: dict[str, DataFrame],
+) -> DataFrame:
+    """The data checks ``cli validate`` runs on a bundle (reference
+    ``validate.py:229-284``), each frame scanned ONCE; a ``None`` frame is
+    an absent file. In order:
+
+    - per clinical file: its null-key and all-null-column rows
+      (:func:`table_profile_checks`) and its duplicate keys
+      (:func:`keyed_dup_and_distinct_checks`); then sample
+      ``PATIENT_ID`` ⊆ patient ``PATIENT_ID`` (:func:`keyset_subset`);
+    - the MAF: the 118-column schema (V12, ``validate.py:159-172``),
+      :func:`maf_value_conformance`, no NULL barcode, barcodes ⊆ clinical
+      samples and, given ``neoantigen``, its ``Sample_ID`` set equals the
+      barcode set (V13, ``validate.py:135-157``);
+    - per pass-through matrix (file name → frame, ``validate.py:175-195``):
+      non-empty, and its sample columns ⊆ clinical samples.
+
+    Each row reads as its standalone validator's would."""
+    from iatlas_cbioportal_export_spark.sources.maf_schema import REQUIRED_MAF_COLS
+
+    p = _Pass()
+    ids: dict[str, tuple[int, list[str]]] = {}
+    for name, df, key in (("patient", patient, "PATIENT_ID"), ("sample", sample, "SAMPLE_ID")):
+        if df is None:
+            continue
+        cols = df.columns
+        t = p.table(df, [(k, k) for k in dict.fromkeys((key, "PATIENT_ID")) if k in cols])
+        ids[name] = (t, cols)
+        p.profile(t, no_null_cols=[key] if key in cols else [], all_null_cols=cols)
+        if key in cols:
+            p.duplicates(t, key, f"no_duplicate_{key.lower()}_{name}")
+    if len(ids) == 2 and all("PATIENT_ID" in cols for _, cols in ids.values()):
+        p.subset(
+            ids["sample"][0], ids["patient"][0], "PATIENT_ID",
+            "sample_patients_in_patient_table", "PATIENT_ID values absent from PATIENT_ID",
+        )
+    sample_cols = ids["sample"][1] if "sample" in ids else []
+    samples = ids["sample"][0] if "SAMPLE_ID" in sample_cols else None
+
+    barcode = "Tumor_Sample_Barcode"
+    if maf is not None:
+        cols = maf.columns
+        m = p.table(maf, [("SAMPLE_ID", barcode)] if barcode in cols else [])
+        p.row(_missing_columns(cols, REQUIRED_MAF_COLS, "maf_required_columns"))
+        p.rules(m, _maf_rules(cols))
+        if barcode in cols:
+            p.profile(m, no_null_cols=[barcode])
+            if samples is not None:
+                p.subset(
+                    m, samples, "SAMPLE_ID", "maf_barcodes_in_clinical",
+                    f"{barcode} values absent from SAMPLE_ID",
+                )
+            if neoantigen is not None:
+                neo = p.table(neoantigen, [("SAMPLE_ID", "Sample_ID")])
+                p.equal(m, neo, "SAMPLE_ID", "neoantigen_maf_ids_equal")
+
+    for name, mat in matrices.items():
+        n = p.count(p.table(mat, []))
+        p.row(_finding(f"nonempty_{name}", f"{n} > 0", n, "1", _lit("matrix row count")))
+        sample_cols = [c for c in mat.columns if c not in _MATRIX_GENE_COLS]
+        if sample_cols == mat.columns:
+            sample_cols = sample_cols[1:]  # unknown gene column: skip the first
+        if sample_cols and samples is not None:
+            listed = mat.sparkSession.createDataFrame(
+                [(c,) for c in sample_cols], "matrix_sample string"
+            )
+            p.subset(
+                p.table(listed, [("SAMPLE_ID", "matrix_sample")]), samples, "SAMPLE_ID",
+                f"matrix_samples_in_clinical_{name}", "matrix_sample values absent from SAMPLE_ID",
+            )
+    return p.findings()
 
 
 #: cBioPortal's documented (genetic_alteration_type, datatype) matrix for
@@ -965,46 +1118,32 @@ def meta_consistency_checks(
     # picks the canonical id's count), NOT a scalar crossJoin: keeps the
     # plan nested-loop-free for the registry linter.
     per_study = (
-        metas.filter(F.col("cancer_study_identifier").isNotNull())
+        metas.filter("cancer_study_identifier IS NOT NULL")
         .groupBy("cancer_study_identifier")
-        .agg(F.count(F.lit(1)).alias("__c"))
+        .agg(F.expr("count(1) AS __c"))
     )
-    deviants = per_study.agg(
-        (
-            F.coalesce(F.sum("__c"), F.lit(0))
-            - F.coalesce(
-                F.min(
-                    F.struct(F.col("cancer_study_identifier"), F.col("__c"))
-                ).getField("__c"),
-                F.lit(0),
-            )
-        ).alias("n")
+    deviants = per_study.selectExpr(
+        "coalesce(sum(__c), 0)"
+        " - coalesce(min(struct(cancer_study_identifier, __c)).__c, 0) AS n"
     )
 
-    pair = F.concat_ws("/", "genetic_alteration_type", "datatype")
     allowed = [f"{g}/{d}" for g, d in sorted(ALLOWED_META_DATATYPES)]
+    pair = "concat_ws('/', genetic_alteration_type, datatype)"
     bad_pairs = metas.filter(
-        F.col("genetic_alteration_type").isNotNull() & ~pair.isin(allowed)
+        f"genetic_alteration_type IS NOT NULL AND NOT ({_in_set(pair, allowed)})"
     )
-    referenced = metas.filter(F.col("data_filename").isNotNull()).select(
-        F.col("data_filename").alias("filename")
+    referenced = metas.filter("data_filename IS NOT NULL").selectExpr(
+        "data_filename AS filename"
     )
-    missing_data = referenced.join(
-        F.broadcast(bundle_files), "filename", "left_anti"
+    missing_data = referenced.join(bundle_files.hint("broadcast"), "filename", "left_anti")
+    orphans = bundle_files.filter("startswith(filename, 'data_')").join(
+        referenced.distinct().hint("broadcast"), "filename", "left_anti"
     )
-    orphans = (
-        bundle_files.filter(F.col("filename").startswith("data_"))
-        .join(F.broadcast(referenced.distinct()), "filename", "left_anti")
-    )
-    dup_stable = _dup_groups(
-        metas.filter(F.col("stable_id").isNotNull()), ["stable_id"]
-    )
+    dup_stable = _dup_groups(metas.filter("stable_id IS NOT NULL"), ["stable_id"])
     required = spark.createDataFrame(
         [(f,) for f in REQUIRED_BUNDLE_FILES], "filename string"
     )
-    missing_required = required.join(
-        F.broadcast(bundle_files), "filename", "left_anti"
-    )
+    missing_required = required.join(bundle_files.hint("broadcast"), "filename", "left_anti")
     return findings_union(
         [
             _findings(
@@ -1012,8 +1151,8 @@ def meta_consistency_checks(
                 [
                     _violation(
                         "meta_study_id_uniform",
-                        F.col("n"),
-                        "metas declaring a different cancer_study_identifier",
+                        "n",
+                        _lit("metas declaring a different cancer_study_identifier"),
                     )
                 ],
             ),
@@ -1117,56 +1256,39 @@ def clinical_header_conformance(attrs: DataFrame) -> DataFrame:
     Scale: headers are KB-sized per file — this whole validator is a
     single combiner-reduced aggregate over descriptor rows; it reads no
     data-file bytes, so it costs nothing at 100 TB."""
-    dt = F.col("datatype")
-    pr = F.col("priority").cast("string")
-    dn = F.col("display_name")
-    # F.sum over zero rows is NULL, which would make "n_bad == 0" NULL on an
+    pr = "CAST(priority AS STRING)"
+    # A SUM over zero rows is NULL, which would make "n_bad = 0" NULL on an
     # empty attrs frame and mis-report every sum rule as failing with a NULL
     # count — coalesce to 0 so a vacuously clean input reads all-OK
-    zsum = lambda c, name: F.coalesce(F.sum(c), F.lit(0)).alias(name)  # noqa: E731
-    aggs = [
-        zsum(
-            F.when(
-                dt.isNull() | ~dt.isin(*CLINICAL_HEADER_DATATYPES), 1
-            ).otherwise(0),
-            "__bad_datatype",
-        ),
-        zsum(
-            F.when(pr.isNull() | ~pr.rlike(r"^[0-9]+$"), 1).otherwise(0),
-            "__bad_priority",
-        ),
-        (
-            F.count(F.lit(1)) - F.countDistinct("filename", "column_id")
-        ).alias("__dup_ids"),
-        F.countDistinct(
-            F.when(~F.col("arity_ok"), F.col("filename"))
-        ).alias("__arity_files"),
-        zsum(
-            F.when(dn.isNull() | (dn == ""), 1).otherwise(0),
-            "__missing_display",
-        ),
-        F.countDistinct("filename").alias("__n_files"),
-        F.countDistinct(
-            F.when(F.col("column_id") == "PATIENT_ID", F.col("filename"))
-        ).alias("__has_patient_id"),
-    ]
-    agg = attrs.agg(*aggs)
+    agg = attrs.selectExpr(
+        "coalesce(sum(CASE WHEN datatype IS NULL OR NOT ("
+        f"{_in_set('datatype', CLINICAL_HEADER_DATATYPES)}) THEN 1 ELSE 0 END), 0)"
+        " AS __bad_datatype",
+        f"coalesce(sum(CASE WHEN {pr} IS NULL OR NOT ({pr} RLIKE '^[0-9]+$')"
+        " THEN 1 ELSE 0 END), 0) AS __bad_priority",
+        "count(1) - count(DISTINCT filename, column_id) AS __dup_ids",
+        "count(DISTINCT CASE WHEN NOT arity_ok THEN filename END) AS __arity_files",
+        "coalesce(sum(CASE WHEN display_name IS NULL OR display_name = ''"
+        " THEN 1 ELSE 0 END), 0) AS __missing_display",
+        "count(DISTINCT filename) AS __n_files",
+        "count(DISTINCT CASE WHEN column_id = 'PATIENT_ID' THEN filename END)"
+        " AS __has_patient_id",
+    )
     rules = [
-        ("header_datatype_vocabulary", F.col("__bad_datatype"), "ERROR",
+        ("header_datatype_vocabulary", "__bad_datatype", "ERROR",
          "attrs with datatype outside STRING/NUMBER/BOOLEAN"),
-        ("header_priority_integer", F.col("__bad_priority"), "ERROR",
+        ("header_priority_integer", "__bad_priority", "ERROR",
          "attrs with non-integer priority"),
-        ("header_duplicate_column_id", F.col("__dup_ids"), "ERROR",
+        ("header_duplicate_column_id", "__dup_ids", "ERROR",
          "duplicate column ids within a file"),
-        ("header_arity_mismatch", F.col("__arity_files"), "ERROR",
+        ("header_arity_mismatch", "__arity_files", "ERROR",
          "files with ragged '#' header lines"),
-        ("header_display_name_missing", F.col("__missing_display"), "WARN",
+        ("header_display_name_missing", "__missing_display", "WARN",
          "attrs with empty display names"),
-        ("header_required_patient_id",
-         F.col("__n_files") - F.col("__has_patient_id"), "ERROR",
+        ("header_required_patient_id", "__n_files - __has_patient_id", "ERROR",
          "files missing required column PATIENT_ID"),
     ]
     return _findings(
         agg,
-        [_violation(name, n, detail, sev) for name, n, sev, detail in rules],
+        [_violation(name, n, _lit(detail), sev) for name, n, sev, detail in rules],
     )

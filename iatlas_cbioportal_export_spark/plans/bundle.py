@@ -45,7 +45,7 @@ from iatlas_cbioportal_export_spark.operators.projections import (
 )
 from iatlas_cbioportal_export_spark.operators.validation import parse_meta_text
 from iatlas_cbioportal_export_spark.session import job_label
-from iatlas_cbioportal_export_spark.sources.readers import read_tsv
+from iatlas_cbioportal_export_spark.sources.readers import read_tsv, tsv_string_schema
 from iatlas_cbioportal_export_spark.sources.sinks import (
     render_case_list_text,
     render_meta_file,
@@ -235,15 +235,17 @@ def write_study_bundle(
             ).collect()
 
     # Pool threads do not inherit the caller's local properties (job group,
-    # scheduler pool, job description). Each task is wrapped on its own in
-    # inheritable_thread_target, which hands the task a private copy of
-    # them: tasks sharing one copy would see each other's SQL execution
-    # ids. It is given no session, so it also works without pinned
-    # threads; PySpark then warns that job tags (unused here) are not
-    # inherited.
+    # scheduler pool, job description) or job tags. Each task is wrapped on
+    # its own in inheritable_thread_target(session), which hands the task a
+    # private copy of them and re-adds the session's tags: tasks sharing
+    # one copy would see each other's SQL execution ids. Passing the
+    # session needs PySpark's pinned-thread mode, its default.
+    spark = clinical_sample.sparkSession
     with ThreadPoolExecutor(max_workers=3) as pool:
         clinical_futures = [
-            pool.submit(inheritable_thread_target(_clinical_artifact), name, view, key)
+            pool.submit(
+                inheritable_thread_target(spark)(_clinical_artifact), name, view, key
+            )
             for name, view, key in (
                 ("data_clinical_patient.txt", clinical_patient, "PATIENT_ID"),
                 ("data_clinical_sample.txt", clinical_sample, _SAMPLE_ID),
@@ -252,7 +254,7 @@ def write_study_bundle(
         # Case lists need only the persisted sample view — kick the A1
         # aggregate off concurrently; its rendering happens below, after
         # the meta_study write, exactly where it happened before.
-        groups_future = pool.submit(inheritable_thread_target(_case_list_groups))
+        groups_future = pool.submit(inheritable_thread_target(spark)(_case_list_groups))
         for fut in clinical_futures:
             for key, value in fut.result():
                 artifacts[key] = value
@@ -336,8 +338,9 @@ def write_load_stage_case_lists(spark, bundle_dir: str) -> dict[str, str]:
     external tool reads) else ``data_clinical_sample.txt`` (its 4 ``#``
     header lines skipped); barcodes from the first of
     :data:`MAF_ARTIFACT_NAMES` that exists — the chunked directory and the
-    single-file spellings read alike, ``#version`` lines skipped, the
-    schema inferred (one small job, the same read ``cli validate`` does).
+    single-file spellings read alike, ``#version`` lines skipped. Both are
+    read as strings (``sources.readers.tsv_string_schema``, no job), so an
+    id such as ``007`` is listed verbatim, as ``cli validate`` reads it.
 
     Scale shape: only the distinct sample-id list is collected (the same
     KB/MB-bounded id-list class as the bundle writer's case lists); the
@@ -358,7 +361,9 @@ def write_load_stage_case_lists(spark, bundle_dir: str) -> dict[str, str]:
     )
     if sample_path is None:
         return {}
-    samples = read_tsv(spark, sample_path, comment="#")
+    samples = read_tsv(
+        spark, sample_path, tsv_string_schema(sample_path, comment="#"), comment="#"
+    )
     if _SAMPLE_ID not in samples.columns:
         return {}
     samples = samples.select(_SAMPLE_ID).distinct()
@@ -375,7 +380,9 @@ def write_load_stage_case_lists(spark, bundle_dir: str) -> dict[str, str]:
 
     maf_path = find_artifact(bundle_dir, MAF_ARTIFACT_NAMES)
     if maf_path is not None:
-        maf = read_tsv(spark, maf_path, comment="#")
+        maf = read_tsv(
+            spark, maf_path, tsv_string_schema(maf_path, comment="#"), comment="#"
+        )
         if _BARCODE in maf.columns:
             artifacts["case_lists/cases_sequenced.txt"] = _write_sequenced(
                 case_list_dir, study_id, samples, maf

@@ -3,9 +3,11 @@
 Reference behavior being re-expressed (not copied):
 - S1 Synapse TSV scan  -> header'd tab-separated read (reference:
   ``clinical.py:319-322`` uses ``pd.read_csv(sep="\\t")`` with inferred
-  dtypes). :func:`read_tsv` takes an explicit schema, but every read of the
-  CLI chain passes none today and infers its types, as the reference does:
-  a header job plus an inference job per file.
+  dtypes). :func:`read_tsv` infers its types when it gets no schema, as the
+  reference does: a header job plus an inference job per file. The
+  ``clinical`` and ``maf`` inputs are read so, because their inferred types
+  reach the bundle bytes; ``validate`` and ``load`` read the bundle back
+  with :func:`tsv_string_schema`, which runs no job.
 - S2 multi-file MAF folder scan with ``comment="#"`` skip and outer column
   alignment (reference: ``maf.py:14-36``).
 - S3 header-skipping re-read of cBioPortal clinical output (reference:
@@ -21,10 +23,12 @@ scan because nothing is materialized here. The jobs a read does run itself
 
 from __future__ import annotations
 
+import csv
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from iatlas_cbioportal_export_spark.session import job_label
 
@@ -67,6 +71,44 @@ def read_tsv(
         reader = reader.option("inferSchema", True)
     with job_label(spark, f"read {os.path.basename(path)}"):
         return reader.csv(path)
+
+
+def tsv_string_schema(path: str, comment: str | None = None) -> StructType:
+    """An all-string schema for the header'd TSV at ``path`` (a file, or a
+    directory of part files as the csv source reads it), built on the
+    driver from the first line that is neither empty nor a ``comment``
+    line: :func:`read_tsv` with it runs no header or inference job.
+
+    The names follow the csv source's header rules: an empty name becomes
+    ``_c<i>`` and names repeated (case-insensitively) get their position
+    appended."""
+    files = [path]
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if not f.startswith(("_", "."))
+        )
+    header: list[str] = []
+    for name in files:
+        with open(name, newline="") as fh:
+            lines = (ln for ln in fh if ln.strip("\r\n"))
+            if comment:
+                lines = (ln for ln in lines if not ln.startswith(comment))
+            first = next(lines, None)
+        if first is not None:
+            header = next(csv.reader([first], delimiter="\t"))
+            break
+    repeats = Counter(c.lower() for c in header)
+    return StructType(
+        [
+            StructField(
+                f"_c{i}" if not c else f"{c}{i}" if repeats[c.lower()] > 1 else c,
+                StringType(),
+            )
+            for i, c in enumerate(header)
+        ]
+    )
 
 
 def read_maf_folder(spark: SparkSession, folder: str) -> DataFrame | None:

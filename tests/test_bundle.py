@@ -245,6 +245,20 @@ def test_bundle_jobs_keep_caller_job_group(spark, tmp_path):
     ), descriptions
 
 
+def test_bundle_pool_tasks_are_given_the_session(spark, tmp_path):
+    """The pool tasks are wrapped with the session, so a caller's job tags
+    reach them and PySpark raises no tags-not-inherited warning."""
+    import warnings
+
+    patient, sample, maf = _fixtures(spark)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        write_study_bundle(
+            str(tmp_path / "bundle"), "Demo_2026", patient, sample, mutations=maf
+        )
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+
+
 def test_job_label_nests_and_restores(spark):
     sc = spark.sparkContext
     key = "spark.job.description"

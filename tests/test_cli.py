@@ -441,3 +441,146 @@ def test_cli_clinical_reference_artifacts_mode(spark, tmp_path):
         with open(os.path.join(b2, name), "rb") as fh:
             two = fh.read()
         assert one == two, name
+
+
+_GOLDEN = os.path.join(os.path.dirname(__file__), "golden")
+
+
+def _plant_duplicate_sample(bundle):
+    """Repeat the sample file's last row: the one planted ERROR."""
+    path = os.path.join(bundle, "data_clinical_sample.txt")
+    with open(path) as fh:
+        last = fh.read().splitlines()[-1]
+    with open(path, "a") as fh:
+        fh.write(last + "\n")
+
+
+@pytest.mark.parametrize("variant", ["plain", "neoantigen", "duplicate"])
+def test_cli_validate_stdout_matches_golden(spark, tmp_path, capsys, variant):
+    """`cli validate` prints the committed findings table byte for byte,
+    rows in order, on the _make_bundle fixture: as is, with the neoantigen
+    TSV, and with a repeated sample row."""
+    bundle = _make_bundle(tmp_path)
+    argv = ["validate", "--bundle", bundle]
+    if variant == "neoantigen":
+        neo = tmp_path / "neo.tsv"
+        neo.write_text("Sample_ID\tneoantigen_count\ns1\t4\ns3\t2\n")
+        argv += ["--neoantigen", str(neo)]
+    if variant == "duplicate":
+        _plant_duplicate_sample(bundle)
+    capsys.readouterr()
+    rc = main(argv)
+    with open(os.path.join(_GOLDEN, f"cli_validate_{variant}.tsv")) as fh:
+        assert capsys.readouterr().out == fh.read()
+    assert rc == (1 if variant == "duplicate" else 0)
+
+
+def _write_sample_file(bundle, rows):
+    """A cBioPortal sample file (4 ``#`` header lines) with ``rows`` of
+    (SAMPLE_ID, PATIENT_ID)."""
+    header = "SAMPLE_ID\tPATIENT_ID"
+    with open(os.path.join(bundle, "data_clinical_sample.txt"), "w") as fh:
+        fh.write("".join(f"#{header}\n" for _ in range(4)) + header + "\n")
+        fh.write("".join(f"{s}\t{p}\n" for s, p in rows))
+
+
+def test_cli_load_lists_numeric_looking_sample_ids_verbatim(spark, tmp_path):
+    """Sample ids that all look numeric stay strings: `007` and `7` are two
+    case-list members, and load does not fail joining them."""
+    bundle, dest = str(tmp_path / "bundle"), str(tmp_path / "store")
+    os.makedirs(bundle)
+    with open(os.path.join(bundle, "meta_study.txt"), "w") as fh:
+        fh.write("cancer_study_identifier: iatlas_Num\n")
+    _write_sample_file(bundle, [("007", "p1"), ("7", "p2")])
+    assert main(["load", "--bundle", bundle, "--dest", dest]) == 0
+    with open(os.path.join(dest, "case_lists", "cases_all.txt")) as fh:
+        ids = fh.read().splitlines()[-1].split(": ")[1].split("\t")
+    assert ids == ["007", "7"]
+
+
+def test_cli_validate_distinct_numeric_looking_ids_are_no_duplicates(
+    spark, tmp_path, capsys
+):
+    """`007`, `7` and `0007` are three sample ids, not one id three times."""
+    bundle = _make_bundle(tmp_path)
+    _write_sample_file(bundle, [("007", "p1"), ("7", "p1"), ("0007", "p2")])
+    capsys.readouterr()
+    main(["validate", "--bundle", bundle])
+    lines = capsys.readouterr().out.splitlines()
+    assert "no_duplicate_sample_id_sample\tOK\t0\t0\tduplicate key groups" in lines
+
+
+def test_tsv_string_schema_reads_without_a_job(spark, tmp_path):
+    """A read with the header-derived string schema submits no Spark job
+    and names the columns as the csv source's own header read does, for a
+    file and for a directory of part files."""
+    from iatlas_cbioportal_export_spark.sources.readers import (
+        read_tsv,
+        tsv_string_schema,
+    )
+
+    text = "#version 2\n\na\t\tA\tb\n1\t2\t3\t4\n"
+    single = tmp_path / "t.tsv"
+    single.write_text(text)
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    (parts / "_SUCCESS").write_text("")
+    (parts / "part-00000.csv").write_text(text)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for path in (str(single), str(parts)):
+        sc.setJobGroup("read-probe", "declared-schema read probe")
+        try:
+            df = read_tsv(spark, path, tsv_string_schema(path, comment="#"), comment="#")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(tracker.getJobIdsForGroup("read-probe")) == []
+        assert df.columns == read_tsv(spark, path, comment="#").columns
+        assert df.collect() == [tuple("1234")]
+
+
+def _validate_probe(spark, tmp_path, monkeypatch):
+    """Run `cli validate --neoantigen` on the fixture under a job group and
+    return (jobs in the group when the findings union is built, the
+    findings frame)."""
+    from iatlas_cbioportal_export_spark.operators import validation
+
+    bundle = _make_bundle(tmp_path)
+    neo = tmp_path / "neo.tsv"
+    neo.write_text("Sample_ID\tneoantigen_count\ns1\t4\ns3\t2\n")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    seen = {}
+
+    def probe(findings):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        seen["jobs"] = list(tracker.getJobIdsForGroup("validate-probe"))
+        seen["findings"] = union(findings)
+        return seen["findings"]
+
+    union = validation.findings_union
+    monkeypatch.setattr(validation, "findings_union", probe)
+    sc.setJobGroup("validate-probe", "cli validate probe")
+    try:
+        assert main(["validate", "--bundle", bundle, "--neoantigen", str(neo)]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return seen["jobs"], seen["findings"]
+
+
+def test_cli_validate_runs_no_job_before_its_collect(spark, tmp_path, monkeypatch):
+    jobs, _ = _validate_probe(spark, tmp_path, monkeypatch)
+    assert jobs == []
+
+
+def test_cli_validate_scans_each_file_once(spark, tmp_path, monkeypatch):
+    """The findings plan reads each of the four files (patient, sample,
+    the MAF directory, neoantigen) with one scan."""
+    _, findings = _validate_probe(spark, tmp_path, monkeypatch)
+    plan = findings._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the final plan alone, not the initial one too
+    assert plan.toString().count("FileScan csv") == 4, plan.toString()

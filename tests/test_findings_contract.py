@@ -76,6 +76,10 @@ def _validators(spark, tmp_path):
             patients, a, data_files={"maf": (maf, "Tumor_Sample_Barcode")},
             case_lists={"all": b},
         ),
+        "bundle_checks": v.bundle_checks(
+            patients, a, maf, spark.createDataFrame([("s1",)], "Sample_ID string"),
+            {"data_m.txt": spark.createDataFrame([("g", "1")], "Hugo_Symbol string, s9 string")},
+        ),
         "meta_consistency_checks": v.meta_consistency_checks(metas, files),
         "clinical_header_conformance": v.clinical_header_conformance(attrs),
     }
