@@ -190,16 +190,17 @@ def gopher_quality(df: DataFrame, min_words: int = GOPHER_MIN_WORDS) -> DataFram
     )
 
 
-def _hashed_features(df: DataFrame, dim: int, text_col: str, id_col: str) -> DataFrame:
-    """(id, array<int> feature buckets): word unigrams + bigrams hashed into
-    ``dim`` buckets with the PORTABLE rolling hash (``functions/text.py`` —
-    deliberately not xxhash64, so any engine reproduces the bucketing).
+def _hashed_features(df: DataFrame, dim: int) -> DataFrame:
+    """(``doc_id``, array<int> feature buckets of ``text``): word unigrams +
+    bigrams hashed into ``dim`` buckets with the PORTABLE rolling hash
+    (``functions/text.py`` — deliberately not xxhash64, so any engine
+    reproduces the bucketing).
     Narrow — one codegen'd pass, bucket ids materialized once per feature
     (inlining the hash into downstream folds recomputes it per fold step,
     the measured O(n²)-class trap documented in ``text.hashed_embedding``)."""
     from iatlas_cbioportal_export_spark.functions.text import _FP_BASE, _FP_MOD
 
-    toks = T.tokens(text_col)
+    toks = T.tokens("text")
     bigrams = F.when(
         F.size(F.col("__toks")) >= 2,
         F.transform(
@@ -218,11 +219,9 @@ def _hashed_features(df: DataFrame, dim: int, text_col: str, id_col: str) -> Dat
         % F.lit(dim)
     ).cast("int")
     return (
-        df.select(F.col(id_col), toks.alias("__toks"))
-        .select(
-            F.col(id_col), F.concat(F.col("__toks"), bigrams).alias("__feats")
-        )
-        .select(F.col(id_col), F.transform("__feats", bucket).alias("__bks"))
+        df.select("doc_id", toks.alias("__toks"))
+        .select("doc_id", F.concat(F.col("__toks"), bigrams).alias("__feats"))
+        .select("doc_id", F.transform("__feats", bucket).alias("__bks"))
     )
 
 
@@ -251,7 +250,7 @@ def dsir_importance_weights(
 
     def hist(frame: DataFrame) -> tuple[list[int], int]:
         rows = (
-            _hashed_features(frame, dim, "text", "doc_id")
+            _hashed_features(frame, dim)
             .select(F.explode("__bks").alias("__b"))
             .groupBy("__b")
             .agg(F.count(F.lit(1)).alias("__n"))
@@ -270,7 +269,7 @@ def dsir_importance_weights(
         for b in range(dim)
     ]
     w_lit = F.array(*[F.lit(float(w)) for w in weights])
-    feats = _hashed_features(df, dim, "text", "doc_id")
+    feats = _hashed_features(df, dim)
     score = F.aggregate(
         F.col("__bks"),
         F.lit(0.0),

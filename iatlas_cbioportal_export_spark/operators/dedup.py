@@ -854,7 +854,7 @@ def jaccard_prefix_join(
       Candidates scale with true-match density, IMMUNE to vocabulary
       entropy: the prefix scheme measured 199M candidates for a 573k-pair
       answer on a 10× row-amplified low-entropy corpus
-      (tools/stress_bench.py) because every "rare" token was still
+      (061f3a8:tools/stress_bench.py) because every "rare" token was still
       corpus-common; deletion blocking keys on whole-set content instead
       of single tokens. Signature hashing is xxhash64 (internal blocking
       only — collisions can only ADD candidates, which exact verification
@@ -900,7 +900,7 @@ def jaccard_prefix_join(
     computes exact |a∩b| via array_intersect. Shuffles: one set-collapse
     groupBy, (set, token) exploded pairs, then (set, set) candidates.
 
-    Regime note (measured, tools/stress_bench.py, 10× row-amplified
+    Regime note (measured, 061f3a8:tools/stress_bench.py, 10× row-amplified
     low-entropy corpus, identical 573k-pair outputs): prefix 296s vs
     deletion 16s (XOR signatures; 1×: 4.9s vs 5.6s) — prefix candidate
     volume is Σ block² over prefix-token blocks and degrades toward

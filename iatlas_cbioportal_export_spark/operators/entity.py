@@ -148,13 +148,12 @@ def fellegi_sunter_linkage(
     right_id: str,
     block_cols: list[str],
     compare_cols: list[str],
-    m: float = 0.95,
     upper: float = 3.0,
-    lower: float = 0.0,
 ) -> DataFrame:
     """Probabilistic record linkage, Fellegi-Sunter (1969) model: blocked
     candidate pairs are scored by per-field agreement log-likelihood
-    ratios and classified link / possible / non-link — the statistical
+    ratios and classified link (score >= ``upper``) / possible (score > 0)
+    / non-link — the statistical
     upgrade of :func:`fuzzy_join_edit_distance` when fields carry very
     different evidential value (agreeing on a phone number means more
     than agreeing on a market segment).
@@ -165,8 +164,8 @@ def fellegi_sunter_linkage(
     one map-side-combined groupBy per field over |values| rows, collected
     as k decision scalars (KB-bounded) and baked back as literals, so the
     pair-scoring stage stays a pure narrow projection over the blocked
-    join. m (chance truly-linked records agree) is the operator's literal
-    parameter, as in practice (estimating m needs labeled pairs or EM).
+    join. m (chance truly-linked records agree) is the literal 0.95, as in
+    practice (estimating m needs labeled pairs or EM).
 
     Weights: agree -> log2(m/u), disagree -> log2((1-m)/(1-u)), u clamped
     to [1e-9, 1-1e-9] (a constant field would otherwise send the
@@ -199,6 +198,7 @@ def fellegi_sunter_linkage(
         )
         u = freq / (n * n)
         us[c] = min(max(u, 1e-9), 1 - 1e-9)
+    m = 0.95
     weights = {
         c: (math.log2(m / us[c]), math.log2((1 - m) / (1 - us[c])))
         for c in compare_cols
@@ -229,7 +229,7 @@ def fellegi_sunter_linkage(
         *[agree[c].alias(f"agree_{c}") for c in compare_cols],
         score.alias("score"),
         F.when(score >= F.lit(upper), F.lit("link"))
-        .when(score > F.lit(lower), F.lit("possible"))
+        .when(score > F.lit(0.0), F.lit("possible"))
         .otherwise(F.lit("non_link"))
         .alias("decision"),
     )

@@ -348,18 +348,16 @@ def _centroid_sims(vec: Column, centroids: list[tuple[int, list[float]]]) -> Col
     )
 
 
-def _centroid_sims_expr(
-    vec_name: str, centroids: list[tuple[int, list[float]]]
-) -> Column:
-    """String-expression twin of :func:`_centroid_sims` for when the vector
-    is a plain column NAME: one ``F.expr`` parse instead of thousands of
+def _centroid_sims_expr(centroids: list[tuple[int, list[float]]]) -> Column:
+    """String-expression twin of :func:`_centroid_sims` over the
+    ``embedding`` column: one ``F.expr`` parse instead of thousands of
     py4j ``F.lit`` round-trips (16 cells x 64 dims of Column objects cost
     ~3s of driver time; the equivalent SQL string parses in milliseconds).
     Folds and cast placement replicate :func:`cosine` exactly; centroid
     norms are pre-folded driver-side with the same left-to-right
     accumulation, so every double is bit-identical."""
     norm_vec = (
-        f"sqrt(aggregate({vec_name}, 0.0D, "
+        "sqrt(aggregate(embedding, 0.0D, "
         "(acc, x) -> acc + cast(x as double) * cast(x as double)))"
     )
     parts = []
@@ -370,7 +368,7 @@ def _centroid_sims_expr(
             acc = acc + v * v
         nc = f"{math.sqrt(acc)!r}D"
         dot = (
-            f"aggregate(zip_with({vec_name}, {arr}, "
+            f"aggregate(zip_with(embedding, {arr}, "
             "(x, y) -> cast(x as double) * cast(y as double)), "
             "0.0D, (a, b) -> a + b)"
         )
@@ -415,10 +413,10 @@ def ivf_topk(
         )
     ]
     assigned = corpus.withColumn(
-        "__cell", F.array_max(_centroid_sims_expr("embedding", centroids))["cell_id"]
+        "__cell", F.array_max(_centroid_sims_expr(centroids))["cell_id"]
     )
     probes = F.slice(
-        F.reverse(F.array_sort(_centroid_sims_expr("embedding", centroids))),
+        F.reverse(F.array_sort(_centroid_sims_expr(centroids))),
         1,
         n_probe,
     )
@@ -470,7 +468,7 @@ def kmeans_centroids(
     for _ in range(iterations):
         assigned = corpus.withColumn(
             "__cell",
-            F.array_max(_centroid_sims_expr("embedding", centroids))["cell_id"],
+            F.array_max(_centroid_sims_expr(centroids))["cell_id"],
         ).select("__cell", F.posexplode(F.col("embedding")).alias("__pos", "__val"))
         means = (
             assigned.groupBy("__cell", "__pos")
@@ -508,10 +506,10 @@ def ivf_topk_trained(
         corpus, n_cells=n_cells, iterations=iterations
     )
     assigned = corpus.withColumn(
-        "__cell", F.array_max(_centroid_sims_expr("embedding", centroids))["cell_id"]
+        "__cell", F.array_max(_centroid_sims_expr(centroids))["cell_id"]
     )
     probes = F.slice(
-        F.reverse(F.array_sort(_centroid_sims_expr("embedding", centroids))),
+        F.reverse(F.array_sort(_centroid_sims_expr(centroids))),
         1,
         n_probe,
     )
@@ -849,7 +847,7 @@ def semantic_dedup_pairs(
     # whole query re-deriving assignment per branch at sf0.01).
     assigned = df.select(
         F.col("vec_id").alias("id"),
-        F.array_max(_centroid_sims_expr("embedding", centroids))["cell_id"].alias(
+        F.array_max(_centroid_sims_expr(centroids))["cell_id"].alias(
             "__cell"
         ),
     ).localCheckpoint(eager=False)
@@ -1345,7 +1343,7 @@ def ivfpq_topk(
     )
 
     probes = F.slice(
-        F.reverse(F.array_sort(_centroid_sims_expr("embedding", centroids))),
+        F.reverse(F.array_sort(_centroid_sims_expr(centroids))),
         1,
         n_probe,
     )

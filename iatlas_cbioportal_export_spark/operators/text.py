@@ -334,11 +334,6 @@ def pack_token_budget_bins(df: DataFrame, budget_tokens: int = 2048) -> DataFram
     )
 
 
-# deprecated alias — the token-budget binner shipped as ``pack_sequences``
-# through round 7, colliding with sampling.pack_sequences' different contract
-pack_sequences = pack_token_budget_bins
-
-
 def unigram_logprob_score(df: DataFrame) -> DataFrame:
     """Statistical quality score: mean unigram log10-probability per
     document under the CORPUS's own unigram distribution (the KenLM/CCNet

@@ -37,6 +37,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from iatlas_cbioportal_export_spark.operators.aggregates import case_list_groups
 from iatlas_cbioportal_export_spark.operators.joins import semi_join_sequenced
@@ -228,10 +229,16 @@ def write_study_bundle(
         )
         return [(name, written), (meta_name, meta_path)]
 
+    # Case lists carry SAMPLE_ID as text, as the sample file renders it: an
+    # inferred numeric id (`007` read as 7) is listed as `7`, not an int.
+    case_ids = clinical_sample.select(
+        F.col(_SAMPLE_ID).cast("string").alias(_SAMPLE_ID), _CANCER_TYPE
+    )
+
     def _case_list_groups():
         with job_label(clinical_sample.sparkSession, "collect case-list groups"):
             return case_list_groups(
-                clinical_sample, group_col=_CANCER_TYPE, id_col=_SAMPLE_ID
+                case_ids, group_col=_CANCER_TYPE, id_col=_SAMPLE_ID
             ).collect()
 
     # Pool threads do not inherit the caller's local properties (job group,
@@ -315,7 +322,7 @@ def write_study_bundle(
     )
     if mutations is not None:
         artifacts["case_lists/cases_sequenced.txt"] = _write_sequenced(
-            case_list_dir, study_id, clinical_sample.select(_SAMPLE_ID), mutations
+            case_list_dir, study_id, case_ids.select(_SAMPLE_ID), mutations
         )
 
     clinical_patient.unpersist()

@@ -1,6 +1,8 @@
 """Plan linter: inspect a DataFrame's physical plan for the anti-patterns
-that kill 100 TB jobs. The library form of ``tools/explain_plans.py``'s
-expectations — callable from tests and notebooks before a query ships.
+that kill 100 TB jobs — callable from tests and notebooks before a query
+ships. ``tests/test_registry_lint.py`` runs it over every registry query,
+with each query's expected plan shape (the expectations of the retired
+``061f3a8:tools/explain_plans.py``).
 
 Each finding is (severity, code, message). Severities: "error" (will not
 survive scale), "warn" (survives, but usually unintended).
@@ -15,7 +17,7 @@ from pyspark.sql import DataFrame
 Finding = tuple[str, str, str]
 
 
-def _formatted_plan(df: DataFrame) -> str:
+def formatted_plan(df: DataFrame) -> str:
     qe = df._jdf.queryExecution()
     jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -43,7 +45,7 @@ def lint_plan(
     - Exchange rangepartitioning feeding a global Sort — warn: global sorts
       are output-formatting concerns, not pipeline stages.
     """
-    plan = _formatted_plan(df)
+    plan = formatted_plan(df)
     findings: list[Finding] = []
     if "CartesianProduct" in plan:
         findings.append(

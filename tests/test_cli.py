@@ -498,6 +498,32 @@ def test_cli_load_lists_numeric_looking_sample_ids_verbatim(spark, tmp_path):
     assert ids == ["007", "7"]
 
 
+def test_cli_clinical_lists_numeric_looking_sample_ids_as_written(spark, tmp_path):
+    """When every sample id looks numeric, clinical reads them as ints like
+    pandas does, and each case list names the ids exactly as the sample
+    file's SAMPLE_ID column spells them."""
+    clinical, oncotree, codes, _ = _write_inputs(tmp_path)
+    clinical.write_text(
+        "sample_name\tpatient_name\tTCGA_Study\tAMADEUS_Study\tDataset\n"
+        "007\tp1\tSKCM\tmel\tDemo\n"
+        "7\tp2\tLUAD\tlung\tDemo\n"
+        "12\tp2\tLUAD\tlung\tDemo\n"
+    )
+    bundle = tmp_path / "bundle"
+    assert main(["clinical", "--clinical", str(clinical), "--oncotree",
+                 str(oncotree), "--codes", str(codes), "--dataset", "Demo",
+                 "--out", str(bundle)]) == 0
+    rows = (bundle / "data_clinical_sample.txt").read_text().splitlines()[5:]
+    written = sorted(row.split("\t")[0] for row in rows)
+
+    def listed(name):
+        line = (bundle / "case_lists" / name).read_text().splitlines()[-1]
+        return line.split(": ")[1].split("\t")
+
+    assert sorted(listed("cases_all.txt")) == written
+    assert sorted(listed("cases_Melanoma.txt") + listed("cases_Lung_Cancer.txt")) == written
+
+
 def test_cli_validate_distinct_numeric_looking_ids_are_no_duplicates(
     spark, tmp_path, capsys
 ):

@@ -830,11 +830,3 @@ def test_trigram_backoff_short_docs_floor(spark):
     rows = {r.doc_id: r for r in trigram_backoff_score(docs).collect()}
     assert rows[0].n_trigrams == 0 and rows[0].mean_logprob == -9.0
     assert rows[1].n_trigrams == 1
-
-
-def test_pack_sequences_deprecated_alias():
-    # the token-budget binner shipped as pack_sequences through round 7;
-    # the alias must keep old importers working
-    from iatlas_cbioportal_export_spark.operators import text
-
-    assert text.pack_sequences is text.pack_token_budget_bins

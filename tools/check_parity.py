@@ -12,11 +12,12 @@ from __future__ import annotations
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from iatlas_cbioportal_export_spark import get_spark  # noqa: E402

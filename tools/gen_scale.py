@@ -15,9 +15,8 @@ Replication strategy (replica ``r`` of ``K``):
   densifies — same window span, K× the events per window, which is what a
   bigger deployment looks like).
 - documents: doc_id offset; every 3rd word replaced by a replica token so
-  cross-replica near-dup similarity is ~0 (same trick as
-  stress_bench.amplify_docs — measures SCALING, not the pathological
-  everything-is-a-duplicate case); n_chars recomputed.
+  cross-replica near-dup similarity is ~0 (measures SCALING, not the
+  pathological everything-is-a-duplicate case); n_chars recomputed.
 - embeddings: vec_id offset; one deterministic per-replica perturbation on
   the vector so replicas aren't exact near-dups; labels unchanged.
 
@@ -29,8 +28,10 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -42,9 +43,7 @@ SRC = "/root/testdata/sf0.1"
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     out_dir = (
-        sys.argv[2]
-        if len(sys.argv) > 2
-        else f"/root/repo/.scaledata/sf{factor / 10:g}"
+        sys.argv[2] if len(sys.argv) > 2 else str(ROOT / ".scaledata" / f"sf{factor / 10:g}")
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("gen-scale", extra_conf={"spark.driver.memory": "48g"})
@@ -76,7 +75,7 @@ def main() -> None:
     }
     r = F.col("__rep")
 
-    # replica-prefixed names (same trick as stress_bench.amplify_customer):
+    # replica-prefixed names:
     # TPC-H names are low-entropy, so UNCHANGED names across replicas make
     # the true fuzzy-match density itself grow ~K^2 per name — that would
     # measure the pathological everything-matches case, not scaling
