@@ -1306,7 +1306,7 @@ def q_text_to_ann_pipeline(spark, sf_dir):
     # computed once and STORED, then indexed — the near-dup operator's DAG
     # references its input from four subtrees, and re-deriving the per-token
     # hashing fold in each costs 4x the embedding stage (measured 75s → 11s
-    # at sf0.01). build_lsh_index is the persisted-table form of this line.
+    # at sf0.01).
     emb = emb.localCheckpoint(eager=True)
     pairs = sim_ops.embedding_near_duplicates(
         emb, dim=32, threshold=0.999, num_planes=10
@@ -3676,8 +3676,7 @@ def q_profile_table(spark, sf_dir):
     exact-distinct counts, numeric min/max/mean (decimal-sum lane), string
     min/max and mean length — the single-scan reconnaissance that sizes
     broadcast/salting/bucketing decisions. The multi-count(distinct) rides
-    ONE Expand+shuffle; the at-scale flag (exact_distinct=False) swaps in
-    HLL with no Expand. o_orderdate is pre-cast to date so its string
+    ONE Expand+shuffle. o_orderdate is pre-cast to date so its string
     surface is ISO in any engine."""
     from iatlas_cbioportal_export_spark.operators.profiling import (
         table_profile,
@@ -4426,8 +4425,7 @@ def q_sim_mips_topk(spark, sf_dir):
     dot-product-trained dual-encoder retrieval scoring where cosine
     normalization would REORDER results (document norms carry learned
     importance). Broadcast query side, sequential-fold JVM scoring,
-    no-shuffle partial top-k; mips_augment reduces large-|Q| MIPS to the
-    cosine ANN paths (tested in test_similarity.py)."""
+    no-shuffle partial top-k."""
     from iatlas_cbioportal_export_spark.operators.similarity import mips_topk
 
     emb = _t(spark, sf_dir, "embeddings")

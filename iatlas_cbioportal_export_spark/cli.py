@@ -115,10 +115,8 @@ def cmd_maf(args: argparse.Namespace) -> int:
     annotator = genome_nexus_annotator(args.endpoint) if args.endpoint else fake_annotator
     # Every action below (the chunked write's count and write, the failure
     # count and report) reads this one checkpointed copy, so each variant
-    # goes through the annotator once. The checkpoint lives here, not in
-    # annotate(), which also takes streaming frames (those cannot be
-    # checkpointed). Lazy as it is, the checkpoint runs the round-robin
-    # repartition's shuffle stage when it is built.
+    # goes through the annotator once. Lazy as it is, the checkpoint runs
+    # the round-robin repartition's shuffle stage when it is built.
     with job_label(spark, "repartition MAF for annotation"):
         annotated = annotate(maf, annotator=annotator).localCheckpoint(eager=False)
     ok, failed = split_annotation_errors(annotated)

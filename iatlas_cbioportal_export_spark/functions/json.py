@@ -6,13 +6,8 @@ event-ingestion pipeline carries. Two extraction paths:
 
 - :func:`json_field` — ``get_json_object`` for one path: no schema needed,
   stays JVM-side (codegen), the right tool for pulling a couple of fields.
-- :func:`parse_props` — ``from_json`` with an explicit schema: one parse
-  producing a typed struct column, the right tool when many fields are
-  read (single parse amortized over all field accesses).
-
-At 100 TB the difference matters: N ``get_json_object`` calls re-parse the
-payload N times per row, while ``from_json`` parses once — but for a single
-field ``get_json_object`` avoids building the struct at all.
+- :func:`variant_field_stats` — ``try_parse_json`` into a VARIANT: one
+  parse, typed access without a declared schema.
 """
 
 from __future__ import annotations
@@ -25,12 +20,6 @@ def json_field(col: str, path: str, cast: str | None = None) -> Column:
     """Extract one JSON path as a column; optionally cast (JVM-side)."""
     c = F.get_json_object(F.col(col), path)
     return c.cast(cast) if cast else c
-
-
-def parse_props(df: DataFrame, col: str, schema: str) -> DataFrame:
-    """Parse a JSON text column into a typed struct column ``parsed`` with
-    ``from_json`` — one parse, schema declared (malformed rows → null)."""
-    return df.withColumn("parsed", F.from_json(F.col(col), schema))
 
 
 def json_field_stats(events: DataFrame) -> DataFrame:

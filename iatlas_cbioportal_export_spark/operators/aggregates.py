@@ -84,28 +84,6 @@ def drop_duplicates(df: DataFrame) -> DataFrame:
     return df.dropDuplicates()
 
 
-def keep_last_upsert(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
-    """A8: concat(old, new) then per-key keep-LAST — the attribute-metadata
-    upsert (reference ``clinical.py:465-468``:
-    ``concat().drop_duplicates(subset=key, keep="last")``).
-
-    pandas "last" means: rows from ``new`` win; within a frame, later rows
-    win. Spark has no row order, so we tag provenance (old=0, new=1), then
-    take ``row_number() == 1`` over
-    ``Window.partitionBy(key).orderBy(desc(provenance))`` — the one Window in
-    parity scope (SURVEY.md §2.5).
-    """
-    o = old.withColumn("__src", F.lit(0))
-    n = new.withColumn("__src", F.lit(1))
-    unioned = o.unionByName(n, allowMissingColumns=True)
-    w = Window.partitionBy(key).orderBy(F.col("__src").desc())
-    return (
-        unioned.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__src", "__rn")
-    )
-
-
 def keep_latest_by(
     df: DataFrame, key_cols: Sequence[str], order_cols: Sequence[str]
 ) -> DataFrame:
@@ -160,46 +138,11 @@ def chunk_assignment(
     )
 
 
-def approx_profile(
-    df: DataFrame,
-    distinct_cols: Sequence[str] = (),
-    percentile_cols: Sequence[str] = (),
-    rsd: float = 0.05,
-) -> DataFrame:
-    """Sketch-based profiling for 100 TB interactive exploration: HLL++
-    approximate distinct counts (``rsd`` relative error, constant memory per
-    column) and quantile-sketch p50/p95/p99 — ONE aggregate pass, map-side
-    combined, constant-size state per column regardless of input size. The
-    exact equivalents (countDistinct, exact percentile-by-sort) shuffle the
-    full key/value sets; at scale those are batch jobs, not profile queries.
-
-    Sketches are engine-defined (deterministic for a given input and rsd,
-    but not portable across engines), so this operator is bounds-tested
-    against exact results rather than oracle-hashed. Output: one row, one
-    column per requested stat.
-    """
-    aggs = []
-    for c in distinct_cols:
-        aggs.append(
-            F.approx_count_distinct(c, rsd=rsd).alias(f"approx_distinct_{c}")
-        )
-    for c in percentile_cols:
-        for p in (0.5, 0.95, 0.99):
-            aggs.append(
-                F.percentile_approx(F.col(c), p, 10_000).alias(
-                    f"p{int(p * 100)}_{c}"
-                )
-            )
-    if not aggs:
-        raise ValueError("request at least one distinct or percentile column")
-    return df.agg(*aggs)
-
-
 def sketch_accuracy_report(
     df: DataFrame, distinct_col: str, value_col: str
 ) -> DataFrame:
     """Sketch-accuracy GATE: turns the two engine-defined sketches
-    (:func:`approx_profile`'s HLL++ distinct and ``percentile_approx``'s
+    (``approx_count_distinct``'s HLL++ and ``percentile_approx``'s
     quantile digest) into deterministic, cross-engine-checkable booleans —
     the pattern for validating approximate operators whose raw outputs can
     never be oracle-hashed.
@@ -394,52 +337,36 @@ def apply_changelog(
     return untouched.unionByName(survivors)
 
 
-def exact_order_statistic(
-    df: DataFrame,
-    col: str,
-    q: float,
-    n_buckets: int = 8192,
-) -> tuple[int, int, int]:
-    """EXACT q-quantile (k-th order statistic, k = ceil(q·n)) of an integral
-    column at any scale, via iterative histogram refinement — the
-    scale-safe answer to a question Spark's built-ins don't cover:
-    ``percentile_approx`` is approximate, and the exact ``percentile``
-    aggregate buffers every value of a group in executor memory (OOM at
-    100 TB).
-
-    Algorithm: histogram passes narrow the candidate RANGE, never collect
-    values. Each pass scans the column once, buckets the current range into
-    ``n_buckets`` equal-width cells (ONE map-side-combined groupBy whose
-    shuffle is ≤ n_buckets counter rows), finds the cell containing the
-    k-th value, and recurses into it. Range shrinks n_buckets× per pass, so
-    a 64-bit domain needs ⌈64/log₂(n_buckets)⌉ ≈ 7 passes worst-case —
-    and ≤ 2-3 on real data ranges. Driver state: one (lo, hi, k) triple.
-
-    Returns (n, k, value) as plain ints (driver decision values, like the
-    k-means centroids / BPE argmax).
-    """
-    n, results = exact_order_statistics(df, col, [q], n_buckets)
-    k, v = results[0]
-    return n, k, v
+# Histogram cells per refinement pass of :func:`exact_order_statistics`.
+_ORDER_STAT_BUCKETS = 8192
 
 
 def exact_order_statistics(
     df: DataFrame,
     col: str,
     qs: Sequence[float],
-    n_buckets: int = 8192,
 ) -> tuple[int, list[tuple[int, int]]]:
-    """Multi-quantile :func:`exact_order_statistic`: ALL requested
-    quantiles refine through the SAME histogram passes — each pass is one
-    scan emitting, per row, a (which-quantile, bucket) pair for every
-    still-active candidate range the value falls in (an exploded array of
-    ≤ |qs| structs, combiner-reduced to ≤ |qs|·n_buckets counter rows).
-    p50/p90/p99 of a 100 TB column therefore cost the same 2-3 scans as
-    one quantile, not 3×. Returns (n, [(k, value) per q]).
+    """EXACT q-quantiles (k-th order statistics, k = ceil(q·n)) of an
+    integral column at any scale, via iterative histogram refinement — the
+    scale-safe answer to a question Spark's built-ins don't cover:
+    ``percentile_approx`` is approximate, and the exact ``percentile``
+    aggregate buffers every value of a group in executor memory (OOM at
+    100 TB). Returns (n, [(k, value) per q]) as plain ints (driver decision
+    values, like the k-means centroids / BPE argmax).
 
-    ``n_buckets`` trades passes against per-pass driver overhead: passes
-    = ceil(log_b(range)) after the stats pass, and EVERY pass is a full
-    column scan — but the driver collect and bucket walk grow LINEARLY
+    Algorithm: histogram passes narrow the candidate RANGE, never collect
+    values. Each pass scans the column once, buckets every still-active
+    quantile's range into :data:`_ORDER_STAT_BUCKETS` equal-width cells
+    (per row, a (which-quantile, bucket) pair for every active range the
+    value falls in — an exploded array of ≤ |qs| structs, combiner-reduced
+    to ≤ |qs|·b counter rows), finds the cell containing the k-th value,
+    and recurses into it. p50/p90/p99 of a 100 TB column therefore cost the
+    same 2-3 scans as one quantile, not 3×. Driver state: one (lo, hi, k)
+    triple per quantile.
+
+    The bucket count b trades passes against per-pass driver overhead:
+    passes = ceil(log_b(range)) after the stats pass, and EVERY pass is a
+    full column scan — but the driver collect and bucket walk grow LINEARLY
     with b while passes shrink only logarithmically. Measured on the
     cents domain (sf0.1, idle box, min of 3): b=1024 → 1.24 s (3
     refinement passes), b=8192 → 0.90 s (2 passes, KB collects),
@@ -447,15 +374,14 @@ def exact_order_statistics(
     overwhelm the saved scan). 8192 keeps most of the pass win — 5 scans
     at a 64-bit range vs 1024's 7 — at trivial driver cost; per-task
     partial-agg state is ≤ |qs|·b long counters (KB)."""
-    import math
-
+    n_buckets = _ORDER_STAT_BUCKETS
     row = df.select(
         F.count(col).alias("n"),
         F.min(col).alias("lo"),
         F.max(col).alias("hi"),
     ).collect()[0]
     if int(row["n"]) == 0:
-        raise ValueError("exact_order_statistic over an empty column")
+        raise ValueError("exact_order_statistics over an empty column")
     n, lo0, hi0 = int(row["n"]), int(row["lo"]), int(row["hi"])
     ks = [max(1, math.ceil(q * n)) for q in qs]
     # per-quantile state: (lo, hi, rank-within-range)
@@ -832,7 +758,7 @@ def psi_report(
     of an integral column — the standard distribution-drift monitor for
     features/scores in production ML. Bins come from literal ``bounds``
     (typically exact quantiles of the reference period via
-    :func:`exact_order_statistic`); per bin b:
+    :func:`exact_order_statistics`); per bin b:
 
         term_b = (p_b − q_b) · ln(p_b / q_b)
 
@@ -1360,7 +1286,6 @@ def confusion_matrix_report(
     df: DataFrame,
     pred_col: str,
     label_col: str,
-    group_col: str | None = None,
 ) -> DataFrame:
     """Per-class confusion-matrix readout (precision / recall / F1) for any
     categorical predictor this package produces (quality keep-gate, Naive
@@ -1369,7 +1294,7 @@ def confusion_matrix_report(
     (probability quality).
 
     Integer-exact: tp/fp/fn are exact counts from ONE map-side-combined
-    (``[group,] pred, label``) aggregation of the scored frame, and the
+    (``pred, label``) aggregation of the scored frame, and the
     rates are integer-ppm via the division-free forms
     ``precision_ppm = tp·1e6 // (tp+fp)``, ``recall_ppm = tp·1e6 //
     (tp+fn)`` and ``f1_ppm = 2·tp·1e6 // (2·tp+fp+fn)`` (the harmonic mean
@@ -1378,23 +1303,22 @@ def confusion_matrix_report(
     never predicted gets precision 0/0 → NULL (reported, not hidden).
 
     Plan shape: the only shuffle is the combiner-reduced cell count
-    aggregation (≤ |classes|² rows per group); per-class totals derive from
+    aggregation (≤ |classes|² rows); per-class totals derive from
     the cells, never from a second scan of the fact table.
     """
-    gcols = [group_col] if group_col else []
     cells = df.groupBy(
-        *gcols, F.col(pred_col).alias("__pred"), F.col(label_col).alias("__label")
+        F.col(pred_col).alias("__pred"), F.col(label_col).alias("__label")
     ).agg(F.count(F.lit(1)).alias("__n"))
     tp = cells.filter(F.col("__pred") == F.col("__label")).select(
-        *gcols, F.col("__pred").alias("class"), F.col("__n").alias("tp")
+        F.col("__pred").alias("class"), F.col("__n").alias("tp")
     )
-    pred_tot = cells.groupBy(*gcols, "__pred").agg(
+    pred_tot = cells.groupBy("__pred").agg(
         F.sum("__n").alias("__n_pred")
-    ).select(*gcols, F.col("__pred").alias("class"), "__n_pred")
-    label_tot = cells.groupBy(*gcols, "__label").agg(
+    ).select(F.col("__pred").alias("class"), "__n_pred")
+    label_tot = cells.groupBy("__label").agg(
         F.sum("__n").alias("__n_label")
-    ).select(*gcols, F.col("__label").alias("class"), "__n_label")
-    keys = [*gcols, "class"]
+    ).select(F.col("__label").alias("class"), "__n_label")
+    keys = ["class"]
     out = (
         pred_tot.join(label_tot, keys, "outer")
         .join(tp, keys, "left")

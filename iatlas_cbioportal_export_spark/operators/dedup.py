@@ -123,12 +123,16 @@ def ngram_jaccard_pairs(
     a = shingled.select(
         F.col("id").alias("id_a"), *[F.col(b).alias(f"{b}_a") for b in bucket], "shingle"
     )
+    # one side's shingle is renamed so the condition names two columns (both
+    # sides select from one frame: `a.shingle == b.shingle` is one column)
     b = shingled.select(
-        F.col("id").alias("id_b"), *[F.col(b).alias(f"{b}_b") for b in bucket], "shingle"
+        F.col("id").alias("id_b"),
+        *[F.col(b).alias(f"{b}_b") for b in bucket],
+        F.col("shingle").alias("shingle_b"),
     )
-    join_cond = [a["shingle"] == b["shingle"], a["id_a"] < b["id_b"]]
+    join_cond = [F.col("shingle") == F.col("shingle_b"), F.col("id_a") < F.col("id_b")]
     for bc in bucket:
-        join_cond.append(a[f"{bc}_a"] == b[f"{bc}_b"])
+        join_cond.append(F.col(f"{bc}_a") == F.col(f"{bc}_b"))
     common = (
         a.join(b, join_cond)
         .groupBy("id_a", "id_b")
@@ -400,92 +404,28 @@ def simhash_sketches(df: DataFrame) -> DataFrame:
 
 
 def simhash_buckets(
-    df: DataFrame, prefix_bits: int = 16, max_hamming: int = 8, rotations: int = 1
+    df: DataFrame, prefix_bits: int = 16, max_hamming: int = 8
 ) -> DataFrame:
-    """SimHash near-dup candidates: bucket on the top ``prefix_bits`` of the
-    sketch, verify bucket-mates by Hamming distance ≤ ``max_hamming``.
-
-    ``rotations`` > 1 is the standard recall fix for prefix bucketing (a pair
-    at Hamming ≤ h can still differ inside the prefix window): each rotation
-    r left-rotates the sketch by ``r·(64/rotations)`` bits and buckets on
-    THAT prefix, so a close pair collides unless its differing bits straddle
-    every rotated window. Candidates are (rotation, bucket)-scoped — still
-    only (id, sketch) tuples shuffle, ``rotations``× — and pairs found by
-    several rotations dedup once. Output: (id_a, id_b, hamming).
+    """SimHash near-dup candidates: bucket ``(id, sketch)`` rows on the top
+    ``prefix_bits`` of the sketch, join bucket-mates, verify
+    ``bit_count(xor) ≤ max_hamming``. Only (id, sketch) longs shuffle.
+    Output: (id_a, id_b, hamming), id_a < id_b.
     """
-    sk = simhash_sketches(df).withColumnRenamed(
-        "simhash", "sketch"
+    bucketed = (
+        simhash_sketches(df)
+        .withColumnRenamed("simhash", "sketch")
+        .withColumn("bucket", F.shiftrightunsigned("sketch", 64 - prefix_bits))
     )
-    return hamming_bucket_pairs(
-        sk,
-        prefix_bits=prefix_bits,
-        max_hamming=max_hamming,
-        rotations=rotations,
-    )
-
-
-def hamming_bucket_pairs(
-    sk: DataFrame,
-    prefix_bits: int = 16,
-    max_hamming: int = 8,
-    rotations: int = 1,
-) -> DataFrame:
-    """The rotation-prefix Hamming-bucket join shared by every 64-bit
-    sketch family (text SimHash, image dHash): bucket ``(id, sketch)``
-    rows on the top ``prefix_bits`` of each of ``rotations`` bit-rotations
-    of the sketch, join bucket-mates, verify ``bit_count(xor) ≤
-    max_hamming``. Only (id, sketch) longs shuffle. Input: columns
-    ``id``, ``sketch``. Output: (id_a, id_b, hamming), id_a < id_b,
-    deduplicated across rotations."""
-    if rotations <= 1:
-        bucketed = sk.withColumn(
-            "bucket", F.shiftrightunsigned("sketch", 64 - prefix_bits)
-        )
-        a = bucketed.withColumnsRenamed({"id": "id_a", "sketch": "sim_a"})
-        b = bucketed.withColumnsRenamed({"id": "id_b", "sketch": "sim_b"})
-        return (
-            a.join(b, on="bucket")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn(
-                "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-            )
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming")
-        )
-    step = 64 // rotations
-    sim = F.col("sketch")
-
-    def _rotated(r: int):
-        s = (r * step) % 64
-        if s == 0:
-            return sim
-        # left-rotate by s (Java shifts are mod 64, so s=0 is special-cased)
-        return F.shiftleft(sim, s).bitwiseOR(F.shiftrightunsigned(sim, 64 - s))
-
-    rot_buckets = F.array(
-        *[
-            F.struct(
-                F.lit(r).alias("rot"),
-                F.shiftrightunsigned(_rotated(r), 64 - prefix_bits).alias("bucket"),
-            )
-            for r in range(rotations)
-        ]
-    )
-    bucketed = sk.select(
-        "id", "sketch", F.explode(rot_buckets).alias("rb")
-    ).select("id", "sketch", "rb.rot", "rb.bucket")
     a = bucketed.withColumnsRenamed({"id": "id_a", "sketch": "sim_a"})
     b = bucketed.withColumnsRenamed({"id": "id_b", "sketch": "sim_b"})
     return (
-        a.join(b, on=["rot", "bucket"])
+        a.join(b, on="bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming"),
+        .withColumn(
+            "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
         )
         .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
+        .select("id_a", "id_b", "hamming")
     )
 
 
@@ -808,7 +748,7 @@ def _jaccard_deletion_candidates(toks, t: float):
         .persist()
     )
     # exact integer ⌈2·t_num·n / (t_num+t_den)⌉: the product runs in BIGINT
-    # (2·t_num·n passes 2³¹ from n ≈ 1076 at t = 0.998) and `div` is
+    # (2·t_num·n passes 2³¹ from n ≈ 1075 at t = 0.999) and `div` is
     # integral, so no overflow and no float dust
     kb = F.expr(
         f"n - (CAST(n AS BIGINT) * {2 * t_num} + {t_num + t_den - 1})"
@@ -837,9 +777,15 @@ def _jaccard_deletion_candidates(toks, t: float):
     )
 
 
-def jaccard_prefix_join(
-    df: DataFrame, threshold: float = 0.5, blocking: str = "auto"
-) -> DataFrame:
+# Deletion blocking materializes sum_{k<=ka} C(n, k) signatures per set; ka
+# alone doesn't bound that — a 10k-token set at t=0.9998 has ka=2 but
+# C(10000,2) ≈ 5e7 variants per ROW (executor OOM territory). Deletion is
+# picked only when the worst-case per-set neighborhood stays within this
+# budget; past it, prefix blocking is the safe exact path.
+_DELETION_VARIANT_BUDGET = 100_000
+
+
+def jaccard_prefix_join(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """EXACT token-set Jaccard similarity self-join (J ≥ threshold) — the
     exact-answer complement to the MinHash tier: no probabilistic recall,
     every qualifying pair returned, still no all-pairs product. Two
@@ -863,8 +809,9 @@ def jaccard_prefix_join(
       (Bayardo et al. 2007; Xiao et al. 2008), used when long sets or low
       thresholds would make deletion neighborhoods combinatorial.
 
-    ``blocking="auto"`` picks deletion iff the corpus max ka ≤ 3 (one tiny
-    aggregate — a KB-bounded decision scalar).
+    Deletion is picked iff the corpus max ka ≤ 3 and the largest set's
+    deletion neighborhood fits :data:`_DELETION_VARIANT_BUDGET` (one tiny
+    aggregate — KB-bounded decision scalars).
 
     Prefix-scheme filters (all provably complete):
     - length: J(a,b) ≥ t ⇒ t·|a| ≤ |b| ≤ |a|/t;
@@ -936,37 +883,17 @@ def jaccard_prefix_join(
         F.max(F.size("ts")).alias("mx"),
     ).collect()[0]
     max_ka, n_sets, max_set_size = stats["m"], stats["n"], stats["mx"]
-    # Deletion blocking materializes sum_{k<=ka} C(n, k) signatures per set;
-    # ka alone doesn't bound that — a 10k-token set at t=0.9998 has ka=2 but
-    # C(10000,2) ≈ 5e7 variants per ROW (executor OOM territory). Auto only
-    # picks deletion when the worst-case per-set neighborhood stays within a
-    # fixed budget; past it, prefix blocking is the safe exact path.
-    _DELETION_VARIANT_BUDGET = 100_000
     if max_ka is not None and max_set_size is not None:
         deletion_variants = sum(
             math.comb(int(max_set_size), k) for k in range(int(max_ka) + 1)
         )
     else:
         deletion_variants = 0
-    if blocking == "auto":
-        blocking = (
-            "deletion"
-            if max_ka is not None
-            and max_ka <= 3
-            and deletion_variants <= _DELETION_VARIANT_BUDGET
-            else "prefix"
-        )
-    elif blocking == "deletion" and max_ka is not None and max_ka > 3:
-        # an explicit override outside the scheme's validity regime would
-        # SILENTLY drop qualifying pairs (neighborhoods only cover <=3
-        # deletions) — refuse, like connected_components refuses an
-        # unconverged max_iterations
-        raise ValueError(
-            f"deletion blocking requires every set's ka = n - ceil(t*n) "
-            f"<= 3, but the corpus max is {max_ka} (threshold={t}). "
-            "Use blocking='prefix' or 'auto'."
-        )
-    if blocking == "deletion":
+    if (
+        max_ka is not None
+        and max_ka <= 3
+        and deletion_variants <= _DELETION_VARIANT_BUDGET
+    ):
         cand = _jaccard_deletion_candidates(toks, t)
     else:
         cand = _jaccard_prefix_candidates(toks, t)

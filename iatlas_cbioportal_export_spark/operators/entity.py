@@ -148,11 +148,10 @@ def fellegi_sunter_linkage(
     right_id: str,
     block_cols: list[str],
     compare_cols: list[str],
-    upper: float = 3.0,
 ) -> DataFrame:
     """Probabilistic record linkage, Fellegi-Sunter (1969) model: blocked
     candidate pairs are scored by per-field agreement log-likelihood
-    ratios and classified link (score >= ``upper``) / possible (score > 0)
+    ratios and classified link (score >= 3) / possible (score > 0)
     / non-link — the statistical
     upgrade of :func:`fuzzy_join_edit_distance` when fields carry very
     different evidential value (agreeing on a phone number means more
@@ -228,7 +227,7 @@ def fellegi_sunter_linkage(
         "r_id",
         *[agree[c].alias(f"agree_{c}") for c in compare_cols],
         score.alias("score"),
-        F.when(score >= F.lit(upper), F.lit("link"))
+        F.when(score >= F.lit(3.0), F.lit("link"))
         .when(score > F.lit(0.0), F.lit("possible"))
         .otherwise(F.lit("non_link"))
         .alias("decision"),

@@ -1,4 +1,4 @@
-"""Filter operators (SURVEY.md §2.2 P1-P3) with explicit NULL semantics.
+"""Filter operators (SURVEY.md §2.2 P1-P2) with explicit NULL semantics.
 
 The reference's pandas filters have load-bearing NA behavior; Spark 3-valued
 logic differs, so every operator here pins the pandas semantics with
@@ -45,9 +45,3 @@ def neq_filter_keep_nulls(df: DataFrame, col: str, value: str) -> DataFrame:
     c = F.col(col)
     return df.filter((c != F.lit(value)) | c.isNull())
 
-
-def subset_eq(df: DataFrame, col: str, value: str) -> DataFrame:
-    """P3: per-dataset subset ``df[df[col] == value]``
-    (reference ``clinical.py:572-578``). At scale, prefer writing once with
-    ``partitionBy(col)`` over N subset passes — the writer in sinks.py does."""
-    return df.filter(F.col(col) == F.lit(value))

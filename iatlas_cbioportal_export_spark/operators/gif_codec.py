@@ -229,21 +229,6 @@ def gif_decode(payload: bytes):
     return w, h, bytes(rgb)
 
 
-def gif_resize(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL GIF resize — nearest-neighbour in INDEX space (the ``src =
-    x·W // out_w`` arithmetic shared by every resizer here), so the
-    original palette survives untouched and the result round-trips
-    byte-exact through :func:`gif_decode`."""
-    width, height, table, indices = _gif_parse_frame(payload)
-    out = bytearray()
-    for y in range(out_h):
-        sy = y * height // out_h
-        row = sy * width
-        for x in range(out_w):
-            out.append(indices[row + x * width // out_w])
-    return gif_encode(out_w, out_h, bytes(out), table)
-
-
 def _gif_parse_frame(payload: bytes):
     """First-frame parse → (width, height, color table, palette indices)."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):

@@ -41,6 +41,9 @@ _DAMPING_NUM, _DAMPING_DEN = 85, 100
 _PR_CHECKPOINT_INTERVAL = 4
 # HITS scores are integer units of _HITS_SCALE (L1 norm = _HITS_SCALE).
 _HITS_SCALE = 10**6
+# Round budget of connected_components_star (O(log^2 n) rounds are needed);
+# a graph that needs more raises.
+_STAR_MAX_ROUNDS = 25
 
 
 def _rounds(
@@ -254,7 +257,12 @@ def connected_components_star(
         prev, sig = sig, _signature(e)
         return sig == prev
 
-    edges, _ = _rounds(edges, star, 25, unchanged)
+    edges, converged = _rounds(edges, star, _STAR_MAX_ROUNDS, unchanged)
+    if not converged:
+        # as in connected_components: unconverged labels are wrong
+        raise RuntimeError(
+            f"connected_components_star did not converge in {_STAR_MAX_ROUNDS} rounds"
+        )
     comps = edges.withColumnsRenamed({"u": "id", "v": "component_id"})
     return all_ids.join(comps, on="id", how="left").select(
         "id", F.coalesce("component_id", "id").alias("component_id")

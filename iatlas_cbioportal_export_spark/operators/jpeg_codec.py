@@ -6,9 +6,10 @@ pipeline needs decode/resize hops, and until this round JPEG pixel decode
 sat behind ``real_decode_stub``. Everything here follows the PUBLIC
 ITU-T T.81 spec (baseline sequential DCT, Annex K example tables):
 
-- :func:`jpeg_encode` — grayscale or RGB (4:4:4, or 4:2:0 with
-  ``subsample=True``), IJG-style quality scaling of the Annex K
-  quantization tables, Annex K Huffman tables, optional restart markers.
+- :func:`jpeg_encode` — grayscale or RGB (4:4:4, or 4:2:0 while
+  :data:`_CHROMA_SUBSAMPLE` is set), IJG-style quality scaling of the
+  Annex K quantization tables, Annex K Huffman tables, optional restart
+  markers.
 - :func:`jpeg_decode` — baseline sequential scans: DQT/DHT/SOF0/DRI/SOS
   marker parse, Huffman entropy decode with byte-unstuffing and RSTn
   handling, dequantize + 8x8 IDCT, generic sampling-factor MCU layout
@@ -45,7 +46,6 @@ __all__ = [
     "jpeg_encode",
     "jpeg_decode",
     "jpeg_feature_extractor",
-    "jpeg_resize",
 ]
 
 # ---------------------------------------------------------------------------
@@ -291,25 +291,28 @@ def _plane_blocks(plane: np.ndarray) -> np.ndarray:
     )
 
 
+#: Encode RGB with 4:2:0 box-averaged chroma instead of 4:4:4. Every caller
+#: encodes 4:4:4; 4:2:0 streams exist to feed the decoder's sampling-factor
+#: MCU layout, which JPEGs from other encoders reach.
+_CHROMA_SUBSAMPLE = False
+
+
 def jpeg_encode(
     pix: bytes,
     width: int,
     height: int,
     channels: int = 1,
     quality: int = 75,
-    subsample: bool = False,
     restart_interval: int = 0,
 ) -> bytes:
     """Baseline sequential JPEG encoder (T.81): grayscale (1 channel) or
-    RGB (3 channels, YCbCr; 4:4:4 by default, 4:2:0 box-averaged chroma
-    with ``subsample=True``). Annex K quantization tables scaled by IJG
+    RGB (3 channels, YCbCr; 4:4:4, or 4:2:0 box-averaged chroma while
+    :data:`_CHROMA_SUBSAMPLE` is set). Annex K quantization tables scaled by IJG
     ``quality`` (100 = all-ones, lossless for DC-exact content) and Annex K
     Huffman tables. ``restart_interval`` > 0 emits DRI + RSTn markers every
     that many MCUs (what a splittable-decode pipeline would use)."""
     if channels not in (1, 3):
         raise NotImplementedError("jpeg_encode supports 1 or 3 channels")
-    if subsample and channels == 1:
-        subsample = False
     if len(pix) != width * height * channels:
         raise ValueError(
             f"pixel buffer {len(pix)} != {width * height * channels}"
@@ -330,7 +333,7 @@ def jpeg_encode(
         planes = [img[..., 0].astype(np.int64)]
 
     # sampling factors per component: (h, v)
-    if channels == 3 and subsample:
+    if channels == 3 and _CHROMA_SUBSAMPLE:
         samp = [(2, 2), (1, 1), (1, 1)]
     else:
         samp = [(1, 1)] * channels
@@ -716,16 +719,3 @@ def jpeg_feature_extractor(payload: bytes, mime_type: str) -> list[float]:
             for c in range(channels)
         ),
     ]
-
-
-def jpeg_resize(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL JPEG resize — decode, nearest-neighbour integer sampling (the
-    same ``src = x·W // out_w`` arithmetic as the netpbm/PNG resizers), and
-    re-encode at quality 90 (re-encoding is lossy by nature of the format;
-    the resize itself replays exactly)."""
-    channels, width, height, pix = jpeg_decode(payload)
-    arr = np.frombuffer(pix, dtype=np.uint8).reshape(height, width, channels)
-    ys = (np.arange(out_h) * height) // out_h
-    xs = (np.arange(out_w) * width) // out_w
-    out = arr[ys][:, xs]
-    return jpeg_encode(out.tobytes(), out_w, out_h, channels=channels, quality=90)

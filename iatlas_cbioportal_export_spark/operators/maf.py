@@ -318,7 +318,6 @@ def genome_nexus_annotator(
 def annotate(
     maf: DataFrame,
     annotator: Annotator = fake_annotator,
-    widen_parallelism: bool = True,
 ) -> DataFrame:
     """Annotation as a ``mapInPandas`` stage.
 
@@ -368,16 +367,8 @@ def annotate(
     # partitions than cores (an already-parallel 100 TB scan must not pay
     # a payload shuffle for nothing). Annotations are key-derived, so
     # batch composition cannot change any row's output.
-    # ``widen_parallelism=False`` opts out for callers that deliberately
-    # control task layout (e.g. a test pinning one-task retry semantics).
-    # Streaming inputs are skipped: ``.rdd`` is illegal on an unstarted
-    # stream, and a micro-batch's partitioning is the trigger's to decide.
     sc = maf_safe.sparkSession.sparkContext
-    if (
-        widen_parallelism
-        and not maf_safe.isStreaming
-        and maf_safe.rdd.getNumPartitions() < sc.defaultParallelism
-    ):
+    if maf_safe.rdd.getNumPartitions() < sc.defaultParallelism:
         maf_safe = maf_safe.repartition(sc.defaultParallelism)
     out = maf_safe.mapInPandas(run, schema=schema)
     if safe:

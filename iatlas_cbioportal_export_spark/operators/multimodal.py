@@ -496,24 +496,6 @@ def png_feature_extractor(payload: bytes, mime_type: str) -> list[float]:
     return [float(width), float(height), *means]
 
 
-def png_resize(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL PNG resize — decode via :func:`_png_parse`, nearest-neighbour
-    integer sampling (same ``src = x·W // out_w`` arithmetic as
-    :func:`netpbm_resize`, so any engine can replay which source pixels
-    survive), re-encode via :func:`png_encode` (filter None — the resized
-    image round-trips byte-exact through the decoder)."""
-    channels, width, height, pix = _png_parse(payload)
-    out = bytearray()
-    for y in range(out_h):
-        sy = y * height // out_h
-        row = sy * width * channels
-        for x in range(out_w):
-            sx = x * width // out_w
-            k = row + sx * channels
-            out += pix[k : k + channels]
-    return png_encode(bytes(out), out_w, out_h, channels=channels)
-
-
 def gif_feature_extractor(payload: bytes, mime_type: str) -> list[float]:
     """REAL image decode for GIF — LZW + palette expansion via
     :mod:`.gif_codec`. Feature shape matches the other image extractors:
@@ -527,27 +509,6 @@ def gif_feature_extractor(payload: bytes, mime_type: str) -> list[float]:
         for c in range(3)
     ]
     return [float(width), float(height), *means]
-
-
-def stdlib_resizer(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """Dispatching REAL resizer: PNG / JPEG / GIF by signature, binary
-    netpbm by magic; other formats raise through :func:`real_decode_stub`
-    (honest stub)."""
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return png_resize(payload, out_w, out_h)
-    if payload[:2] == b"\xff\xd8":
-        from .jpeg_codec import jpeg_resize
-
-        return jpeg_resize(payload, out_w, out_h)
-    if payload[:4] == b"GIF8":
-        from .gif_codec import gif_resize
-
-        return gif_resize(payload, out_w, out_h)
-    if payload[:2] == b"BM":
-        return bmp_resize(payload, out_w, out_h)
-    if payload[:2] in (b"P5", b"P6"):
-        return netpbm_resize(payload, out_w, out_h)
-    return real_decode_stub(payload, "unknown")  # type: ignore[return-value]
 
 
 def stdlib_decoder(payload: bytes, mime_type: str) -> list[float]:
@@ -793,9 +754,7 @@ def jpeg_parse_metadata(payload: bytes) -> dict:
     raise ValueError("jpeg stream has no SOF marker")
 
 
-def mp4_encode(
-    timescale: int, duration: int, n_tracks: int = 1, brand: str = "isom"
-) -> bytes:
+def mp4_encode(timescale: int, duration: int, n_tracks: int = 1) -> bytes:
     """Build a minimal VALID ISO-BMFF stream — ``ftyp`` + ``moov`` holding
     an mvhd (version 0) and ``n_tracks`` skeletal ``trak`` boxes — for
     metadata round-trip tests. Every byte follows ISO/IEC 14496-12 box
@@ -804,7 +763,7 @@ def mp4_encode(
     def box(btype: bytes, body: bytes) -> bytes:
         return (8 + len(body)).to_bytes(4, "big") + btype + body
 
-    ftyp = box(b"ftyp", brand.encode("ascii") + (0).to_bytes(4, "big") + b"isom")
+    ftyp = box(b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isom")
     mvhd_body = (
         b"\x00\x00\x00\x00"  # version 0 + flags
         + (0).to_bytes(4, "big")  # creation_time
@@ -856,17 +815,14 @@ def mp3_encode(
     return bytes(out)
 
 
-def jpeg_encode_headers(
-    width: int, height: int, n_components: int = 3, progressive: bool = False
-) -> bytes:
-    """Build a structurally VALID JPEG marker stream (SOI / APP0-JFIF /
-    DQT / SOF / SOS / EOI) carrying real dimensions. The entropy-coded
+def jpeg_encode_headers(width: int, height: int, n_components: int = 3) -> bytes:
+    """Build a structurally VALID baseline JPEG marker stream (SOI /
+    APP0-JFIF / DQT / SOF0 / SOS / EOI) carrying real dimensions. The entropy-coded
     scan body is empty — dimension/component metadata is what the marker
     layer defines, and is all :func:`jpeg_parse_metadata` reads; producing
     decodable pixel data would need the stubbed codec."""
     app0 = b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00"
     dqt = b"\x00" + bytes(range(1, 65))  # table 0, 64 8-bit entries
-    sof_marker = b"\xff\xc2" if progressive else b"\xff\xc0"
     comps = b"".join(
         bytes([cid + 1, 0x11, 0]) for cid in range(n_components)
     )
@@ -888,7 +844,7 @@ def jpeg_encode_headers(
         b"\xff\xd8"
         + seg(b"\xff\xe0", app0)
         + seg(b"\xff\xdb", dqt)
-        + seg(sof_marker, sof)
+        + seg(b"\xff\xc0", sof)
         + seg(b"\xff\xda", sos)
         + b"\xff\xd9"
     )
@@ -1024,7 +980,6 @@ _MP4_TIMESCALE = 90000  # media-header ticks per second
 def mp4_encode_track(
     sample_sizes: list[int],
     sample_deltas: list[int],
-    track_id: int = 1,
     sync_every: int = 0,
     samples_per_chunk: list[int] | None = None,
 ) -> bytes:
@@ -1038,7 +993,8 @@ def mp4_encode_track(
     deterministic per-sample fill — the demux layer never inspects them.
 
     ``samples_per_chunk`` partitions the samples into chunks (default: one
-    chunk holding everything); sizes must sum to ``len(sample_sizes)``."""
+    chunk holding everything); sizes must sum to ``len(sample_sizes)``.
+    The track is track 1."""
     n = len(sample_sizes)
     if len(sample_deltas) != n:
         raise ValueError("sample_sizes and sample_deltas length mismatch")
@@ -1123,7 +1079,7 @@ def mp4_encode_track(
     tkhd = _mp4_full(
         b"tkhd",
         (0).to_bytes(4, "big") * 2
-        + track_id.to_bytes(4, "big")
+        + (1).to_bytes(4, "big")  # track_ID
         + bytes(72),
     )
     mvhd_body = (
@@ -1138,7 +1094,7 @@ def mp4_encode_track(
             for v in (0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
         )
         + bytes(24)
-        + (track_id + 1).to_bytes(4, "big")
+        + (2).to_bytes(4, "big")  # next_track_ID
     )
     moov = _mp4_box(b"moov", _mp4_full(b"mvhd", mvhd_body) + _mp4_box(b"trak", tkhd + mdia))
     return ftyp + mdat + moov
@@ -1955,21 +1911,6 @@ def bmp_feature_extractor(payload: bytes, mime_type: str) -> list[float]:
     return [float(width), float(height), *means]
 
 
-def bmp_resize(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """Nearest-neighbour BMP resize (same ``src = x·W // out_w``
-    arithmetic as every resizer here); grey stays 8-bit-palette, color
-    re-encodes 24-bit."""
-    channels, width, height, pix = bmp_decode(payload)
-    out = bytearray()
-    for y in range(out_h):
-        sy = y * height // out_h
-        for x in range(out_w):
-            sx = x * width // out_w
-            k = (sy * width + sx) * channels
-            out += pix[k : k + channels]
-    return bmp_encode(bytes(out), out_w, out_h, channels=channels)
-
-
 def zip_index(payload: bytes) -> list[dict]:
     """REAL ZIP central-directory index — one row per archive member:
     ``(name, method, size, compressed_size, data_offset)``. Walks the
@@ -2137,7 +2078,7 @@ def decode_image_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
 def image_dhash(payload: bytes) -> tuple[int, int, int, int]:
     """Difference hash (dHash): decode, integer-luma grayscale, 9×8
     nearest-neighbour grid (``sx = x·W // 9``, ``sy = y·H // 8`` — the
-    same integer sampling as every resizer here, so any engine replays
+    same integer sampling as :func:`netpbm_resize`, so any engine replays
     which pixels survive), then 64 horizontal brightness comparisons
     ``bit(y·8+x) = grid[y][x] < grid[y][x+1]``. Returns
     ``(width, height, hash_hi, hash_lo)`` with the 64 bits split into two
@@ -2324,21 +2265,3 @@ def extract_vad_segments(
 
     return media.mapInPandas(run, schema=VAD_SEGMENT_SCHEMA)
 
-
-def dhash_near_duplicates(media: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """NEAR-duplicate image pairs: combine the dHash halves into one
-    64-bit sketch and reuse the rotation-prefix Hamming-bucket join shared
-    with text SimHash (:func:`~.dedup.hamming_bucket_pairs`) — bucket on
-    rotated prefixes, verify ``bit_count(xor) ≤ max_hamming``. Catches
-    re-encodes, mild crops/brightness edits, and thumbnail variants that
-    exact-hash grouping misses; only (id, sketch) longs shuffle. Output:
-    (id_a, id_b, hamming)."""
-    from .dedup import hamming_bucket_pairs
-
-    sk = extract_image_dhash(media).select(
-        F.col("media_id").alias("id"),
-        F.shiftleft(F.col("dhash_hi"), 32)
-        .bitwiseOR(F.col("dhash_lo"))
-        .alias("sketch"),
-    )
-    return hamming_bucket_pairs(sk, max_hamming=max_hamming, rotations=4)

@@ -96,7 +96,7 @@ def key_skew_report(
     )
 
 
-def table_profile(df: DataFrame, exact_distinct: bool = True) -> DataFrame:
+def table_profile(df: DataFrame) -> DataFrame:
     """Whole-table column profile in ONE pass over the data: per column —
     null count, distinct count, numeric min/max/mean, string/date min/max
     and mean length. The "what am I about to shuffle" reconnaissance step
@@ -105,12 +105,9 @@ def table_profile(df: DataFrame, exact_distinct: bool = True) -> DataFrame:
 
     Plan shape: a single global ``agg`` carrying every statistic, then the
     one result row is exploded into the per-column long format — the table
-    is read once. With ``exact_distinct=True`` Spark plans the multi-
-    ``count(distinct)`` via one Expand (input replicated ×|columns| into
-    the SAME shuffle — still one pass over storage); at 100 TB flip to
-    ``exact_distinct=False`` for HyperLogLog ``approx_count_distinct``
-    (no Expand, partial-aggregated, ±2% — not oracle-comparable, which is
-    why the checked query keeps the exact path).
+    is read once. Spark plans the multi-``count(distinct)`` via one Expand
+    (input replicated ×|columns| into the SAME shuffle — still one pass
+    over storage).
 
     Determinism: means ride the DECIMAL(38,6)/(28,6) lane (a double sum
     over a shuffle merges in nondeterministic order), rounded to 6dp
@@ -144,10 +141,7 @@ def table_profile(df: DataFrame, exact_distinct: bool = True) -> DataFrame:
         is_num = dt in numeric
         qc = _q(c)
         aggs.append(f"sum(cast(({qc} IS NULL) as bigint)) AS {_q('__nn_' + c)}")
-        if exact_distinct:
-            aggs.append(f"count(DISTINCT {qc}) AS {_q('__nd_' + c)}")
-        else:
-            aggs.append(f"approx_count_distinct({qc}) AS {_q('__nd_' + c)}")
+        aggs.append(f"count(DISTINCT {qc}) AS {_q('__nd_' + c)}")
         if is_num:
             aggs.append(f"cast(min({qc}) as double) AS {_q('__mn_' + c)}")
             aggs.append(f"cast(max({qc}) as double) AS {_q('__mx_' + c)}")

@@ -10,10 +10,9 @@ sample/split on every run, any engine, any partitioning — and the hash is
 plain integer arithmetic, so an external system (or the DuckDB oracle) can
 reproduce the exact subset.
 
-Hash: ``h(id) = ((id + salt) · 2654435761) mod 1000003`` (Knuth
-multiplicative step into a prime modulus; the salt shifts the id BEFORE the
-multiply so even salt±1 decorrelates the selection; products stay < 2^63
-for any id < 2^31, so 64-bit arithmetic is exact in every engine).
+Hash: ``h(id) = (id · 2654435761) mod 1000003`` (Knuth multiplicative
+step into a prime modulus; products stay < 2^63 for any id < 2^31, so
+64-bit arithmetic is exact in every engine).
 Bucket = ``h mod 10000`` gives 0.01% granularity.
 """
 
@@ -29,21 +28,17 @@ _MOD = 1000003
 _BUCKETS = 10_000
 
 
-def _bucket(id_col: str, salt: int) -> Column:
-    return (
-        ((F.col(id_col).cast("long") + F.lit(salt)) * F.lit(_KNUTH)) % F.lit(_MOD)
-    ) % F.lit(_BUCKETS)
+def _bucket(id_col: str) -> Column:
+    return ((F.col(id_col).cast("long") * F.lit(_KNUTH)) % F.lit(_MOD)) % F.lit(_BUCKETS)
 
 
-def deterministic_sample(
-    df: DataFrame, id_col: str, fraction: float, salt: int = 0
-) -> DataFrame:
+def deterministic_sample(df: DataFrame, id_col: str, fraction: float) -> DataFrame:
     """Keep ~``fraction`` of rows, selected by id hash — reproducible across
     runs, partitionings and engines (unlike ``df.sample``). Narrow filter;
     pushes down to the scan like any predicate."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    return df.filter(_bucket(id_col, salt) < int(round(fraction * _BUCKETS)))
+    return df.filter(_bucket(id_col) < int(round(fraction * _BUCKETS)))
 
 
 def stratified_sample(
@@ -62,7 +57,7 @@ def stratified_sample(
     for name, frac in fractions.items():
         if not 0.0 <= frac <= 1.0:
             raise ValueError(f"fraction for {name!r} must be in [0, 1], got {frac}")
-    bucket = _bucket(id_col, 0)
+    bucket = _bucket(id_col)
     threshold = None
     for name, frac in fractions.items():
         cond = F.col(strata_col) == name
@@ -80,7 +75,6 @@ def weighted_sample(
     id_col: str,
     weight_col: str,
     k: int,
-    salt: int = 0,
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement, k rows, by the
     Efraimidis–Spirakis exponential race (Inf. Proc. Letters 97(5), 2006):
@@ -108,7 +102,7 @@ def weighted_sample(
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    h = ((F.col(id_col).cast("long") + F.lit(salt)) * F.lit(_KNUTH)) % F.lit(_MOD)
+    h = (F.col(id_col).cast("long") * F.lit(_KNUTH)) % F.lit(_MOD)
     u = (h.cast("double") + F.lit(0.5)) / F.lit(float(_MOD))
     key = F.log(u) / F.col(weight_col).cast("double")
     return (
@@ -121,18 +115,13 @@ def weighted_sample(
     )
 
 
-def hash_split(
-    df: DataFrame, id_col: str, weights: Mapping[str, float] | None = None
-) -> DataFrame:
-    """Assign every row a deterministic train/val/test (or custom) split
-    label by id-hash bucket ranges. Weights must sum to 1 (±1e-9); split
-    boundaries are cumulative bucket thresholds, so the assignment is stable
-    under any future re-run or re-partitioning. Narrow."""
-    weights = dict(weights or {"train": 0.9, "val": 0.05, "test": 0.05})
-    total = sum(weights.values())
-    if abs(total - 1.0) > 1e-9:
-        raise ValueError(f"weights must sum to 1, got {total}")
-    bucket = _bucket(id_col, 0)
+def hash_split(df: DataFrame, id_col: str) -> DataFrame:
+    """Assign every row a deterministic 90/5/5 train/val/test split label
+    by id-hash bucket ranges. Split boundaries are cumulative bucket
+    thresholds, so the assignment is stable under any future re-run or
+    re-partitioning. Narrow."""
+    weights = {"train": 0.9, "val": 0.05, "test": 0.05}
+    bucket = _bucket(id_col)
     expr = None
     cum = 0.0
     names = list(weights)
@@ -167,7 +156,7 @@ def class_balanced_sample(df: DataFrame, id_col: str, class_col: str) -> DataFra
     )
     target = counts.agg(F.min("__n").alias("__target"))
     w = Window.partitionBy(class_col).orderBy(
-        _bucket(id_col, 0).asc(), F.col(id_col).asc()
+        _bucket(id_col).asc(), F.col(id_col).asc()
     )
     return (
         df.withColumn("__rk", F.row_number().over(w))
@@ -201,7 +190,6 @@ def mixture_weights(
     group_cols: list[str],
     size_col: str,
     target_tokens: int,
-    temperature: float = 2.0,
 ) -> DataFrame:
     """Per-source corpus mixture weights — the data-mixing step of a
     training pipeline: how much of each (source, language, …) group goes
@@ -213,8 +201,8 @@ def mixture_weights(
     Engine-portable exactness: only T=2 (the common default) uses a
     transcendental-free path — ``sqrt`` is IEEE-correctly-rounded in every
     engine, while ``pow(x, 1/T)`` for general T is libm-dependent and can
-    flip last bits between JVM and C. So T=2 is the only supported
-    temperature here, and the weight is quantized to an INTEGER
+    flip last bits between JVM and C. So T=2 is the temperature here, and
+    the weight is quantized to an INTEGER
     micro-weight ``floor(sqrt(tokens) * 1e6)`` before normalization: the
     group sum, the ppm share, and the per-group token budget are then
     exact integer arithmetic that any engine (and the DuckDB oracle)
@@ -228,11 +216,6 @@ def mixture_weights(
     (integer-div ppm of the mixture), budget_tokens (integer share of
     ``target_tokens``).
     """
-    if temperature != 2.0:
-        raise ValueError(
-            "only temperature=2.0 (sqrt weighting) is engine-portable; "
-            f"got {temperature}"
-        )
     groups = df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col(size_col).cast("long")).alias("tokens"),

@@ -23,6 +23,14 @@ from pyspark.sql import functions as F
 
 _HP_SEED = 0x51_7C_C1_B7
 
+# Guard rails: the exact top-k paths serve at most this many queries, and
+# the near-dup/CF candidate joins drop any bucket, cell or user above these
+# sizes (a quadratic hot spot means the bucketing is too coarse).
+_MAX_EXACT_QUERIES = 1000
+_MAX_BUCKET_SIZE = 10_000
+_MAX_CELL_SIZE = 100_000
+_MAX_USER_ITEMS = 1000
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -42,20 +50,15 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<numeric> columns, double precision,
-    sequential fold (deterministic)."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _q(col: str) -> str:
     """Backtick-quote a raw column name for SQL-string rendering."""
     return "`" + col.replace("`", "``") + "`"
 
 
 def cosine_sql(a_sql: str, b_sql: str) -> str:
-    """SQL-string twin of :func:`cosine` for plain column NAMES (r10 guide
-    §1 driver fixed costs): the Column DSL builds its three higher-order
+    """Cosine similarity of two array<numeric> columns given by plain column
+    NAMES, double precision, as SQL text (r10 guide §1 driver fixed costs):
+    the Column DSL builds its three higher-order
     folds through ~5 py4j lambda registrations (~0.5 s of driver wall per
     call site); the identical expression text parses JVM-side in one call.
     Lambda bodies, the ``0.0D`` seed, and the ``dot / (na * nb)``
@@ -78,7 +81,7 @@ def cosine_sql(a_sql: str, b_sql: str) -> str:
 
 
 def _round6_cosine(a_col: str, b_col: str) -> Column:
-    """``round(cosine(a, b), 6)`` as one parsed expression — the shared
+    """``round(cosine(a, b), 6)`` (:func:`cosine_sql`) as one parsed expression — the shared
     scoring projection of every ANN/similarity path below."""
     return F.expr(f"round({cosine_sql(_q(a_col), _q(b_col))}, 6)")
 
@@ -115,9 +118,7 @@ def _partition_topk(
     return df.mapInPandas(run, schema=df.schema)
 
 
-def brute_force_topk(
-    corpus: DataFrame, queries: DataFrame, k: int = 10, max_queries: int = 1000
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k nearest neighbors by cosine for each query vector.
 
     ``queries`` (small) is broadcast and the corpus is scanned once; scoring
@@ -130,13 +131,14 @@ def brute_force_topk(
     Output: (query_id, vec_id, cosine_sim, rank).
 
     This is the EXACT small-|Q| path: work is |C|·|Q| regardless of any
-    pruning, so it is guarded by ``max_queries`` (default 10³). A query set
-    above the cap raises with a pointer at :func:`ann_topk_lsh` /
+    pruning, so it is guarded by :data:`_MAX_EXACT_QUERIES` (10³). A query
+    set above the cap raises with a pointer at :func:`ann_topk_lsh` /
     :func:`ivf_topk`, which bucket the corpus so each query scores a sliver
-    of |C|; pass a higher ``max_queries`` explicitly to override. The guard
+    of |C|. The guard
     counts ``limit(cap+1)`` on the query side only — bounded work even when
     a huge frame is passed by mistake (the failure mode it exists to catch).
     """
+    max_queries = _MAX_EXACT_QUERIES
     n_queries = queries.limit(max_queries + 1).count()
     if n_queries > max_queries:
         raise ValueError(
@@ -144,7 +146,7 @@ def brute_force_topk(
             f"{max_queries} query vectors: the exact path is "
             "|corpus|x|queries| work and "
             "is meant for small query sets. Use ann_topk_lsh or ivf_topk "
-            "for large query sets, or raise max_queries explicitly."
+            "for large query sets."
         )
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
@@ -167,9 +169,7 @@ def brute_force_topk(
     )
 
 
-def mips_topk(
-    corpus: DataFrame, queries: DataFrame, k: int = 10, max_queries: int = 1000
-) -> DataFrame:
+def mips_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k by MAXIMUM INNER PRODUCT (MIPS) — the retrieval scoring
     used by dot-product-trained dual encoders (DPR-style dense retrieval),
     where cosine is WRONG: document norms carry learned importance, and
@@ -177,20 +177,19 @@ def mips_topk(
 
     Same execution shape as :func:`brute_force_topk` (broadcast query side,
     JVM-codegen'd sequential-fold scoring, no-shuffle per-partition partial
-    top-k, then the k·|Q|·P-row global window) and the same ``max_queries``
-    guard — the exact path is |C|·|Q| work by definition. For large query
-    sets, reduce MIPS to cosine ANN via :func:`mips_augment` and feed the
-    augmented vectors to :func:`ann_topk_lsh` / :func:`ivf_topk`.
+    top-k, then the k·|Q|·P-row global window) and the same
+    :data:`_MAX_EXACT_QUERIES` guard — the exact path is |C|·|Q| work by
+    definition.
 
     Output: (query_id, vec_id, inner_product, rank); ties broken by id asc.
     """
+    max_queries = _MAX_EXACT_QUERIES
     n_queries = queries.limit(max_queries + 1).count()
     if n_queries > max_queries:
         raise ValueError(
             f"mips_topk saw more than max_queries={max_queries} query "
-            "vectors: the exact path is |corpus|x|queries| work. Augment "
-            "with mips_augment and use ann_topk_lsh/ivf_topk for large "
-            "query sets, or raise max_queries explicitly."
+            "vectors: the exact path is |corpus|x|queries| work and is "
+            "meant for small query sets."
         )
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
@@ -210,36 +209,6 @@ def mips_topk(
     return (
         partial.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def mips_augment(corpus: DataFrame) -> DataFrame:
-    """MIPS→cosine reduction (Bachrach et al. 2014 / Shrivastava & Li 2014):
-    append component ``sqrt(M² − ‖x‖²)`` to every corpus vector, where M is
-    the corpus max norm — all augmented vectors then share norm M, so for a
-    zero-padded query ``[q, 0]`` the cosine against ``[x, √(M²−‖x‖²)]`` is
-    ``q·x / (M·‖q‖)``: a fixed positive scaling of the inner product per
-    query, i.e. cosine ORDER == MIPS ORDER. The augmented column feeds the
-    existing cosine ANN paths (:func:`ann_topk_lsh`, :func:`ivf_topk`)
-    unchanged — that is the 100 TB MIPS path.
-
-    M is one KB-bounded aggregate (a decision scalar, the corpus-stats
-    pattern of ``corpus_dim_ranges``); the augmentation itself is a narrow
-    per-row expression. ``greatest(·, 0)`` guards float dust where
-    ‖x‖ ≈ M.
-    """
-    norm2 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
-    m2 = corpus.agg(F.max(norm2).alias("m2")).collect()[0]["m2"]
-    return corpus.withColumn(
-        "augmented",
-        F.concat(
-            F.transform(F.col("embedding"), lambda x: x.cast("double")),
-            F.array(F.sqrt(F.greatest(F.lit(float(m2)) - norm2, F.lit(0.0)))),
-        ),
     )
 
 
@@ -333,29 +302,16 @@ def ann_topk_lsh(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def _centroid_sims(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
-    """array<struct<sim,cell_id>> of cosine similarity to each centroid —
-    struct ordering compares ``sim`` first, so array_max / reverse(array_sort)
-    give nearest cells without any shuffle."""
-    return F.array(
-        *[
-            F.struct(
-                cosine(vec, F.array(*[F.lit(float(x)) for x in cv])).alias("sim"),
-                F.lit(cid).alias("cell_id"),
-            )
-            for cid, cv in centroids
-        ]
-    )
-
-
 def _centroid_sims_expr(centroids: list[tuple[int, list[float]]]) -> Column:
-    """String-expression twin of :func:`_centroid_sims` over the
-    ``embedding`` column: one ``F.expr`` parse instead of thousands of
-    py4j ``F.lit`` round-trips (16 cells x 64 dims of Column objects cost
-    ~3s of driver time; the equivalent SQL string parses in milliseconds).
-    Folds and cast placement replicate :func:`cosine` exactly; centroid
-    norms are pre-folded driver-side with the same left-to-right
-    accumulation, so every double is bit-identical."""
+    """array<struct<sim,cell_id>> of the ``embedding`` column's cosine
+    similarity to each centroid — struct ordering compares ``sim`` first,
+    so array_max / reverse(array_sort) give nearest cells without any
+    shuffle. One ``F.expr`` parse instead of thousands of py4j ``F.lit``
+    round-trips (16 cells x 64 dims of Column objects cost ~3s of driver
+    time; the equivalent SQL string parses in milliseconds). Folds and cast
+    placement replicate :func:`cosine_sql` exactly; centroid norms are
+    pre-folded driver-side with the same left-to-right accumulation, so
+    every double is bit-identical."""
     norm_vec = (
         "sqrt(aggregate(embedding, 0.0D, "
         "(acc, x) -> acc + cast(x as double) * cast(x as double)))"
@@ -540,15 +496,14 @@ def embedding_near_duplicates(
     dim: int,
     threshold: float = 0.95,
     num_planes: int = 12,
-    max_bucket_size: int = 10_000,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via hyperplane sign buckets.
 
     Scale shape (mirrors ``minhash_near_duplicates``): ONLY (id, sig) pairs
     shuffle for the bucket self-join — raw vectors never move on the
     candidate path; they are fetched back by a semi-join on candidate ids for
-    the exact cosine verification. Buckets larger than ``max_bucket_size``
-    are dropped with the standard LSH justification: a quadratic blow-up
+    the exact cosine verification. Buckets larger than
+    :data:`_MAX_BUCKET_SIZE` are dropped with the standard LSH justification: a quadratic blow-up
     inside one sign bucket means ``num_planes`` is too low for the corpus's
     density — re-run with more planes rather than letting one hot bucket
     dominate the stage (the cap is a guard rail, not a tuning knob; it is far
@@ -560,7 +515,7 @@ def embedding_near_duplicates(
     )
     bucket_sizes = sig.groupBy("__sig").agg(F.count(F.lit(1)).alias("__bn"))
     sig = sig.join(
-        F.broadcast(bucket_sizes.filter(F.col("__bn") <= max_bucket_size)),
+        F.broadcast(bucket_sizes.filter(F.col("__bn") <= _MAX_BUCKET_SIZE)),
         on="__sig",
         how="left_semi",
     )
@@ -622,22 +577,20 @@ def corpus_dim_ranges(df: DataFrame, dim: int) -> tuple[list[float], list[float]
     return mins, maxs
 
 
-def scalar_quantize(
-    df: DataFrame, dim: int, ranges: tuple[list[float], list[float]] | None = None
-) -> DataFrame:
+def scalar_quantize(df: DataFrame, dim: int) -> DataFrame:
     """Per-dimension scalar quantization of an embedding column — the
     memory side of the ANN scale path (int8 codes are 4-8x smaller than
     float32/64 vectors, which at 100 TB decides whether the candidate set
     fits executor memory).
 
     ``code_i = round((x_i - min_i) / (max_i - min_i) · 255)`` (8-bit codes;
-    0 where the dimension is constant). The (min, max) range vectors are
-    driver-collected kilobytes baked into the plan as literals, so encoding
+    0 where the dimension is constant). The (min, max) range vectors
+    (:func:`corpus_dim_ranges`) are driver-collected kilobytes baked into the plan as literals, so encoding
     is a NARROW map — no shuffle, no model table join. Output:
     (vec_id, codes array<int>).
     """
     levels = 255
-    mins, maxs = ranges if ranges is not None else corpus_dim_ranges(df, dim)
+    mins, maxs = corpus_dim_ranges(df, dim)
     mins_arr = F.array(*[F.lit(float(m)) for m in mins])
     spans_arr = F.array(
         *[F.lit(float(mx - mn) if mx > mn else 1.0) for mn, mx in zip(mins, maxs)]
@@ -650,27 +603,6 @@ def scalar_quantize(
         df.withColumn("__mins", mins_arr)
         .withColumn("__spans", spans_arr)
         .select(F.col("vec_id"), codes.alias("codes"))
-    )
-
-
-def dequantize(quantized: DataFrame, mins: list[float], maxs: list[float]) -> DataFrame:
-    """Inverse of :func:`scalar_quantize`:
-    ``x̂_i = min_i + code_i · span_i / 255`` — narrow map; feeds the
-    exact scorers (brute_force_topk etc.) for quantized-recall evaluation."""
-    levels = 255
-    mins_arr = F.array(*[F.lit(float(m)) for m in mins])
-    spans_arr = F.array(
-        *[F.lit(float(mx - mn) if mx > mn else 1.0) for mn, mx in zip(mins, maxs)]
-    )
-    vec = F.expr(
-        "zip_with(codes, zip_with(__mins, __spans, (mn, sp) -> struct(mn, sp)), "
-        f"(c, r) -> r.mn + cast(c as double) * r.sp / {levels})"
-    )
-    return (
-        quantized.withColumn("__mins", mins_arr)
-        .withColumn("__spans", spans_arr)
-        .withColumn("embedding", vec)
-        .drop("__mins", "__spans", "codes")
     )
 
 
@@ -726,33 +658,12 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     )
 
 
-def pq_reconstruct(encoded: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
-    """Decode PQ codes back to the concatenated centroid vectors (the
-    implicit vectors an ADC scan scores against) — narrow map over literal
-    codebooks; feeds the exact scorers for recall evaluation."""
-    m = len(codebooks)
-    books_sql = ",".join(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{x!r}D" for x in cv) + ")" for cv in book
-        )
-        + ")"
-        for book in codebooks
-    )
-    expr = (
-        f"flatten(transform(sequence(0, {m - 1}), "
-        f"j -> element_at(array({books_sql}), j + 1)"
-        "[codes[j]]))"
-    )
-    return encoded.withColumn("embedding", F.expr(expr)).drop("codes")
-
-
 def l2_normalize(df: DataFrame, out_col: str | None = None) -> DataFrame:
     """Unit-normalize an embedding column (the standard step before cosine
     ANN indexing — dot product on unit vectors IS cosine, so the index math
     gets cheaper). Narrow, pure JVM expressions; zero vectors map to zero
     vectors (not NaN). The fold order is the same deterministic sequential
-    left fold as :func:`cosine`, so results are oracle-comparable."""
+    left fold as :func:`cosine_sql`, so results are oracle-comparable."""
     out = out_col or "embedding"
     vec = F.col("embedding")
     nrm = _norm(vec)
@@ -810,7 +721,6 @@ def semantic_dedup_pairs(
     threshold: float = 0.95,
     n_cells: int = 16,
     iterations: int = 2,
-    max_cell_size: int = 100_000,
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs: k-means cells as the candidate
     generator (Abbas et al. 2023, "SemDeDup" — cluster the embedding space,
@@ -829,7 +739,7 @@ def semantic_dedup_pairs(
       literals — no shuffle, no window);
     - ONLY (id, cell) pairs shuffle for the within-cell self-join; raw
       vectors are fetched back by semi-join on candidate ids;
-    - cells larger than ``max_cell_size`` are dropped with the standard
+    - cells larger than :data:`_MAX_CELL_SIZE` are dropped with the standard
       guard-rail justification: a quadratic blow-up inside one cell means
       ``n_cells`` is too low for the corpus — raise K rather than letting
       one hot cell dominate the stage.
@@ -853,7 +763,7 @@ def semantic_dedup_pairs(
     ).localCheckpoint(eager=False)
     cell_sizes = assigned.groupBy("__cell").agg(F.count(F.lit(1)).alias("__cn"))
     assigned = assigned.join(
-        F.broadcast(cell_sizes.filter(F.col("__cn") <= max_cell_size)),
+        F.broadcast(cell_sizes.filter(F.col("__cn") <= _MAX_CELL_SIZE)),
         on="__cell",
         how="left_semi",
     )
@@ -878,69 +788,6 @@ def semantic_dedup_pairs(
         .filter(F.col("cosine_sim") >= threshold)
         .select("id_a", "id_b", "cosine_sim")
     )
-
-
-def build_lsh_index(
-    corpus: DataFrame, table: str, dim: int, num_planes: int = 12
-) -> None:
-    """Persist an ANN index: corpus vectors + their hyperplane signatures as
-    a catalog table BUCKETED on the signature — the build-once/query-many
-    form of :func:`ann_topk_lsh`.
-
-    Query-time then skips signature recomputation over the corpus AND the
-    signature shuffle: the bucket-join key is the table's bucketing key, so
-    probing is a co-located join against broadcast query probes. Signatures
-    are deterministic hash-derived hyperplanes (no stored model), so index
-    and ad-hoc signatures always agree — an index rebuilt by any engine
-    version matches (the planes are fixed by ``_HP_SEED``).
-    """
-    from iatlas_cbioportal_export_spark.sources.bucketing import write_bucketed
-
-    indexed = corpus.select(
-        F.col("vec_id"),
-        F.col("embedding"),
-        hyperplane_signature(F.col("embedding"), dim, num_planes).alias("sig"),
-    )
-    write_bucketed(indexed, table, ["sig"], 16, ["sig"])
-
-
-def query_lsh_index(
-    queries: DataFrame,
-    table: str,
-    dim: int,
-    k: int = 10,
-    num_planes: int = 12,
-) -> DataFrame:
-    """Top-k against a persisted :func:`build_lsh_index` table. Identical
-    output contract to :func:`ann_topk_lsh` over the same corpus/params —
-    pinned by test — with the corpus-side signature scan replaced by the
-    index read."""
-    spark = queries.sparkSession
-    c_sig = spark.table(table).withColumnsRenamed({"sig": "__sig"})
-    q_sig = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("__qvec"),
-        hyperplane_signature(F.col("embedding"), dim, num_planes).alias("__qsig"),
-    )
-    probes = F.expr(
-        "array(`__qsig`, "
-        + ", ".join(f"`__qsig` ^ {1 << p}" for p in range(num_planes))
-        + ")"
-    )
-    q_probed = q_sig.select("query_id", "__qvec", F.explode(probes).alias("__sig"))
-    cands = c_sig.join(F.broadcast(q_probed), on="__sig").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cands.select(
-        "query_id",
-        "vec_id",
-        _round6_cosine("__qvec", "embedding").alias("cosine_sim"),
-    ).dropDuplicates(["query_id", "vec_id"])
-    scored = _partition_topk(scored, k, "query_id", "cosine_sim", "vec_id")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def random_projection(df: DataFrame, dim_out: int) -> DataFrame:
@@ -991,9 +838,7 @@ def random_projection(df: DataFrame, dim_out: int) -> DataFrame:
     )
 
 
-def item_cooccurrence_similarity(
-    interactions: DataFrame, top_n: int = 100, max_user_items: int = 1000
-) -> DataFrame:
+def item_cooccurrence_similarity(interactions: DataFrame, top_n: int = 100) -> DataFrame:
     """Item-item collaborative-filtering similarity from an interaction
     log: cosine over binary user vectors, which reduces to
     ``c_ij / √(c_i·c_j)`` with c_ij = users who touched both items — the
@@ -1001,7 +846,7 @@ def item_cooccurrence_similarity(
 
     Plan: interactions dedup to DISTINCT (user, item) (map-side combined);
     pairs are generated PER USER by a self-join on the user key, so the
-    fan-out is Σ_user items_u² — bounded by ``max_user_items`` (users over
+    fan-out is Σ_user items_u² — bounded by :data:`_MAX_USER_ITEMS` (users over
     the cap are dropped with a narrow pre-filter; a user touching
     everything contributes no signal and quadratic rows — the hot-bucket
     cap rule from the LSH tiers). Item totals broadcast back; the top-N is
@@ -1015,7 +860,7 @@ def item_cooccurrence_similarity(
     ).distinct()
     per_user = ui.groupBy("u").agg(F.count(F.lit(1)).alias("nu"))
     ui = ui.join(
-        F.broadcast(per_user.filter(F.col("nu") <= max_user_items)),
+        F.broadcast(per_user.filter(F.col("nu") <= _MAX_USER_ITEMS)),
         on="u",
         how="left_semi",
     )
@@ -1121,8 +966,7 @@ def covariance_matrix(df: DataFrame, dims: int = 8) -> DataFrame:
     map-side-combined aggregate, KB-sized however big the corpus.
 
     cov(i,j) = (Sᵢⱼ − Sᵢ·Sⱼ/n) / (n−1), computed in doubles FROM the
-    exact sums (the grouped_linear_fit discipline). Feed the collected
-    matrix to :func:`pca_power_projection` for the eigen step.
+    exact sums (the grouped_linear_fit discipline).
 
     Output: (i, j, n, cov 9dp) for i ≤ j, ordered.
     """
@@ -1167,58 +1011,10 @@ def covariance_matrix(df: DataFrame, dims: int = 8) -> DataFrame:
     )
 
 
-def pca_power_projection(
-    df: DataFrame, dims: int = 8, iterations: int = 8
-) -> DataFrame:
-    """Top principal component by power iteration + per-row projection —
-    the PCA back half over :func:`covariance_matrix`: the KB-sized exact
-    covariance is collected to the driver, power-iterated there in plain
-    Python doubles (deterministic — no BLAS order variance), and the
-    resulting eigenvector is baked into the plan as literals, so the
-    projection is a NARROW map over the corpus (the IVF-centroid
-    discipline: model state is KB, data never moves).
-
-    Sign convention: the eigenvector's largest-|component| entry is made
-    positive (eigenvectors are sign-ambiguous). Output: (id, pc1 6dp,
-    eigenvalue 6dp).
-    """
-    rows = covariance_matrix(df, dims=dims).collect()
-    c = [[0.0] * dims for _ in range(dims)]
-    for r in rows:
-        c[r["i"]][r["j"]] = r["cov"]
-        c[r["j"]][r["i"]] = r["cov"]
-    v = [1.0] + [0.0] * (dims - 1)
-    for _ in range(iterations):
-        w = [sum(c[i][k] * v[k] for k in range(dims)) for i in range(dims)]
-        nrm = sum(t * t for t in w) ** 0.5
-        if nrm == 0:
-            break
-        v = [t / nrm for t in w]
-    # Rayleigh quotient = eigenvalue estimate
-    cv = [sum(c[i][k] * v[k] for k in range(dims)) for i in range(dims)]
-    eig = sum(v[i] * cv[i] for i in range(dims))
-    pivot = max(range(dims), key=lambda i: abs(v[i]))
-    if v[pivot] < 0:
-        v = [-t for t in v]
-    proj = None
-    for i in range(dims):
-        term = F.element_at("embedding", i + 1).cast("double") * F.lit(v[i])
-        proj = term if proj is None else proj + term
-    return df.select(
-        F.col("vec_id"),
-        F.round(proj, 6).alias("pc1"),
-        F.lit(round(eig, 6)).alias("eigenvalue"),
-    )
-
-
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    m: int = 8,
-    kc: int = 16,
 ) -> DataFrame:
     """IVF-PQ approximate nearest neighbours — the billion-scale ANN
     memory layout (Jégou et al. 2011): IVF coarse cells bound WHICH
@@ -1264,6 +1060,8 @@ def ivfpq_topk(
     import pandas as pd
     from pyspark.sql import types as ST
 
+    # 16 coarse cells, 4 probed; 8 PQ subspaces of 16 codes each
+    n_cells, n_probe, m, kc = 16, 4, 8, 16
     first = corpus.select(F.size("embedding").alias("d")).first()
     dim = int(first["d"])
     d = dim // m

@@ -676,9 +676,7 @@ def bitmap_distinct(
     )
 
 
-def rank_sample_quantile_gate(
-    df: DataFrame, value_col: str, quantiles: Sequence[float] = (0.5, 0.9, 0.99)
-) -> DataFrame:
+def rank_sample_quantile_gate(df: DataFrame, value_col: str) -> DataFrame:
     """Custom MERGEABLE quantile sketch (one-level uniform compaction, the
     KLL level-0 idea) + its deterministic rank-error contract, reduced to
     oracle-checkable gate rows.
@@ -716,12 +714,12 @@ def rank_sample_quantile_gate(
     cumulative-weight estimate walk run in driver Python (r10 — one
     collect instead of checkpoint + totals + windowed-estimate jobs);
     ONE more corpus scan computes the exact
-    ranks of the ≤ len(quantiles) literal estimates for the gate (the gate
+    ranks of the three literal estimates for the gate (the gate
     is the only reason the corpus is read twice — production use stops at
     the estimates). N, slack and the estimates are KB-bounded decision
     values collected to the driver, like the CMS counter matrix above.
 
-    Output: one row per quantile — (quantile, n, target_rank,
+    Output: one row per quantile (0.5, 0.9, 0.99) — (quantile, n, target_rank,
     within_bound) with ``within_bound ⇔ rank_hi(est) ≥ target AND
     rank_lo(est) < target + slack``.
     """
@@ -773,7 +771,7 @@ def rank_sample_quantile_gate(
     )
     n_total = sum(r["w"] for r in p_rows if not r["is_slack"])
     slack = sum(r["w"] for r in p_rows if r["is_slack"])
-    qs = [float(q) for q in quantiles]
+    qs = [0.5, 0.9, 0.99]
     if n_total == 0:
         return spark.createDataFrame(
             [(q, 0, 0, True) for q in qs],

@@ -390,11 +390,12 @@ def unigram_logprob_score(df: DataFrame) -> DataFrame:
     )
 
 
-def hashed_embedding(df: DataFrame, dim: int = 32, normalize: bool = True) -> DataFrame:
+def hashed_embedding(df: DataFrame, dim: int = 32) -> DataFrame:
     """Feature-hashing ("hashing trick") text embedding: each token is
     bucketed by the PORTABLE rolling hash (``functions/text.py``, exact in
     any engine — deliberately not xxhash64, so the oracle can reproduce it),
-    the vector is the per-bucket token count, optionally L2-normalized.
+    the vector is the per-bucket token count, L2-normalized (an empty
+    document stays the zero vector).
 
     The honest no-model text→vector bridge: downstream similarity/ANN/
     near-dup operators consume its output like any learned embedding, which
@@ -434,11 +435,8 @@ def hashed_embedding(df: DataFrame, dim: int = 32, normalize: bool = True) -> Da
         .select(F.col("doc_id"), counts.alias("__counts"), "n_tokens")
     )
     vec = F.col("__counts")
-    if normalize:
-        nrm = F.sqrt(
-            F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x)
-        )
-        vec = F.when(nrm > 0, F.transform(vec, lambda x: x / nrm)).otherwise(vec)
+    nrm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x))
+    vec = F.when(nrm > 0, F.transform(vec, lambda x: x / nrm)).otherwise(vec)
     return base.select("doc_id", vec.alias("embedding"), "n_tokens")
 
 
@@ -484,9 +482,7 @@ def corpus_language_report(df: DataFrame) -> DataFrame:
     )
 
 
-def bigram_logprob_score(
-    df: DataFrame, lambda_interp: float = 0.7, model: DataFrame | None = None
-) -> DataFrame:
+def bigram_logprob_score(df: DataFrame, lambda_interp: float = 0.7) -> DataFrame:
     """Order-2 statistical quality score: mean log10 probability of each
     document's bigrams under an interpolated corpus bigram LM —
     ``p(cur|prev) = λ·C(prev,cur)/C(prev) + (1−λ)·C(cur)/T`` — the KenLM/
@@ -503,12 +499,9 @@ def bigram_logprob_score(
     lane makes the per-doc sum exact under any shuffle-merge order.
     Docs with < 2 tokens carry zero bigram events and score the floor.
 
-    ``model`` selects the TRAINING corpus (default: ``df`` itself). The
-    CCNet deployment trains on a clean/target corpus and scores the raw
-    one — under self-training, a singleton bigram of a singleton word is
-    "perfectly predicted" by its own count (p ≈ λ), so gibberish soup can
-    outscore prose; with an external model its OOV events fall to the
-    unigram mass or the floor, which is the behavior the filter wants.
+    The model is trained on ``df`` itself. (The CCNet deployment trains on a
+    clean corpus instead: under self-training a singleton bigram of a
+    singleton word is "perfectly predicted" by its own count, p ≈ λ.)
     Output: (id, n_bigrams, mean_logprob).
     """
     import math
@@ -537,7 +530,7 @@ def bigram_logprob_score(
             F.col("__bg.cur").alias("cur"),
         )
 
-    train = model if model is not None else df
+    train = df
     bigrams = _bg(df)
     uni = (
         train.select(T.tokens("text").alias("__toks"))
@@ -897,7 +890,7 @@ def vocabulary_growth(
     )
 
     thresholds = sorted({int(round(f * _BUCKETS)) for f in fractions})
-    b = _bucket("doc_id", 0)
+    b = _bucket("doc_id")
     tok_min = (
         df.select(b.alias("__b"), T.tokens("text").alias("__toks"))
         .select("__b", F.explode("__toks").alias("tok"))
@@ -1084,12 +1077,12 @@ def quality_classifier(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     )
 
 
-def naive_bayes_train_apply(df: DataFrame, train_mod: int = 5) -> DataFrame:
+def naive_bayes_train_apply(df: DataFrame) -> DataFrame:
     """Multinomial Naive Bayes text classifier, trained and applied inside
     one logical plan — the TRAINED counterpart to the fixed-literal
     :func:`quality_classifier` (fasttext-role): per-class token
     log-likelihoods with Laplace smoothing are ESTIMATED from a
-    deterministic train split (``id % train_mod != 0``) and applied to the
+    deterministic train split (``id % 5 != 0``) and applied to the
     held-out split. The workhorse shape for language-ID / quality / topic
     gates over a 100 TB corpus when a learned-but-cheap model is wanted.
 
@@ -1110,8 +1103,8 @@ def naive_bayes_train_apply(df: DataFrame, train_mod: int = 5) -> DataFrame:
     Output: (id, true label, pred label, score_pred double(6dp), correct).
     """
     lbl, txt, did = F.col("lang"), F.col("text"), F.col("doc_id")
-    train = df.filter(did % train_mod != 0)
-    test = df.filter(did % train_mod == 0)
+    train = df.filter(did % 5 != 0)
+    test = df.filter(did % 5 == 0)
 
     train_toks = train.select(
         lbl.alias("label"), F.explode(T.tokens(txt)).alias("tok")
@@ -1335,9 +1328,7 @@ def _dense_exact_cosine_pairs(
 def cosine_similarity_pairs(
     df: DataFrame,
     threshold: float,
-    max_df: int | None = None,
     exact: bool = False,
-    dense_kernel: bool | None = None,
 ) -> DataFrame:
     """EXACT all-pairs cosine similarity ≥ ``threshold`` over integer
     term-frequency vectors, via an inverted-index (postings) join — the
@@ -1358,8 +1349,7 @@ def cosine_similarity_pairs(
     partial-product aggregation; raw text never shuffles. Per-term pair
     fan-out is Σ df_t², so high-df terms dominate cost while contributing
     least discrimination — by DEFAULT terms appearing in more than
-    half of the corpus (or more than ``max_df`` documents, when given) are
-    dropped from the postings self-join so an accidentally
+    half of the corpus are dropped from the postings self-join so an accidentally
     dense vocabulary can never go quadratic (df-capped semantics: a
     surviving pair must share ≥1 kept term; each candidate is then
     VERIFIED against the full tf vectors, so the dot, the threshold gate
@@ -1370,7 +1360,7 @@ def cosine_similarity_pairs(
     bounded DENSE slice the exact path auto-takes a block-GEMM Arrow
     kernel (:func:`_dense_exact_cosine_pairs`) instead of shuffling the
     Σ df² postings join — same pair set and doubles, bit-identical, one
-    scan instead of three; ``dense_kernel=False`` forces the join. Resolving the
+    scan instead of three; an oversized slice takes the join. Resolving the
     fractional cap costs one count of ``df`` plus one combiner-reduced
     aggregate over the per-term df table — negligible next to the pairs
     join it bounds. Terms with df=1 can never form a pair and are always
@@ -1397,11 +1387,10 @@ def cosine_similarity_pairs(
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     kept = dfreq.filter(F.col("__df") >= 2)
     if not exact:
-        if max_df is None:
-            import math as _math
+        import math as _math
 
-            n_docs = df.select("doc_id").count()
-            max_df = max(2, int(_math.ceil(0.5 * n_docs)))
+        n_docs = df.select("doc_id").count()
+        max_df = max(2, int(_math.ceil(0.5 * n_docs)))
         dropped = kept.filter(F.col("__df") > max_df).count()
         if dropped:
             _LOG.warning(
@@ -1430,14 +1419,9 @@ def cosine_similarity_pairs(
         # shuffles Σ df_t² ≈ V·n² rows (the all-pairs worst case the
         # exact flag opts into); when the slice is small enough to
         # broadcast (n·V entries bounded) the same dots are one integer
-        # GEMM — auto-taken unless dense_kernel=False. Both branches
-        # feed the identical norm-join/gate/round tail, so the result is
-        # bit-identical either way.
-        dense = (
-            _dense_exact_cosine_pairs(tf, "doc_id")
-            if dense_kernel is not False
-            else None
-        )
+        # GEMM. Both branches feed the identical norm-join/gate/round
+        # tail, so the result is bit-identical either way.
+        dense = _dense_exact_cosine_pairs(tf, "doc_id")
         if dense is not None:
             dec = "decimal(38,0)"
             return (

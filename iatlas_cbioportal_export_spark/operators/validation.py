@@ -176,8 +176,8 @@ class _Pass:
         skip_null: bool = False, severity: str = "ERROR",
     ) -> None:
         """Distinct ``space`` keys of ``left`` absent from ``right``. A NULL
-        key is absent (the anti-join semantics of :func:`keyset_subset`),
-        or skipped with ``skip_null``."""
+        key is absent (anti-join semantics), or skipped with
+        ``skip_null``."""
         n = self._absent(left, right, space, skip_null)
         self.row(_violation(check, n, _lit(detail), severity))
 
@@ -285,34 +285,13 @@ class _Pass:
         return _findings(census.selectExpr(*self._aggs), self._rows)
 
 
-def count_equality(
-    df_in: DataFrame, df_out: DataFrame, check: str = "row_count_preserved"
-) -> DataFrame:
+def count_equality(df_in: DataFrame, df_out: DataFrame) -> DataFrame:
     """V2/V8: row count in == out (reference ``clinical.py:814-817``,
     ``maf.py:234-237``)."""
     p = _Pass()
-    p.row(_in_out(check, p.count(p.table(df_in, [])), p.count(p.table(df_out, []))))
+    n_in, n_out = p.count(p.table(df_in, [])), p.count(p.table(df_out, []))
+    p.row(_in_out("row_count_preserved", n_in, n_out))
     return p.findings()
-
-
-def distinct_count_equality(df_in: DataFrame, df_out: DataFrame, col: str) -> DataFrame:
-    """V3/V4: distinct key counts in == out (reference ``clinical.py:809-825``)."""
-    p = _Pass()
-    n_in, n_out = (p.distinct(p.table(df, [(col, col)]), col) for df in (df_in, df_out))
-    p.row(_in_out(f"distinct_{col.lower()}_preserved", n_in, n_out))
-    return p.findings()
-
-
-def no_null_keys(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """V5/V6/V11: key / required columns contain no nulls (reference
-    ``clinical.py:826-830``; ``maf.py:250-269`` for t_ref/t_alt counts).
-    ONE aggregate pass for all columns; one finding row per column."""
-    return table_profile_checks(df, no_null_cols=cols)
-
-
-def no_all_null_columns(df: DataFrame) -> DataFrame:
-    """V7: no output column is 100% null (reference ``clinical.py:833-837``)."""
-    return table_profile_checks(df, all_null_cols=df.columns)
 
 
 def no_duplicate_rows(
@@ -334,24 +313,6 @@ def keyset_preserved(
     two key columns."""
     p = _Pass()
     p.equal(p.table(left, [("k", left_key)]), p.table(right, [("k", right_key)]), "k", check)
-    return p.findings()
-
-
-def keyset_subset(
-    left: DataFrame, left_key: str, right: DataFrame, right_key: str
-) -> DataFrame:
-    """Referential check: every distinct ``left_key`` value appears in
-    ``right_key`` (one-directional — the containment half of
-    :func:`keyset_preserved`). This is the native form of cBioPortal
-    ``validateData.py``'s sample-reference checks (MAF barcodes must be
-    clinical samples; matrix columns must be clinical samples) that the
-    reference shells out to (``validate.py:211-216``). One co-group of the
-    two key columns only — never the full rows."""
-    p = _Pass()
-    p.subset(
-        p.table(left, [("k", left_key)]), p.table(right, [("k", right_key)]), "k",
-        "keyset_subset", f"{left_key} values absent from {right_key}",
-    )
     return p.findings()
 
 
@@ -610,14 +571,15 @@ def table_profile_checks(
     no_null_cols: Sequence[str] = (),
     all_null_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """The self-comparison (pipeline in == out) fusion of
-    :func:`count_equality` + :func:`distinct_count_equality` +
-    :func:`no_null_keys` + :func:`no_all_null_columns`: ONE scan emits all
-    their finding rows (identical schema, names, details) instead of 4-6
-    separate scans of the same table. At 100 TB a validation pass
+    """Self-comparison (pipeline in == out) profile checks of one table in
+    ONE scan: the row count (V2, as ``count_check``), distinct counts of
+    ``distinct_cols`` (V3/V4), no nulls in ``no_null_cols`` (V5/V6/V11,
+    reference ``clinical.py:826-830``) and no 100%-null column among
+    ``all_null_cols`` (V7, reference ``clinical.py:833-837``), instead of
+    4-6 separate scans of the same table. At 100 TB a validation pass
     re-reading the fact table per check is the difference between one pass
-    and six; the two-sided operators remain for genuine in-vs-out
-    comparisons."""
+    and six; :func:`count_equality` and :func:`keyset_preserved` remain for
+    genuine in-vs-out comparisons."""
     p = _Pass()
     t = p.table(df, [(c, c) for c in distinct_cols])
     p.profile(t, count_check, distinct_cols, no_null_cols, all_null_cols)
@@ -630,8 +592,8 @@ def keyed_dup_and_distinct_checks(
     distinct_check: str | None = None,
     dup_check: str = "no_duplicate_rows",
 ) -> DataFrame:
-    """Fusion of :func:`no_duplicate_rows` (keyed) with
-    :func:`distinct_count_equality` (self-comparison): both derive from the
+    """Fusion of :func:`no_duplicate_rows` (keyed) with a self-compared
+    distinct key count: both derive from the
     SAME ``key`` grouping — the distinct count is the group count, the dup
     count is the >1 group count — so one shuffle serves two checks."""
     p = _Pass()
@@ -643,12 +605,6 @@ def findings_union(findings: Sequence[DataFrame]) -> DataFrame:
     """Combine check DataFrames into ONE lazy findings DataFrame (single
     action evaluates the whole suite)."""
     return reduce(lambda a, b: a.unionByName(b), findings)
-
-
-def has_errors(findings: DataFrame) -> bool:
-    """ErrorFlagHandler semantics: any ERROR row ⇒ failed study
-    (reference ``utils.py:52-58``, checked at ``clinical.py:949-950``)."""
-    return findings.filter("status = 'ERROR'").limit(1).count() > 0
 
 
 def constraint_suite(
@@ -959,7 +915,7 @@ def bundle_checks(
     - per clinical file: its null-key and all-null-column rows
       (:func:`table_profile_checks`) and its duplicate keys
       (:func:`keyed_dup_and_distinct_checks`); then sample
-      ``PATIENT_ID`` ⊆ patient ``PATIENT_ID`` (:func:`keyset_subset`);
+      ``PATIENT_ID`` ⊆ patient ``PATIENT_ID``;
     - the MAF: the 118-column schema (V12, ``validate.py:159-172``),
       :func:`maf_value_conformance`, no NULL barcode, barcodes ⊆ clinical
       samples and, given ``neoantigen``, its ``Sample_ID`` set equals the
@@ -1191,42 +1147,6 @@ def meta_consistency_checks(
 CLINICAL_HEADER_DATATYPES = ("STRING", "NUMBER", "BOOLEAN")
 
 
-def parse_clinical_header_text(name: str, text: str) -> list[dict]:
-    """Parse a cBioPortal clinical file's 5-line attribute header (four
-    ``#`` lines — display name / description / datatype / priority — then
-    the column-id line; the inverse of ``sinks.cbioportal_clinical_header``)
-    into one dict per attribute. Driver-side by design: headers are
-    KB-sized, exactly like :func:`parse_meta_text`.
-
-    ``arity_ok`` is a FILE-level flag repeated on every attribute row:
-    False when any ``#`` line's field count differs from the column line's
-    (cBioPortal's validator errors on ragged headers). Ragged lines are
-    padded with NULLs so the per-attribute rules still see every column."""
-    lines = text.splitlines()
-    hash_lines = [ln[1:].split("\t") for ln in lines[:4] if ln.startswith("#")]
-    if len(hash_lines) != 4 or len(lines) < 5 or lines[4].startswith("#"):
-        raise ValueError(
-            f"{name}: expected 4 '#' header lines then a column line"
-        )
-    col_ids = lines[4].split("\t")
-    arity_ok = all(len(h) == len(col_ids) for h in hash_lines)
-
-    def field(j: int, i: int) -> str | None:
-        return hash_lines[j][i] if i < len(hash_lines[j]) else None
-
-    return [
-        {
-            "filename": name,
-            "column_id": cid,
-            "display_name": field(0, i),
-            "description": field(1, i),
-            "datatype": field(2, i),
-            "priority": field(3, i),
-            "arity_ok": arity_ok,
-        }
-        for i, cid in enumerate(col_ids)
-    ]
-
 
 def clinical_header_conformance(attrs: DataFrame) -> DataFrame:
     """Attribute-HEADER conformance — the header tier of cBioPortal
@@ -1236,9 +1156,11 @@ def clinical_header_conformance(attrs: DataFrame) -> DataFrame:
     :func:`cross_file_referential_checks` (ids) /
     :func:`meta_consistency_checks` (study descriptors).
 
-    ``attrs``: one row per (filename, column_id) attribute as produced by
-    :func:`parse_clinical_header_text` — columns ``filename, column_id,
-    display_name, description, datatype, priority, arity_ok``.
+    ``attrs``: one row per (filename, column_id) attribute of a file's
+    4-line ``#`` header (``sinks.cbioportal_clinical_header``) — columns
+    ``filename, column_id, display_name, description, datatype, priority,
+    arity_ok`` (``arity_ok``: every ``#`` line has the column line's field
+    count).
 
     Rules (ONE aggregate pass; uniform findings schema):
     - ``header_datatype_vocabulary`` (ERROR): datatype ∈ STRING/NUMBER/

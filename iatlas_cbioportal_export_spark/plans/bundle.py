@@ -166,19 +166,21 @@ def write_study_bundle(
     dataset: str,
     clinical_patient: DataFrame,
     clinical_sample: DataFrame,
-    mutations: DataFrame | None = None,
     attr_meta: Mapping[str, Mapping[str, object]] | None = None,
-    max_maf_rows: int = 40_000,
     clinical_merged: DataFrame | None = None,
 ) -> dict[str, str]:
-    """Write one dataset's complete cBioPortal study bundle; returns
-    artifact name → path.
+    """Write one dataset's clinical study bundle — the clinical views and
+    their meta files, ``meta_study.txt`` and the per-cancer-type and
+    ``cases_all`` case lists; returns artifact name → path. The mutation
+    artifacts and ``cases_sequenced`` come later, from
+    :func:`write_mutations` and :func:`write_load_stage_case_lists`.
 
-    ``clinical_sample`` feeds FOUR actions (P5 null-count aggregate, the file
-    write, the A1 case-list aggregation, the J5 semi-join) — without a
-    persist each action re-runs the whole upstream preprocess DAG, so both
-    views are cached for the bundle's lifetime (memory-and-disk: safe when a
-    dataset slice outgrows executor memory) and released before returning.
+    ``clinical_sample`` feeds THREE actions (P5 null-count aggregate, the
+    file write, the A1 case-list aggregation) — without a persist each
+    action re-runs the whole upstream preprocess DAG, so both views are
+    cached for the bundle's lifetime (memory-and-disk: safe when a dataset
+    slice outgrows executor memory) and released before returning, also
+    when a write raises.
 
     ``clinical_merged`` is the one switch for the reference's byte-parity
     surface (r9, pinned by the full-bundle differential and by
@@ -201,133 +203,127 @@ def write_study_bundle(
     artifacts: dict[str, str] = {}
     clinical_patient = clinical_patient.persist()
     clinical_sample = clinical_sample.persist()
+    try:
 
-    # Clinical views: prune 100%-null columns (P5), then header'd single file.
-    # r11 (guide §2.6 overlap independent jobs): each artifact costs a fixed
-    # chain of small driver-triggered jobs (the P5 null-count aggregate, the
-    # csv write, and — for the sample view — the A1 case-list aggregate).
-    # The chains are independent (distinct output files, shared persisted
-    # inputs), so they run from a small thread pool and back-fill each
-    # other's job tails instead of serializing ~5 fixed-overhead jobs.
-    # Byte surface unchanged: same files, same contents, and the artifacts
-    # dict is assembled in the original insertion order after the futures
-    # complete.
-    def _clinical_artifact(name: str, view: DataFrame, key: str):
-        pruned = prune_all_null_columns(view)
-        written = write_cbioportal_clinical(
-            pruned,
-            os.path.join(out_dir, name),
-            attr_meta,
-            pandas_float_format=parity,
-            order_by=[key] if parity else None,
-        )
-        meta_name = "meta_" + name[len("data_") :]
-        datatype = "PATIENT_ATTRIBUTES" if "patient" in name else "SAMPLE_ATTRIBUTES"
-        meta_path = _write_text(
-            os.path.join(out_dir, meta_name),
-            render_meta_file(_meta_clinical(study_id, datatype, name)),
-        )
-        return [(name, written), (meta_name, meta_path)]
-
-    # Case lists carry SAMPLE_ID as text, as the sample file renders it: an
-    # inferred numeric id (`007` read as 7) is listed as `7`, not an int.
-    case_ids = clinical_sample.select(
-        F.col(_SAMPLE_ID).cast("string").alias(_SAMPLE_ID), _CANCER_TYPE
-    )
-
-    def _case_list_groups():
-        with job_label(clinical_sample.sparkSession, "collect case-list groups"):
-            return case_list_groups(
-                case_ids, group_col=_CANCER_TYPE, id_col=_SAMPLE_ID
-            ).collect()
-
-    # Pool threads do not inherit the caller's local properties (job group,
-    # scheduler pool, job description) or job tags. Each task is wrapped on
-    # its own in inheritable_thread_target(session), which hands the task a
-    # private copy of them and re-adds the session's tags: tasks sharing
-    # one copy would see each other's SQL execution ids. Passing the
-    # session needs PySpark's pinned-thread mode, its default.
-    spark = clinical_sample.sparkSession
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        clinical_futures = [
-            pool.submit(
-                inheritable_thread_target(spark)(_clinical_artifact), name, view, key
+        # Clinical views: prune 100%-null columns (P5), then header'd single file.
+        # r11 (guide §2.6 overlap independent jobs): each artifact costs a fixed
+        # chain of small driver-triggered jobs (the P5 null-count aggregate, the
+        # csv write, and — for the sample view — the A1 case-list aggregate).
+        # The chains are independent (distinct output files, shared persisted
+        # inputs), so they run from a small thread pool and back-fill each
+        # other's job tails instead of serializing ~5 fixed-overhead jobs.
+        # Byte surface unchanged: same files, same contents, and the artifacts
+        # dict is assembled in the original insertion order after the futures
+        # complete.
+        def _clinical_artifact(name: str, view: DataFrame, key: str):
+            pruned = prune_all_null_columns(view)
+            written = write_cbioportal_clinical(
+                pruned,
+                os.path.join(out_dir, name),
+                attr_meta,
+                pandas_float_format=parity,
+                order_by=[key] if parity else None,
             )
-            for name, view, key in (
-                ("data_clinical_patient.txt", clinical_patient, "PATIENT_ID"),
-                ("data_clinical_sample.txt", clinical_sample, _SAMPLE_ID),
+            meta_name = "meta_" + name[len("data_") :]
+            datatype = "PATIENT_ATTRIBUTES" if "patient" in name else "SAMPLE_ATTRIBUTES"
+            meta_path = _write_text(
+                os.path.join(out_dir, meta_name),
+                render_meta_file(_meta_clinical(study_id, datatype, name)),
             )
-        ]
-        # Case lists need only the persisted sample view — kick the A1
-        # aggregate off concurrently; its rendering happens below, after
-        # the meta_study write, exactly where it happened before.
-        groups_future = pool.submit(inheritable_thread_target(spark)(_case_list_groups))
-        for fut in clinical_futures:
-            for key, value in fut.result():
-                artifacts[key] = value
+            return [(name, written), (meta_name, meta_path)]
 
-    # data_clinical_merged.txt — the pre-split frame the reference keeps
-    # next to the two views (clinical.py:611-620; it also feeds the
-    # reference's case-list reader). Single header'd TSV (column header,
-    # no # metadata lines), no pruning: the reference writes the merged
-    # subset as-is, minus the Dataset bookkeeping column, which it drops
-    # unconditionally (clinical.py:615) — mirror that here so callers that
-    # pass the pre-split frame straight through (the CLI) stay byte-equal.
-    if parity:
-        if "Dataset" in clinical_merged.columns:
-            clinical_merged = clinical_merged.drop("Dataset")
-        artifacts["data_clinical_merged.txt"] = write_single_tsv(
-            clinical_merged,
-            os.path.join(out_dir, "data_clinical_merged.txt"),
-            pandas_float_format=True,
-            order_by=[_SAMPLE_ID],
+        # Case lists carry SAMPLE_ID as text, as the sample file renders it: an
+        # inferred numeric id (`007` read as 7) is listed as `7`, not an int.
+        case_ids = clinical_sample.select(
+            F.col(_SAMPLE_ID).cast("string").alias(_SAMPLE_ID), _CANCER_TYPE
         )
 
-    if mutations is not None:
-        artifacts.update(write_mutations(out_dir, study_id, mutations, max_maf_rows))
+        def _case_list_groups():
+            with job_label(clinical_sample.sparkSession, "collect case-list groups"):
+                return case_list_groups(
+                    case_ids, group_col=_CANCER_TYPE, id_col=_SAMPLE_ID
+                ).collect()
 
-    # meta_study.txt — byte-identical to the reference's native writer
-    # (clinical.py:645-656: exact key order, TBD/PLACEHOLDER fields and
-    # all; pinned by the rendering differential).
-    artifacts["meta_study.txt"] = _write_text(
-        os.path.join(out_dir, "meta_study.txt"),
-        render_meta_file(
-            {
-                "cancer_study_identifier": study_id,
-                "type_of_cancer": "mixed",
-                "name": "TBD",
-                "pmid": "29033130",
-                "reference_genome": "hg38",
-                "citation": "PLACEHOLDER",
-                "description": "PLACEHOLDER",
-            }
-        ),
-    )
+        # Pool threads do not inherit the caller's local properties (job group,
+        # scheduler pool, job description) or job tags. Each task is wrapped on
+        # its own in inheritable_thread_target(session), which hands the task a
+        # private copy of them and re-adds the session's tags: tasks sharing
+        # one copy would see each other's SQL execution ids. Passing the
+        # session needs PySpark's pinned-thread mode, its default.
+        spark = clinical_sample.sparkSession
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            clinical_futures = [
+                pool.submit(
+                    inheritable_thread_target(spark)(_clinical_artifact), name, view, key
+                )
+                for name, view, key in (
+                    ("data_clinical_patient.txt", clinical_patient, "PATIENT_ID"),
+                    ("data_clinical_sample.txt", clinical_sample, _SAMPLE_ID),
+                )
+            ]
+            # Case lists need only the persisted sample view — kick the A1
+            # aggregate off concurrently; its rendering happens below, after
+            # the meta_study write, exactly where it happened before.
+            groups_future = pool.submit(inheritable_thread_target(spark)(_case_list_groups))
+            for fut in clinical_futures:
+                for key, value in fut.result():
+                    artifacts[key] = value
 
-    # Case lists. ONE aggregation pass (A1); collected result is one row per
-    # cancer type carrying its (sorted) sample-id list (computed concurrently
-    # with the clinical artifacts above).
-    groups = groups_future.result()
-    all_ids: list[str] = []
-    for row in sorted(groups, key=lambda r: (r[_CANCER_TYPE] is None, r[_CANCER_TYPE])):
-        ids = row["sample_ids"]
-        all_ids.extend(ids)
-        slug, text = render_case_list_text(study_id, row[_CANCER_TYPE], ids)
-        artifacts[f"case_lists/cases_{slug}.txt"] = _write_text(
-            os.path.join(case_list_dir, f"cases_{slug}.txt"), text
+        # data_clinical_merged.txt — the pre-split frame the reference keeps
+        # next to the two views (clinical.py:611-620; it also feeds the
+        # reference's case-list reader). Single header'd TSV (column header,
+        # no # metadata lines), no pruning: the reference writes the merged
+        # subset as-is, minus the Dataset bookkeeping column, which it drops
+        # unconditionally (clinical.py:615) — mirror that here so callers that
+        # pass the pre-split frame straight through (the CLI) stay byte-equal.
+        if parity:
+            if "Dataset" in clinical_merged.columns:
+                clinical_merged = clinical_merged.drop("Dataset")
+            artifacts["data_clinical_merged.txt"] = write_single_tsv(
+                clinical_merged,
+                os.path.join(out_dir, "data_clinical_merged.txt"),
+                pandas_float_format=True,
+                order_by=[_SAMPLE_ID],
+            )
+
+        # meta_study.txt — byte-identical to the reference's native writer
+        # (clinical.py:645-656: exact key order, TBD/PLACEHOLDER fields and
+        # all; pinned by the rendering differential).
+        artifacts["meta_study.txt"] = _write_text(
+            os.path.join(out_dir, "meta_study.txt"),
+            render_meta_file(
+                {
+                    "cancer_study_identifier": study_id,
+                    "type_of_cancer": "mixed",
+                    "name": "TBD",
+                    "pmid": "29033130",
+                    "reference_genome": "hg38",
+                    "citation": "PLACEHOLDER",
+                    "description": "PLACEHOLDER",
+                }
+            ),
         )
 
-    artifacts["case_lists/cases_all.txt"] = _write_case_list(
-        case_list_dir, study_id, "all", all_ids
-    )
-    if mutations is not None:
-        artifacts["case_lists/cases_sequenced.txt"] = _write_sequenced(
-            case_list_dir, study_id, case_ids.select(_SAMPLE_ID), mutations
-        )
+        # Case lists. ONE aggregation pass (A1); collected result is one row per
+        # cancer type carrying its (sorted) sample-id list (computed concurrently
+        # with the clinical artifacts above).
+        groups = groups_future.result()
+        all_ids: list[str] = []
+        for row in sorted(groups, key=lambda r: (r[_CANCER_TYPE] is None, r[_CANCER_TYPE])):
+            ids = row["sample_ids"]
+            all_ids.extend(ids)
+            slug, text = render_case_list_text(study_id, row[_CANCER_TYPE], ids)
+            artifacts[f"case_lists/cases_{slug}.txt"] = _write_text(
+                os.path.join(case_list_dir, f"cases_{slug}.txt"), text
+            )
 
-    clinical_patient.unpersist()
-    clinical_sample.unpersist()
-    return artifacts
+        artifacts["case_lists/cases_all.txt"] = _write_case_list(
+            case_list_dir, study_id, "all", all_ids
+        )
+        return artifacts
+    finally:
+        clinical_patient.unpersist()
+        clinical_sample.unpersist()
 
 
 def write_load_stage_case_lists(spark, bundle_dir: str) -> dict[str, str]:

@@ -10,9 +10,8 @@ file — a point query or range predicate on either column then skips most
 files on parquet footer stats alone, before any row is read. At 100 TB
 this is the difference between scanning a partition and scanning the lake.
 
-Everything here is a NARROW expression over bounded integer ranks — the
-only shuffle is the explicit range-repartition that the layout exists to
-pay once at write time (same economics as ``bucketing.py``).
+:func:`z_order_value` is a NARROW expression over bounded integer ranks;
+the writers here pay their one shuffle once, at write time.
 """
 
 from __future__ import annotations
@@ -58,7 +57,6 @@ def compact_small_files(
     in_path: str,
     out_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    shuffle: bool = True,
 ) -> dict[str, int]:
     """Small-file compaction: rewrite a parquet directory as
     ``ceil(total_bytes / target)`` files (the metadata-pressure killer for
@@ -66,19 +64,16 @@ def compact_small_files(
     dribbles ends up as millions of KB-files whose listing/footer overhead
     dominates every scan).
 
-    ``shuffle=True`` (default) uses ``repartition(n)`` — one round-robin
-    exchange, paid once at write time, yielding uniformly-sized output
-    files regardless of input skew. ``shuffle=False`` uses ``coalesce(n)``
-    — zero shuffle (input splits are glued), cheaper but inherits any input
-    size skew into the outputs; right when inputs are already uniform.
+    ``repartition(n)`` is one round-robin exchange, paid once at write
+    time, yielding uniformly-sized output files regardless of input skew
+    (``coalesce(n)`` would glue input splits and inherit their skew).
 
     Returns the plan dict plus ``n_output_files`` (post-write listing).
     """
     plan = plan_compaction(spark, in_path, target_file_bytes)
     df = spark.read.parquet(in_path)
     n = plan["n_target"]
-    df = df.repartition(n) if shuffle else df.coalesce(n)
-    df.write.mode("overwrite").parquet(out_path)
+    df.repartition(n).write.mode("overwrite").parquet(out_path)
     plan["n_output_files"] = len(list_data_files(spark, out_path))
     return plan
 
@@ -106,31 +101,6 @@ def z_order_value(cols: Sequence[Column | str], bits: int = 16) -> Column:
                 )
             )
     return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zcols: Sequence[str],
-    bits: int = 16,
-    num_files: int = 32,
-) -> None:
-    """Write ``df`` as parquet clustered on the Morton curve of ``zcols``:
-    range-repartition on the z-value (equal-depth file splits via sampled
-    range bounds — NOT hash, which would scatter the curve), sort within
-    each partition, drop the helper column. Each output file then covers a
-    compact curve segment, i.e. a bounded hyper-rectangle in every z
-    dimension — parquet footer min/max on the original columns do the
-    pruning; the z-value itself is not persisted."""
-    zv = z_order_value(list(zcols), bits=bits)
-    (
-        df.withColumn("__z", zv)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def write_bucket_clustered(

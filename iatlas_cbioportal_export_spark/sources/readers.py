@@ -155,41 +155,6 @@ def read_jsonl(
     return spark.read.schema(schema).json(path)
 
 
-def read_jsonl_tracked(
-    spark: SparkSession, path: str, schema: StructType
-) -> tuple[DataFrame, DataFrame]:
-    """JSONL scan that ROUTES malformed lines instead of dropping them:
-    PERMISSIVE mode with a corrupt-record column, split into
-    (good_rows, bad_rows). Web-scale corpora always contain broken lines;
-    silently dropping them (DROPMALFORMED) hides data loss and failing the
-    job (FAILFAST) wastes the cluster — the error side-band is the same
-    contract the MAF annotator uses for failed batches.
-
-    ``bad`` carries (corrupt_record) — the raw line for quarantine/replay.
-    Spark requires the corrupt column consumers to cache-or-re-scan; the
-    split here filters on the same scan twice, which stays two passes over
-    the SAME files (no shuffle either way)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType, StructField
-
-    corrupt = "_corrupt_record"
-    full = StructType(list(schema.fields) + [StructField(corrupt, StringType())])
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt)
-        .json(path)
-    )
-    # Spark disallows filtering on only the corrupt column of a lazy json
-    # scan (SPARK-21610) — materialize the tiny bad set via cache
-    df = df.cache()
-    good = df.filter(F.col(corrupt).isNull()).drop(corrupt)
-    bad = df.filter(F.col(corrupt).isNotNull()).select(
-        F.col(corrupt).alias("corrupt_record")
-    )
-    return good, bad
-
-
 def write_jsonl(df: DataFrame, path: str) -> None:
     """JSON-lines sink (one object per line, the LLM-corpus interchange
     format). Distributed write — one file per partition."""

@@ -216,16 +216,6 @@ def write_cbioportal_clinical(
     return _concat_csv_parts(tmp, path, header_lines)
 
 
-def write_partitioned_datasets(df: DataFrame, path: str) -> None:
-    """P3 at scale: ONE pass writing every dataset slice under
-    ``{path}/Dataset=<value>/`` — replaces the reference's 23-iteration
-    per-dataset filter loop (``clinical.py:922-950``) with a single
-    ``partitionBy`` write, and makes every later ``Dataset == d`` filter a
-    partition-pruned scan instead of a full read."""
-    with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
-        df.write.mode("overwrite").partitionBy("Dataset").parquet(path)
-
-
 def render_case_list_text(
     study_id: str,
     cancer_type: str,

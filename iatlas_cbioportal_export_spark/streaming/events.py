@@ -21,14 +21,15 @@ def stream_events_from_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(schema).parquet(path)
 
 
-def hourly_event_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def hourly_event_counts(events: DataFrame) -> DataFrame:
     """Tumbling 1-hour windowed counts + value sum per event_type, with a
-    watermark bounding state for late data. Works on a streaming OR batch
-    DataFrame (same code path — that is the point of Structured Streaming).
+    2-hour watermark bounding state for late data. Works on a streaming OR
+    batch DataFrame (same code path — that is the point of Structured
+    Streaming).
     """
     df = events
     if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+        df = df.withWatermark("ts", "2 hours")
     return (
         df.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(
@@ -64,23 +65,6 @@ def hourly_event_counts_batch(events: DataFrame) -> DataFrame:
     )
 
 
-def annotate_maf_stream(spark: SparkSession, maf_parquet_dir: str) -> DataFrame:
-    """Streaming variant of the §3.2 MAF annotation path: a file-source
-    stream of variant rows fanned through the same ``mapInPandas`` annotation
-    stage used in batch (operators/maf.py), chrM-filtered downstream.
-
-    The pattern for continuous ingestion: new MAF drops land in the folder,
-    each micro-batch annotates only the new files, and task parallelism
-    replaces the reference's process pool exactly as in batch — the operator
-    code is IDENTICAL because mapInPandas is stream/batch agnostic.
-    """
-    from iatlas_cbioportal_export_spark.operators.maf import annotate, drop_chrm
-
-    schema = spark.read.parquet(maf_parquet_dir).schema
-    stream = spark.readStream.schema(schema).parquet(maf_parquet_dir)
-    return drop_chrm(annotate(stream))
-
-
 def dedup_events(events: DataFrame) -> DataFrame:
     """Streaming exact dedup — the continuous-ingestion form of the exact
     dedup tier: on a stream, ``dropDuplicatesWithinWatermark`` keeps ONE row
@@ -97,81 +81,6 @@ def dedup_events(events: DataFrame) -> DataFrame:
             keys
         )
     return events.dropDuplicates(keys)
-
-
-def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """STREAMING gap sessionization via ``applyInPandasWithState`` — the
-    custom stateful operator of the streaming extension (SURVEY.md §2.8).
-
-    Per-user state holds the OPEN session (start, end, count) as epoch
-    seconds; each micro-batch folds its (sorted) events in: a gap greater
-    than ``gap_minutes`` CLOSES the current session (emitted downstream,
-    append mode) and opens a new one. A processing-time timeout of one gap
-    closes idle sessions once new batches arrive. Semantics match the batch
-    :func:`sessionize` for all closed sessions; each user's final session
-    stays open until timeout (tested against the batch twin).
-
-    Scale: state is 3 longs per ACTIVE user (bounded by the timeout), and
-    each micro-batch shuffles once on ``user_id``.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_sec = gap_minutes * 60
-    out_schema = (
-        "user_id long, session_start timestamp, session_end timestamp, "
-        "n_events long"
-    )
-    state_schema = "start long, end long, n long"
-
-    def fn(key, pdf_iter, state: GroupState):
-        uid = key[0]
-
-        def emit(rows):
-            return pd.DataFrame(
-                {
-                    "user_id": [uid] * len(rows),
-                    "session_start": [pd.to_datetime(s, unit="s") for s, _, _ in rows],
-                    "session_end": [pd.to_datetime(e, unit="s") for _, e, _ in rows],
-                    "n_events": [n for _, _, n in rows],
-                }
-            )
-
-        if state.hasTimedOut:
-            start, end, n = state.get
-            state.remove()
-            yield emit([(start, end, n)])
-            return
-        ts_all = sorted(
-            t.timestamp()
-            for pdf in pdf_iter
-            for t in pdf["ts"]
-            if t is not None and t == t  # drop NaT
-        )
-        start, end, n = state.get if state.exists else (None, None, 0)
-        closed: list[tuple[int, int, int]] = []
-        for t in ts_all:
-            if start is None:
-                start, end, n = t, t, 1
-            elif t - end > gap_sec:
-                closed.append((int(start), int(end), n))
-                start, end, n = t, t, 1
-            else:
-                end, n = t, n + 1
-        if closed:
-            yield emit(closed)
-        if start is not None:
-            state.update((int(start), int(end), n))
-            state.setTimeoutDuration(gap_sec * 1000)
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout,
-    )
 
 
 def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
@@ -255,17 +164,11 @@ def enrich_events(events: DataFrame, dim: DataFrame) -> DataFrame:
     ).drop("__k")
 
 
-def segment_hourly_counts(
-    events: DataFrame,
-    dim: DataFrame,
-    watermark: str | None = None,
-) -> DataFrame:
+def segment_hourly_counts(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Hourly event counts per customer segment: stream-static enrichment →
-    watermarked windowed aggregation. The composition pattern for
-    "stream joined to reference data, then aggregated"."""
+    windowed aggregation. The composition pattern for "stream joined to
+    reference data, then aggregated"."""
     enriched = enrich_events(events, dim)
-    if enriched.isStreaming and watermark:
-        enriched = enriched.withWatermark("ts", watermark)
     return (
         enriched.groupBy(
             F.window("ts", "1 hour").alias("__w"), F.col("c_mktsegment").alias("segment")
@@ -322,12 +225,10 @@ def attribute_purchases(events: DataFrame) -> DataFrame:
     batch input the same code plans as an equi-join on user_id with the
     interval predicate as a post-join filter (no nested loop).
     """
-    return _attribution_join(events, "1 hour", "inner")
+    return _attribution_join(events, "inner")
 
 
-def attribute_purchases_outer(
-    events: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
+def attribute_purchases_outer(events: DataFrame) -> DataFrame:
     """LEFT-OUTER click→purchase attribution: every click appears, with
     NULL purchase columns when no purchase followed within the window —
     the funnel-drop side the inner join cannot see.
@@ -339,11 +240,12 @@ def attribute_purchases_outer(
     Until that point the click is pending, so a left-outer stream-stream
     join's output trails the watermark by design (late-emission, not loss;
     covered by the expiry test). Batch input plans as a plain left join
-    with the interval residual."""
-    return _attribution_join(events, watermark, "left_outer")
+    with the interval residual. Both sides carry 1-hour watermarks, as in
+    :func:`attribute_purchases`."""
+    return _attribution_join(events, "left_outer")
 
 
-def _attribution_join(events: DataFrame, watermark: str, how: str) -> DataFrame:
+def _attribution_join(events: DataFrame, how: str) -> DataFrame:
     clicks = events.filter(F.col("event_type") == "click").select(
         F.col("user_id"),
         F.col("event_id").alias("click_id"),
@@ -356,8 +258,8 @@ def _attribution_join(events: DataFrame, watermark: str, how: str) -> DataFrame:
         F.col("value").alias("purchase_value"),
     )
     if events.isStreaming:
-        clicks = clicks.withWatermark("click_ts", watermark)
-        purchases = purchases.withWatermark("purchase_ts", watermark)
+        clicks = clicks.withWatermark("click_ts", "1 hour")
+        purchases = purchases.withWatermark("purchase_ts", "1 hour")
     joined = clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
@@ -458,12 +360,10 @@ def time_decayed_value(
     )
 
 
-def hourly_anomaly_zscore(
-    events: DataFrame, trailing_hours: int = 24, min_history: int = 12
-) -> DataFrame:
+def hourly_anomaly_zscore(events: DataFrame) -> DataFrame:
     """Volume-anomaly detection: each (hour, event_type) count scored
     against its own trailing window — z = (n − mean)/std over the previous
-    ``trailing_hours`` rows. The standard ops-monitoring shape (traffic
+    24 rows. The standard ops-monitoring shape (traffic
     spike / outage detection) on top of the hourly rollup.
 
     Determinism: mean/std are derived from EXACT integer window sums
@@ -471,9 +371,10 @@ def hourly_anomaly_zscore(
     double arithmetic is one fixed expression over exact inputs and any
     engine reproduces it. Plan: the rollup's single shuffle, then one
     window partitioned by event_type (tiny — one row per hour per type).
-    Rows with under ``min_history`` trailing hours or zero variance are
+    Rows with under 12 trailing hours or zero variance are
     suppressed (cold start / constant series give no signal).
     Output: (window_start, event_type, n_events, zscore, is_anomaly)."""
+    trailing_hours, min_history = 24, 12
     hourly = hourly_event_counts_batch(events).select(
         "window_start", "event_type", "n_events"
     )

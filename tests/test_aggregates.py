@@ -1,4 +1,4 @@
-"""A1-A8 aggregation operators, incl. the keep-last upsert window and the
+"""A1-A8 aggregation operators, incl. the keep-latest window and the
 chunk-assignment ceiling-division boundary cases (reference
 tests/test_maf.py:51-84)."""
 
@@ -10,7 +10,6 @@ from iatlas_cbioportal_export_spark.operators.aggregates import (
     chunk_assignment,
     drop_duplicates,
     duplicate_rows,
-    keep_last_upsert,
     keep_latest_by,
     null_profile,
 )
@@ -53,23 +52,6 @@ def test_drop_duplicates(spark):
     assert drop_duplicates(df).count() == 2
 
 
-def test_keep_last_upsert_new_wins(spark):
-    # reference clinical.py:465-468: concat(old,new) keep="last" on the key
-    old = spark.createDataFrame(
-        [("COL_A", "old_desc"), ("COL_B", "b_desc")],
-        "NORMALIZED_COLUMN_HEADER string, DESCRIPTION string",
-    )
-    new = spark.createDataFrame(
-        [("COL_A", "new_desc"), ("COL_C", "c_desc")],
-        "NORMALIZED_COLUMN_HEADER string, DESCRIPTION string",
-    )
-    out = {
-        r["NORMALIZED_COLUMN_HEADER"]: r["DESCRIPTION"]
-        for r in keep_last_upsert(old, new, "NORMALIZED_COLUMN_HEADER").collect()
-    }
-    assert out == {"COL_A": "new_desc", "COL_B": "b_desc", "COL_C": "c_desc"}
-
-
 def test_keep_latest_by(spark):
     df = spark.createDataFrame(
         [(1, 10, "2024-01-01"), (1, 11, "2024-02-01"), (2, 20, "2024-01-15")],
@@ -93,32 +75,6 @@ def test_chunk_assignment_boundaries(spark):
     assert n_chunks(0, 5) == 0
     assert n_chunks(5, 5) == 1
     assert n_chunks(6, 5) == 2
-
-
-def test_approx_profile_within_error_bounds(spark):
-    from iatlas_cbioportal_export_spark.operators.aggregates import approx_profile
-    import pyspark.sql.functions as F
-
-    df = spark.range(0, 20_000).select(
-        (F.col("id") % 7919).alias("k"), F.col("id").cast("double").alias("v")
-    )
-    row = approx_profile(
-        df, distinct_cols=["k"], percentile_cols=["v"], rsd=0.05
-    ).collect()[0]
-    # HLL++ at rsd=0.05: assert within 3x the configured relative error
-    assert abs(row["approx_distinct_k"] - 7919) / 7919 < 0.15
-    # percentile sketch with 10k accuracy on 20k rows: near-exact
-    assert abs(row["p50_v"] - 10_000) < 200
-    assert abs(row["p95_v"] - 19_000) < 200
-    assert abs(row["p99_v"] - 19_800) < 200
-
-
-def test_approx_profile_requires_columns(spark):
-    import pytest
-    from iatlas_cbioportal_export_spark.operators.aggregates import approx_profile
-
-    with pytest.raises(ValueError):
-        approx_profile(spark.range(1))
 
 
 def test_merge_rollup_equals_full_recompute(spark):
@@ -274,11 +230,10 @@ def test_apply_changelog_delete_then_reinsert_latest_wins(spark):
     assert [(r["k"], r["v"]) for r in out] == [(1, 5.0)]
 
 
-def test_exact_order_statistic_small_domain(spark):
-    from iatlas_cbioportal_export_spark.operators.aggregates import (
-        exact_order_statistic,
-    )
+def test_exact_order_statistic_small_domain(spark, monkeypatch):
+    from iatlas_cbioportal_export_spark.operators import aggregates
 
+    monkeypatch.setattr(aggregates, "_ORDER_STAT_BUCKETS", 4)
     vals = [5, 1, 9, 3, 3, 7, 2, 8, 6, 4]
     df = spark.createDataFrame([(v,) for v in vals], "c long")
     s = sorted(vals)
@@ -286,16 +241,15 @@ def test_exact_order_statistic_small_domain(spark):
         import math
 
         k = max(1, math.ceil(q * len(vals)))
-        n, kk, v = exact_order_statistic(df, "c", q, n_buckets=4)
+        n, [(kk, v)] = aggregates.exact_order_statistics(df, "c", [q])
         assert (n, kk, v) == (len(vals), k, s[k - 1])
 
 
 @pytest.mark.slow
-def test_exact_order_statistic_duplicates_and_negatives(spark):
-    from iatlas_cbioportal_export_spark.operators.aggregates import (
-        exact_order_statistic,
-    )
+def test_exact_order_statistic_duplicates_and_negatives(spark, monkeypatch):
+    from iatlas_cbioportal_export_spark.operators import aggregates
 
+    monkeypatch.setattr(aggregates, "_ORDER_STAT_BUCKETS", 8)
     vals = [-50, -50, -50, 0, 0, 1_000_000_000_000, 7]
     df = spark.createDataFrame([(v,) for v in vals], "c long")
     s = sorted(vals)
@@ -303,7 +257,7 @@ def test_exact_order_statistic_duplicates_and_negatives(spark):
 
     for q in (0.25, 0.5, 0.99):
         k = max(1, math.ceil(q * len(vals)))
-        _, _, v = exact_order_statistic(df, "c", q, n_buckets=8)
+        _, [(_, v)] = aggregates.exact_order_statistics(df, "c", [q])
         assert v == s[k - 1], q
 
 
@@ -753,31 +707,6 @@ def test_confusion_matrix_report_exact_counts(spark):
     assert und["recall_ppm"] is None
 
 
-def test_confusion_matrix_report_grouped(spark):
-    from iatlas_cbioportal_export_spark.operators.aggregates import (
-        confusion_matrix_report,
-    )
-
-    rows = [
-        ("g1", "a", "a"), ("g1", "a", "b"), ("g1", "b", "b"),
-        ("g2", "b", "a"),
-    ]
-    df = spark.createDataFrame(rows, "g string, pred string, label string")
-    out = {
-        (r["g"], r["class"]): r
-        for r in confusion_matrix_report(df, "pred", "label", group_col="g").collect()
-    }
-    a1 = out[("g1", "a")]
-    assert (a1["tp"], a1["fp"], a1["fn"]) == (1, 1, 0)
-    b1 = out[("g1", "b")]
-    assert (b1["tp"], b1["fp"], b1["fn"]) == (1, 0, 1)
-    # g2: 'b' predicted but actual 'a' — both classes appear, zero tp
-    assert (out[("g2", "a")]["tp"], out[("g2", "a")]["fn"]) == (0, 1)
-    assert (out[("g2", "b")]["tp"], out[("g2", "b")]["fp"]) == (0, 1)
-    # groups never mix: g1's classes don't absorb g2's counts
-    assert out[("g1", "a")]["fn"] == 0
-
-
 def test_reciprocal_rank_report(spark):
     from iatlas_cbioportal_export_spark.operators.aggregates import (
         reciprocal_rank_report,
@@ -805,22 +734,21 @@ def test_reciprocal_rank_report(spark):
     assert mrr_ppm == (333_333 + 1_000_000 + 0) // 3
 
 
-def test_exact_order_statistics_bucket_count_invariant(spark):
+def test_exact_order_statistics_bucket_count_invariant(spark, monkeypatch):
     # r10 regression pin for the 65536-bucket default: the returned order
-    # statistics are exact and therefore INDEPENDENT of n_buckets — the
+    # statistics are exact and therefore INDEPENDENT of the bucket count — the
     # default-width path must agree with tiny-bucket refinement (more
     # passes) and with the brute-force sort on every quantile.
-    from iatlas_cbioportal_export_spark.operators.aggregates import (
-        exact_order_statistics,
-    )
+    from iatlas_cbioportal_export_spark.operators import aggregates
     import math
 
     vals = [-7, 0, 0, 3, 3, 3, 12, 99, 100_000, 100_001, 2**40, 5]
     df = spark.createDataFrame([(v,) for v in vals], "c long")
     s = sorted(vals)
     qs = (0.05, 0.25, 0.5, 0.9, 1.0)
-    n_default, res_default = exact_order_statistics(df, "c", qs)
-    n_tiny, res_tiny = exact_order_statistics(df, "c", qs, n_buckets=4)
+    n_default, res_default = aggregates.exact_order_statistics(df, "c", qs)
+    monkeypatch.setattr(aggregates, "_ORDER_STAT_BUCKETS", 4)
+    n_tiny, res_tiny = aggregates.exact_order_statistics(df, "c", qs)
     assert n_default == n_tiny == len(vals)
     assert res_default == res_tiny
     for q, (k, v) in zip(qs, res_default):

@@ -1,13 +1,8 @@
-"""Bucketed tables: exchange-free co-located joins and aggregations."""
+"""Bucketed tables: an equi-join of two tables bucketed on its key plans
+with no exchange."""
 
 import pytest
 from pyspark.sql import functions as F
-
-from iatlas_cbioportal_export_spark.sources.bucketing import (
-    bucketed_join,
-    plan_has_no_exchange,
-    write_bucketed,
-)
 
 
 @pytest.fixture()
@@ -21,72 +16,13 @@ def no_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-@pytest.fixture(scope="module")
-def bucketed_tables(spark):
-    orders = spark.range(0, 2000).select(
-        F.col("id").alias("o_custkey"),
-        (F.col("id") * 7 % 100).alias("o_total"),
-    )
-    customer = spark.range(0, 500).select(
-        F.col("id").alias("o_custkey"),
-        F.concat(F.lit("c"), F.col("id")).alias("c_name"),
-    )
-    write_bucketed(orders, "t_bucketed_orders", ["o_custkey"], 4, ["o_custkey"])
-    write_bucketed(customer, "t_bucketed_customer", ["o_custkey"], 4, ["o_custkey"])
-    yield "t_bucketed_orders", "t_bucketed_customer"
-    spark.sql("DROP TABLE IF EXISTS t_bucketed_orders")
-    spark.sql("DROP TABLE IF EXISTS t_bucketed_customer")
-
-
-def test_bucketed_join_has_no_exchange(spark, bucketed_tables, no_broadcast):
-    left, right = bucketed_tables
-    joined = bucketed_join(spark, left, right, on=["o_custkey"])
-    assert plan_has_no_exchange(joined), joined._jdf.queryExecution().executedPlan().toString()
-    assert joined.count() == 500
-
-
-def test_bucketed_join_matches_plain_join(spark, bucketed_tables):
-    left, right = bucketed_tables
-    joined = bucketed_join(spark, left, right, on=["o_custkey"])
-    plain = (
-        spark.table(left)
-        .repartition(8)  # break bucketing on purpose
-        .join(spark.table(right), on="o_custkey")
-    )
-    assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_bucketed_groupby_has_no_exchange(spark, bucketed_tables, no_broadcast):
-    left, _ = bucketed_tables
-    agg = spark.table(left).groupBy("o_custkey").agg(F.sum("o_total").alias("s"))
-    assert plan_has_no_exchange(agg)
-
-
-def test_unbucketed_join_does_exchange(spark, bucketed_tables, no_broadcast):
-    # control: the same join with bucketing broken on purpose must shuffle —
-    # proves the assertion actually measures bucketing
-    left, right = bucketed_tables
-    plain = (
-        spark.table(left)
-        .repartition(8)
-        .join(spark.table(right).repartition(8), on="o_custkey")
-    )
-    assert not plan_has_no_exchange(plain)
-
-
 def test_snapshot_diff_over_bucketed_snapshots_no_exchange(
     spark, no_broadcast
 ):
     """snapshot_diff's full-outer join rides bucketing like any equi-join:
     two snapshots bucketed on the key diff with ZERO exchanges (the claim
     in the operator docstring, proven on the plan)."""
-    from pyspark.sql import functions as F
-
     from iatlas_cbioportal_export_spark.operators.joins import snapshot_diff
-    from iatlas_cbioportal_export_spark.sources.bucketing import (
-        plan_has_no_exchange,
-        write_bucketed,
-    )
 
     old = spark.range(0, 1000).select(
         F.col("id").alias("k"), (F.col("id") % 10).cast("double").alias("v")
@@ -94,13 +30,15 @@ def test_snapshot_diff_over_bucketed_snapshots_no_exchange(
     new = old.filter(F.col("k") % 7 != 0).withColumn(
         "v", F.when(F.col("k") % 11 == 0, F.col("v") + 1.0).otherwise(F.col("v"))
     )
-    write_bucketed(old, "t_snap_old", ["k"], 4, ["k"])
-    write_bucketed(new, "t_snap_new", ["k"], 4, ["k"])
+    for df, table in ((old, "t_snap_old"), (new, "t_snap_new")):
+        df.write.format("parquet").mode("overwrite").bucketBy(4, "k").sortBy(
+            "k"
+        ).saveAsTable(table)
     try:
         diff = snapshot_diff(
             spark.table("t_snap_old"), spark.table("t_snap_new"), ["k"]
         )
-        assert plan_has_no_exchange(diff)
+        assert "Exchange" not in diff._jdf.queryExecution().executedPlan().toString()
         out = {r["k"]: r["change_type"] for r in diff.collect()}
         assert all(k % 7 == 0 for k, c in out.items() if c == "removed")
         assert sum(1 for c in out.values() if c == "removed") == 143

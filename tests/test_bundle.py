@@ -6,6 +6,7 @@ import pytest
 
 from iatlas_cbioportal_export_spark.plans.bundle import (
     write_load_stage_case_lists,
+    write_mutations,
     write_study_bundle,
 )
 from iatlas_cbioportal_export_spark.session import job_label
@@ -47,9 +48,10 @@ def test_bundle_structure_and_roundtrip(spark, tmp_path):
     patient, sample, maf = _fixtures(spark)
     out = str(tmp_path / "bundle")
     attr_meta = {"SEX": {"display_name": "Sex", "datatype": "STRING", "priority": 1}}
-    artifacts = write_study_bundle(
-        out, "Demo_2026", patient, sample, mutations=maf, attr_meta=attr_meta
-    )
+    artifacts = write_study_bundle(out, "Demo_2026", patient, sample, attr_meta=attr_meta)
+    # the maf and load commands add the mutation artifacts and cases_sequenced
+    artifacts.update(write_mutations(out, "iatlas_Demo_2026", maf, 40_000))
+    artifacts.update(write_load_stage_case_lists(spark, out))
 
     expected = {
         "data_clinical_patient.txt",
@@ -101,9 +103,7 @@ def test_bundle_structure_and_roundtrip(spark, tmp_path):
 def test_bundle_maf_chunking(spark, tmp_path):
     patient, sample, maf = _fixtures(spark)
     out = str(tmp_path / "bundle2")
-    write_study_bundle(
-        out, "Demo_2026", patient, sample, mutations=maf, max_maf_rows=2
-    )
+    write_mutations(out, "iatlas_Demo_2026", maf, 2)
     maf_dir = os.path.join(out, "data_mutations_extended")
     parts = [f for f in os.listdir(maf_dir) if f.endswith(".csv")]
     # 4 rows at ≤2 rows/file → ≥2 part files (ceil-division, maf.py:43,63)
@@ -111,12 +111,13 @@ def test_bundle_maf_chunking(spark, tmp_path):
 
 
 def test_bundle_and_load_stage_case_lists_bytes(spark, tmp_path):
-    """cases_all / cases_sequenced are written by both the bundle writer
-    and the load stage; pin their full text, name and description lines
-    included, for one sample set."""
+    """cases_all is written by both the bundle writer and the load stage,
+    cases_sequenced by the load stage; pin their full text, name and
+    description lines included, for one sample set."""
     patient, sample, maf = _fixtures(spark)
     out = str(tmp_path / "bundle")
-    write_study_bundle(out, "Demo_2026", patient, sample, mutations=maf)
+    write_study_bundle(out, "Demo_2026", patient, sample)
+    write_mutations(out, "iatlas_Demo_2026", maf, 40_000)
     expected = {
         "cases_all.txt": (
             "cancer_study_identifier: iatlas_Demo_2026\n"
@@ -134,19 +135,19 @@ def test_bundle_and_load_stage_case_lists_bytes(spark, tmp_path):
         ),
     }
 
-    def read_lists():
+    def read_lists(names):
         texts = {}
-        for name in expected:
+        for name in names:
             path = os.path.join(out, "case_lists", name)
             with open(path) as fh:
                 texts[name] = fh.read()
             os.remove(path)
         return texts
 
-    assert read_lists() == expected
+    assert read_lists(["cases_all.txt"]) == {"cases_all.txt": expected["cases_all.txt"]}
     written = write_load_stage_case_lists(spark, out)
     assert set(written) == {f"case_lists/{name}" for name in expected}
-    assert read_lists() == expected
+    assert read_lists(expected) == expected
 
 
 def test_single_tsv_global_order_across_many_partitions(spark, tmp_path):
@@ -217,15 +218,13 @@ def _data_lines(path):
 def test_bundle_jobs_keep_caller_job_group(spark, tmp_path):
     """The bundle's thread-pool jobs carry the caller's job group, so a tool
     that attributes jobs by group sees every one of them."""
-    patient, sample, maf = _fixtures(spark)
+    patient, sample, _ = _fixtures(spark)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     ungrouped_before = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup("bundle-probe", "write_study_bundle job-group probe")
     try:
-        write_study_bundle(
-            str(tmp_path / "bundle"), "Demo_2026", patient, sample, mutations=maf
-        )
+        write_study_bundle(str(tmp_path / "bundle"), "Demo_2026", patient, sample)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -250,13 +249,23 @@ def test_bundle_pool_tasks_are_given_the_session(spark, tmp_path):
     reach them and PySpark raises no tags-not-inherited warning."""
     import warnings
 
-    patient, sample, maf = _fixtures(spark)
+    patient, sample, _ = _fixtures(spark)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        write_study_bundle(
-            str(tmp_path / "bundle"), "Demo_2026", patient, sample, mutations=maf
-        )
+        write_study_bundle(str(tmp_path / "bundle"), "Demo_2026", patient, sample)
     assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+
+
+def test_bundle_releases_its_caches_when_a_write_raises(spark, tmp_path):
+    """A failed write leaves no cached view behind in the session."""
+    patient, sample, _ = _fixtures(spark)
+    out = tmp_path / "bundle"
+    (out / "data_clinical_patient.txt").mkdir(parents=True)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    with pytest.raises(IsADirectoryError):
+        write_study_bundle(str(out), "Demo_2026", patient, sample)
+    assert cache.isEmpty()
 
 
 def test_job_label_nests_and_restores(spark):

@@ -81,35 +81,6 @@ def test_simhash_buckets_find_exact_dups(docs):
     assert out.get((1, 2)) == 0  # identical text -> identical sketch
 
 
-def test_simhash_rotations_superset_of_single(docs):
-    # multi-rotation buckets can only ADD candidate windows: the pair set at
-    # rotations=4 must contain the rotations=1 set, with identical hamming
-    one = {(r["id_a"], r["id_b"]): r["hamming"] for r in
-           simhash_buckets(docs, prefix_bits=8, max_hamming=32).collect()}
-    four = {(r["id_a"], r["id_b"]): r["hamming"] for r in
-            simhash_buckets(docs, prefix_bits=8, max_hamming=32, rotations=4).collect()}
-    assert set(one) <= set(four)
-    for pair in one:
-        assert one[pair] == four[pair]
-    assert four.get((1, 2)) == 0
-
-
-def test_simhash_rotation_recovers_prefix_miss(spark):
-    # near-dup pair whose sketches differ somewhere; with a FULL-width
-    # "prefix" (64 bits) the exact-dup pair is still found under every
-    # rotation, and rotations>1 never produce duplicate pair rows
-    rows = [(i, "common shared text body for all docs variant " + str(i % 2))
-            for i in range(6)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = simhash_buckets(df, prefix_bits=12, max_hamming=0, rotations=4).collect()
-    pairs = [(r["id_a"], r["id_b"]) for r in out]
-    assert len(pairs) == len(set(pairs))  # deduped across rotations
-    # identical-text pairs (same parity ids) must all surface at hamming 0
-    expected = {(a, b) for a in range(6) for b in range(6)
-                if a < b and a % 2 == b % 2}
-    assert set(pairs) == expected
-
-
 def test_minhash_cross_corpus_finds_planted_copies(spark):
     from iatlas_cbioportal_export_spark.operators.dedup import (
         minhash_cross_corpus_duplicates,
@@ -226,32 +197,39 @@ def test_jaccard_prefix_join_exact_small(spark):
     assert got == {(1, 2): 0.6, (1, 3): 1.0, (2, 3): 0.6}
 
 
-def test_jaccard_join_schemes_agree(spark):
-    """Prefix and deletion blocking produce the identical exact pair set
-    (same docs corpus slice, high threshold so both schemes are eligible),
-    and auto picks deletion in the high-threshold regime."""
-    from iatlas_cbioportal_export_spark.operators.dedup import (
-        jaccard_prefix_join,
-    )
+def _jaccard_by_scheme(monkeypatch, df, threshold):
+    """``jaccard_prefix_join`` pairs under each candidate scheme: the
+    high-threshold regime takes deletion blocking on its own (prefix
+    generation refuses to run), then prefix blocking stands in for it."""
+    from iatlas_cbioportal_export_spark.operators import dedup
 
+    out = {}
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_jaccard_prefix_candidates", None)
+        out["deletion"] = dedup.jaccard_prefix_join(df, threshold=threshold).collect()
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_jaccard_deletion_candidates", dedup._jaccard_prefix_candidates)
+        out["prefix"] = dedup.jaccard_prefix_join(df, threshold=threshold).collect()
+    return {
+        scheme: {(r["id_a"], r["id_b"]): r["jaccard"] for r in rows}
+        for scheme, rows in out.items()
+    }
+
+
+def test_jaccard_join_schemes_agree(spark, monkeypatch):
+    """Prefix and deletion blocking produce the identical exact pair set
+    (same docs corpus slice, high threshold so both schemes are eligible,
+    and deletion is the one picked)."""
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .limit(80)
     )
-    out = {}
-    for scheme in ("prefix", "deletion", "auto"):
-        rows = sorted(
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in jaccard_prefix_join(
-                docs, threshold=0.9, blocking=scheme
-            ).collect()
-        )
-        out[scheme] = rows
-    assert out["prefix"] == out["deletion"] == out["auto"]
+    out = _jaccard_by_scheme(monkeypatch, docs, 0.9)
+    assert out["prefix"] == out["deletion"]
     assert len(out["prefix"]) > 0
 
 
-def test_jaccard_join_large_vocab_array_lane(spark):
+def test_jaccard_join_large_vocab_array_lane(spark, monkeypatch):
     """Vocabulary > 64 forces the sorted-array verification lane (the
     bitmask fast path only exists for <=64 distinct tokens): brute-force
     comparison over a 120-token vocabulary pins the array lane's
@@ -271,8 +249,7 @@ def test_jaccard_join_large_vocab_array_lane(spark):
         toks = list(base)
         # perturb 0-2 tokens: one substitution keeps J(29/31)=0.935 >= 0.9,
         # two (or collapses) usually fall below — both sides of the
-        # threshold are populated. ka stays <= 3 so the deletion scheme's
-        # contract holds under an explicit blocking= override too.
+        # threshold are populated. ka stays <= 3, the deletion regime.
         for _ in range(rng.randrange(0, 3)):
             toks[rng.randrange(len(toks))] = rng.choice(vocab)
         docs.append((i, " ".join(toks)))
@@ -288,27 +265,8 @@ def test_jaccard_join_large_vocab_array_lane(spark):
             want[(a, b)] = round(j, 6)
     assert want, "fixture must contain qualifying pairs"
 
-    for scheme in ("prefix", "deletion"):
-        got = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in jaccard_prefix_join(
-                df, threshold=0.9, blocking=scheme
-            ).collect()
-        }
+    for scheme, got in _jaccard_by_scheme(monkeypatch, df, 0.9).items():
         assert got == want, scheme
-
-
-def test_jaccard_deletion_override_out_of_regime_raises(spark):
-    import pytest as _pytest
-
-    from iatlas_cbioportal_export_spark.operators.dedup import (
-        jaccard_prefix_join,
-    )
-
-    rows = [(i, " ".join(f"t{i}_{k}" for k in range(30))) for i in range(5)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    with _pytest.raises(ValueError, match="deletion blocking requires"):
-        jaccard_prefix_join(df, threshold=0.5, blocking="deletion").count()
 
 
 def test_jaccard_auto_avoids_deletion_on_huge_sets(spark):
@@ -330,45 +288,43 @@ def test_jaccard_auto_avoids_deletion_on_huge_sets(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_prefix_join(df, threshold=0.999, blocking="auto").collect()
+        for r in jaccard_prefix_join(df, threshold=0.999).collect()
     }
     assert got == {(0, 1): round(1999 / 2000, 6)}
 
 
 @pytest.mark.parametrize("ansi", ["false", "true"])
-def test_jaccard_deletion_build_depth_past_int32(spark, ansi):
+def test_jaccard_deletion_build_depth_past_int32(spark, ansi, monkeypatch):
     """The deletion scheme's build-side depth bound multiplies
-    2·t_num·n, which passes 2³¹ from n ≈ 1076 at t = 0.998. It must run
+    2·t_num·n, which passes 2³¹ from n ≈ 1075 at t = 0.999. It must run
     in BIGINT with integral division: under ANSI a 32-bit product throws,
     and the pair set must equal brute force either way."""
     import itertools
 
-    from iatlas_cbioportal_export_spark.operators.dedup import (
-        jaccard_prefix_join,
-    )
+    from iatlas_cbioportal_export_spark.operators import dedup
 
     base = [f"w{k:04d}" for k in range(1100)]
-    # J(0,1) = 1098/1100 and J(1,2) = 1097/1098 pass 0.998;
-    # J(0,2) = 1097/1100 does not
-    docs = [(0, base), (1, base[:-2]), (2, base[:-3])]
+    # J(0,1) = 1099/1100 and J(1,2) = 1098/1099 pass 0.999;
+    # J(0,2) = 1098/1100 does not. ka = 1 for every set and the largest
+    # neighborhood is 1101 signatures, so deletion blocking is picked.
+    docs = [(0, base), (1, base[:-1]), (2, base[:-2])]
     df = spark.createDataFrame(
         [(i, " ".join(toks)) for i, toks in docs], "doc_id long, text string"
     )
     want = {}
     for (a, sa), (b, sb) in itertools.combinations(docs, 2):
         j = len(set(sa) & set(sb)) / len(set(sa) | set(sb))
-        if j >= 0.998:
+        if j >= 0.999:
             want[(a, b)] = round(j, 6)
     assert len(want) == 2
+    monkeypatch.setattr(dedup, "_jaccard_prefix_candidates", None)
 
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
         got = {
             (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in jaccard_prefix_join(
-                df, threshold=0.998, blocking="deletion"
-            ).collect()
+            for r in dedup.jaccard_prefix_join(df, threshold=0.999).collect()
         }
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)

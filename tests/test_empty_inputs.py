@@ -18,11 +18,7 @@ from iatlas_cbioportal_export_spark.operators.projections import (
     prune_all_null_columns,
 )
 from iatlas_cbioportal_export_spark.operators.text import language_id, token_stats
-from iatlas_cbioportal_export_spark.operators.validation import (
-    findings_union,
-    has_errors,
-    no_null_keys,
-)
+from iatlas_cbioportal_export_spark.operators.validation import table_profile_checks
 from iatlas_cbioportal_export_spark.plans.clinical_pipeline import (
     preprocess_clinical,
 )
@@ -69,8 +65,8 @@ def test_prune_all_null_on_empty_keeps_no_columns(spark):
 
 def test_validation_suite_on_empty_is_clean(spark):
     df = spark.createDataFrame([], "SAMPLE_ID string")
-    findings = findings_union([no_null_keys(df, ["SAMPLE_ID"])])
-    assert not has_errors(findings)
+    findings = table_profile_checks(df, no_null_cols=["SAMPLE_ID"])
+    assert findings.filter("status = 'ERROR'").count() == 0
 
 
 def test_maf_path_on_empty(spark):

@@ -18,13 +18,15 @@ from iatlas_cbioportal_export_spark.operators.projections import (
 )
 from iatlas_cbioportal_export_spark.operators.validation import (
     count_equality,
-    distinct_count_equality,
     findings_union,
-    has_errors,
-    no_all_null_columns,
-    no_null_keys,
+    keyset_preserved,
+    table_profile_checks,
 )
-from iatlas_cbioportal_export_spark.plans.bundle import write_study_bundle
+from iatlas_cbioportal_export_spark.plans.bundle import (
+    write_load_stage_case_lists,
+    write_mutations,
+    write_study_bundle,
+)
 from iatlas_cbioportal_export_spark.plans.clinical_pipeline import (
     preprocess_clinical,
 )
@@ -98,12 +100,14 @@ def test_full_study_export_flow(spark, tmp_path):
     mutations = drop_chrm(ok)
     assert mutations.count() == 2
 
-    # §3.1/6-7 bundle write
+    # §3.1/6-7 bundle write, as the clinical, maf and load commands write it
     out = str(tmp_path / "study")
     artifacts = write_study_bundle(
-        out, "IT_2026", patient, sample, mutations=mutations,
+        out, "IT_2026", patient, sample,
         attr_meta={"OS_STATUS": {"display_name": "Overall Survival Status"}},
     )
+    artifacts.update(write_mutations(out, "iatlas_IT_2026", mutations, 40_000))
+    artifacts.update(write_load_stage_case_lists(spark, out))
 
     # V1: required artifacts exist
     for name in (
@@ -125,13 +129,16 @@ def test_full_study_export_flow(spark, tmp_path):
     findings = findings_union(
         [
             count_equality(sample, sample_back),                      # V2
-            distinct_count_equality(sample, sample_back, "SAMPLE_ID"),  # V3
-            distinct_count_equality(patient, patient_back, "PATIENT_ID"),  # V4
-            no_null_keys(sample_back, ["SAMPLE_ID", "PATIENT_ID"]),   # V5/V6
-            no_all_null_columns(sample_back),                         # V7
+            keyset_preserved(sample, "SAMPLE_ID", sample_back, "SAMPLE_ID"),  # V3
+            keyset_preserved(patient, "PATIENT_ID", patient_back, "PATIENT_ID"),  # V4
+            table_profile_checks(
+                sample_back,
+                no_null_cols=["SAMPLE_ID", "PATIENT_ID"],             # V5/V6
+                all_null_cols=sample_back.columns,                    # V7
+            ),
         ]
     )
-    assert not has_errors(findings), findings.collect()
+    assert findings.filter("status = 'ERROR'").count() == 0, findings.collect()
 
     # cases_sequenced = J5 semi-join of written clinical vs mutation barcodes
     with open(artifacts["case_lists/cases_sequenced.txt"]) as fh:

@@ -142,14 +142,17 @@ def test_fs_linkage_decisions_and_null_agreement(spark):
     left = spark.createDataFrame(
         [(1, 1, "alice", None)], "id long, blk long, a string, b string"
     )
+    # four distinct values per field: u = 1/4, so each agreement weighs
+    # log2(0.95 / 0.25) ≈ 1.93 and two of them clear the link threshold 3
     right = spark.createDataFrame(
-        [(10, 1, "alice", None), (11, 1, "bob", "x")],
+        [(10, 1, "alice", None), (11, 1, "bob", "x"), (12, 1, "carol", "y"),
+         (13, 1, "dave", "z")],
         "id long, blk long, a string, b string",
     )
     out = {
         r["r_id"]: r
         for r in fellegi_sunter_linkage(
-            left, right, "id", "id", ["blk"], ["a", "b"], upper=1.0
+            left, right, "id", "id", ["blk"], ["a", "b"]
         ).collect()
     }
     # NULL b agrees with NULL b; full agreement -> link

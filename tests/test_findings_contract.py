@@ -9,10 +9,8 @@ from iatlas_cbioportal_export_spark.operators import validation as v
 # Public functions of the module that are not findings validators.
 _NOT_VALIDATORS = {
     "findings_union",
-    "has_errors",
     "constraint_suite",  # its own (rule, kind, violations, total, status)
     "parse_meta_text",
-    "parse_clinical_header_text",
 }
 _TYPES = ["string", "string", "bigint", "bigint", "string"]
 
@@ -49,12 +47,8 @@ def _validators(spark, tmp_path):
     )
     return {
         "count_equality": v.count_equality(a, b),
-        "distinct_count_equality": v.distinct_count_equality(a, b, "SAMPLE_ID"),
-        "no_null_keys": v.no_null_keys(a, ["PATIENT_ID"]),
-        "no_all_null_columns": v.no_all_null_columns(a),
         "no_duplicate_rows": v.no_duplicate_rows(a, ["SAMPLE_ID"]),
         "keyset_preserved": v.keyset_preserved(a, "SAMPLE_ID", b, "SAMPLE_ID"),
-        "keyset_subset": v.keyset_subset(a, "SAMPLE_ID", b, "SAMPLE_ID"),
         "file_presence_findings": v.file_presence_findings(
             spark, str(tmp_path), ["absent.txt"], ["optional.txt"]
         ),

@@ -176,26 +176,16 @@ def test_genome_nexus_annotator_http_error_routes_batch(spark, gn_server):
 
 
 def test_genome_nexus_annotator_retry_then_succeed(spark, gn_server):
-    from iatlas_cbioportal_export_spark.operators.maf import (
-        annotate,
-        genome_nexus_annotator,
-    )
+    from iatlas_cbioportal_export_spark.operators.maf import genome_nexus_annotator
 
-    # single partition -> one task -> the first request 500s, the retry
-    # lands; the batch must come back fully annotated.
-    # widen_parallelism=False pins the one-task layout (the default
-    # round-robin widening would split the batch across tasks and the
-    # call count would become task-count-dependent).
+    # one pandas batch, as one annotate() task hands it over: the first
+    # request 500s, the retry lands; the batch must come back fully
+    # annotated. (annotate() spreads a small input over every core, which
+    # would make the call count task-count-dependent.)
     _GNHandler.fail_first_n = 1
-    df = _maf_df(spark).coalesce(1)
-    ann = annotate(
-        df,
-        annotator=genome_nexus_annotator(
-            gn_server, retries=2, backoff_s=0.01
-        ),
-        widen_parallelism=False,
-    )
-    rows = {r["Chromosome"]: r for r in ann.collect()}
+    annotator = genome_nexus_annotator(gn_server, retries=2, backoff_s=0.01)
+    ann = annotator(_maf_df(spark).toPandas())
+    rows = {r["Chromosome"]: r for _, r in ann.iterrows()}
     assert rows["chr7"]["Annotation_Status"] == "SUCCESS"
     assert rows["chr7"]["SYMBOL"] == "GENE7"
     assert rows["99"]["Annotation_Status"] == "FAILED: unmatched"
@@ -203,20 +193,12 @@ def test_genome_nexus_annotator_retry_then_succeed(spark, gn_server):
 
 
 def test_genome_nexus_annotator_request_size_knob(spark, gn_server):
-    from iatlas_cbioportal_export_spark.operators.maf import (
-        annotate,
-        genome_nexus_annotator,
-    )
+    from iatlas_cbioportal_export_spark.operators.maf import genome_nexus_annotator
 
-    df = _maf_df(spark).coalesce(1)
-    ann = annotate(
-        df,
-        annotator=genome_nexus_annotator(
-            gn_server, max_variants_per_request=1
-        ),
-        widen_parallelism=False,
-    )
-    rows = {r["Chromosome"]: r for r in ann.collect()}
+    # one pandas batch, as in the retry test above
+    annotator = genome_nexus_annotator(gn_server, max_variants_per_request=1)
+    ann = annotator(_maf_df(spark).toPandas())
+    rows = {r["Chromosome"]: r for _, r in ann.iterrows()}
     assert rows["chr7"]["Annotation_Status"] == "SUCCESS"
     assert rows["88"]["Annotation_Status"] == "FAILED: annotation"
     # 3 postable variants -> 3 single-variant requests (null key never posts)

@@ -8,7 +8,6 @@ from iatlas_cbioportal_export_spark.operators.gif_codec import (
     gif_decode,
     gif_encode,
     gif_parse_metadata,
-    gif_resize,
     lzw_compress,
     lzw_decompress,
 )
@@ -69,21 +68,6 @@ def test_encode_decode_roundtrip(interlaced, ncolors):
     assert rgb == b"".join(bytes(palette[i]) for i in idx)
 
 
-def test_resize_nearest_neighbour_exact():
-    palette = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    w, h = 8, 4
-    idx = bytes((x + y) % 4 for y in range(h) for x in range(w))
-    resized = gif_resize(gif_encode(w, h, idx, palette), 4, 2)
-    got_w, got_h, rgb = gif_decode(resized)
-    assert (got_w, got_h) == (4, 2)
-    for y in range(2):
-        for x in range(4):
-            src = idx[(y * h // 2) * w + (x * w // 4)]
-            assert rgb[3 * (y * 4 + x) : 3 * (y * 4 + x) + 3] == bytes(
-                palette[src]
-            )
-
-
 def test_metadata_counts_animation_frames():
     palette = [(1, 2, 3), (4, 5, 6)]
     single = gif_encode(3, 3, bytes(9), palette)
@@ -106,7 +90,6 @@ def test_dispatch_through_multimodal():
         container_metadata,
         gif_feature_extractor,
         stdlib_decoder,
-        stdlib_resizer,
     )
 
     palette = [(10, 20, 30), (40, 50, 60)]
@@ -118,8 +101,6 @@ def test_dispatch_through_multimodal():
     assert gif_feature_extractor(payload, "image/gif") == feats
     meta = container_metadata(payload)
     assert meta["container"] == "gif" and meta["width"] == 4
-    resized = stdlib_resizer(payload, 2, 1)
-    assert gif_decode(resized)[0] == 2
 
 
 def test_decodes_real_world_encoder_output():

@@ -426,3 +426,14 @@ def test_link_prediction_deterministic_topk(spark):
     a = [tuple(r) for r in link_prediction(df, top_k=10).collect()]
     b = [tuple(r) for r in link_prediction(df.repartition(7), top_k=10).collect()]
     assert a == b and len(a) == 10
+
+
+def test_star_components_raise_when_unconverged(spark, monkeypatch):
+    """A graph that needs more rounds than the budget raises instead of
+    returning stale labels, as connected_components does."""
+    from iatlas_cbioportal_export_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_STAR_MAX_ROUNDS", 1)
+    chain = spark.createDataFrame([(i, i + 1) for i in range(20)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.connected_components_star(chain).collect()

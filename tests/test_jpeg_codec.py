@@ -9,8 +9,8 @@ from iatlas_cbioportal_export_spark.operators.jpeg_codec import (
     jpeg_decode,
     jpeg_encode,
     jpeg_feature_extractor,
-    jpeg_resize,
 )
+from iatlas_cbioportal_export_spark.operators import jpeg_codec
 
 
 def _solid_blocks(w, h, channels, block, fn):
@@ -45,19 +45,20 @@ def test_rgb444_gray_in_rgb_roundtrip_exact():
     assert dec == pix
 
 
-def test_rgb420_subsampled_roundtrip_exact_on_16px_blocks():
+def test_rgb420_subsampled_roundtrip_exact_on_16px_blocks(monkeypatch):
     # 16x16 solid tiles: chroma is constant, so 2x2 box downsampling and
     # replication upsampling are both lossless — exercises the generic
     # sampling-factor MCU layout end to end, exactly.
     pix = _solid_blocks(32, 32, 3, 16, lambda bx, by: 3 * by + 5 * bx + 90)
-    enc = jpeg_encode(pix, 32, 32, channels=3, quality=100, subsample=True)
+    monkeypatch.setattr(jpeg_codec, "_CHROMA_SUBSAMPLE", True)
+    enc = jpeg_encode(pix, 32, 32, channels=3, quality=100)
     ch, w, h, dec = jpeg_decode(enc)
     assert (ch, w, h) == (3, 32, 32)
     assert dec == pix
 
 
 @pytest.mark.parametrize("subsample", [False, True])
-def test_lossy_roundtrip_bounded_error_odd_dims(subsample):
+def test_lossy_roundtrip_bounded_error_odd_dims(subsample, monkeypatch):
     # smooth-gradient content at q=90, odd (non-MCU-aligned) dimensions:
     # decode must crop the padding and stay within normal JPEG loss
     # (sharp 255→0 wrap edges would legitimately ring much harder).
@@ -67,7 +68,8 @@ def test_lossy_roundtrip_bounded_error_odd_dims(subsample):
         for j in range(17)
         for c in range(3)
     )
-    enc = jpeg_encode(pix, 17, 13, channels=3, quality=90, subsample=subsample)
+    monkeypatch.setattr(jpeg_codec, "_CHROMA_SUBSAMPLE", subsample)
+    enc = jpeg_encode(pix, 17, 13, channels=3, quality=90)
     ch, w, h, dec = jpeg_decode(enc)
     assert (ch, w, h) == (3, 17, 13)
     a = np.frombuffer(pix, np.uint8).astype(int)
@@ -101,31 +103,21 @@ def test_quality_monotone_and_size_tradeoff():
     assert err95 <= err20
 
 
-def test_feature_extractor_and_resize():
+def test_feature_extractor():
     pix = _solid_blocks(16, 16, 1, 8, lambda bx, by: 100 + 20 * by + 8 * bx)
     enc = jpeg_encode(pix, 16, 16, channels=1, quality=100)
     w, h, mean = jpeg_feature_extractor(enc, "image/jpeg")
     assert (w, h) == (16.0, 16.0)
     assert mean == float(sum(pix) * 1_000_000 // 256)
-    small = jpeg_resize(enc, 8, 8)
-    ch, w, h, dec = jpeg_decode(small)
-    assert (ch, w, h) == (1, 8, 8)
-    # NN sampling of solid 8px blocks at 2:1 → 4x4-px solid blocks
-    assert dec[0] == pix[0] and dec[-1] == pix[-1]
 
 
 def test_dispatchers_route_jpeg():
-    from iatlas_cbioportal_export_spark.operators.multimodal import (
-        stdlib_decoder,
-        stdlib_resizer,
-    )
+    from iatlas_cbioportal_export_spark.operators.multimodal import stdlib_decoder
 
     pix = _solid_blocks(16, 8, 1, 8, lambda bx, by: 64 + bx)
     enc = jpeg_encode(pix, 16, 8, channels=1, quality=100)
     feat = stdlib_decoder(enc, "image/jpeg")
     assert feat[:2] == [16.0, 8.0]
-    out = stdlib_resizer(enc, 4, 4)
-    assert jpeg_decode(out)[:3] == (1, 4, 4)
 
 
 def test_honest_edges_raise():

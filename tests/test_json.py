@@ -1,12 +1,11 @@
-"""Schema-on-read JSON extraction: single-path extract, typed struct
-parse, and malformed-payload null behavior."""
+"""Schema-on-read JSON extraction: single-path extract and
+malformed-payload null behavior."""
 
 from pyspark.sql import functions as F
 
 from iatlas_cbioportal_export_spark.functions.json import (
     json_field,
     json_field_stats,
-    parse_props,
 )
 
 
@@ -29,19 +28,6 @@ def test_json_field_extract_and_cast(spark):
         for r in _events(spark).select("event_id", json_field("props", "$.k", "long").alias("k")).collect()
     }
     assert got == {1: 10, 2: 20, 3: 5, 4: None, 5: None}
-
-
-def test_parse_props_typed_struct(spark):
-    parsed = parse_props(_events(spark), "props", "k long, tag string")
-    rows = {
-        r["event_id"]: (r["parsed"]["k"] if r["parsed"] else None,
-                        r["parsed"]["tag"] if r["parsed"] else None)
-        for r in parsed.collect()
-    }
-    assert rows[1] == (10, "a")
-    assert rows[2] == (20, None)   # absent field -> null inside struct
-    assert rows[4][0] is None      # malformed -> null (PERMISSIVE)
-    assert rows[5] == (None, None)
 
 
 def test_json_field_stats_counts_only_parsed(spark):

@@ -1,15 +1,8 @@
-"""Z-order layout: exact Morton interleave + the pruning property the
-layout exists for (bounded per-file spans on EVERY clustered dimension)."""
+"""Data layout: exact Morton interleave, compaction and zone maps."""
 
-import glob
-
-import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
-from iatlas_cbioportal_export_spark.sources.layout import (
-    write_zordered,
-    z_order_value,
-)
+from iatlas_cbioportal_export_spark.sources.layout import z_order_value
 
 
 def test_z_order_value_exact_interleave(spark):
@@ -24,31 +17,6 @@ def test_z_order_value_masks_out_of_range(spark):
     # bits=2 keeps only x's low 2 bits (0b01 -> bit 0)
     out = df.select(z_order_value(["x", "y"], bits=2).alias("z")).collect()
     assert out[0]["z"] == 1
-
-
-def test_zordered_write_bounds_spans_on_both_dims(spark, tmp_path):
-    n = 64
-    grid = spark.range(n * n).select(
-        (F.col("id") % n).alias("x"), (F.col("id") / n).cast("long").alias("y")
-    )
-    zpath = str(tmp_path / "zordered")
-    write_zordered(grid, zpath, ["x", "y"], bits=6, num_files=16)
-    lpath = str(tmp_path / "linear")
-    grid.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(lpath)
-
-    def spans(path, col):
-        out = []
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            t = pq.read_table(f, columns=[col])[col].to_pylist()
-            if t:
-                out.append(max(t) - min(t))
-        return out
-
-    # z-order bounds BOTH dims per file well below the global span...
-    assert max(spans(zpath, "x")) <= n // 2
-    assert max(spans(zpath, "y")) <= n // 2
-    # ...while the linear layout prunes only its sort key: files span ~all of y
-    assert max(spans(lpath, "y")) == n - 1
 
 
 def test_compaction_plan_is_metadata_only(spark, tmp_path):
@@ -86,21 +54,6 @@ def test_compact_small_files_roundtrip(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == 5_000
     assert back.agg(F.sum("id")).collect()[0][0] == 5_000 * 4_999 // 2
-
-
-def test_compact_coalesce_path_skips_shuffle(spark, tmp_path):
-    from iatlas_cbioportal_export_spark.sources.layout import (
-        compact_small_files,
-    )
-
-    src = str(tmp_path / "src2")
-    out = str(tmp_path / "out2")
-    spark.range(1_000).repartition(8).write.parquet(src)
-    plan = compact_small_files(
-        spark, src, out, target_file_bytes=1 << 40, shuffle=False
-    )
-    assert plan["n_output_files"] == 1
-    assert spark.read.parquet(out).count() == 1_000
 
 
 def test_zone_map_pruning_report(spark, tmp_path):

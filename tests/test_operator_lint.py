@@ -1,14 +1,17 @@
-"""Four lints. Operators never mutate session confs: ``plans/bundle.py``
+"""Lints. Operators never mutate session confs: ``plans/bundle.py``
 builds plans from several threads over one session, so a conf an operator
 sets leaks into every plan built meanwhile. ``cli.py`` and ``plans/`` read
 files only through ``sources/readers.py``, so every read shares one set of
 csv options (and one traced call site). Every eager action in ``cli.py``,
 ``plans/``, ``sources/readers.py`` and ``sources/sinks.py`` runs inside a
 ``with job_label(...)`` block, so each of its jobs says in the event log
-what it is for. Every defaulted parameter of a public package function is
-set by some call (``test_every_option_has_a_caller``): a value no caller
-sets is a constant, and as a parameter it only multiplies the
-configurations tests and benchmarks would have to cover."""
+what it is for. Every public package function is reached by production
+code (``test_every_public_function_has_a_caller``) and every defaulted
+parameter of one is set by some production call
+(``test_every_option_has_a_caller``): code only tests call is kept for the
+tests' sake, and a value no caller sets is a constant, which as a
+parameter only multiplies the configurations tests and benchmarks would
+have to cover. Tests import only names that exist."""
 
 import ast
 from pathlib import Path
@@ -133,37 +136,129 @@ def _called_name(call: ast.Call) -> str | None:
     return None
 
 
+# What runs the program. Tests and examples are not callers: a function or
+# an option only a test uses is surface kept for the test's own sake.
+_CALLERS = [
+    *sorted(PACKAGE_DIR.glob("**/*.py")),
+    REPO_DIR / "__spark_entry__.py",
+    REPO_DIR / "bench.py",
+    *[
+        path
+        for folder in ("tools", "perfbench")
+        for path in sorted((REPO_DIR / folder).glob("**/*.py"))
+    ],
+]
+
+# Public functions ``name`` and options ``name(param=)`` that need no
+# production caller, each with its reason.
+_NEEDS_NO_CALLER = {
+    "get_spark(master=)": "deployment setting: the cluster to run on",
+    "get_spark(shuffle_partitions=)": "deployment setting: sized to the cluster",
+    "genome_nexus_annotator(retries=)": "deployment setting of the annotation service",
+    "genome_nexus_annotator(backoff_s=)": "deployment setting of the annotation service",
+    "genome_nexus_annotator(max_variants_per_request=)":
+        "deployment setting: the annotation service's request limit",
+    "write_study_bundle(attr_meta=)":
+        "reference twin: test_reference_differential_bundle.py passes the "
+        "reference's attribute metadata to compare bundles byte for byte",
+    "count_equality":
+        "reference twin of the reference's row-count check, compared in "
+        "test_reference_differential_bundle.py and _maf.py",
+    "schema_matches_exactly":
+        "reference twin of the reference's MAF column check, compared in "
+        "test_reference_differential_maf.py",
+    "assert_scale_safe": "plan gate test_registry_lint.py runs over the registry",
+    "unpartitioned_windows": "plan gate test_registry_lint.py runs over the registry",
+}
+
+
+def _bound_names(tree: ast.Module) -> set[str]:
+    """Names a bare ``ast.Name`` can mean a package function by: the
+    module's own top-level functions and what it imports (``hits = ...``
+    elsewhere is a local)."""
+    return {n.name for n in tree.body if isinstance(n, ast.FunctionDef)} | {
+        alias.asname or alias.name
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom)
+        for alias in n.names
+    }
+
+
+def _live_code():
+    """Public package functions by name, and the production code that can
+    run: every caller file's module-level code (class bodies included),
+    then, to a fixpoint, the body of each package function that live code
+    names, by a load of its name or attribute. A name a package
+    ``__init__.py`` re-exports is live: it is the package's declared
+    surface. A name in ``_NEEDS_NO_CALLER`` is live too. Returns
+    ``(functions, reached, live)``: ``live`` is a list of
+    ``(bound names, node)``."""
+    functions: dict[str, list[tuple[str, ast.FunctionDef]]] = {}
+    bodies: dict[str, list[tuple[set[str], ast.FunctionDef]]] = {}
+    live: list[tuple[set[str], ast.AST]] = []
+    pending = [name for name in _NEEDS_NO_CALLER if "(" not in name]
+    for path in _CALLERS:
+        tree = ast.parse(path.read_text())
+        bound = _bound_names(tree)
+        for node in tree.body:
+            if PACKAGE_DIR in path.parents and isinstance(node, ast.FunctionDef):
+                bodies.setdefault(node.name, []).append((bound, node))
+                if not node.name.startswith("_"):
+                    rel = path.relative_to(PACKAGE_DIR).as_posix()
+                    functions.setdefault(node.name, []).append((rel, node))
+            else:
+                live.append((bound, node))
+                if path.name == "__init__.py" and isinstance(node, ast.ImportFrom):
+                    pending += [alias.asname or alias.name for alias in node.names]
+
+    def names(bound: set[str], top: ast.AST):
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name) and node.id in bound:
+                yield node.id
+            elif isinstance(node, ast.Attribute):
+                yield node.attr
+
+    pending += [n for bound, top in live for n in names(bound, top)]
+    reached: set[str] = set()
+    while pending:
+        name = pending.pop()
+        if name in reached or name not in bodies:
+            continue
+        reached.add(name)
+        for bound, fn in bodies[name]:
+            live.append((bound, fn))
+            pending += names(bound, fn)
+    return functions, reached, live
+
+
+def test_every_public_function_has_a_caller():
+    """A public package function that no production code reaches (see
+    :func:`_live_code`) is code kept only for its tests."""
+    functions, reached, _ = _live_code()
+    unreached = [
+        f"{rel}:{fn.lineno} {name}"
+        for name, defs in sorted(functions.items())
+        if name not in reached
+        for rel, fn in defs
+    ]
+    assert unreached == [], f"{len(unreached)} functions no caller reaches:\n" + "\n".join(
+        unreached
+    )
+
+
 def test_every_option_has_a_caller():
     """A call sets a parameter when it names the function (by name, in any
     module) and passes the parameter by keyword or passes enough positional
     arguments to reach it; ``*args``/``**kwargs`` set every parameter. A
     function also referenced as a value (passed, aliased, a default) may be
-    called through a variable, so all its parameters count as set. Callers
-    are the package, ``__spark_entry__.py``, ``bench.py``, ``tools/``,
-    ``perfbench/`` and ``tests/``."""
-    functions: dict[str, list[tuple[str, ast.FunctionDef]]] = {}
-    for path in sorted(PACKAGE_DIR.glob("**/*.py")):
-        for node in ast.parse(path.read_text()).body:
-            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
-                rel = path.relative_to(PACKAGE_DIR).as_posix()
-                functions.setdefault(node.name, []).append((rel, node))
-
-    callers = [
-        *sorted(PACKAGE_DIR.glob("**/*.py")),
-        REPO_DIR / "__spark_entry__.py",
-        REPO_DIR / "bench.py",
-        *[
-            path
-            for folder in ("tools", "perfbench", "tests")
-            for path in sorted((REPO_DIR / folder).glob("**/*.py"))
-        ],
-    ]
+    called through a variable, so all its parameters count as set. Only
+    calls in live production code count (see :func:`_live_code`)."""
+    functions, _, live = _live_code()
     set_params: dict[str, set[str]] = {name: set() for name in functions}
     referenced: set[str] = set()
-    for path in callers:
-        tree = ast.parse(path.read_text())
+    for bound, top in live:
         call_funcs = set()
-        for call in ast.walk(tree):
+        for call in ast.walk(top):
             if not isinstance(call, ast.Call):
                 continue
             call_funcs.add(id(call.func))
@@ -180,15 +275,7 @@ def test_every_option_has_a_caller():
                 if star:
                     set_params[name].update(a.arg for a in fn.args.kwonlyargs)
             set_params[name].update(k.arg for k in call.keywords if k.arg)
-        # a bare name refers to a package function only where the module
-        # imports or defines it (``hits = ...`` elsewhere is a local)
-        bound = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)} | {
-            alias.asname or alias.name
-            for n in ast.walk(tree)
-            if isinstance(n, ast.ImportFrom)
-            for alias in n.names
-        }
-        for node in ast.walk(tree):
+        for node in ast.walk(top):
             if isinstance(node, ast.Name) and node.id in bound:
                 name = node.id
             elif isinstance(node, ast.Attribute):
@@ -205,6 +292,39 @@ def test_every_option_has_a_caller():
         if name not in referenced
         for rel, fn in defs
         for param in _defaulted_params(fn)
-        if param not in set_params[name]
+        if param not in set_params[name] and f"{name}({param}=)" not in _NEEDS_NO_CALLER
     ]
     assert unset == [], f"{len(unset)} parameters no caller sets:\n" + "\n".join(unset)
+
+
+def test_tests_import_only_what_exists():
+    """Every ``from iatlas_cbioportal_export_spark... import name`` in a test
+    names a module and attribute that exist, so a deleted function shows up
+    here as one named failure rather than as a collection error that skips
+    the whole test file."""
+    import importlib
+    import importlib.util
+
+    missing = []
+    for path in sorted((REPO_DIR / "tests").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").startswith(PACKAGE_DIR.name)
+            ):
+                continue
+            try:
+                module = importlib.import_module(node.module)
+            except ImportError:
+                missing.append(f"{path.name}:{node.lineno} {node.module}")
+                continue
+            missing += [
+                f"{path.name}:{node.lineno} {node.module}.{alias.name}"
+                for alias in node.names
+                if not hasattr(module, alias.name)
+                and not (  # a submodule not imported yet
+                    hasattr(module, "__path__")
+                    and importlib.util.find_spec(f"{node.module}.{alias.name}")
+                )
+            ]
+    assert missing == []

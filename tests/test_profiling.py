@@ -132,26 +132,6 @@ def test_table_profile_stats_and_single_pass(spark):
     assert plan.count("Scan ExistingRDD") <= 1
 
 
-def test_table_profile_approx_path_no_expand(spark):
-    from iatlas_cbioportal_export_spark.operators.profiling import (
-        table_profile,
-    )
-
-    df = spark.range(100).select(
-        (F.col("id") % 7).alias("a"), (F.col("id") % 3).alias("b")
-    )
-    exact = table_profile(df)
-    approx = table_profile(df, exact_distinct=False)
-    ex = {r["col_name"]: r["n_distinct"] for r in exact.collect()}
-    ap = {r["col_name"]: r["n_distinct"] for r in approx.collect()}
-    assert ex == {"a": 7, "b": 3}
-    # HLL at this cardinality is exact too, and the plan drops the Expand
-    assert ap == ex
-    ep = exact._jdf.queryExecution().executedPlan().toString()
-    pp = approx._jdf.queryExecution().executedPlan().toString()
-    assert "Expand" in ep and "Expand" not in pp
-
-
 def test_join_cardinality_report_exact_without_join(spark):
     from iatlas_cbioportal_export_spark.operators.profiling import (
         join_cardinality_report,

@@ -317,15 +317,15 @@ def test_bpe_train_matches_reference_random_corpora(spark, docs, k):
 def test_exact_order_statistic_any_domain(spark, vals, q, nb):
     """Histogram refinement returns the exact k-th order statistic for any
     value distribution (duplicates, negatives, huge gaps) and any bucket
-    count — including n_buckets=2 (pure bisection)."""
+    count — including 2 buckets (pure bisection)."""
     import math
 
-    from iatlas_cbioportal_export_spark.operators.aggregates import (
-        exact_order_statistic,
-    )
+    from iatlas_cbioportal_export_spark.operators import aggregates
 
     df = spark.createDataFrame([(v,) for v in vals], "c long")
-    n, k, v = exact_order_statistic(df, "c", q, n_buckets=nb)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(aggregates, "_ORDER_STAT_BUCKETS", nb)
+        n, [(k, v)] = aggregates.exact_order_statistics(df, "c", [q])
     kk = max(1, math.ceil(q * len(vals)))
     assert (n, k) == (len(vals), kk)
     assert v == sorted(vals)[kk - 1]

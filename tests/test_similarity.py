@@ -4,6 +4,7 @@ import math
 
 import pytest
 
+from iatlas_cbioportal_export_spark.operators import similarity
 from iatlas_cbioportal_export_spark.operators.similarity import (
     ann_topk_lsh,
     brute_force_topk,
@@ -133,7 +134,7 @@ def test_semantic_dedup_scaled_twin_shares_cell(spark):
         assert pairs.get((i, i + 1000)) == 1.0
 
 
-def test_semantic_dedup_hot_cell_cap(spark):
+def test_semantic_dedup_hot_cell_cap(spark, monkeypatch):
     from iatlas_cbioportal_export_spark.operators.similarity import (
         semantic_dedup_pairs,
     )
@@ -141,9 +142,8 @@ def test_semantic_dedup_hot_cell_cap(spark):
     rows = [(i, [1.0, i * 1e-4, 0.0]) for i in range(10)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     # every vector lands in one cell; cap below its size drops the cell
-    out = semantic_dedup_pairs(
-        df, threshold=0.9, n_cells=1, iterations=1, max_cell_size=5
-    )
+    monkeypatch.setattr(similarity, "_MAX_CELL_SIZE", 5)
+    out = semantic_dedup_pairs(df, threshold=0.9, n_cells=1, iterations=1)
     assert out.count() == 0
 
 
@@ -196,37 +196,36 @@ def test_partition_topk_invariant_to_partitioning(spark, vectors):
     )
 
 
-def test_embedding_near_dup_hot_bucket_cap(spark):
+def test_embedding_near_dup_hot_bucket_cap(spark, monkeypatch):
     rows = [
         (1, [1.0, 0.0, 0.0]),
         (2, [0.999, 0.001, 0.0]),
         (3, [0.0, 1.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # cap=1: every bucket holding the near-dup pair (size >= 2) is dropped
-    out = embedding_near_duplicates(
-        df, dim=3, threshold=0.99, num_planes=4, max_bucket_size=1
-    )
-    assert out.count() == 0
     # default cap: pair survives
     out = embedding_near_duplicates(df, dim=3, threshold=0.99, num_planes=4)
     assert {(r["id_a"], r["id_b"]) for r in out.collect()} == {(1, 2)}
+    # cap=1: every bucket holding the near-dup pair (size >= 2) is dropped
+    monkeypatch.setattr(similarity, "_MAX_BUCKET_SIZE", 1)
+    out = embedding_near_duplicates(df, dim=3, threshold=0.99, num_planes=4)
+    assert out.count() == 0
 
 
 def test_scalar_quantize_roundtrip_and_recall(spark, vectors):
     from iatlas_cbioportal_export_spark.operators.similarity import (
         corpus_dim_ranges,
-        dequantize,
         scalar_quantize,
     )
 
     mins, maxs = corpus_dim_ranges(vectors, dim=8)
-    q = scalar_quantize(vectors, dim=8, ranges=(mins, maxs))
+    q = scalar_quantize(vectors, dim=8)
     codes = {r["vec_id"]: r["codes"] for r in q.collect()}
     assert all(0 <= c <= 255 for cs in codes.values() for c in cs)
     # reconstruction error bounded by half a quantization step per dim
-    deq = {r["vec_id"]: r["embedding"]
-           for r in dequantize(q, mins, maxs).collect()}
+    spans = [(mx - mn) if mx > mn else 1.0 for mn, mx in zip(mins, maxs)]
+    deq = {vid: [mn + c * sp / 255 for c, mn, sp in zip(cs, mins, spans)]
+           for vid, cs in codes.items()}
     orig = {r["vec_id"]: r["embedding"] for r in vectors.collect()}
     for vid, v in orig.items():
         for i, (a, b) in enumerate(zip(v, deq[vid])):
@@ -236,7 +235,9 @@ def test_scalar_quantize_roundtrip_and_recall(spark, vectors):
     queries = vectors.filter("vec_id < 5")
     exact = {(r["query_id"], r["vec_id"])
              for r in brute_force_topk(vectors, queries, k=3).collect()}
-    deq_df = dequantize(q, mins, maxs)
+    deq_df = spark.createDataFrame(
+        sorted(deq.items()), "vec_id long, embedding array<double>"
+    )
     approx = {(r["query_id"], r["vec_id"])
               for r in brute_force_topk(
                   deq_df, deq_df.filter("vec_id < 5"), k=3).collect()}
@@ -247,7 +248,6 @@ def test_scalar_quantize_roundtrip_and_recall(spark, vectors):
 def test_pq_encode_reconstruct_recall(spark, vectors):
     from iatlas_cbioportal_export_spark.operators.similarity import (
         pq_encode,
-        pq_reconstruct,
         pq_seed_codebooks,
     )
 
@@ -264,7 +264,11 @@ def test_pq_encode_reconstruct_recall(spark, vectors):
         assert codes[vid][0] == vid
         assert codes[vid][1:] == [0, 0, 0]
     # reconstructed vectors keep reasonable top-3 recall vs exact
-    rec = pq_reconstruct(enc, books)
+    rec = spark.createDataFrame(
+        [(vid, [x for j, c in enumerate(cs) for x in books[j][c]])
+         for vid, cs in sorted(codes.items())],
+        "vec_id long, embedding array<double>",
+    )
     queries = vectors.filter("vec_id < 5")
     exact = {(r["query_id"], r["vec_id"])
              for r in brute_force_topk(vectors, queries, k=3).collect()}
@@ -275,11 +279,7 @@ def test_pq_encode_reconstruct_recall(spark, vectors):
 
 
 def test_l2_normalize_unit_norm_and_zero_vector(spark):
-    from iatlas_cbioportal_export_spark.operators.similarity import (
-        cosine,
-        l2_normalize,
-    )
-    import pyspark.sql.functions as F
+    from iatlas_cbioportal_export_spark.operators.similarity import l2_normalize
 
     df = spark.createDataFrame(
         [(1, [3.0, 4.0]), (2, [0.0, 0.0])], "vec_id long, embedding array<double>"
@@ -319,34 +319,6 @@ def test_mean_pool_partitioning_invariant(spark):
     assert a == b
 
 
-def test_lsh_index_query_matches_adhoc_ann(spark):
-    import pyspark.sql.functions as F
-    from iatlas_cbioportal_export_spark.operators.similarity import (
-        ann_topk_lsh,
-        build_lsh_index,
-        query_lsh_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3)
-    try:
-        build_lsh_index(emb, "t_lsh_index", dim=64, num_planes=10)
-        from_index = query_lsh_index(
-            queries, "t_lsh_index", dim=64, k=5, num_planes=10
-        )
-        adhoc = ann_topk_lsh(emb, queries, dim=64, k=5, num_planes=10)
-        key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-        assert sorted(
-            [(r["query_id"], r["rank"], r["vec_id"], r["cosine_sim"])
-             for r in from_index.collect()]
-        ) == sorted(
-            [(r["query_id"], r["rank"], r["vec_id"], r["cosine_sim"])
-             for r in adhoc.collect()]
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_lsh_index")
-
-
 def test_random_projection_preserves_pairwise_distance_roughly(spark):
     import math
 
@@ -376,7 +348,7 @@ def test_random_projection_preserves_pairwise_distance_roughly(spark):
     assert 0.3 * n_in < n_out < 3 * n_in
 
 
-def test_item_cf_cosine_and_cap(spark):
+def test_item_cf_cosine_and_cap(spark, monkeypatch):
     import math
 
     from iatlas_cbioportal_export_spark.operators.similarity import (
@@ -401,7 +373,8 @@ def test_item_cf_cosine_and_cap(spark):
     # cap: a hyper-user is dropped entirely
     spam = [("z", i) for i in range(50)]
     df2 = spark.createDataFrame(rows + spam, "user_id string, item_id long")
-    capped = item_cooccurrence_similarity(df2, max_user_items=10)
+    monkeypatch.setattr(similarity, "_MAX_USER_ITEMS", 10)
+    capped = item_cooccurrence_similarity(df2)
     assert {(r["item_a"], r["item_b"]) for r in capped.collect()} == {
         (1, 2), (1, 3), (2, 3),
     }
@@ -428,9 +401,9 @@ def test_association_rules_confidence_and_lift(spark):
     assert out[(1, 2)] == (3, 0.75, 1.0)
 
 
-def test_brute_force_topk_query_cap_guard(spark):
+def test_brute_force_topk_query_cap_guard(spark, monkeypatch):
     """The exact path refuses oversized query sets (|C|x|Q| work) and points
-    at the ANN/IVF scale paths; an explicit higher cap overrides."""
+    at the ANN/IVF scale paths; a set at the cap runs."""
     import pytest
 
     from iatlas_cbioportal_export_spark.operators.similarity import (
@@ -443,9 +416,11 @@ def test_brute_force_topk_query_cap_guard(spark):
     queries = spark.range(5).selectExpr(
         "id + 100 as vec_id", "array(cast(id as double), 2.0d) as embedding"
     )
+    monkeypatch.setattr(similarity, "_MAX_EXACT_QUERIES", 3)
     with pytest.raises(ValueError, match="ann_topk_lsh"):
-        brute_force_topk(corpus, queries, k=2, max_queries=3)
-    out = brute_force_topk(corpus, queries, k=2, max_queries=5)
+        brute_force_topk(corpus, queries, k=2)
+    monkeypatch.setattr(similarity, "_MAX_EXACT_QUERIES", 5)
+    out = brute_force_topk(corpus, queries, k=2)
     assert out.count() == 10
 
 
@@ -468,44 +443,7 @@ def test_mips_topk_differs_from_cosine_when_norms_matter(spark):
     assert cos_got == {1: 1, 2: 2}  # the orderings really do disagree
 
 
-def test_mips_augment_reduces_mips_to_cosine_order(spark):
-    import random
-
-    import pyspark.sql.functions as F
-
-    from iatlas_cbioportal_export_spark.operators.similarity import (
-        mips_augment,
-        mips_topk,
-    )
-
-    rng = random.Random(7)
-    rows = [
-        (i, [rng.uniform(-2, 2) for _ in range(6)]) for i in range(30)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    aug = mips_augment(df).select("vec_id", F.col("augmented").alias("embedding"))
-    # augmented vectors all share the corpus max norm M
-    norms = aug.select(
-        F.sqrt(
-            F.aggregate(
-                "embedding", F.lit(0.0), lambda a, x: a + x * x
-            )
-        ).alias("n")
-    ).collect()
-    assert max(r["n"] for r in norms) - min(r["n"] for r in norms) < 1e-9
-    # cosine top-k over augmented corpus with zero-padded queries == MIPS
-    queries = df.filter("vec_id < 3").select(
-        "vec_id",
-        F.concat("embedding", F.array(F.lit(0.0))).alias("embedding"),
-    )
-    cos_on_aug = brute_force_topk(aug, queries, k=5)
-    mips = mips_topk(df, df.filter("vec_id < 3"), k=5)
-    a = sorted((r["query_id"], r["rank"], r["vec_id"]) for r in cos_on_aug.collect())
-    b = sorted((r["query_id"], r["rank"], r["vec_id"]) for r in mips.collect())
-    assert a == b
-
-
-def test_mips_topk_query_cap_guard(spark):
+def test_mips_topk_query_cap_guard(spark, monkeypatch):
     from iatlas_cbioportal_export_spark.operators.similarity import mips_topk
 
     df = spark.createDataFrame(
@@ -513,7 +451,8 @@ def test_mips_topk_query_cap_guard(spark):
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match="max_queries"):
-        mips_topk(df, df, k=2, max_queries=5)
+        monkeypatch.setattr(similarity, "_MAX_EXACT_QUERIES", 5)
+        mips_topk(df, df, k=2)
 
 
 def test_grid_dbscan_roles_and_merging(spark):
@@ -570,7 +509,7 @@ def test_ivfpq_exact_twin_ranks_original_first(spark):
     twins = corpus.filter("vec_id < 3").selectExpr(
         "vec_id + 1000000 AS vec_id", "embedding"
     )
-    out = ivfpq_topk(corpus, twins, k=5, n_cells=8, n_probe=3, m=4, kc=8)
+    out = ivfpq_topk(corpus, twins, k=5)
     rows = out.collect()
     by_q = {}
     for r in rows:
@@ -600,7 +539,7 @@ def test_ivfpq_corpus_state_is_codes_not_vectors(spark):
     q = corpus.filter("vec_id = 0").selectExpr(
         "vec_id + 500 AS vec_id", "embedding"
     )
-    df = ivfpq_topk(corpus, q, k=3, n_cells=4, n_probe=2, m=2, kc=4)
+    df = ivfpq_topk(corpus, q, k=3)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     # the corpus side joins on (id, cell, codes) only: no embedding
     # column survives past the narrow encode on the corpus branch
@@ -626,33 +565,3 @@ def test_covariance_matrix_matches_numpy(spark):
     for r in out:
         assert abs(r["cov"] - ref[r["i"], r["j"]]) < 1e-6
     assert len(out) == 36 and all(r["n"] == 60 for r in out)
-
-
-def test_pca_power_projection_matches_numpy_eig(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(5)
-    # anisotropic data: dominant direction along a planted axis mix
-    base = rng.normal(size=(80, 8))
-    base[:, 2] *= 6.0  # dominant variance on dim 2
-    data = base.astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(data)],
-        "vec_id long, embedding array<float>",
-    )
-    from iatlas_cbioportal_export_spark.operators.similarity import (
-        pca_power_projection,
-    )
-
-    out = pca_power_projection(df, dims=8, iterations=20).collect()
-    d64 = data.astype(np.float64)
-    cov = np.cov(d64, rowvar=False)
-    w, vecs = np.linalg.eigh(cov)
-    top = vecs[:, -1]
-    if top[np.argmax(np.abs(top))] < 0:
-        top = -top
-    expected = d64 @ top
-    got = {r["vec_id"]: r["pc1"] for r in out}
-    for i in range(80):
-        assert abs(got[i] - expected[i]) < 1e-3
-    assert abs(out[0]["eigenvalue"] - w[-1]) < 1e-3

@@ -280,7 +280,7 @@ def test_rank_quantile_gate_contract_and_exactness(spark):
     df = spark.range(10000).select(
         ((F.col("id") * 7919) % 10000).alias("x")
     ).repartition(8)
-    out = rank_sample_quantile_gate(df, "x", quantiles=(0.1, 0.5, 0.99))
+    out = rank_sample_quantile_gate(df, "x")
     rows = {r["quantile"]: r for r in out.collect()}
     assert all(r["within_bound"] for r in rows.values())
     assert rows[0.5]["n"] == 10000 and rows[0.5]["target_rank"] == 5000

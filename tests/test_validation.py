@@ -5,14 +5,11 @@ import pytest
 
 from iatlas_cbioportal_export_spark.operators.validation import (
     count_equality,
-    distinct_count_equality,
     findings_union,
-    has_errors,
     keyset_preserved,
-    no_all_null_columns,
     no_duplicate_rows,
-    no_null_keys,
     required_columns_present,
+    table_profile_checks,
 )
 
 
@@ -22,39 +19,39 @@ def test_findings_ok_and_error(spark):
     b = spark.createDataFrame([("s1",)], "SAMPLE_ID string")
     findings = findings_union(
         [
-            count_equality(a, a),                      # OK
-            count_equality(a, b, check="shrunk"),      # ERROR
-            distinct_count_equality(a, a, "SAMPLE_ID"),
-            no_null_keys(a, ["SAMPLE_ID"]),
+            count_equality(a, b),                      # ERROR
+            table_profile_checks(
+                a, distinct_cols=["SAMPLE_ID"], no_null_cols=["SAMPLE_ID"],
+                all_null_cols=a.columns,
+            ),
             no_duplicate_rows(a),
             keyset_preserved(a, "SAMPLE_ID", b, "SAMPLE_ID", check="sets"),  # ERROR
             required_columns_present(a, ["SAMPLE_ID", "MISSING"], check="cols"),  # ERROR
-            no_all_null_columns(a),
         ]
     )
     rows = findings.collect()
     status = {r["check"]: r["status"] for r in rows}
     detail = {r["check"]: r["detail"] for r in rows}
-    assert status["row_count_preserved"] == "OK"
-    assert status["shrunk"] == "ERROR" and detail["shrunk"] == "in=2 out=1"
+    assert status["row_count_preserved"] == "ERROR"
+    assert detail["row_count_preserved"] == "in=2 out=1"
     assert status["no_null_sample_id"] == "OK"
     assert status["sets"] == "ERROR" and detail["sets"] == "left_only=1 right_only=0"
     assert status["cols"] == "ERROR" and detail["cols"] == "missing: MISSING"
     assert status["no_all_null_columns"] == "OK"
-    assert has_errors(findings)
-    assert not has_errors(findings_union([count_equality(a, a)]))
+    (ok,) = count_equality(a, a).collect()
+    assert ok["status"] == "OK" and ok["detail"] == "in=2 out=2"
 
 
 def test_null_key_finding(spark):
     df = spark.createDataFrame([("s1",), (None,)], "SAMPLE_ID string")
-    (row,) = no_null_keys(df, ["SAMPLE_ID"]).collect()
+    (row,) = table_profile_checks(df, no_null_cols=["SAMPLE_ID"]).collect()
     assert row["status"] == "ERROR" and row["observed"] == 1
     assert row["detail"] == "null rows in SAMPLE_ID"
 
 
 def test_all_null_column_detected(spark):
     df = spark.createDataFrame([("a", None), ("b", None)], "x string, dead string")
-    (row,) = no_all_null_columns(df).collect()
+    (row,) = table_profile_checks(df, all_null_cols=df.columns).collect()
     assert row["status"] == "ERROR"
     assert row["detail"] == "all-null: dead"
 
@@ -222,10 +219,7 @@ def test_maf_value_conformance_all_ok(spark):
 def test_table_profile_checks_matches_individual_ops(spark):
     from iatlas_cbioportal_export_spark.operators.validation import (
         count_equality,
-        distinct_count_equality,
         findings_union,
-        no_all_null_columns,
-        no_null_keys,
         table_profile_checks,
     )
 
@@ -242,11 +236,11 @@ def test_table_profile_checks_matches_individual_ops(spark):
     ).collect()
     individual = findings_union(
         [
-            count_equality(df, df, check="row_count_preserved"),
-            distinct_count_equality(df, df, "k"),
-            no_null_keys(df, ["k"]),
-            no_null_keys(df, ["v"]),
-            no_all_null_columns(df.select("k", "v", "dead")),
+            count_equality(df, df),
+            table_profile_checks(df, distinct_cols=["k"]),
+            table_profile_checks(df, no_null_cols=["k"]),
+            table_profile_checks(df, no_null_cols=["v"]),
+            table_profile_checks(df, all_null_cols=["k", "v", "dead"]),
         ]
     ).collect()
     assert sorted(map(tuple, fused)) == sorted(map(tuple, individual))
@@ -549,43 +543,6 @@ def test_meta_consistency_checks_clean_bundle(spark):
 # ---------------------------------------------------------------------------
 # clinical attribute-header conformance (round 7: the header tier)
 # ---------------------------------------------------------------------------
-
-
-def test_parse_clinical_header_roundtrip():
-    from iatlas_cbioportal_export_spark.operators.validation import (
-        parse_clinical_header_text,
-    )
-    from iatlas_cbioportal_export_spark.sources.sinks import (
-        cbioportal_clinical_header,
-    )
-
-    meta = {
-        "PATIENT_ID": {"display_name": "Patient Identifier",
-                       "datatype": "STRING", "priority": "1"},
-        "AGE": {"display_name": "Age", "datatype": "NUMBER", "priority": "2"},
-    }
-    lines = cbioportal_clinical_header(["PATIENT_ID", "AGE"], meta)
-    text = "\n".join([*lines, "PATIENT_ID\tAGE", "P-1\t61"])
-    rows = parse_clinical_header_text("data_clinical_patient.txt", text)
-    assert [r["column_id"] for r in rows] == ["PATIENT_ID", "AGE"]
-    assert rows[0]["display_name"] == "Patient Identifier"
-    assert rows[1]["datatype"] == "NUMBER"
-    assert all(r["arity_ok"] for r in rows)
-
-
-def test_parse_clinical_header_ragged_and_missing():
-    import pytest
-
-    from iatlas_cbioportal_export_spark.operators.validation import (
-        parse_clinical_header_text,
-    )
-
-    ragged = "#A\tB\n#d\td\n#STRING\n#1\t2\nCOL1\tCOL2\nv\tw"
-    rows = parse_clinical_header_text("f.txt", ragged)
-    assert not rows[0]["arity_ok"]
-    assert rows[1]["datatype"] is None  # padded, not dropped
-    with pytest.raises(ValueError):
-        parse_clinical_header_text("g.txt", "COL1\tCOL2\nv\tw")
 
 
 def test_clinical_header_conformance_counts(spark):
