@@ -3102,7 +3102,7 @@ def q_exact_quantiles(spark, sf_dir):
     """EXACT p50/p90 order statistics of l_extendedprice (in floor-cents)
     via iterative histogram refinement — 2-3 narrow scan+tiny-agg passes,
     never a value collect, the 100 TB-safe exact-quantile algorithm next to
-    approx_profile's sketches. The integral domain (floor(x·100): identical
+    the HLL/quantile sketches. The integral domain (floor(x·100): identical
     IEEE arithmetic in both engines) makes the result value-hash exact; the
     oracle reads the k-th row off a window."""
     from iatlas_cbioportal_export_spark.operators.aggregates import (
@@ -3126,8 +3126,7 @@ def q_sketch_accuracy_gate(spark, sf_dir):
     floor-cent prices, each reduced to the deterministic boolean "sketch
     met its published error bound" next to the EXACT statistic — the
     oracle-checkable contract for approximate operators whose raw sketch
-    values are engine-defined (approx_profile's docstring caveat, made
-    into a query)."""
+    values are engine-defined (that caveat made into a query)."""
     from iatlas_cbioportal_export_spark.operators.aggregates import (
         sketch_accuracy_report,
     )
@@ -3848,10 +3847,8 @@ def q_eval_auc(spark, sf_dir):
 
 
 def q_stream_topk_snapshot(spark, sf_dir):
-    """Batch twin of streaming/sinks.topk_snapshot_stream: top-10 users
-    by event count, (cnt desc, key asc) tie-break — the incrementally-
-    maintained materialization's final snapshot must equal this (proven
-    stream≡batch over multi-micro-batch availableNow in pytest)."""
+    """Top-10 users by event count, (cnt desc, key asc) tie-break (the
+    streaming twin it was checked against is gone: 2c4b4c3)."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.col("user_id").alias("key"))

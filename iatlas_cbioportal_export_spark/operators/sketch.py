@@ -1,6 +1,6 @@
 """Count-min sketch: fixed-size frequency summaries with one-sided error
 (estimates never undercount) — the sketch tier next to the HLL/quantile
-profiling in ``aggregates.approx_profile``, but built EXPLICITLY from
+profiling of ``approx_count_distinct``/``percentile_approx``, but built EXPLICITLY from
 engine-portable arithmetic so any engine (or the DuckDB oracle) reproduces
 the counters bit-for-bit.
 
