@@ -4915,6 +4915,32 @@ def q_curation_pii_pseudonyms(spark, sf_dir):
 _MEDIA_SCHEMA = "media_id long, modality string, mime_type string, payload binary"
 
 
+def _synthetic_media(spark, sf_dir, below, modality, mime_type, payload):
+    """Synthetic media rows for the documents with ``doc_id < below``:
+    ``doc_id`` as ``media_id`` and ``payload(media_id)`` as the bytes,
+    encoded in one Arrow stage."""
+    ids = (
+        _t(spark, sf_dir, "documents")
+        .select(F.col("doc_id").alias("media_id"))
+        .filter(F.col("media_id") < below)
+    )
+
+    def encode(batches):
+        import pandas as pd
+
+        for batch in batches:
+            yield pd.DataFrame(
+                {
+                    "media_id": batch["media_id"],
+                    "modality": modality,
+                    "mime_type": mime_type,
+                    "payload": [payload(int(m)) for m in batch["media_id"]],
+                }
+            )
+
+    return ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+
+
 def q_multimodal_wav_roundtrip(spark, sf_dir):
     """REAL audio decode under the driver gate — not the fake extractor:
     deterministic PCM (s_i = ((media_id·31 + i·7) % 256) − 128, 256
@@ -4930,45 +4956,25 @@ def q_multimodal_wav_roundtrip(spark, sf_dir):
         stdlib_decoder,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 200)
-    )
-
-    def encode(batches):
+    def payload(mid: int) -> bytes:
         import io
         import struct
         import wave
 
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(8000)
-                    w.writeframes(
-                        b"".join(
-                            struct.pack("<h", ((mid * 31 + i * 7) % 256) - 128)
-                            for i in range(256)
-                        )
-                    )
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "audio",
-                    "mime_type": "audio/wav",
-                    "payload": payloads,
-                }
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(8000)
+            w.writeframes(
+                b"".join(
+                    struct.pack("<h", ((mid * 31 + i * 7) % 256) - 128)
+                    for i in range(256)
+                )
             )
+        return buf.getvalue()
 
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(spark, sf_dir, 200, "audio", "audio/wav", payload)
     feats = extract_features(media, extractor=stdlib_decoder)
     return feats.select(
         "media_id",
@@ -4991,35 +4997,17 @@ def q_multimodal_image_resize(spark, sf_dir):
         stdlib_decoder,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 200)
+    def payload(mid: int) -> bytes:
+        pix = bytes(
+            (mid * 7 + y * 16 + x * 3) % 256
+            for y in range(12)
+            for x in range(16)
+        )
+        return b"P5\n16 12\n255\n" + pix
+
+    media = _synthetic_media(
+        spark, sf_dir, 200, "image", "image/x-portable-graymap", payload
     )
-
-    def encode(batches):
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                pix = bytes(
-                    (mid * 7 + y * 16 + x * 3) % 256
-                    for y in range(12)
-                    for x in range(16)
-                )
-                payloads.append(b"P5\n16 12\n255\n" + pix)
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "image",
-                    "mime_type": "image/x-portable-graymap",
-                    "payload": payloads,
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     small = resize_images(media, 8, 6)
     feats = extract_features(small, extractor=stdlib_decoder)
     return feats.select(
@@ -5046,40 +5034,18 @@ def q_multimodal_png_roundtrip(spark, sf_dir):
         stdlib_decoder,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 200)
-    )
+    def payload(mid: int) -> bytes:
+        channels = 1 if mid % 2 == 0 else 3
+        pix = bytes(
+            (mid * 7 + y * 16 + x * 3 + c * 11) % 256
+            for y in range(12)
+            for x in range(16)
+            for c in range(channels)
+        )
+        return png_encode(pix, 16, 12, channels=channels,
+                          filters=(0, 1, 2, 3, 4))
 
-    def encode(batches):
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                channels = 1 if mid % 2 == 0 else 3
-                pix = bytes(
-                    (mid * 7 + y * 16 + x * 3 + c * 11) % 256
-                    for y in range(12)
-                    for x in range(16)
-                    for c in range(channels)
-                )
-                payloads.append(
-                    png_encode(pix, 16, 12, channels=channels,
-                               filters=(0, 1, 2, 3, 4))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "image",
-                    "mime_type": "image/png",
-                    "payload": payloads,
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(spark, sf_dir, 200, "image", "image/png", payload)
     feats = extract_features(media, extractor=stdlib_decoder)
     return feats.select(
         "media_id",
@@ -5103,42 +5069,24 @@ def q_multimodal_zip_index(spark, sf_dir):
         extract_zip_index,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 30)
-    )
-
-    def encode(batches):
+    def payload(mid: int) -> bytes:
         import io
         import zipfile
 
-        import pandas as pd
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w") as z:
+            for j in range(2 + mid % 3):
+                zi = zipfile.ZipInfo(
+                    f"{mid:05d}.{j}.bin",
+                    date_time=(1980, 1, 1, 0, 0, 0),
+                )
+                size = 100 + (mid * 7 + j * 13) % 90
+                z.writestr(zi, bytes([j % 256]) * size)
+        return buf.getvalue()
 
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w") as z:
-                    for j in range(2 + mid % 3):
-                        zi = zipfile.ZipInfo(
-                            f"{mid:05d}.{j}.bin",
-                            date_time=(1980, 1, 1, 0, 0, 0),
-                        )
-                        size = 100 + (mid * 7 + j * 13) % 90
-                        z.writestr(zi, bytes([j % 256]) * size)
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "shard",
-                    "mime_type": "application/zip",
-                    "payload": payloads,
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(
+        spark, sf_dir, 30, "shard", "application/zip", payload
+    )
     return extract_zip_index(media).select(
         "media_id", "name", "method", "size", "compressed_size",
         "data_offset",
@@ -5160,76 +5108,59 @@ def q_multimodal_zip64_index(spark, sf_dir):
         extract_zip_index,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 30)
-    )
-
-    def encode(batches):
-        import pandas as pd
-
-        def build(mid: int) -> bytes:
-            out = bytearray()
-            centrals = []
-            for j in range(2 + mid % 3):
-                name = f"{mid:05d}.{j}.bin".encode()
-                data = bytes([j % 256]) * (100 + (mid * 7 + j * 13) % 90)
-                lho = len(out)
-                out += b"PK\x03\x04" + (45).to_bytes(2, "little")
-                out += b"\x00\x00" + (0).to_bytes(2, "little")
-                out += bytes(4) + bytes(4)
-                out += len(data).to_bytes(4, "little") * 2
-                out += len(name).to_bytes(2, "little")
-                out += (0).to_bytes(2, "little")
-                out += name + data
-                extra = (
-                    (0x0001).to_bytes(2, "little")
-                    + (24).to_bytes(2, "little")
-                    + len(data).to_bytes(8, "little") * 2
-                    + lho.to_bytes(8, "little")
-                )
-                c = bytearray()
-                c += b"PK\x01\x02" + (45).to_bytes(2, "little") * 2
-                c += b"\x00\x00" + (0).to_bytes(2, "little")
-                c += bytes(4) + bytes(4)
-                c += (0xFFFFFFFF).to_bytes(4, "little") * 2
-                c += len(name).to_bytes(2, "little")
-                c += len(extra).to_bytes(2, "little")
-                c += (0).to_bytes(2, "little")
-                c += bytes(4) + bytes(4)
-                c += (0xFFFFFFFF).to_bytes(4, "little")
-                c += name + extra
-                centrals.append(bytes(c))
-            cd_off = len(out)
-            for c in centrals:
-                out += c
-            cd_size = len(out) - cd_off
-            z64 = len(out)
-            out += b"PK\x06\x06" + (44).to_bytes(8, "little")
-            out += (45).to_bytes(2, "little") * 2 + bytes(8)
-            out += len(centrals).to_bytes(8, "little") * 2
-            out += cd_size.to_bytes(8, "little")
-            out += cd_off.to_bytes(8, "little")
-            out += b"PK\x06\x07" + bytes(4) + z64.to_bytes(8, "little")
-            out += (1).to_bytes(4, "little")
-            out += b"PK\x05\x06" + bytes(4)
-            out += (0xFFFF).to_bytes(2, "little") * 2
-            out += (0xFFFFFFFF).to_bytes(4, "little") * 2
+    def payload(mid: int) -> bytes:
+        out = bytearray()
+        centrals = []
+        for j in range(2 + mid % 3):
+            name = f"{mid:05d}.{j}.bin".encode()
+            data = bytes([j % 256]) * (100 + (mid * 7 + j * 13) % 90)
+            lho = len(out)
+            out += b"PK\x03\x04" + (45).to_bytes(2, "little")
+            out += b"\x00\x00" + (0).to_bytes(2, "little")
+            out += bytes(4) + bytes(4)
+            out += len(data).to_bytes(4, "little") * 2
+            out += len(name).to_bytes(2, "little")
             out += (0).to_bytes(2, "little")
-            return bytes(out)
-
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "shard",
-                    "mime_type": "application/zip",
-                    "payload": [build(int(m)) for m in batch["media_id"]],
-                }
+            out += name + data
+            extra = (
+                (0x0001).to_bytes(2, "little")
+                + (24).to_bytes(2, "little")
+                + len(data).to_bytes(8, "little") * 2
+                + lho.to_bytes(8, "little")
             )
+            c = bytearray()
+            c += b"PK\x01\x02" + (45).to_bytes(2, "little") * 2
+            c += b"\x00\x00" + (0).to_bytes(2, "little")
+            c += bytes(4) + bytes(4)
+            c += (0xFFFFFFFF).to_bytes(4, "little") * 2
+            c += len(name).to_bytes(2, "little")
+            c += len(extra).to_bytes(2, "little")
+            c += (0).to_bytes(2, "little")
+            c += bytes(4) + bytes(4)
+            c += (0xFFFFFFFF).to_bytes(4, "little")
+            c += name + extra
+            centrals.append(bytes(c))
+        cd_off = len(out)
+        for c in centrals:
+            out += c
+        cd_size = len(out) - cd_off
+        z64 = len(out)
+        out += b"PK\x06\x06" + (44).to_bytes(8, "little")
+        out += (45).to_bytes(2, "little") * 2 + bytes(8)
+        out += len(centrals).to_bytes(8, "little") * 2
+        out += cd_size.to_bytes(8, "little")
+        out += cd_off.to_bytes(8, "little")
+        out += b"PK\x06\x07" + bytes(4) + z64.to_bytes(8, "little")
+        out += (1).to_bytes(4, "little")
+        out += b"PK\x05\x06" + bytes(4)
+        out += (0xFFFF).to_bytes(2, "little") * 2
+        out += (0xFFFFFFFF).to_bytes(4, "little") * 2
+        out += (0).to_bytes(2, "little")
+        return bytes(out)
 
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(
+        spark, sf_dir, 30, "shard", "application/zip", payload
+    )
     return extract_zip_index(media).select(
         "media_id", "name", "method", "size", "compressed_size",
         "data_offset",
@@ -5350,37 +5281,21 @@ def q_multimodal_image_dhash(spark, sf_dir):
         dhash_duplicate_groups,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 96)
+    def payload(mid: int) -> bytes:
+        key = mid % 12
+        w, h = 16, 12
+        pix = bytearray()
+        for y in range(h):
+            for x in range(w):
+                base = y * 16 + x * (3 + 8 * key)
+                pix += bytes(
+                    [base % 256, (base + 11) % 256, (base + 22) % 256]
+                )
+        return b"P6\n%d %d\n255\n" % (w, h) + bytes(pix)
+
+    media = _synthetic_media(
+        spark, sf_dir, 96, "image", "image/x-portable-pixmap", payload
     )
-
-    def encode(batches):
-        import pandas as pd
-
-        def ppm(key: int) -> bytes:
-            w, h = 16, 12
-            pix = bytearray()
-            for y in range(h):
-                for x in range(w):
-                    base = y * 16 + x * (3 + 8 * key)
-                    pix += bytes(
-                        [base % 256, (base + 11) % 256, (base + 22) % 256]
-                    )
-            return b"P6\n%d %d\n255\n" % (w, h) + bytes(pix)
-
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "image",
-                    "mime_type": "image/x-portable-pixmap",
-                    "payload": [ppm(int(m) % 12) for m in batch["media_id"]],
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     # member list as CSV — the repo's array-column oracle pattern
     # (plain-session toPandas stringifies lists and DuckDB stringifies
     # numpy arrays DIFFERENTLY, so raw array columns can't value-hash)
@@ -5404,46 +5319,27 @@ def q_multimodal_vad_segments(spark, sf_dir):
         extract_vad_segments,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 200)
-    )
-
-    def encode(batches):
+    def payload(mid: int) -> bytes:
         import io
         import struct
         import wave
 
-        import pandas as pd
+        nb = 2 + mid % 3  # frames per block
+        amp = 300 + (mid * 37) % 500
+        frame_len = 160  # 20ms at 8kHz
+        samples = []
+        for b in range(8):
+            speech = (b % 4 != 3) if mid % 2 == 0 else ((b + mid) % 2 == 0)
+            samples += [amp if speech else 0] * (nb * frame_len)
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(8000)
+            w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
+        return buf.getvalue()
 
-        def synth(mid: int) -> bytes:
-            nb = 2 + mid % 3  # frames per block
-            amp = 300 + (mid * 37) % 500
-            frame_len = 160  # 20ms at 8kHz
-            samples = []
-            for b in range(8):
-                speech = (b % 4 != 3) if mid % 2 == 0 else ((b + mid) % 2 == 0)
-                samples += [amp if speech else 0] * (nb * frame_len)
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(8000)
-                w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-            return buf.getvalue()
-
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "audio",
-                    "mime_type": "audio/wav",
-                    "payload": [synth(int(m)) for m in batch["media_id"]],
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(spark, sf_dir, 200, "audio", "audio/wav", payload)
     return extract_vad_segments(media, frame_ms=20, threshold=200)
 
 
@@ -5461,37 +5357,17 @@ def q_multimodal_bmp_roundtrip(spark, sf_dir):
         stdlib_decoder,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 170)
-    )
+    def payload(mid: int) -> bytes:
+        channels = 1 if mid % 2 == 0 else 3
+        pix = bytes(
+            (mid * 7 + y * 16 + x * 3 + c * 11) % 256
+            for y in range(12)
+            for x in range(16)
+            for c in range(channels)
+        )
+        return bmp_encode(pix, 16, 12, channels)
 
-    def encode(batches):
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                channels = 1 if mid % 2 == 0 else 3
-                pix = bytes(
-                    (mid * 7 + y * 16 + x * 3 + c * 11) % 256
-                    for y in range(12)
-                    for x in range(16)
-                    for c in range(channels)
-                )
-                payloads.append(bmp_encode(pix, 16, 12, channels))
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "image",
-                    "mime_type": "image/bmp",
-                    "payload": payloads,
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(spark, sf_dir, 170, "image", "image/bmp", payload)
     feats = extract_features(media, extractor=stdlib_decoder)
     return feats.select(
         "media_id",
@@ -5524,43 +5400,23 @@ def q_multimodal_jpeg_roundtrip(spark, sf_dir):
         stdlib_decoder,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 200)
+    def payload(mid: int) -> bytes:
+        channels = 1 if mid % 2 == 0 else 3
+        pix = bytes(
+            v
+            for y in range(16)
+            for x in range(16)
+            for v in [(mid * 13 + (y // 8) * 2 + (x // 8) * 5 + 37) % 256]
+            * channels
+        )
+        return jpeg_encode(
+            pix, 16, 16, channels=channels, quality=100,
+            restart_interval=1 if mid % 3 == 0 else 0,
+        )
+
+    media = _synthetic_media(
+        spark, sf_dir, 200, "image", "image/jpeg", payload
     )
-
-    def encode(batches):
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                channels = 1 if mid % 2 == 0 else 3
-                pix = bytes(
-                    v
-                    for y in range(16)
-                    for x in range(16)
-                    for v in [(mid * 13 + (y // 8) * 2 + (x // 8) * 5 + 37) % 256]
-                    * channels
-                )
-                payloads.append(
-                    jpeg_encode(
-                        pix, 16, 16, channels=channels, quality=100,
-                        restart_interval=1 if mid % 3 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "image",
-                    "mime_type": "image/jpeg",
-                    "payload": payloads,
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     feats = extract_features(media, extractor=stdlib_decoder)
     return feats.select(
         "media_id",
@@ -5657,40 +5513,18 @@ def q_multimodal_mp4_samples(spark, sf_dir):
         mp4_encode_track,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 40)
-    )
+    def payload(mid: int) -> bytes:
+        n = 3 + mid % 5
+        sizes = [50 + (mid * 7 + i * 13) % 40 for i in range(n)]
+        deltas = [512 if i < n // 2 else 1024 for i in range(n)]
+        spc = [2] * (n // 2) + ([1] if n % 2 else [])
+        return mp4_encode_track(
+            sizes, deltas,
+            sync_every=2 + mid % 3,
+            samples_per_chunk=spc,
+        )
 
-    def encode(batches):
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                n = 3 + mid % 5
-                sizes = [50 + (mid * 7 + i * 13) % 40 for i in range(n)]
-                deltas = [512 if i < n // 2 else 1024 for i in range(n)]
-                spc = [2] * (n // 2) + ([1] if n % 2 else [])
-                payloads.append(
-                    mp4_encode_track(
-                        sizes, deltas,
-                        sync_every=2 + mid % 3,
-                        samples_per_chunk=spc,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "video",
-                    "mime_type": "video/mp4",
-                    "payload": payloads,
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(spark, sf_dir, 40, "video", "video/mp4", payload)
     return extract_mp4_samples(media).select(
         "media_id", "track_id", "sample_idx", "chunk_idx",
         "offset", "size", "dts", "duration", "is_sync",
@@ -5710,38 +5544,18 @@ def q_multimodal_mp3_frames(spark, sf_dir):
         mp3_encode,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 60)
-    )
+    kbps_table = (96, 128, 160, 192)
 
-    def encode(batches):
-        import pandas as pd
+    def payload(mid: int) -> bytes:
 
-        kbps_table = (96, 128, 160, 192)
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                payloads.append(
-                    mp3_encode(
-                        2 + mid % 6,
-                        kbps_table[mid % 4],
-                        44100,
-                        id3_payload=b"t" * (20 + mid % 30),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "audio",
-                    "mime_type": "audio/mpeg",
-                    "payload": payloads,
-                }
-            )
+        return mp3_encode(
+            2 + mid % 6,
+            kbps_table[mid % 4],
+            44100,
+            id3_payload=b"t" * (20 + mid % 30),
+        )
 
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(spark, sf_dir, 60, "audio", "audio/mpeg", payload)
     return extract_mp3_frames(media).select(
         "media_id", "frame_idx", "offset", "size", "dts_ms", "bitrate_kbps",
     )
@@ -5763,45 +5577,23 @@ def q_multimodal_gif_roundtrip(spark, sf_dir):
         stdlib_decoder,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 150)
-    )
-
-    def encode(batches):
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                palette = [
-                    (
-                        (mid * 5 + p * 7) % 256,
-                        (mid * 3 + p * 11) % 256,
-                        (p * 29 + mid) % 256,
-                    )
-                    for p in range(8)
-                ]
-                idx = bytes(
-                    (mid + 3 * x + 5 * y) % 8
-                    for y in range(12)
-                    for x in range(16)
-                )
-                payloads.append(
-                    gif_encode(16, 12, idx, palette, interlaced=mid % 2 == 1)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "image",
-                    "mime_type": "image/gif",
-                    "payload": payloads,
-                }
+    def payload(mid: int) -> bytes:
+        palette = [
+            (
+                (mid * 5 + p * 7) % 256,
+                (mid * 3 + p * 11) % 256,
+                (p * 29 + mid) % 256,
             )
+            for p in range(8)
+        ]
+        idx = bytes(
+            (mid + 3 * x + 5 * y) % 8
+            for y in range(12)
+            for x in range(16)
+        )
+        return gif_encode(16, 12, idx, palette, interlaced=mid % 2 == 1)
 
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(spark, sf_dir, 150, "image", "image/gif", payload)
     feats = extract_features(media, extractor=stdlib_decoder)
     return feats.select(
         "media_id",
@@ -5827,38 +5619,20 @@ def q_multimodal_id3_tags(spark, sf_dir):
         mp3_encode,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 160)
+    def payload(mid: int) -> bytes:
+        tag = id3v2_encode(
+            {
+                "TIT2": f"Track {mid}",
+                "TPE1": f"Artist {mid % 7}",
+                "TALB": f"Album {mid // 10}",
+            },
+            version=3 if mid % 2 else 4,
+        )
+        return tag + mp3_encode(1, 128, 44100)
+
+    media = _synthetic_media(
+        spark, sf_dir, 160, "audio", "audio/mpeg", payload
     )
-
-    def encode(batches):
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                tag = id3v2_encode(
-                    {
-                        "TIT2": f"Track {mid}",
-                        "TPE1": f"Artist {mid % 7}",
-                        "TALB": f"Album {mid // 10}",
-                    },
-                    version=3 if mid % 2 else 4,
-                )
-                payloads.append(tag + mp3_encode(1, 128, 44100))
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "audio",
-                    "mime_type": "audio/mpeg",
-                    "payload": payloads,
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return extract_id3_tags(media).select(
         "media_id", "title", "artist", "album"
     )
@@ -5879,45 +5653,27 @@ def q_multimodal_webdataset_index(spark, sf_dir):
         extract_tar_index,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 30)
-    )
-
-    def encode(batches):
+    def payload(mid: int) -> bytes:
         import io
         import tarfile
 
-        import pandas as pd
+        buf = io.BytesIO()
+        with tarfile.open(
+            fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT
+        ) as t:
+            for j in range(2 + mid % 3):
+                size = 300 + (mid * 7 + j * 13) % 400
+                ti = tarfile.TarInfo(f"{mid:05d}.{j}.bin")
+                ti.size = size
+                ti.mtime = 0
+                ti.uid = ti.gid = 0
+                ti.mode = 0o644
+                t.addfile(ti, io.BytesIO(bytes([j % 256]) * size))
+        return buf.getvalue()
 
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                buf = io.BytesIO()
-                with tarfile.open(
-                    fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT
-                ) as t:
-                    for j in range(2 + mid % 3):
-                        size = 300 + (mid * 7 + j * 13) % 400
-                        ti = tarfile.TarInfo(f"{mid:05d}.{j}.bin")
-                        ti.size = size
-                        ti.mtime = 0
-                        ti.uid = ti.gid = 0
-                        ti.mode = 0o644
-                        t.addfile(ti, io.BytesIO(bytes([j % 256]) * size))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "shard",
-                    "mime_type": "application/x-tar",
-                    "payload": payloads,
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(
+        spark, sf_dir, 30, "shard", "application/x-tar", payload
+    )
     return extract_tar_index(media).select(
         "media_id", "name", "offset", "size", "typeflag", "mtime"
     )
@@ -5958,48 +5714,28 @@ def q_multimodal_audio_features(spark, sf_dir):
         extract_audio_features,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 120)
-    )
-
-    def encode(batches):
+    def payload(mid: int) -> bytes:
         import io
         import struct
         import wave
 
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                amp = 50 + (mid * 13) % 1000
-                half = 2 + mid % 5
-                n = 40 + mid % 7
-                samples = [
-                    amp if (i // half) % 2 == 0 else -amp for i in range(n)
-                ]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(8000)
-                    w.writeframes(
-                        b"".join(struct.pack("<h", s) for s in samples)
-                    )
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "audio",
-                    "mime_type": "audio/wav",
-                    "payload": payloads,
-                }
+        amp = 50 + (mid * 13) % 1000
+        half = 2 + mid % 5
+        n = 40 + mid % 7
+        samples = [
+            amp if (i // half) % 2 == 0 else -amp for i in range(n)
+        ]
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(8000)
+            w.writeframes(
+                b"".join(struct.pack("<h", s) for s in samples)
             )
+        return buf.getvalue()
 
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
+    media = _synthetic_media(spark, sf_dir, 120, "audio", "audio/wav", payload)
     return extract_audio_features(media).select(
         "media_id", "n_samples", "sample_rate", "duration_ms", "peak",
         "mean_abs_ppm", "energy", "zero_crossings", "silence_ppm",
@@ -6022,34 +5758,16 @@ def q_multimodal_g711_stats(spark, sf_dir):
         g711_wav_stats,
     )
 
-    ids = (
-        _t(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("media_id"))
-        .filter(F.col("media_id") < 100)
+    def payload(mid: int) -> bytes:
+        law = "mulaw" if mid % 2 == 0 else "alaw"
+        table = _MULAW_TABLE if mid % 2 == 0 else _ALAW_TABLE
+        n = 10 + mid % 5
+        samples = [table[(mid * 7 + j * 11) % 256] for j in range(n)]
+        return g711_wav_encode(samples, 8000, law)
+
+    media = _synthetic_media(
+        spark, sf_dir, 100, "audio", "audio/basic", payload
     )
-
-    def encode(batches):
-        import pandas as pd
-
-        for batch in batches:
-            payloads = []
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                law = "mulaw" if mid % 2 == 0 else "alaw"
-                table = _MULAW_TABLE if mid % 2 == 0 else _ALAW_TABLE
-                n = 10 + mid % 5
-                samples = [table[(mid * 7 + j * 11) % 256] for j in range(n)]
-                payloads.append(g711_wav_encode(samples, 8000, law))
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": "audio",
-                    "mime_type": "audio/basic",
-                    "payload": payloads,
-                }
-            )
-
-    media = ids.mapInPandas(encode, schema=_MEDIA_SCHEMA)
     return g711_wav_stats(media).select(
         "media_id", "sample_rate", "n_samples", "sum_pcm", "min_pcm",
         "max_pcm",

@@ -7,11 +7,8 @@ from iatlas_cbioportal_export_spark.functions.scalar import (  # noqa: F401
     strip_colname_suffixes,
 )
 from iatlas_cbioportal_export_spark.functions.text import (  # noqa: F401
-    char_ngrams,
     punct_ratio,
     rolling_fingerprint,
-    stopword_ratio,
     token_count,
     tokens,
-    word_ngrams,
 )

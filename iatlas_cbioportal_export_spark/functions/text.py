@@ -81,35 +81,11 @@ def word_ngrams_of_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_ngrams(c: Column | str) -> Column:
-    """Word-level 3-gram array straight from a text column. Convenience form
-    for one-shot use; hot paths that explode shingles should materialize
-    :func:`tokens` first and use :func:`word_ngrams_of_tokens` (see there)."""
-    return word_ngrams_of_tokens(tokens(c))
-
-
-def char_ngrams(c: Column | str) -> Column:
-    """Character 5-gram (shingle) array via substring over a position sequence."""
-    col = F.col(c) if isinstance(c, str) else c
-    n_sh = F.greatest(F.length(col) - F.lit(4), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), n_sh), lambda i: F.substring(col, i, 5)
-    )
-
-
 def punct_ratio(c: Column | str) -> Column:
     """Fraction of characters that are not alphanumeric/whitespace."""
     col = F.col(c) if isinstance(c, str) else c
     n_punct = F.length(F.regexp_replace(col, r"[A-Za-z0-9\s]", ""))
     return F.when(F.length(col) > 0, n_punct / F.length(col)).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(c: Column | str) -> Column:
-    """Fraction of tokens that are English stopwords (lowercased match)."""
-    toks = tokens(c)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
 
 
 def stopword_hits_of_tokens(toks: Column, lang: str) -> Column:

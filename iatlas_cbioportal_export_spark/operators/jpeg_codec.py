@@ -6,8 +6,8 @@ pipeline needs decode/resize hops, and until this round JPEG pixel decode
 sat behind ``real_decode_stub``. Everything here follows the PUBLIC
 ITU-T T.81 spec (baseline sequential DCT, Annex K example tables):
 
-- :func:`jpeg_encode` — grayscale or RGB (4:4:4, or 4:2:0 while
-  :data:`_CHROMA_SUBSAMPLE` is set), IJG-style quality scaling of the
+- :func:`jpeg_encode` — grayscale or RGB (4:4:4), IJG-style quality
+  scaling of the
   Annex K quantization tables, Annex K Huffman tables, optional restart
   markers.
 - :func:`jpeg_decode` — baseline sequential scans: DQT/DHT/SOF0/DRI/SOS
@@ -291,12 +291,6 @@ def _plane_blocks(plane: np.ndarray) -> np.ndarray:
     )
 
 
-#: Encode RGB with 4:2:0 box-averaged chroma instead of 4:4:4. Every caller
-#: encodes 4:4:4; 4:2:0 streams exist to feed the decoder's sampling-factor
-#: MCU layout, which JPEGs from other encoders reach.
-_CHROMA_SUBSAMPLE = False
-
-
 def jpeg_encode(
     pix: bytes,
     width: int,
@@ -306,8 +300,7 @@ def jpeg_encode(
     restart_interval: int = 0,
 ) -> bytes:
     """Baseline sequential JPEG encoder (T.81): grayscale (1 channel) or
-    RGB (3 channels, YCbCr; 4:4:4, or 4:2:0 box-averaged chroma while
-    :data:`_CHROMA_SUBSAMPLE` is set). Annex K quantization tables scaled by IJG
+    RGB (3 channels, YCbCr 4:4:4). Annex K quantization tables scaled by IJG
     ``quality`` (100 = all-ones, lossless for DC-exact content) and Annex K
     Huffman tables. ``restart_interval`` > 0 emits DRI + RSTn markers every
     that many MCUs (what a splittable-decode pipeline would use)."""
@@ -332,41 +325,18 @@ def jpeg_encode(
     else:
         planes = [img[..., 0].astype(np.int64)]
 
-    # sampling factors per component: (h, v)
-    if channels == 3 and _CHROMA_SUBSAMPLE:
-        samp = [(2, 2), (1, 1), (1, 1)]
-    else:
-        samp = [(1, 1)] * channels
-    hmax = max(h for h, _ in samp)
-    vmax = max(v for _, v in samp)
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x = -(-width // mcu_w)
-    mcus_y = -(-height // mcu_h)
-
-    comp_planes: list[np.ndarray] = []
-    for ci, ((h, v), plane) in enumerate(zip(samp, planes)):
-        if (h, v) != (hmax, vmax):
-            # box-average downsample by integer factors (fh, fv)
-            fh, fv = hmax // h, vmax // v
-            ph = -(-height // fv) * fv
-            pw = -(-width // fh) * fh
-            padded = np.pad(
-                plane,
-                ((0, ph - height), (0, pw - width)),
-                mode="edge",
-            ).astype(np.float64)
-            plane = _round_half_up(
-                padded.reshape(ph // fv, fv, pw // fh, fh).mean(axis=(1, 3))
-            )
-        # pad the (possibly downsampled) plane to the MCU grid
-        target_h = mcus_y * v * 8
-        target_w = mcus_x * h * 8
-        plane = np.pad(
+    # every component is sampled 1x1, so an MCU is one 8x8 block of each
+    mcus_x = -(-width // 8)
+    mcus_y = -(-height // 8)
+    comp_planes = [
+        np.pad(
             plane,
-            ((0, target_h - plane.shape[0]), (0, target_w - plane.shape[1])),
+            ((0, mcus_y * 8 - height), (0, mcus_x * 8 - width)),
             mode="edge",
-        )
-        comp_planes.append(plane.astype(np.float64) - 128.0)
+        ).astype(np.float64)
+        - 128.0
+        for plane in planes
+    ]
 
     # forward DCT + quantize every block of every component up front
     zz = np.array(_ZIGZAG)
@@ -394,17 +364,13 @@ def jpeg_encode(
                 writer.buf += bytes((0xFF, 0xD0 + rst))
                 rst = (rst + 1) % 8
                 preds = [0] * channels
-            for ci, (h, v) in enumerate(samp):
-                blocks_per_row = mcus_x * h
+            for ci in range(channels):
                 dc_c = dc_luma if ci == 0 else dc_chroma
                 ac_c = ac_luma if ci == 0 else ac_chroma
-                for by in range(v):
-                    for bx in range(h):
-                        bidx = (my * v + by) * blocks_per_row + mx * h + bx
-                        preds[ci] = _encode_block(
-                            writer, comp_coefs[ci][bidx], preds[ci],
-                            dc_c, ac_c,
-                        )
+                preds[ci] = _encode_block(
+                    writer, comp_coefs[ci][my * mcus_x + mx], preds[ci],
+                    dc_c, ac_c,
+                )
             mcu_index += 1
     writer.pad_to_byte()
 
@@ -420,8 +386,8 @@ def jpeg_encode(
             0xDB, bytes([0x01]) + bytes(int(q_chroma.flat[i]) for i in _ZIGZAG)
         )
     sof = bytearray(struct.pack(">BHHB", 8, height, width, channels))
-    for ci, (h, v) in enumerate(samp):
-        sof += bytes((ci + 1, (h << 4) | v, 0 if ci == 0 else 1))
+    for ci in range(channels):
+        sof += bytes((ci + 1, 0x11, 0 if ci == 0 else 1))
     out += seg(0xC0, bytes(sof))
     for cls, tid, spec in (
         (0, 0, _HUFF_DC_LUMA),

@@ -1,5 +1,4 @@
 from iatlas_cbioportal_export_spark.sources.readers import (  # noqa: F401
-    load_tables,
     read_maf_folder,
     read_tsv,
     read_tsv_skip_cbioportal_header,

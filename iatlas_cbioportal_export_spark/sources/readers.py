@@ -202,12 +202,3 @@ def write_xml(df: DataFrame, path: str, row_tag: str) -> None:
     registries, legacy ETL); not a storage format."""
     with job_label(df.sparkSession, f"write {os.path.basename(path)}"):
         df.write.mode("overwrite").option("rowTag", row_tag).xml(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the driver's parquet testdata tables as lazy DataFrames."""
-    with job_label(spark, "read testdata tables"):
-        return {
-            name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-            for name in TESTDATA_TABLES
-        }

@@ -1,6 +1,4 @@
 from iatlas_cbioportal_export_spark.streaming.events import (  # noqa: F401
-    hourly_event_counts,
     hourly_event_counts_batch,
     sessionize,
-    stream_events_from_parquet,
 )

@@ -8,43 +8,8 @@ and the streaming run over the same files must agree; tests assert that).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def stream_events_from_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream over an events parquet directory, with the schema
-    the directory's files carry. With ``Trigger.AvailableNow`` this
-    processes the backlog incrementally and stops — the pattern for
-    backfill-then-tail pipelines."""
-    schema = spark.read.parquet(path).schema
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def hourly_event_counts(events: DataFrame) -> DataFrame:
-    """Tumbling 1-hour windowed counts + value sum per event_type, with a
-    2-hour watermark bounding state for late data. Works on a streaming OR
-    batch DataFrame (same code path — that is the point of Structured
-    Streaming).
-    """
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark("ts", "2 hours")
-    return (
-        df.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("value_sum"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "value_sum",
-        )
-    )
 
 
 def hourly_event_counts_batch(events: DataFrame) -> DataFrame:
@@ -72,7 +37,7 @@ def dedup_events(events: DataFrame) -> DataFrame:
     ``ts`` (keys older than the watermark are evicted, so state never grows
     unboundedly — the difference from plain streaming ``dropDuplicates``,
     whose state is forever); on a batch frame the same call site is a
-    plain ``dropDuplicates``. Stream/batch agnostic like :func:`hourly_event_counts`; the stream==batch
+    plain ``dropDuplicates``. Stream/batch agnostic; the stream==batch
     key-set equality is tested.
     """
     keys = ["user_id", "event_type"]
@@ -216,7 +181,7 @@ def attribute_purchases(events: DataFrame) -> DataFrame:
     """Click→purchase attribution: every purchase joined to each click by
     the same user within the preceding 30 minutes.
 
-    Stream/batch agnostic, like :func:`hourly_event_counts`. On a streaming
+    Stream/batch agnostic. On a streaming
     input this is a STREAM-STREAM inner join: both sides carry 1-hour
     watermarks
     and the join condition bounds event time on both ends, so Spark can

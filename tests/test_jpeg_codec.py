@@ -2,6 +2,8 @@
 round-trips, lossy-path error bounds, subsampling, restart markers, and
 the honest NotImplementedError edges."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -10,7 +12,6 @@ from iatlas_cbioportal_export_spark.operators.jpeg_codec import (
     jpeg_encode,
     jpeg_feature_extractor,
 )
-from iatlas_cbioportal_export_spark.operators import jpeg_codec
 
 
 def _solid_blocks(w, h, channels, block, fn):
@@ -45,20 +46,27 @@ def test_rgb444_gray_in_rgb_roundtrip_exact():
     assert dec == pix
 
 
-def test_rgb420_subsampled_roundtrip_exact_on_16px_blocks(monkeypatch):
-    # 16x16 solid tiles: chroma is constant, so 2x2 box downsampling and
-    # replication upsampling are both lossless — exercises the generic
-    # sampling-factor MCU layout end to end, exactly.
+def _golden_jpeg(name):
+    """A checked-in 4:2:0 baseline JPEG (2x2 luma, 1x1 chroma sampling):
+    the layout JPEGs from other encoders use, which the encoder here
+    (4:4:4 only) never writes."""
+    path = os.path.join(os.path.dirname(__file__), "golden", name)
+    with open(path, "rb") as fh:
+        return fh.read()
+
+
+def test_rgb420_subsampled_decode_exact_on_16px_blocks():
+    # 16x16 solid tiles: chroma is constant, so the 2x2-downsampled chroma
+    # replicates back losslessly — exercises the generic sampling-factor
+    # MCU layout end to end, exactly.
     pix = _solid_blocks(32, 32, 3, 16, lambda bx, by: 3 * by + 5 * bx + 90)
-    monkeypatch.setattr(jpeg_codec, "_CHROMA_SUBSAMPLE", True)
-    enc = jpeg_encode(pix, 32, 32, channels=3, quality=100)
-    ch, w, h, dec = jpeg_decode(enc)
+    ch, w, h, dec = jpeg_decode(_golden_jpeg("rgb420_solid16_32x32_q100.jpg"))
     assert (ch, w, h) == (3, 32, 32)
     assert dec == pix
 
 
 @pytest.mark.parametrize("subsample", [False, True])
-def test_lossy_roundtrip_bounded_error_odd_dims(subsample, monkeypatch):
+def test_lossy_roundtrip_bounded_error_odd_dims(subsample):
     # smooth-gradient content at q=90, odd (non-MCU-aligned) dimensions:
     # decode must crop the padding and stay within normal JPEG loss
     # (sharp 255→0 wrap edges would legitimately ring much harder).
@@ -68,8 +76,11 @@ def test_lossy_roundtrip_bounded_error_odd_dims(subsample, monkeypatch):
         for j in range(17)
         for c in range(3)
     )
-    monkeypatch.setattr(jpeg_codec, "_CHROMA_SUBSAMPLE", subsample)
-    enc = jpeg_encode(pix, 17, 13, channels=3, quality=90)
+    enc = (
+        _golden_jpeg("rgb420_gradient_17x13_q90.jpg")
+        if subsample
+        else jpeg_encode(pix, 17, 13, channels=3, quality=90)
+    )
     ch, w, h, dec = jpeg_decode(enc)
     assert (ch, w, h) == (3, 17, 13)
     a = np.frombuffer(pix, np.uint8).astype(int)

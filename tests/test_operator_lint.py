@@ -188,9 +188,9 @@ def _live_code():
     """Public package functions by name, and the production code that can
     run: every caller file's module-level code (class bodies included),
     then, to a fixpoint, the body of each package function that live code
-    names, by a load of its name or attribute. A name a package
-    ``__init__.py`` re-exports is live: it is the package's declared
-    surface. A name in ``_NEEDS_NO_CALLER`` is live too. Returns
+    names, by a load of its name or attribute. A name in
+    ``_NEEDS_NO_CALLER`` is live too; a package ``__init__.py`` that
+    re-exports a name is no caller of it. Returns
     ``(functions, reached, live)``: ``live`` is a list of
     ``(bound names, node)``."""
     functions: dict[str, list[tuple[str, ast.FunctionDef]]] = {}
@@ -206,10 +206,8 @@ def _live_code():
                 if not node.name.startswith("_"):
                     rel = path.relative_to(PACKAGE_DIR).as_posix()
                     functions.setdefault(node.name, []).append((rel, node))
-            else:
+            elif not (path.name == "__init__.py" and isinstance(node, ast.ImportFrom)):
                 live.append((bound, node))
-                if path.name == "__init__.py" and isinstance(node, ast.ImportFrom):
-                    pending += [alias.asname or alias.name for alias in node.names]
 
     def names(bound: set[str], top: ast.AST):
         for node in ast.walk(top):
@@ -297,6 +295,15 @@ def test_every_option_has_a_caller():
     assert unset == [], f"{len(unset)} parameters no caller sets:\n" + "\n".join(unset)
 
 
+def _package_imports(tree: ast.Module):
+    """Every ``from iatlas_cbioportal_export_spark... import`` in ``tree``."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+            PACKAGE_DIR.name
+        ):
+            yield node
+
+
 def test_tests_import_only_what_exists():
     """Every ``from iatlas_cbioportal_export_spark... import name`` in a test
     names a module and attribute that exist, so a deleted function shows up
@@ -307,12 +314,7 @@ def test_tests_import_only_what_exists():
 
     missing = []
     for path in sorted((REPO_DIR / "tests").glob("*.py")):
-        for node in ast.walk(ast.parse(path.read_text())):
-            if not (
-                isinstance(node, ast.ImportFrom)
-                and (node.module or "").startswith(PACKAGE_DIR.name)
-            ):
-                continue
+        for node in _package_imports(ast.parse(path.read_text())):
             try:
                 module = importlib.import_module(node.module)
             except ImportError:
@@ -328,3 +330,72 @@ def test_tests_import_only_what_exists():
                 )
             ]
     assert missing == []
+
+
+def test_tests_call_only_parameters_that_exist():
+    """Every call in a test to a package function it imports (``name(...)``,
+    or ``module.name(...)`` for an imported package module) passes only
+    keywords the function takes and no more positional arguments than it
+    has. A deleted parameter then fails here by name, also in test files
+    that skip when an optional input (the reference checkout, the slow
+    tier) is absent."""
+    import importlib
+    import inspect
+
+    bad = []
+    for path in sorted((REPO_DIR / "tests").glob("*.py")):
+        tree = ast.parse(path.read_text())
+        bound = {}
+        for node in _package_imports(tree):
+            module = importlib.import_module(node.module)
+            for alias in node.names:
+                target = getattr(module, alias.name, None)
+                if target is None and hasattr(module, "__path__"):
+                    target = importlib.import_module(f"{node.module}.{alias.name}")
+                bound[alias.asname or alias.name] = target
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            func = call.func
+            if isinstance(func, ast.Name) and func.id in bound:
+                target = bound[func.id]
+            elif (
+                isinstance(func, ast.Attribute)
+                and isinstance(func.value, ast.Name)
+                and inspect.ismodule(bound.get(func.value.id))
+            ):
+                target = getattr(bound[func.value.id], func.attr, None)
+            else:
+                continue
+            if not callable(target) or inspect.ismodule(target):
+                continue
+            try:
+                params = inspect.signature(target).parameters.values()
+            except (TypeError, ValueError):
+                continue
+            kinds = {p.kind for p in params}
+            where = f"{path.name}:{call.lineno} {ast.unparse(func)}"
+            if inspect.Parameter.VAR_KEYWORD not in kinds:
+                names = {
+                    p.name for p in params if p.kind != inspect.Parameter.POSITIONAL_ONLY
+                }
+                bad += [
+                    f"{where}({k.arg}=)"
+                    for k in call.keywords
+                    if k.arg and k.arg not in names
+                ]
+            positional = [
+                p
+                for p in params
+                if p.kind
+                in (
+                    inspect.Parameter.POSITIONAL_ONLY,
+                    inspect.Parameter.POSITIONAL_OR_KEYWORD,
+                )
+            ]
+            if inspect.Parameter.VAR_POSITIONAL not in kinds and not any(
+                isinstance(a, ast.Starred) for a in call.args
+            ):
+                if len(call.args) > len(positional):
+                    bad.append(f"{where} takes {len(positional)} positional, given {len(call.args)}")
+    assert bad == [], "\n".join(bad)

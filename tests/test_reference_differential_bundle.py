@@ -306,7 +306,6 @@ def _run_engine_bundle(tmp_path, spark, cli_dfs) -> dict[str, str]:
             ds,
             clinical_patient=pat,
             clinical_sample=samp,
-            mutations=None,
             attr_meta=ATTR_META,
             clinical_merged=merged,
         )

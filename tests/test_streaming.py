@@ -1,15 +1,21 @@
-"""Structured Streaming: the streaming windowed agg must equal its batch
-twin over the same files (availableNow backfill)."""
+"""Structured Streaming: each stream/batch-agnostic operator returns over
+a file-source stream (availableNow backfill) what it returns over the
+same files read as a batch."""
 
 import pytest
 
 import pyspark.sql.functions as F
 
 from iatlas_cbioportal_export_spark.streaming.events import (
-    hourly_event_counts,
+    hourly_event_counts_batch,
     sessionize,
-    stream_events_from_parquet,
 )
+
+
+def _stream_events(spark, path):
+    """File-source stream over an events parquet directory, with the schema
+    its files carry."""
+    return spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
 
 
 def _events(spark, tmp_path):
@@ -31,12 +37,12 @@ def test_stream_equals_batch(spark, tmp_path):
     batch_df, path = _events(spark, tmp_path)
     batch = {
         (str(r["window_start"]), r["event_type"]): (r["n_events"], r["value_sum"])
-        for r in hourly_event_counts(batch_df).collect()
+        for r in hourly_event_counts_batch(batch_df).collect()
     }
-    stream = stream_events_from_parquet(spark, path)
+    stream = _stream_events(spark, path)
     assert stream.isStreaming
     q = (
-        hourly_event_counts(stream)
+        hourly_event_counts_batch(stream)
         .writeStream.format("memory")
         .queryName("hourly_test")
         .outputMode("complete")
@@ -63,79 +69,6 @@ def test_sessionize_gap(spark, tmp_path):
     assert len(by_user[7]) == 2
     assert sorted(s["n_events"] for s in by_user[7]) == [1, 2]
     assert len(by_user[8]) == 1
-
-
-@pytest.mark.slow
-def test_watermark_drops_late_event(spark, tmp_path):
-    """Append-mode windowed agg with a 2h watermark over two file-source
-    micro-batches: batch 2 carries an event whose 1h window closed below the
-    batch-1 watermark — it must NOT appear; windows still above the final
-    watermark must not be emitted either."""
-    import os
-    import time
-
-    import pandas as pd
-
-    d = str(tmp_path / "stream_src")
-    os.makedirs(d)
-
-    def write_batch(name, rows):
-        pdf = pd.DataFrame(
-            rows, columns=["event_id", "ts", "user_id", "event_type", "value"]
-        )
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        pdf.to_parquet(os.path.join(d, name))
-
-    # batch 0: on-time events; max ts 03:30 → watermark advances to 01:30
-    write_batch(
-        "a.parquet",
-        [
-            (1, "2024-01-01 00:10:00", 7, "click", 1.0),
-            (2, "2024-01-01 00:40:00", 7, "click", 1.0),
-            (3, "2024-01-01 03:30:00", 8, "view", 1.0),
-        ],
-    )
-    time.sleep(1.1)  # distinct mtimes → deterministic batch order
-    # batch 1: on-time filler; the 00:00 window (end 01:00 < wm 01:30) is
-    # evicted and emitted with count 2 during this batch
-    write_batch("b.parquet", [(4, "2024-01-01 03:40:00", 8, "view", 1.0)])
-    time.sleep(1.1)
-    # batch 2: a LATE click at 00:30 — its window closed two batches ago and
-    # the row is below the effective watermark → dropped, no re-emission
-    write_batch(
-        "c.parquet",
-        [
-            (5, "2024-01-01 00:30:00", 9, "click", 1.0),
-            (6, "2024-01-01 03:45:00", 8, "view", 1.0),
-        ],
-    )
-
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-        # pandas writes TIMESTAMP(NANOS); the session reads nanos as long
-        .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    )
-    q = (
-        hourly_event_counts(stream)
-        .writeStream.format("memory")
-        .queryName("wm_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from wm_test").collect()
-    got = {
-        (str(r["window_start"]), r["event_type"]): r["n_events"] for r in rows
-    }
-    # exactly ONE emission: the 00:00 click window with only on-time events;
-    # the late click was dropped (no duplicate/late re-emission), and the
-    # still-open 03:00 view window was not emitted
-    assert len(rows) == 1
-    assert got == {("2024-01-01 00:00:00", "click"): 2}
 
 
 @pytest.mark.slow
@@ -166,7 +99,7 @@ def test_attribution_stream_equals_batch(spark, tmp_path):
     }
     assert batch == {(7, 1, 2, 9.5), (8, 4, 6, 2.0), (8, 5, 6, 2.0)}
 
-    stream = stream_events_from_parquet(spark, path)
+    stream = _stream_events(spark, path)
     q = (
         attribute_purchases(stream)
         .writeStream.format("memory")
@@ -194,7 +127,7 @@ def test_stream_dedup_keyset_equals_batch(spark, tmp_path):
     batch_keys = {
         (r["user_id"], r["event_type"]) for r in dedup_events(batch_df).collect()
     }
-    stream = stream_events_from_parquet(spark, path)
+    stream = _stream_events(spark, path)
     q = (
         dedup_events(stream)
         .writeStream.format("memory")
@@ -256,7 +189,7 @@ def test_session_window_streaming_mode(spark, tmp_path):
     )
 
     batch_df, path = _events(spark, tmp_path)
-    stream = stream_events_from_parquet(spark, path).withWatermark("ts", "1 hour")
+    stream = _stream_events(spark, path).withWatermark("ts", "1 hour")
     q = (
         sessionize_session_window(stream, gap_minutes=30)
         .writeStream.format("memory")
@@ -291,7 +224,7 @@ def test_stream_static_enrichment_equals_batch(spark, tmp_path):
         (r["window_start"], r["segment"]): r["n_events"]
         for r in segment_hourly_counts(batch_df, dim).collect()
     }
-    stream = stream_events_from_parquet(spark, path)
+    stream = _stream_events(spark, path)
     q = (
         segment_hourly_counts(stream, dim)
         .writeStream.format("memory")
