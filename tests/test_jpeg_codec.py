@@ -55,10 +55,11 @@ def _golden_jpeg(name):
         return fh.read()
 
 
-def test_rgb420_subsampled_decode_exact_on_16px_blocks():
-    # 16x16 solid tiles: chroma is constant, so the 2x2-downsampled chroma
-    # replicates back losslessly — exercises the generic sampling-factor
-    # MCU layout end to end, exactly.
+def test_rgb420_subsampled_roundtrip_exact_on_16px_blocks():
+    # The fixture is these 16x16 solid tiles encoded 4:2:0 at quality 100:
+    # chroma is constant per tile, so the 2x2-downsampled chroma replicates
+    # back losslessly — exercises the generic sampling-factor MCU layout
+    # end to end, exactly.
     pix = _solid_blocks(32, 32, 3, 16, lambda bx, by: 3 * by + 5 * bx + 90)
     ch, w, h, dec = jpeg_decode(_golden_jpeg("rgb420_solid16_32x32_q100.jpg"))
     assert (ch, w, h) == (3, 32, 32)
